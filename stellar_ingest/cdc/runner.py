@@ -20,7 +20,8 @@ Exactly-once protocol per epoch ``e → e+1``:
    (BASELINE.json:6 ordering requirement).
 5. MERGE apply → snapshot ``s`` with summary {epoch: e+1, offsets',
    lineage stats} (stats observed during the merge, bound into the
-   same atomic commit).
+   same atomic commit).  A merge-on-read epoch that folds does so in
+   this same job and snapshot (lake/merge.py::delta_apply).
 6. persist quarantined rows (dead-letter parquet) + emit lineage.
 7. checkpoint := {e+1, offsets', s}.   (crash between 5 and 7 is what
    step 1 repairs — offsets from the summary, lineage re-emitted from
@@ -35,11 +36,13 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from ..lake.core import IceboxTable
+from ..lake.maintain import fold_targets
 from ..lake.merge import delta_apply, merge_apply
 from ..schema import align_renames, ensure_table_schema, table_schema_for
 from . import checkpoint as ckpt
@@ -249,15 +252,20 @@ def run_increment(
     scale-unsafe default would penalize exactly the north-star loop
     shape.
 
-    ``fold_min_deltas``: in MoR epochs, after the commit fold buckets
-    holding deltas from at least this many distinct commits back to one
-    resolved file (None = never — except under ``mode="auto"``, where
-    it defaults to 8 so read-time window depth stays bounded without
-    operator action); ``fold_max_buckets`` bounds each in-loop fold to
-    the K most-indebted buckets (auto default: num_buckets/8) so fold
-    cost spreads across epochs instead of one epoch absorbing a
-    full-table fold.  All modes produce byte-identical resolved state
-    (tests/test_replay.py proves fingerprint equality).
+    ``fold_min_deltas``: in MoR epochs, fold buckets that hold deltas
+    from at least this many distinct commits, counting the epoch's own,
+    back to one resolved file (None = never — except under
+    ``mode="auto"``, where it defaults to 8 so read-time window depth
+    stays bounded without operator action).  The fold is part of the
+    epoch's apply: the folded buckets' stored rows join the batch in
+    its one LWW window and are written back as base files, so a folding
+    epoch is still one Spark job and one snapshot, whose summary lists
+    the folded buckets as ``compacted_buckets``.  ``fold_max_buckets``
+    bounds each fold to the K most-indebted buckets (auto default:
+    num_buckets/8) so fold cost spreads across epochs instead of one
+    epoch absorbing a full-table fold.  All modes produce
+    byte-identical resolved state (tests/test_replay.py proves
+    fingerprint equality).
 
     In-loop retention (the longevity triad — without it an unbounded
     loop grows O(total-epochs) state: the snapshot list rides
@@ -417,7 +425,17 @@ def run_increment(
                 max_epochs is None or epochs_done + 1 < max_epochs
             ):
                 prefetched = pool.submit(list_segments, ledger_dir)
-            apply_fn = delta_apply if epoch_mode == "mor" else merge_apply
+            if epoch_mode == "mor":
+                # the fold rides this epoch's apply: one job, one snapshot
+                fold = fold_targets(
+                    table,
+                    min_delta_commits=fold_min_deltas,
+                    max_buckets=fold_max_buckets,
+                    pending_commit=True,
+                )
+                apply_fn = partial(delta_apply, fold_buckets=fold)
+            else:
+                apply_fn = merge_apply
             snapshot_id = apply_fn(
                 spark,
                 table,
@@ -429,6 +447,7 @@ def run_increment(
                 },
                 summary_fn=_lineage_summary,
                 rn_observation=rn_obs,
+                batch_rows=sum(s.rows for s in chosen),
             )
             hook("post_snapshot")
             # a zero-valid-row epoch carries the previous hint (no new
@@ -473,18 +492,6 @@ def run_increment(
                 },
             )
             hook("post_checkpoint")
-            if epoch_mode == "mor" and fold_min_deltas:
-                # fold AFTER the checkpoint: the fold snapshot carries the
-                # epoch/offsets forward (maintenance summary), so a crash
-                # anywhere inside it leaves a consistent, resumable table
-                from ..lake.maintain import fold_deltas
-
-                fold_deltas(
-                    spark,
-                    table,
-                    min_delta_commits=fold_min_deltas,
-                    max_buckets=fold_max_buckets,
-                )
             if expire_every and epoch % int(expire_every) == 0:
                 from ..lake.maintain import expire_snapshots
 

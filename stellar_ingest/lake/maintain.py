@@ -156,6 +156,39 @@ def delta_file_counts(table: IceboxTable) -> dict[int, int]:
     return {b: c["files"] for b, c in delta_counts(table).items()}
 
 
+def fold_targets(
+    table: IceboxTable,
+    *,
+    min_delta_commits: int | None,
+    max_buckets: int | None = None,
+    pending_commit: bool = False,
+) -> list[int]:
+    """The fold policy: buckets holding deltas from at least
+    ``min_delta_commits`` distinct commits, most-indebted first, at most
+    ``max_buckets`` of them (sorted; none when ``min_delta_commits`` is
+    None).  Counting COMMITS, not files, makes the policy independent of
+    the write salt's per-commit file fan-out (a single epoch can write
+    up to 8 files per bucket).
+
+    ``pending_commit=True`` counts one more delta commit in every
+    current bucket — the epoch's own commit, which the in-apply fold
+    (lake/merge.py::delta_apply) lands together with the fold.  A batch
+    of a steady loop touches every bucket, so a bucket folds in the same
+    epoch as under a fold that runs after the commit."""
+    if not min_delta_commits:
+        return []
+    counts = {b: c["commits"] for b, c in delta_counts(table).items()}
+    if pending_commit:
+        counts = {b: counts.get(b, 0) + 1 for b in range(table.num_buckets)}
+    target = sorted(
+        (b for b, n in counts.items() if n >= min_delta_commits),
+        key=lambda b: (-counts[b], b),
+    )
+    if max_buckets is not None:
+        target = target[:max_buckets]
+    return sorted(target)
+
+
 def fold_deltas(
     spark: SparkSession,
     table: IceboxTable,
@@ -163,30 +196,22 @@ def fold_deltas(
     min_delta_commits: int = 2,
     max_buckets: int | None = None,
 ) -> int | None:
-    """Compact merge-on-read deltas: rewrite every bucket holding
-    deltas from at least ``min_delta_commits`` distinct commits down to
-    one resolved file (scan() resolves LWW, so the rewrite IS the fold —
-    rewritten files drop the delta flag and subsequent reads of those
-    buckets skip the resolve window entirely).  Counting COMMITS, not
-    files, makes the policy independent of the write salt's per-commit
-    file fan-out (a single epoch can write up to 8 files per bucket).
-    Fingerprint-equal by construction, fence carried forward like any
-    compaction.  Returns the new snapshot id, or None when no bucket
-    crossed the policy.
+    """Explicit merge-on-read maintenance: rewrite the buckets
+    ``fold_targets`` picks down to one resolved file each (scan()
+    resolves LWW, so the rewrite IS the fold — rewritten files drop the
+    delta flag and subsequent reads of those buckets skip the resolve
+    window entirely).  Fingerprint-equal by construction, fence carried
+    forward like any compaction.  Returns the new snapshot id, or None
+    when no bucket crossed the policy.  The ingest loops fold inside the
+    epoch's own apply instead (lake/merge.py::delta_apply).
 
-    ``max_buckets`` bounds one fold's work (latency smoothing for
-    in-loop folds: instead of one epoch absorbing a full-table fold —
-    measured ≈ a COW epoch, BENCH/BASELINE.md §r3 — each epoch folds at
-    most K buckets, most-indebted first, so fold cost spreads evenly
-    across epochs while total work is unchanged)."""
-    counts = delta_counts(table)
-    target = sorted(
-        (b for b, c in counts.items() if c["commits"] >= min_delta_commits),
-        key=lambda b: (-counts[b]["commits"], b),
+    ``max_buckets`` bounds one fold's work (latency smoothing: instead
+    of one call absorbing a full-table fold — measured ≈ a COW epoch,
+    BENCH/BASELINE.md §r3 — each call folds at most K buckets,
+    most-indebted first)."""
+    target = fold_targets(
+        table, min_delta_commits=min_delta_commits, max_buckets=max_buckets
     )
-    if max_buckets is not None:
-        target = target[:max_buckets]
-    target = sorted(target)
     if not target:
         return None
     return compact(spark, table, buckets=target, min_files_per_bucket=1)

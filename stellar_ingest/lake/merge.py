@@ -6,9 +6,12 @@ key-partitioned"):
   cost Θ(touched table data).  Best for backfill and read-heavy tables.
 - ``delta_apply`` — **merge-on-read**: append the batch's winners as
   delta files; epoch cost Θ(batch).  The steady-state choice — readers
-  resolve at scan time (lake/read.py), folds compact on a policy
-  (lake/maintain.py::fold_deltas).  Measured at a 13.9M-row table:
-  5.7× COW throughput, flat in table size (BENCH/BASELINE.md §r3).
+  resolve at scan time (lake/read.py).  Folds ride the same apply: the
+  stored rows of the buckets the fold policy picks
+  (lake/maintain.py::fold_targets) join the batch in its one LWW
+  window, and those buckets are written back as base files in the same
+  job and snapshot.  Measured at a 13.9M-row table: 5.7× COW
+  throughput, flat in table size (BENCH/BASELINE.md §r3).
 
 The copy-on-write batch = one plan, two shuffles, one snapshot commit:
 
@@ -34,20 +37,31 @@ Idempotence: re-applying any batch reproduces the same winners (the
 ordering (ts, lsn, src_part) is total), so table state is a pure
 function of the set of applied mutations — the replay guarantee.
 
-Scale: shuffle 1 hashes (conv_id, turn_idx) [+salt when the census says
-so]; shuffle 2 hashes (bucket, write-salt).  Both keys are fine-grained;
-a 1000-executor run changes only partition counts, not the plan.
+Scale: unsalted batches take ONE shuffle on ``__slot`` (bucket mod P,
+one task per core or per bucket, _fused_winner_rows); salted ones hash
+(conv_id, turn_idx)[+salt] for the window and (bucket, write-salt) for
+the write.  A 1000-executor run changes only partition counts, not the
+plan.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cdc.resolve import _desc_order, resolve, to_table_rows
-from .core import IceboxTable, fields_to_struct
+from .core import IceboxTable, commit_tag, fields_to_struct
 from .read import scan
-from .write import bucket_expr, fused_slot_expr, write_data_files, write_salt
+from .write import (
+    bucket_expr,
+    fused_partitions,
+    fused_slot_expr,
+    write_data_files,
+    write_salt,
+)
 
 
 def _existing_as_changelog(existing: DataFrame) -> DataFrame:
@@ -69,6 +83,13 @@ def _observed_quarantined(summary: dict) -> int:
     """Quarantine count bound into the summary by summary_fn (0 when no
     lineage stats ride the commit)."""
     return int((summary.get("lineage") or {}).get("quarantined", 0))
+
+
+def _observed_rows(summary: dict) -> int:
+    """Valid batch rows bound into the summary by summary_fn."""
+    return sum(
+        int(p["rows"]) for p in (summary.get("lineage") or {}).get("partition_stats", ())
+    )
 
 
 def _project_to_table(
@@ -93,19 +114,25 @@ def _project_to_table(
 
 
 def _fused_winner_rows(
-    union: DataFrame, bexpr, num_buckets: int, *, rn_observation=None
+    union: DataFrame,
+    bexpr,
+    num_buckets: int,
+    *,
+    rn_observation=None,
+    batch_rows: int | None = None,
 ) -> DataFrame:
     """Single-exchange LWW resolve + write layout (guide §2.4: two
     operations keyed the same way share one exchange).  ``__bucket`` is
     a deterministic function of ``conv_id``, so hash-partitioning the
-    batch ONCE on __bucket both (a) co-locates every (conv_id, turn_idx)
-    group — the ranking window's clustering requirement is satisfied by
-    this exchange, Catalyst inserts no second one — and (b) is exactly
-    the layout the bucketed writer needs.  The window's required sort
-    (__bucket, conv_id, turn_idx, ts/lsn/src_part desc) is a superset of
-    the writer's (__bucket, conv_id, turn_idx), so the writer's
-    in-partition sort is elided too: one exchange + one sort where the
-    unfused path paid two of each (plan-asserted in
+    batch ONCE on a function of __bucket both (a) co-locates every
+    (conv_id, turn_idx) group — the ranking window's clustering
+    requirement is satisfied by this exchange, Catalyst inserts no
+    second one — and (b) keeps every bucket inside one task, which is
+    what the bucketed writer needs.  The window's required sort
+    (__slot, __bucket, conv_id, turn_idx, ts/lsn/src_part desc) is a
+    superset of the writer's (__slot, __bucket, conv_id, turn_idx), so
+    the writer's in-partition sort is elided too: one exchange + one
+    sort where the unfused path paid two of each (plan-asserted in
     tests/test_round6_fused.py).
 
     Winners are IDENTICAL to resolve(): the window groups are the same
@@ -114,18 +141,21 @@ def _fused_winner_rows(
     when LWW salting and write salting are both off — those split keys
     across partitions, which the shared exchange cannot express.
 
-    The exchange hashes ``__slot`` = fused_slot_map(n)[__bucket] into
-    EXACTLY n partitions — a perfect 1:1 bucket->partition mapping.
-    Hashing raw bucket ids collides (birthday bound: 32 ids into 256
-    slots measured 30 non-empty partitions), so two reduce tasks carried
-    two buckets each and the write stage's tail ran at ~2x the balanced
-    wall (guide §2.5).  ``__slot`` is a pure function of ``__bucket``,
-    so adding it to the window key changes no groups, and it leads the
+    The exchange hashes ``__slot`` into P partitions, bucket b going to
+    partition b mod P, so each task carries num_buckets/P buckets (±1).
+    P = min(num_buckets, cores), one wave of write tasks, unless
+    ``batch_rows`` marks a large batch, which gets one task per bucket
+    (lake/write.py::fused_partitions).  ``__slot`` is constant inside a
+    partition, so each task sees its rows sorted by __bucket and writes
+    its buckets one after another — still exactly one file per bucket
+    per commit.  ``__slot`` is a pure function of ``__bucket``, so
+    adding it to the window key changes no groups, and it leads the
     writer's sort (then is dropped) so the single-Sort elision holds."""
+    parts = fused_partitions(union, num_buckets, batch_rows)
     pre = (
         union.withColumn("__bucket", bexpr)
-        .withColumn("__slot", fused_slot_expr(num_buckets))
-        .repartition(num_buckets, F.col("__slot"))
+        .withColumn("__slot", fused_slot_expr(parts))
+        .repartition(parts, F.col("__slot"))
     )
     w = Window.partitionBy("__slot", "__bucket", "conv_id", "turn_idx").orderBy(
         *_desc_order()
@@ -147,6 +177,7 @@ def merge_apply(
     summary_fn=None,
     rn_observation=None,
     skip_if_noop: bool = False,
+    batch_rows: int | None = None,
 ) -> int | None:
     """Apply one changelog batch (validated + HWM-filtered) as a
     copy-on-write MERGE; returns the committed snapshot id.
@@ -161,7 +192,11 @@ def merge_apply(
     produced no rows and no quarantine (summary_fn-reported) — the
     streaming adapter uses this for availableNow's trailing empty flush
     batch, whose plan must still execute (state-store contract) but must
-    not mint an empty snapshot."""
+    not mint an empty snapshot.
+
+    ``batch_rows``: the batch's row count when the caller knows it
+    before the job (it sizes the write's task count,
+    lake/write.py::fused_partitions)."""
     meta = table.metadata()
     bcol, nbuckets = meta["bucket_column"], meta["num_buckets"]
     bexpr = bucket_expr(bcol, nbuckets)
@@ -190,7 +225,9 @@ def merge_apply(
         _existing_as_changelog(existing), allowMissingColumns=True
     )
     if (not salts or int(salts) <= 1) and write_salt(batch, nbuckets) == 1:
-        rows = _fused_winner_rows(union, bexpr, nbuckets, rn_observation=rn_observation)
+        rows = _fused_winner_rows(
+            union, bexpr, nbuckets, rn_observation=rn_observation, batch_rows=batch_rows
+        )
         ordered = _project_to_table(rows, table, extra=("__bucket", "__slot"))
         new_files = write_data_files(
             ordered, table, pre_partitioned=True, sort_prefix=("__slot",)
@@ -235,6 +272,8 @@ def delta_apply(
     summary_fn=None,
     rn_observation=None,
     skip_if_noop: bool = False,
+    batch_rows: int | None = None,
+    fold_buckets: list[int] | None = None,
 ) -> int | None:
     """Merge-on-read commit: resolve the batch WITHIN itself and append
     the winners as *delta* files — no table read, no bucket rewrite, no
@@ -242,10 +281,19 @@ def delta_apply(
     table size, which is what sustained apply into a 10^10-event table
     needs (copy-on-write rewrites every touched bucket, i.e. Θ(table)
     per epoch once batches span all buckets).  Readers resolve LWW
-    across base+delta files at scan time (lake/read.py::resolve_stored);
-    ``lake/maintain.py::fold_deltas`` compacts buckets back to one
-    version per key on a file-count policy — exactly Iceberg's MoR +
-    rewrite_data_files split.
+    across base+delta files at scan time (lake/read.py::resolve_stored).
+
+    ``fold_buckets``: buckets to fold back to one version per key in
+    this same job and snapshot (Iceberg's MoR + rewrite_data_files,
+    without the second job).  Their stored files are read raw, re-
+    expressed as changelog rows and unioned into the batch, so the one
+    exchange + LWW window resolves stored and incoming versions
+    together; their output files are written as base files (no delta
+    flag) and the commit removes the files they replace.  The snapshot
+    summary records them as ``compacted_buckets``.  The rows of an
+    old-spec file that also covers a sibling bucket ride along and land
+    in the sibling's delta file (the same migration compact() does).
+    ``batch_rows``: as in merge_apply.
 
     Correctness is the same associativity argument as copy-on-write:
     stored rows are per-batch winners under the total order
@@ -255,27 +303,57 @@ def delta_apply(
     read-time window keeps, the resolved state is unchanged."""
     meta = table.metadata()
     bexpr = bucket_expr(meta["bucket_column"], meta["num_buckets"])
+    fold = sorted(fold_buckets or ())
+    union = batch
+    if fold:
+        stored = scan(spark, table, buckets=fold, resolve=False)
+        union = batch.unionByName(
+            _existing_as_changelog(stored), allowMissingColumns=True
+        )
     if (not salts or int(salts) <= 1) and write_salt(batch, meta["num_buckets"]) == 1:
         # fused single-exchange path (see _fused_winner_rows): the
         # Θ(batch) MoR epoch drops from 2 exchanges + 2 sorts to 1 + 1
         rows = _fused_winner_rows(
-            batch, bexpr, meta["num_buckets"], rn_observation=rn_observation
+            union,
+            bexpr,
+            meta["num_buckets"],
+            rn_observation=rn_observation,
+            batch_rows=batch_rows,
         )
         ordered = _project_to_table(rows, table, extra=("__bucket", "__slot"))
         new_files = write_data_files(
             ordered, table, delta=True, pre_partitioned=True, sort_prefix=("__slot",)
         )
     else:
-        winners = resolve(batch, salts=salts, rn_observation=rn_observation)
+        winners = resolve(union, salts=salts, rn_observation=rn_observation)
         ordered = _project_to_table(winners, table)
         new_files = write_data_files(
             ordered.withColumn("__bucket", bexpr), table, delta=True
         )
+    for e in new_files:
+        if e["bucket"] in fold:
+            del e["delta"]  # the bucket's whole state: a base file
     summary = dict(summary or {})
     if summary_fn is not None:
         # the write above was the batch's action — observations attached
         # upstream are filled, same contract as merge_apply
         summary.update(summary_fn())
-    if skip_if_noop and not new_files and not _observed_quarantined(summary):
+    if fold and "lineage" in summary:
+        empty = not _observed_rows(summary)  # new_files hold folded rows too
+    else:
+        empty = not new_files
+    if skip_if_noop and empty and not _observed_quarantined(summary):
+        # an empty batch mints no snapshot and no fold: the folded
+        # buckets' rewrite is deleted before anything references it
+        for tag in {commit_tag(e["path"]) for e in new_files}:
+            shutil.rmtree(os.path.join(table.data_dir, tag), ignore_errors=True)
         return None
-    return table.commit(added_files=new_files, summary=summary, operation="delta")
+    if fold:
+        summary["compacted_buckets"] = fold
+    return table.commit(
+        added_files=new_files,
+        removed_paths={e["path"] for e in table.files(buckets=fold)} if fold else None,
+        summary=summary,
+        operation="delta",
+        touched_buckets=fold or None,
+    )

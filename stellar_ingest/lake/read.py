@@ -165,6 +165,7 @@ def scan(
     ref: str | None = None,
     buckets: list[int] | None = None,
     key_equals=None,
+    resolve: bool = True,
 ) -> DataFrame:
     """Full-fidelity scan of one snapshot (includes tombstones + meta
     columns), merge-on-read resolved.  ``snapshot_id=None`` → current;
@@ -173,7 +174,9 @@ def scan(
     (core.py::tag) — at most one of the three.  ``key_equals`` prunes
     the file list to files whose manifest key bounds may contain that
     bucket-key value (point-lookup path; the caller still applies the
-    row-level equality filter)."""
+    row-level equality filter).  ``resolve=False`` returns the stored
+    rows as written, every version of every key (the in-apply fold
+    resolves them in its own LWW window, lake/merge.py::delta_apply)."""
     if sum(x is not None for x in (snapshot_id, as_of_ms, ref)) > 1:
         raise ValueError("pass at most one of snapshot_id / as_of_ms / ref")
     if ref is not None:
@@ -203,6 +206,8 @@ def scan(
         entries = [e for e in entries if any(_may_contain(e, k) for k in keys)]
     if not entries:
         return spark.createDataFrame([], schema)
+    if not resolve:
+        return _read_aligned(spark, table, entries, tfields)
     # group files by the CURRENT-spec buckets they may hold (after a
     # bucket rescale an old-spec file covers its whole congruence
     # class); a file is resolved if ANY bucket it covers can hold

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import time
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,6 +28,7 @@ from ..cdc import lineage as lin
 from ..cdc.source import batch_schema, list_segments
 from ..cdc.validate import VALIDITY_SQL, split_valid, validity_predicate
 from ..lake.core import IceboxTable
+from ..lake.maintain import fold_targets
 from ..lake.merge import delta_apply, merge_apply
 from ..schema import (
     CHANGELOG_SCHEMA,
@@ -94,11 +96,11 @@ def run_streaming(
     ``mode="mor"`` commits each micro-batch as merge-on-read delta
     files (Θ(batch) — the steady-state choice, same contract as the
     batch runner's mode flag); ``fold_min_deltas`` folds buckets
-    holding deltas from ≥K commits after each batch, AFTER the
-    snapshot commit so a crash inside the fold leaves a consistent,
-    resumable table (the fence keys on ss_batch_id, which the fold's
-    carried-forward summary preserves).  ``expire_every``/``gc_every``
-    run snapshot expiry / orphan GC every K batches (after the commit
+    holding deltas from ≥K commits, counting the batch's own, inside
+    the batch's apply (one job, one snapshot — same policy as the batch
+    runner; an empty micro-batch folds nothing).
+    ``expire_every``/``gc_every`` run snapshot expiry / orphan GC every
+    K batches (after the commit
     + lineage emit — same in-loop retention contract as the batch
     runner, so a long-lived stream keeps metadata O(retained)).
 
@@ -192,7 +194,16 @@ def run_streaming(
             stash["pstats"], stash["n_bad"] = pstats, n_bad
             return {"lineage": {"partition_stats": pstats, "quarantined": n_bad}}
 
-        apply_fn = delta_apply if mode == "mor" else merge_apply
+        if mode == "mor":
+            fold = fold_targets(
+                table,
+                min_delta_commits=fold_min_deltas,
+                max_buckets=fold_max_buckets,
+                pending_commit=True,
+            )
+            apply_fn = partial(delta_apply, fold_buckets=fold)
+        else:
+            apply_fn = merge_apply
         sid = apply_fn(
             spark,
             table,
@@ -219,18 +230,6 @@ def run_streaming(
             wall_ms=(time.monotonic() - t0) * 1000.0,
             quarantined=stash["n_bad"],
         )
-        if mode == "mor" and fold_min_deltas:
-            # after the commit + lineage emit, same ordering rationale
-            # as cdc/runner.py: the fold's carried-forward summary keeps
-            # epoch/ss_batch_id, so the fence stays intact across it
-            from ..lake.maintain import fold_deltas
-
-            fold_deltas(
-                spark,
-                table,
-                min_delta_commits=fold_min_deltas,
-                max_buckets=fold_max_buckets,
-            )
         if expire_every and (epoch + 1) % int(expire_every) == 0:
             from ..lake.maintain import expire_snapshots
 

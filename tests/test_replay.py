@@ -338,17 +338,26 @@ def test_mor_fold_restores_plain_reads(spark, ledger, golden, tmp_path):
     assert table_fingerprint(scan(spark, t)) == golden["fingerprint"]
 
 
+def _epoch_folds(t: IceboxTable) -> list[dict]:
+    """Epoch snapshots that folded buckets inside their own apply."""
+    return [s for s in t.snapshots() if s["summary"].get("compacted_buckets")]
+
+
 def test_mor_inloop_fold_policy_reconverges(spark, ledger, golden, tmp_path):
     """The runner's fold_min_deltas policy interleaves folds with
-    delta epochs; the final state is still byte-identical."""
+    delta epochs — inside the epochs' own apply, one snapshot per
+    epoch; the final state is still byte-identical."""
     table_root = str(tmp_path / "t")
     run_increment(
         spark, ledger["dir"], table_root, str(tmp_path / "ck"),
         max_segments_per_part=4, salts=None, mode="mor", fold_min_deltas=2,
     )
     t = IceboxTable(table_root)
-    ops = [s["operation"] for s in t.snapshots()]
-    assert "delta" in ops and "replace" in ops  # both kinds really happened
+    snaps = t.snapshots()
+    assert {s["operation"] for s in snaps} == {"delta"}
+    assert [s["summary"]["epoch"] for s in snaps] == list(range(1, len(snaps) + 1))
+    folds = _epoch_folds(t)
+    assert folds, "in-loop folds should run"
     assert table_fingerprint(scan(spark, t)) == golden["fingerprint"]
 
 
@@ -381,6 +390,46 @@ def test_mor_crash_injection_reconverges(spark, ledger, golden, tmp_path, crash_
 
     epochs = sorted({r["epoch"] for r in read_lineage(ck)})
     assert epochs == list(range(1, max(epochs) + 1))
+
+
+@pytest.mark.parametrize("crash_at", ["pre_merge", "post_snapshot", "post_checkpoint"])
+def test_mor_folding_epoch_crash_reconverges(spark, ledger, golden, tmp_path, crash_at):
+    """A crash inside an epoch whose apply also folds: restart cold and
+    reconverge byte-identically.  Epoch 1 leaves one delta commit per
+    touched bucket; with fold_min_deltas=2 epoch 2 folds them in its own
+    apply.  A torn fold-carrying snapshot (post_snapshot) is repaired by
+    the fence: lineage re-emitted, the batch never applied twice."""
+    from stellar_ingest.cdc.lineage import read_lineage
+
+    table_root = str(tmp_path / "t")
+    ck = str(tmp_path / "ck")
+    kw = dict(max_segments_per_part=2, salts=None, mode="mor", fold_min_deltas=2)
+    run_increment(spark, ledger["dir"], table_root, ck, max_epochs=1, **kw)
+
+    def hook(point):
+        if point == crash_at:
+            raise _Boom(point)
+
+    with pytest.raises(_Boom):
+        run_increment(spark, ledger["dir"], table_root, ck, crash_hook=hook, **kw)
+    t = IceboxTable(table_root)
+    if crash_at != "pre_merge":
+        torn = t.current_snapshot()
+        assert torn["summary"]["epoch"] == 2 and torn["summary"]["compacted_buckets"]
+    run_increment(spark, ledger["dir"], table_root, ck, **kw)
+    assert table_fingerprint(scan(spark, t)) == golden["fingerprint"]
+    snaps = t.snapshots()
+    # one snapshot per epoch: the folding epoch committed exactly once
+    assert [s["summary"]["epoch"] for s in snaps] == list(range(1, len(snaps) + 1))
+    assert snaps[1]["summary"]["compacted_buckets"]
+    recs = read_lineage(ck)
+    assert sorted({r["epoch"] for r in recs}) == list(range(1, len(snaps) + 1))
+    ep2 = [r for r in recs if r["epoch"] == 2]
+    assert ep2 and all(r["snapshot_id"] == snaps[1]["snapshot_id"] for r in ep2)
+    assert all(r["repaired"] is (crash_at == "post_snapshot") for r in ep2)
+    assert sum(r["rows"] for r in ep2) == sum(
+        p["rows"] for p in snaps[1]["summary"]["lineage"]["partition_stats"]
+    )
 
 
 def test_mor_read_changes_between_snapshots(spark, ledger, tmp_path):
@@ -509,7 +558,7 @@ def test_mor_bounded_fold_smooths_and_reconverges(spark, ledger, golden, tmp_pat
         fold_min_deltas=1, fold_max_buckets=2,
     )
     t = IceboxTable(table_root)
-    folds = [s for s in t.snapshots() if s["operation"] == "replace"]
+    folds = _epoch_folds(t)
     assert folds, "bounded folds should still run"
     assert all(len(s["summary"]["compacted_buckets"]) <= 2 for s in folds)
     assert table_fingerprint(scan(spark, t)) == golden["fingerprint"]

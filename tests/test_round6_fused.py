@@ -11,13 +11,20 @@ fingerprint-identical table fused vs unfused."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from stellar_ingest.cdc.resolve import resolve
 from stellar_ingest.lake.merge import _fused_winner_rows
-from stellar_ingest.lake.write import _mmh3_int, bucket_expr, fused_slot_map
+from stellar_ingest.lake.write import (
+    _SLOT_MAPS,
+    BUCKET_TASK_ROWS_PER_CORE,
+    _mmh3_int,
+    bucket_expr,
+    fused_slot_map,
+)
 
 from .helpers import make_changelog
 
@@ -84,16 +91,69 @@ def test_mmh3_int_matches_spark_hash(spark):
         assert _mmh3_int(int(r["id"])) == r["h"]
 
 
-def test_fused_rows_land_in_their_bucket_partition(spark):
-    """After the fused exchange every row's shuffle partition index IS
-    its bucket id — zero collisions, perfectly even layout."""
-    batch = make_changelog(spark, ROWS)
-    bexpr = bucket_expr("conv_id", 8)
-    rows = _fused_winner_rows(batch, bexpr, 8)
+def _writer_shape(rows):
+    """The write side of the fused plan (write_data_files with
+    pre_partitioned=True, sort_prefix=("__slot",))."""
+    return rows.sortWithinPartitions(
+        "__slot", "__bucket", "conv_id", "turn_idx"
+    ).drop("__slot")
+
+
+def _many_convs(spark, n: int = 200):
+    return make_changelog(
+        spark, [(i, 0, "I", f"c{i}", 0, "user", "x", None, i) for i in range(n)]
+    )
+
+
+def _assert_bucket_layout(spark, parts: int, batch_rows: int | None = None) -> None:
+    """16 buckets: bucket b lands in partition b mod ``parts``, every
+    partition has rows, and the plan keeps 1 Exchange + 1 Sort."""
+    nb = 16
+    rows = _fused_winner_rows(
+        _many_convs(spark), bucket_expr("conv_id", nb), nb, batch_rows=batch_rows
+    )
     pairs = (
         rows.select(F.spark_partition_id().alias("p"), "__bucket").distinct().collect()
     )
-    assert pairs and all(r["p"] == r["__bucket"] for r in pairs)
+    assert {r["__bucket"] for r in pairs} == set(range(nb))
+    assert all(r["p"] == r["__bucket"] % parts for r in pairs)
+    assert {r["p"] for r in pairs} == set(range(parts))  # every task has rows
+    plan = _plan(_writer_shape(rows))
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("Sort [") == 1, plan
+
+
+def test_fused_rows_land_in_their_bucket_partition(spark):
+    """16 buckets on the 4-core session: an unsized or small batch runs
+    one write task per core, bucket b in partition b mod 4 — no
+    collisions, no empty task."""
+    assert spark.sparkContext.defaultParallelism == 4
+    _assert_bucket_layout(spark, 4)
+    _assert_bucket_layout(spark, 4, batch_rows=200)
+
+
+def test_large_batch_gets_one_write_task_per_bucket(spark):
+    """From BUCKET_TASK_ROWS_PER_CORE rows per core the fused exchange
+    gives every bucket its own partition (bucket b in partition b)."""
+    _assert_bucket_layout(spark, 16, batch_rows=BUCKET_TASK_ROWS_PER_CORE * 4)
+
+
+def test_fused_slot_literal_is_bounded_at_65536_buckets(spark):
+    """The slot literal holds one int per write task, not per bucket:
+    at 65,536 buckets the fused plan builds in under 1 s and keeps its
+    1 Exchange + 1 Sort shape, rows still landing in bucket mod P."""
+    nb = 65_536
+    t0 = time.perf_counter()
+    rows = _fused_winner_rows(_many_convs(spark), bucket_expr("conv_id", nb), nb)
+    final = _writer_shape(rows)
+    assert time.perf_counter() - t0 < 1.0
+    plan = _plan(final)
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("Sort [") == 1, plan
+    parts = spark.sparkContext.defaultParallelism
+    assert nb not in _SLOT_MAPS  # no per-bucket map is built
+    pairs = rows.select(F.spark_partition_id().alias("p"), "__bucket").collect()
+    assert all(r["p"] == r["__bucket"] % parts for r in pairs)
 
 
 def test_fused_drain_fingerprint_matches_unfused(spark, tmp_path):
