@@ -24,16 +24,16 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def hwm_predicate(
+def hwm_sql(
     offsets: dict[int, int], *, part_col: str = "src_part", lsn_col: str = "lsn"
-):
-    """Column predicate: keep rows with lsn strictly above their source
+) -> str:
+    """SQL text: keep rows with lsn strictly above their source
     partition's high-watermark (unknown partitions pass).  Column names
     are parameterized so the same predicate serves the ledger tail
     (src_part/lsn) and the stored-table incremental read
     (_src_part/_lsn, lake/read.py::read_changes)."""
     if not offsets:
-        return F.lit(True)
+        return "true"
     # one-parse SQL text: the Column-operator chain costs ~6 py4j
     # round-trips per partition, per epoch (round-6 driver profile)
     clauses = " OR ".join(
@@ -41,6 +41,11 @@ def hwm_predicate(
         for part, hwm in sorted(offsets.items())
     )
     known = ", ".join(str(int(p)) for p in sorted(offsets))
-    return F.expr(f"({clauses}) OR NOT (`{part_col}` IN ({known}))")
+    return f"({clauses}) OR NOT (`{part_col}` IN ({known}))"
 
 
+def hwm_predicate(
+    offsets: dict[int, int], *, part_col: str = "src_part", lsn_col: str = "lsn"
+):
+    """``hwm_sql`` as a Column predicate."""
+    return F.expr(hwm_sql(offsets, part_col=part_col, lsn_col=lsn_col))

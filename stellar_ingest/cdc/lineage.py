@@ -27,9 +27,10 @@ def observed_stats(raw: DataFrame, valid_sql: str, parts: list[int]):
     per epoch.  Returns (observed_df, Observation); call
     ``collect_observed_stats`` after the action ran.
 
-    ``valid_sql``: the validity predicate as SQL TEXT
-    (cdc/validate.py::VALIDITY_SQL) — the ~25 aggregate expressions here
-    are emitted as one-parse F.expr strings instead of Column-operator
+    ``valid_sql``: a row's validity as SQL TEXT — the CDC loops pass the
+    ``__valid`` column that cdc/validate.py::observe_valid computes once
+    per row from VALIDITY_SQL.  The aggregate expressions here are
+    emitted as one-parse F.expr strings instead of Column-operator
     chains (~250 py4j round-trips, ~0.1 s/epoch of driver time,
     round-6 profile).  Identical expressions: count(CASE WHEN … THEN 1
     END) counts non-nulls exactly like count(when(pred, 1))."""

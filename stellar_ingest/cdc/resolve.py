@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schema import ENVELOPE_COLS
 
@@ -58,37 +59,65 @@ def lww_winners(
     return ranked.filter(F.col("__rn") == 1).drop("__rn")
 
 
-def to_table_rows(winners: DataFrame, *, carry_cols: tuple[str, ...] = ()) -> DataFrame:
+def to_table_rows(
+    winners: DataFrame,
+    *,
+    carry_cols: tuple[str, ...] = (),
+    fields: list[T.StructField] | None = None,
+) -> DataFrame:
     """Changelog-shaped winners → stored-table shape: payload columns +
-    (_ts, _lsn, _src_part, _op).  Deletes become tombstones ('D') with
-    NULL payload; I/U normalize to 'U' (both are upserts once resolved).
+    (_ts, _lsn, _src_part, _op), in ONE projection.  Deletes become
+    tombstones ('D') with NULL payload; I/U normalize to 'U' (both are
+    upserts once resolved).
 
-    ``carry_cols``: layout helper columns (e.g. __bucket/__salt from the
-    fused single-exchange merge path) passed through untouched — they
-    are excluded from the payload and appended last, preserving their
-    attribute identity so downstream sort/partitioning properties
-    survive the projection."""
-    payload = [
-        c
-        for c in winners.columns
-        if c not in ENVELOPE_COLS and c != "ts" and c not in carry_cols
-    ]
-    is_del = F.col("op") == "D"
-    cols = []
-    for c in payload:
-        if c in ("conv_id", "turn_idx"):
-            cols.append(F.col(c))
+    ``fields``: the committed table's schema fields — the output then
+    follows their order and NULL-fills columns evolved after this
+    batch's payload (without it, the winners' own payload order;
+    ``__``-prefixed helper columns such as the window's ``__rn`` are
+    never payload).  ``carry_cols``: layout helper columns (e.g.
+    __bucket/__slot from the fused single-exchange merge path) passed
+    through untouched and appended last, preserving their attribute
+    identity so downstream sort/partitioning properties survive the
+    projection.
+
+    The projection is SQL text, parsed JVM-side in the one select:
+    composing it from Column operators costs ~5 py4j round trips per
+    column, and this runs on every epoch's plan."""
+    have = winners.columns
+    deleted = "op = 'D'"
+    derived = {
+        "_ts": "ts",
+        "_lsn": "lsn",
+        "_src_part": "src_part",
+        "_op": f"CASE WHEN {deleted} THEN 'D' ELSE 'U' END",
+    }
+    if fields is None:
+        payload = [
+            c
+            for c in have
+            if c not in ENVELOPE_COLS and c != "ts" and not c.startswith("__")
+        ]
+        names, missing = [*payload, "ts", *derived], {}
+    else:
+        names = [f.name for f in fields]
+        missing = {
+            f.name: f.dataType
+            for f in fields
+            if f.name not in have and f.name not in derived
+        }
+    exprs = []
+    for name in names:
+        q = f"`{name}`"
+        if name in derived:
+            e = derived[name]
+        elif name in missing:
+            e = f"CAST(NULL AS {missing[name].simpleString()})"
+        elif name in ("conv_id", "turn_idx"):
+            e = q
         else:
-            cols.append(F.when(is_del, F.lit(None)).otherwise(F.col(c)).alias(c))
-    cols.append(F.when(is_del, F.lit(None)).otherwise(F.col("ts")).alias("ts"))
-    cols += [
-        F.col("ts").alias("_ts"),
-        F.col("lsn").alias("_lsn"),
-        F.col("src_part").alias("_src_part"),
-        F.when(is_del, F.lit("D")).otherwise(F.lit("U")).alias("_op"),
-    ]
-    cols += [F.col(c) for c in carry_cols]
-    return winners.select(*cols)
+            e = f"CASE WHEN {deleted} THEN NULL ELSE {q} END"
+        exprs.append(e if e == q else f"{e} AS {q}")
+    return winners.selectExpr(*exprs, *[f"`{c}`" for c in carry_cols])
 
 
 def resolve(

@@ -49,7 +49,7 @@ from . import checkpoint as ckpt
 from . import lineage as lin
 from .skew import DEFAULT_HOT_THRESHOLD, DEFAULT_SALTS
 from .source import list_segments, read_batch, select_batch
-from .validate import VALIDITY_SQL, split_valid, validity_predicate
+from .validate import observe_valid, validity_predicate
 
 
 def _fence_and_repair(
@@ -343,11 +343,7 @@ def run_increment(
             # lineage + quarantine stats ride along as an `observe` node —
             # the ledger is scanned exactly ONCE per epoch (by the merge)
             parts = sorted(cutoffs)
-            observed, obs = lin.observed_stats(raw, VALIDITY_SQL, parts)
-            valid, _ = split_valid(observed)
-            # dead-letter branch comes off `raw` (not `observed`) so writing
-            # it doesn't re-trigger the observation
-            bad = raw.filter(~validity_predicate())
+            valid, obs = observe_valid(raw, parts)
 
             # new offsets: planned cutoffs (deterministic even for
             # batches whose rows were all duplicates/quarantined)
@@ -465,9 +461,11 @@ def run_increment(
             # on epochs that actually had bad rows; overwrite mode keeps
             # crash-replays idempotent.  A crash inside the snapshot→checkpoint
             # window is covered too: _fence_and_repair re-derives the torn
-            # batch's quarantined rows from the immutable ledger.
+            # batch's quarantined rows from the immutable ledger.  The rows
+            # come off `raw`, not the observed plan, so writing them doesn't
+            # re-trigger the observation.
             if stash["n_bad"]:
-                bad.write.mode("overwrite").parquet(
+                raw.filter(~validity_predicate()).write.mode("overwrite").parquet(
                     os.path.join(checkpoint_dir, "quarantine", f"epoch={epoch}")
                 )
             wall_ms = (time.monotonic() - t0) * 1000.0

@@ -29,11 +29,10 @@ from dataclasses import dataclass
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schema import CHANGELOG_SCHEMA
-from .dedupe import hwm_predicate
+from .dedupe import hwm_sql
 
 
 @dataclass
@@ -218,12 +217,9 @@ def read_batch(
     (hwm, cutoff] per source partition."""
     schema = batch_schema(segments)
     df = spark.read.schema(schema).parquet(*[s.path for s in segments])
-    # one-parse SQL text (same rationale as dedupe.hwm_predicate)
-    ceil_pred = F.expr(
-        " OR ".join(
-            f"(src_part = {int(part)} AND lsn <= {int(hi)})"
-            for part, hi in sorted(cutoffs.items())
-        )
+    ceil_sql = " OR ".join(
+        f"(src_part = {int(part)} AND lsn <= {int(hi)})"
+        for part, hi in sorted(cutoffs.items())
     )
     # NULL-envelope rows (NULL lsn or src_part) would make the bounds
     # predicate evaluate to SQL NULL and silently vanish before the
@@ -236,7 +232,9 @@ def read_batch(
     # is read by several epochs (interleaved redeliveries) each of those
     # epochs re-quarantines it.  Dead letters are an audit surface, not
     # a ledger; consumers dedupe if they need exactly-once counts.
-    bounds = (hwm_predicate(offsets) & ceil_pred) | F.col("lsn").isNull() | F.col(
-        "src_part"
-    ).isNull()
+    # One SQL string, parsed in one py4j call (same rationale as
+    # dedupe.hwm_sql).
+    bounds = (
+        f"(({hwm_sql(offsets)}) AND ({ceil_sql})) OR lsn IS NULL OR src_part IS NULL"
+    )
     return df.filter(bounds)

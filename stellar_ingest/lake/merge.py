@@ -52,8 +52,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cdc.resolve import _desc_order, resolve, to_table_rows
-from .core import IceboxTable, commit_tag, fields_to_struct
+from ..cdc.resolve import _desc_order, lww_winners, to_table_rows
+from .core import IceboxTable, commit_tag
 from .read import scan
 from .write import (
     bucket_expr,
@@ -92,27 +92,6 @@ def _observed_rows(summary: dict) -> int:
     )
 
 
-def _project_to_table(
-    winners: DataFrame, table: IceboxTable, extra: tuple[str, ...] = ()
-) -> DataFrame:
-    """Resolved winner rows → the committed table schema (column order +
-    NULL-fill for columns evolved after this batch's payload).
-    ``extra``: layout columns (__bucket) appended as-is — passing the
-    SAME attribute through (rather than recomputing the expression)
-    keeps the upstream exchange/sort properties visible to the writer
-    in the fused path."""
-    struct = fields_to_struct(table.schema_fields())
-    return winners.select(
-        *[
-            F.col(f.name)
-            if f.name in winners.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in struct.fields
-        ],
-        *[F.col(c) for c in extra],
-    )
-
-
 def _fused_winner_rows(
     union: DataFrame,
     bexpr,
@@ -120,6 +99,7 @@ def _fused_winner_rows(
     *,
     rn_observation=None,
     batch_rows: int | None = None,
+    fields=None,
 ) -> DataFrame:
     """Single-exchange LWW resolve + write layout (guide §2.4: two
     operations keyed the same way share one exchange).  ``__bucket`` is
@@ -150,7 +130,11 @@ def _fused_winner_rows(
     its buckets one after another — still exactly one file per bucket
     per commit.  ``__slot`` is a pure function of ``__bucket``, so
     adding it to the window key changes no groups, and it leads the
-    writer's sort (then is dropped) so the single-Sort elision holds."""
+    writer's sort (then is dropped) so the single-Sort elision holds.
+
+    The winners go to the stored-table shape, plus ``__bucket`` and
+    ``__slot``, in one projection (cdc/resolve.py::to_table_rows);
+    ``fields``, the table's schema fields, fixes its column order."""
     parts = fused_partitions(union, num_buckets, batch_rows)
     pre = (
         union.withColumn("__bucket", bexpr)
@@ -163,8 +147,9 @@ def _fused_winner_rows(
     ranked = pre.withColumn("__rn", F.row_number().over(w))
     if rn_observation is not None:
         ranked = ranked.observe(rn_observation, F.max("__rn").alias("max_rn"))
-    winners = ranked.filter(F.col("__rn") == 1).drop("__rn")
-    return to_table_rows(winners, carry_cols=("__bucket", "__slot"))
+    return to_table_rows(
+        ranked.filter("__rn = 1"), carry_cols=("__bucket", "__slot"), fields=fields
+    )
 
 
 def merge_apply(
@@ -224,18 +209,23 @@ def merge_apply(
     union = batch.unionByName(
         _existing_as_changelog(existing), allowMissingColumns=True
     )
+    fields = table.schema_struct().fields
     if (not salts or int(salts) <= 1) and write_salt(batch, nbuckets) == 1:
         rows = _fused_winner_rows(
-            union, bexpr, nbuckets, rn_observation=rn_observation, batch_rows=batch_rows
+            union,
+            bexpr,
+            nbuckets,
+            rn_observation=rn_observation,
+            batch_rows=batch_rows,
+            fields=fields,
         )
-        ordered = _project_to_table(rows, table, extra=("__bucket", "__slot"))
         new_files = write_data_files(
-            ordered, table, pre_partitioned=True, sort_prefix=("__slot",)
+            rows, table, pre_partitioned=True, sort_prefix=("__slot",)
         )
     else:
-        winners = resolve(union, salts=salts, rn_observation=rn_observation)
-        ordered = _project_to_table(winners, table)
-        new_files = write_data_files(ordered.withColumn("__bucket", bexpr), table)
+        winners = lww_winners(union, salts=salts, rn_observation=rn_observation)
+        rows = to_table_rows(winners, fields=fields)
+        new_files = write_data_files(rows.withColumn("__bucket", bexpr), table)
     removed = {e["path"] for e in table.files(buckets=touched)}
     summary = dict(summary or {})
     if summary_fn is not None:
@@ -310,6 +300,7 @@ def delta_apply(
         union = batch.unionByName(
             _existing_as_changelog(stored), allowMissingColumns=True
         )
+    fields = table.schema_struct().fields
     if (not salts or int(salts) <= 1) and write_salt(batch, meta["num_buckets"]) == 1:
         # fused single-exchange path (see _fused_winner_rows): the
         # Θ(batch) MoR epoch drops from 2 exchanges + 2 sorts to 1 + 1
@@ -319,16 +310,16 @@ def delta_apply(
             meta["num_buckets"],
             rn_observation=rn_observation,
             batch_rows=batch_rows,
+            fields=fields,
         )
-        ordered = _project_to_table(rows, table, extra=("__bucket", "__slot"))
         new_files = write_data_files(
-            ordered, table, delta=True, pre_partitioned=True, sort_prefix=("__slot",)
+            rows, table, delta=True, pre_partitioned=True, sort_prefix=("__slot",)
         )
     else:
-        winners = resolve(union, salts=salts, rn_observation=rn_observation)
-        ordered = _project_to_table(winners, table)
+        winners = lww_winners(union, salts=salts, rn_observation=rn_observation)
+        rows = to_table_rows(winners, fields=fields)
         new_files = write_data_files(
-            ordered.withColumn("__bucket", bexpr), table, delta=True
+            rows.withColumn("__bucket", bexpr), table, delta=True
         )
     for e in new_files:
         if e["bucket"] in fold:

@@ -170,7 +170,8 @@ def write_data_files(
     # tables (dedup/ANN indexes, any non-CDC icebox table) lack them —
     # resolve against the actual frame, falling back to the table's own
     # bucket column so compaction works on every table
-    sort_cols = tuple(c for c in sort_cols if c in df.columns) or (
+    have = df.columns
+    sort_cols = tuple(c for c in sort_cols if c in have) or (
         table.metadata()["bucket_column"],
     )
     tag = f"snap-pending-{uuid.uuid4().hex[:12]}"

@@ -68,6 +68,15 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # DataFrame debugging capture wraps EVERY PySpark API call: an
+        # active-session lookup, a conf read, an origin set + clear over
+        # py4j and a Python stack walk.  It cost round trips on every
+        # call: 680 of the 1,091 py4j round trips a warm merge-on-read
+        # epoch made while building its plan (4 cores, 30-conversation
+        # table, tests/test_epoch_plan.py).  When debugging an analysis
+        # error, turn it back on through extra_conf to get call sites
+        # in error messages.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("STELLAR_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

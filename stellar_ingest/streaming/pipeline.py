@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..cdc import lineage as lin
 from ..cdc.source import batch_schema, list_segments
-from ..cdc.validate import VALIDITY_SQL, split_valid, validity_predicate
+from ..cdc.validate import observe_valid, validity_predicate
 from ..lake.core import IceboxTable
 from ..lake.maintain import fold_targets
 from ..lake.merge import delta_apply, merge_apply
@@ -184,9 +184,7 @@ def run_streaming(
         # footer metadata — the batch's rows can only come from listed
         # segments).
         parts = sorted({s.src_part for s in list_segments(ledger_dir)})
-        observed, obs = lin.observed_stats(batch_df, VALIDITY_SQL, parts)
-        valid, _ = split_valid(observed)
-        bad = batch_df.filter(~validity_predicate())
+        valid, obs = observe_valid(batch_df, parts)
         stash: dict = {}
 
         def _lineage_summary() -> dict:
@@ -221,7 +219,7 @@ def run_streaming(
             qdir = os.path.join(
                 checkpoint_dir, "quarantine", f"ss_batch={batch_id}"
             )
-            bad.write.mode("overwrite").parquet(qdir)
+            batch_df.filter(~validity_predicate()).write.mode("overwrite").parquet(qdir)
         lin.emit(
             checkpoint_dir,
             epoch=epoch + 1,

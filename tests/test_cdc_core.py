@@ -7,7 +7,8 @@ from pyspark.sql import functions as F
 
 from stellar_ingest.cdc.dedupe import hwm_predicate
 from stellar_ingest.cdc.resolve import lww_winners, resolve
-from stellar_ingest.cdc.validate import split_valid
+from stellar_ingest.cdc.lineage import collect_observed_stats
+from stellar_ingest.cdc.validate import observe_valid, validity_predicate
 from stellar_ingest.verify.diff import states_equal
 
 from .helpers import make_changelog
@@ -94,8 +95,13 @@ def test_validate_quarantines_bad_rows(spark):
         ],
         "lsn long, src_part int, op string, conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    valid, bad = split_valid(df)
+    valid, obs = observe_valid(df, [0])
     assert {r["lsn"] for r in valid.collect()} == {1, 5}
+    assert valid.columns == df.columns  # the __valid flag never leaks
+    stats, n_bad = collect_observed_stats(obs, [0])
+    assert n_bad == 3
+    assert stats == [{"src_part": 0, "lsn_from": 1, "lsn_to": 5, "rows": 2}]
+    bad = df.filter(~validity_predicate())
     assert {r["lsn"] for r in bad.collect()} == {2, 3, 4}
 
 
@@ -111,8 +117,10 @@ def test_validate_null_op_is_quarantined_not_vanished(spark):
         [(r[0], r[1], r[2], r[3], r[4], r[5], r[6], r[7], __import__("tests.helpers", fromlist=["ts"]).ts(r[8])) for r in rows],
         "lsn long, src_part int, op string, conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    valid, bad = split_valid(df)
+    valid, obs = observe_valid(df, [0])
     assert {r["lsn"] for r in valid.collect()} == {1}
+    assert collect_observed_stats(obs, [0])[1] == 2  # counted, not vanished
+    bad = df.filter(~validity_predicate())
     assert {r["lsn"] for r in bad.collect()} == {2, 3}  # nothing vanishes
 
 
