@@ -219,7 +219,6 @@ def run_increment(
     salts: int | str | None = "auto",
     num_buckets: int = 16,
     crash_hook: Callable[[str], None] | None = None,
-    format_version: int = 2,
     mode: str = "auto",
     fold_min_deltas: int | None = None,
     fold_max_buckets: int | None = None,
@@ -370,10 +369,7 @@ def run_increment(
                     T.StructType([f for f in valid.schema.fields])
                 )
                 IceboxTable.create(
-                    table_root,
-                    batch_table_schema,
-                    num_buckets=num_buckets,
-                    format_version=format_version,
+                    table_root, batch_table_schema, num_buckets=num_buckets
                 )
                 table = IceboxTable(table_root, branch=branch)
             else:

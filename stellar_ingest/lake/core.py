@@ -15,18 +15,18 @@ Layout::
       metadata/
         version-hint.text            # current metadata version N (atomic swap)
         v{N}.metadata.json           # schemas + snapshot log + current ids
-        snap-{id}.manifest-list.json # per-bucket manifest pointers (format v2)
-        snap-{id}-b{b}.manifest.json # data-file list for bucket b (format v2)
-        snap-{id}.manifest.json      # monolithic file list (format v1, legacy)
+        snap-{id}.manifest-list.json # per-bucket manifest pointers
+        snap-{id}-b{b}.manifest.json # data-file list for bucket b
       data/
         snap-{id}/bucket={b}/*.parquet   # immutable data files, per commit
 
-Manifests are sharded per bucket (format v2), exactly like Iceberg
-manifest lists: a commit REWRITES only the touched buckets' manifests
-and carries untouched buckets by reference (same manifest file, no
-read), so commit cost and ``files(buckets=...)`` reads are O(touched),
-not O(table).  Format v1 (one JSON per snapshot) remains readable and
-v1 tables keep committing v1 — no migration required.
+Manifests are sharded per bucket, exactly like Iceberg manifest lists:
+a commit REWRITES only the touched buckets' manifests and carries
+untouched buckets by reference (same manifest file, no read), so commit
+cost and ``files(buckets=...)`` reads are O(touched), not O(table).
+This is icebox format 2, the only layout read or written: every
+manifest entry records its ``schema_id``, every manifest-list ref its
+delta counts, every snapshot summary its ``cum_quarantined``.
 
 Scale notes (100 TB / 1000 executors): driver metadata per operation is
 O(touched buckets' files) — at 10^10 events with 256 MB files that is
@@ -133,6 +133,10 @@ def covered_buckets(bucket: int, spec_nb: int, cur_nb: int) -> list[int]:
     return list(range(bucket, cur_nb, spec_nb))
 
 
+#: the one table format this code reads and writes
+FORMAT_VERSION = 2
+
+
 def _atomic_write_json(path: str, obj) -> None:
     tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as fh:
@@ -177,7 +181,6 @@ class IceboxTable:
         num_buckets: int = 16,
         bucket_column: str = "conv_id",
         properties: dict | None = None,
-        format_version: int = 2,
     ) -> "IceboxTable":
         t = cls(root)
         if t.exists():
@@ -186,7 +189,7 @@ class IceboxTable:
         os.makedirs(t.data_dir, exist_ok=True)
         fields = struct_to_fields(schema)
         meta = {
-            "format_version": int(format_version),
+            "format_version": FORMAT_VERSION,
             "table_uuid": uuid.uuid4().hex,
             "location": root,
             "properties": dict(properties or {}),
@@ -212,7 +215,25 @@ class IceboxTable:
     def metadata(self) -> dict:
         v = self._version()
         with open(os.path.join(self.meta_dir, f"v{v}.metadata.json")) as fh:
-            return json.load(fh)
+            meta = json.load(fh)
+        if meta.get("format_version") != FORMAT_VERSION:
+            raise ValueError(
+                f"icebox table at {self.root} has format_version "
+                f"{meta.get('format_version')!r}; only format "
+                f"{FORMAT_VERSION} is readable — re-ingest it"
+            )
+        return meta
+
+    def _swap_metadata(self, meta: dict) -> None:
+        """Commit ``meta`` as the next metadata version: write
+        ``v{N+1}.metadata.json``, then swap the version hint to it.  The
+        hint swap is the commit point — a crash before it leaves the
+        table at version N with an unread orphan file."""
+        version = self._version()
+        _atomic_write_json(
+            os.path.join(self.meta_dir, f"v{version + 1}.metadata.json"), meta
+        )
+        _atomic_write_json(self._hint, {"version": version + 1})
 
     @property
     def num_buckets(self) -> int:
@@ -241,13 +262,10 @@ class IceboxTable:
         the old-spec file under the current spec.  New writes use the
         new spec immediately; nothing is rewritten here.
 
-        Requires format v2 (per-bucket manifests).  Shrinking is not
-        supported — at 10^10 events the operational need is always more
-        parallelism/pruning granularity, and growth keeps the congruence
-        invariant one-directional."""
+        Shrinking is not supported — at 10^10 events the operational need
+        is always more parallelism/pruning granularity, and growth keeps
+        the congruence invariant one-directional."""
         meta = self.metadata()
-        if int(meta.get("format_version", 1)) < 2:
-            raise ValueError("bucket rescale requires format_version >= 2")
         cur = int(meta["num_buckets"])
         new = int(new_num_buckets)
         if new <= cur or new % cur != 0:
@@ -258,14 +276,10 @@ class IceboxTable:
         specs = self.bucket_specs()
         new_id = max(s["spec_id"] for s in specs) + 1
         specs = specs + [{"spec_id": new_id, "num_buckets": new}]
-        version = self._version()
         meta["bucket_specs"] = specs
         meta["current_spec_id"] = new_id
         meta["num_buckets"] = new
-        _atomic_write_json(
-            os.path.join(self.meta_dir, f"v{version + 1}.metadata.json"), meta
-        )
-        _atomic_write_json(self._hint, {"version": version + 1})
+        self._swap_metadata(meta)
         return new_id
 
     def schema_fields(self, schema_id: int | None = None) -> list[dict]:
@@ -338,24 +352,16 @@ class IceboxTable:
         if sid is None:
             raise ValueError("cannot tag an empty table (no snapshot)")
         self.snapshot(sid)  # KeyError if unknown
-        version = self._version()
         meta.setdefault("refs", {})[name] = sid
-        _atomic_write_json(
-            os.path.join(self.meta_dir, f"v{version + 1}.metadata.json"), meta
-        )
-        _atomic_write_json(self._hint, {"version": version + 1})
+        self._swap_metadata(meta)
         return sid
 
     def drop_tag(self, name: str) -> None:
         meta = self.metadata()
         if name not in meta.get("refs", {}):
             raise KeyError(f"no tag {name!r}")
-        version = self._version()
         del meta["refs"][name]
-        _atomic_write_json(
-            os.path.join(self.meta_dir, f"v{version + 1}.metadata.json"), meta
-        )
-        _atomic_write_json(self._hint, {"version": version + 1})
+        self._swap_metadata(meta)
 
     # -- branches (write-audit-publish) --------------------------------------
 
@@ -414,14 +420,10 @@ class IceboxTable:
                 f"branch {name!r} is not a fast-forward of main "
                 f"(main={main}, branch head={head})"
             )
-        version = self._version()
         meta["current_snapshot_id"] = head
         del meta["branches"][name]
         meta.get("branch_forks", {}).pop(name, None)
-        _atomic_write_json(
-            os.path.join(self.meta_dir, f"v{version + 1}.metadata.json"), meta
-        )
-        _atomic_write_json(self._hint, {"version": version + 1})
+        self._swap_metadata(meta)
         return head
 
     def drop_branch(self, name: str) -> None:
@@ -430,27 +432,15 @@ class IceboxTable:
         meta = self.metadata()
         if name not in meta.get("branches", {}):
             raise KeyError(f"no branch {name!r}")
-        version = self._version()
         del meta["branches"][name]
         meta.get("branch_forks", {}).pop(name, None)
-        _atomic_write_json(
-            os.path.join(self.meta_dir, f"v{version + 1}.metadata.json"), meta
-        )
-        _atomic_write_json(self._hint, {"version": version + 1})
+        self._swap_metadata(meta)
 
-    def manifest(self, snapshot_id: int) -> dict:
-        """Monolithic v1 manifest for a snapshot (legacy format only)."""
-        p = os.path.join(self.meta_dir, f"snap-{snapshot_id}.manifest.json")
-        with open(p) as fh:
-            return json.load(fh)
-
-    def manifest_list(self, snapshot_id: int) -> dict | None:
-        """Per-bucket manifest pointers (format v2):
-        ``{bucket: {manifest, files, rows}}`` keyed by str(bucket).
-        Returns None for v1 snapshots."""
+    def manifest_list(self, snapshot_id: int) -> dict:
+        """Per-bucket manifest pointers of a snapshot:
+        ``{ref_key: {manifest, files, rows, delta_files, delta_commits}}``
+        (see ref_key)."""
         p = os.path.join(self.meta_dir, f"snap-{snapshot_id}.manifest-list.json")
-        if not os.path.exists(p):
-            return None
         with open(p) as fh:
             return json.load(fh)["buckets"]
 
@@ -461,11 +451,11 @@ class IceboxTable:
     def files(
         self, snapshot_id: int | None = None, buckets: list[int] | None = None
     ) -> list[dict]:
-        """Data-file entries ``{path, bucket, rows[, spec_id, delta]}``
-        for a snapshot, optionally pruned to a bucket subset
-        (CURRENT-spec bucket ids).  On format v2 this reads ONLY the
-        requested buckets' manifests — metadata IO is O(touched), the
-        100-TB requirement.  After a bucket rescale, refs written under
+        """Data-file entries ``{path, bucket, rows, schema_id[, spec_id,
+        delta, key_min, key_max]}`` for a snapshot, optionally pruned to
+        a bucket subset (CURRENT-spec bucket ids).  This reads ONLY the requested
+        buckets' manifests — metadata IO is O(touched), the 100-TB
+        requirement.  After a bucket rescale, refs written under
         an older spec are included when their congruence class overlaps
         the requested buckets (covered_buckets) — pruning stays exact
         across mixed specs; callers get a SUPERSET of the requested
@@ -475,28 +465,21 @@ class IceboxTable:
         sid = self.head_id(meta) if snapshot_id is None else snapshot_id
         if sid is None:
             return []
-        ml = self.manifest_list(sid)
-        if ml is not None:
-            bset = None if buckets is None else {int(b) for b in buckets}
-            spec_nb = {s["spec_id"]: s["num_buckets"] for s in self.bucket_specs()}
-            cur_nb = int(meta["num_buckets"])
-            out: list[dict] = []
-            for key, ref in sorted(
-                ml.items(), key=lambda kv: parse_ref_key(kv[0])
+        bset = None if buckets is None else {int(b) for b in buckets}
+        spec_nb = {s["spec_id"]: s["num_buckets"] for s in self.bucket_specs()}
+        cur_nb = int(meta["num_buckets"])
+        out: list[dict] = []
+        for key, ref in sorted(
+            self.manifest_list(sid).items(), key=lambda kv: parse_ref_key(kv[0])
+        ):
+            s, b = parse_ref_key(key)
+            if bset is not None and not any(
+                cb in bset
+                for cb in covered_buckets(b, spec_nb.get(s, cur_nb), cur_nb)
             ):
-                s, b = parse_ref_key(key)
-                if bset is not None and not any(
-                    cb in bset
-                    for cb in covered_buckets(b, spec_nb.get(s, cur_nb), cur_nb)
-                ):
-                    continue
-                out += self._read_bucket_manifest(ref["manifest"])
-            return out
-        entries = self.manifest(sid)["files"]
-        if buckets is not None:
-            bset = set(buckets)
-            entries = [e for e in entries if e["bucket"] in bset]
-        return entries
+                continue
+            out += self._read_bucket_manifest(ref["manifest"])
+        return out
 
     def file_paths(self, snapshot_id: int | None = None, buckets=None) -> list[str]:
         return [os.path.join(self.root, e["path"]) for e in self.files(snapshot_id, buckets)]
@@ -515,14 +498,15 @@ class IceboxTable:
     ) -> int:
         """Atomically produce the next snapshot.
 
-        ``added_files``: ``{path (rel to root), bucket, rows}`` entries.
+        ``added_files``: ``{path (rel to root), bucket, rows, schema_id}``
+        entries (lake/write.py::write_data_files).
         ``removed_paths``: rel paths from the current snapshot to drop
         (copy-on-write replacement).  ``touched_buckets``: the buckets
         the removals live in (callers that pruned by bucket already know
-        this); on format v2 only those buckets' manifests are read and
-        rewritten — everything else carries by reference.  If omitted it
-        is derived from ``added_files`` (plus, when removals exist, a
-        full-bucket fallback).  ``new_schema_fields``: full field list
+        this); only those buckets' manifests are read and rewritten —
+        everything else carries by reference.  If omitted it is derived
+        from ``added_files`` (plus, when removals exist, a full-bucket
+        fallback).  ``new_schema_fields``: full field list
         for an evolved schema (additive; ids already assigned).
         Crash-safety: everything is written under non-current names
         first; the single ``os.replace`` of the version hint is the
@@ -530,27 +514,11 @@ class IceboxTable:
         snapshot with orphan files (harmless, rewritten on retry).
         """
         meta = self.metadata()
-        version = self._version()
         prev_id = self.head_id(meta)
         new_id = meta["last_snapshot_id"] + 1
-        removed = removed_paths or set()
-
-        if int(meta.get("format_version", 1)) >= 2:
-            total_files, total_rows = self._write_manifests_v2(
-                new_id, prev_id, added_files, removed, touched_buckets
-            )
-        else:
-            carry = []
-            if prev_id is not None:
-                carry = [
-                    e for e in self.files(prev_id) if e["path"] not in removed
-                ]
-            files = carry + list(added_files)
-            total_files, total_rows = len(files), sum(e["rows"] for e in files)
-            _atomic_write_json(
-                os.path.join(self.meta_dir, f"snap-{new_id}.manifest.json"),
-                {"snapshot_id": new_id, "files": files},
-            )
+        total_files, total_rows = self._write_manifests(
+            new_id, prev_id, added_files, removed_paths or set(), touched_buckets
+        )
 
         schema_id = meta["current_schema_id"]
         if new_schema_fields is not None:
@@ -569,12 +537,9 @@ class IceboxTable:
         prev_cum = 0
         if prev_id is not None:
             prev_snap = next(
-                (s for s in meta["snapshots"] if s["snapshot_id"] == prev_id), None
+                s for s in meta["snapshots"] if s["snapshot_id"] == prev_id
             )
-            if prev_snap is not None:
-                prev_cum = int(
-                    prev_snap.get("summary", {}).get("cum_quarantined", 0) or 0
-                )
+            prev_cum = prev_snap["summary"]["cum_quarantined"]
         own_q = 0
         if "maintenance" not in summary:
             own_q = int((summary.get("lineage") or {}).get("quarantined", 0) or 0)
@@ -604,14 +569,10 @@ class IceboxTable:
         else:
             meta["current_snapshot_id"] = new_id
         meta["last_snapshot_id"] = new_id
-        _atomic_write_json(
-            os.path.join(self.meta_dir, f"v{version + 1}.metadata.json"), meta
-        )
-        # commit point
-        _atomic_write_json(self._hint, {"version": version + 1})
+        self._swap_metadata(meta)
         return new_id
 
-    def _write_manifests_v2(
+    def _write_manifests(
         self,
         new_id: int,
         prev_id: int | None,
@@ -636,7 +597,7 @@ class IceboxTable:
 
         prev_list: dict[str, dict] = {}
         if prev_id is not None:
-            prev_list = self.manifest_list(prev_id) or {}
+            prev_list = self.manifest_list(prev_id)
 
         touched: set[tuple[int, int]] = set(added_by_ref)
         if touched_buckets is not None:
@@ -714,73 +675,6 @@ class IceboxTable:
             "_op",
         }
 
-    def _history_additive(self) -> bool:
-        """True while no rename/widen has ever changed an existing
-        column id's (name, type) — i.e. every retained schema era is a
-        subset-by-id of the current schema (dropped ids excepted).
-        Under a purely additive history every data file is
-        name-compatible with the current schema by construction."""
-        cur = {f["id"]: f for f in self.schema_fields()}
-        for s in self.metadata()["schemas"]:
-            for f in s["fields"]:
-                c = cur.get(f["id"])
-                if c is not None and (
-                    c["name"] != f["name"] or c["type"] != f["type"]
-                ):
-                    return False
-        return True
-
-    def _backfill_schema_ids(self) -> int:
-        """Stamp ``schema_id`` on live manifest entries that predate the
-        stamp (files written before round 4).  Runs before every
-        non-additive schema commit: unstamped files would otherwise take
-        the name-based read path forever, so a later rename would read
-        their values back NULL and a drop-then-readd of the same name
-        would resurrect them.  Stamping with the CURRENT schema id is
-        exact while the history is purely additive (the file's physical
-        columns are a by-id subset of the current schema; missing ones
-        backfill NULL) — and non-additive commits always backfill first,
-        so that precondition holds at the first rename/widen/drop.  If
-        unstamped files coexist with an already non-additive history
-        (a table mutated by pre-backfill code), the correct era is
-        unrecoverable and the commit REFUSES rather than guessing.
-        Returns the number of entries stamped."""
-        meta = self.metadata()
-        snap_id = self.head_id(meta)
-        if snap_id is None:
-            return 0
-        sid_cur = int(meta["current_schema_id"])
-        ml = self.manifest_list(snap_id)
-        if ml is not None:
-            targets = [
-                (ref["manifest"], None) for ref in ml.values()
-            ]
-        else:
-            targets = [(f"snap-{snap_id}.manifest.json", None)]
-        n = 0
-        checked_additive = False
-        for fname, _ in targets:
-            p = os.path.join(self.meta_dir, fname)
-            with open(p) as fh:
-                m = json.load(fh)
-            if all("schema_id" in e for e in m["files"]):
-                continue
-            if not checked_additive:
-                if not self._history_additive():
-                    raise ValueError(
-                        "table holds data files without a recorded schema_id "
-                        "but its schema history is already non-additive; the "
-                        "files' true schema era is unrecoverable — compact "
-                        "(fold/rewrite) them before further rename/widen/drop"
-                    )
-                checked_additive = True
-            for e in m["files"]:
-                if "schema_id" not in e:
-                    e["schema_id"] = sid_cur
-                    n += 1
-            _atomic_write_json(p, m)
-        return n
-
     def rename_map(self) -> dict[str, str]:
         """``{old_name: current_name}`` for every column that was ever
         renamed, derived from the schema-era history by COLUMN ID.  An
@@ -804,23 +698,18 @@ class IceboxTable:
         return out
 
     def _commit_schema(self, new_fields: list[dict]) -> int:
-        """Append a schema (metadata-only commit), return its id.
-        Backfills ``schema_id`` on any pre-stamp manifest entries first
-        (see _backfill_schema_ids) so the id-aligned read path covers
-        every live file from the first non-additive evolution on."""
-        self._backfill_schema_ids()
+        """Append a schema (metadata-only commit), return its id.  Every
+        manifest entry records the schema era it was written under, so
+        the read path aligns old files by column id without rewriting
+        any manifest here."""
         meta = self.metadata()
-        version = self._version()
         schema_id = max(s["schema_id"] for s in meta["schemas"]) + 1
         meta["schemas"].append({"schema_id": schema_id, "fields": new_fields})
         meta["current_schema_id"] = schema_id
         meta["last_column_id"] = max(
             [f["id"] for f in new_fields] + [meta["last_column_id"]]
         )
-        _atomic_write_json(
-            os.path.join(self.meta_dir, f"v{version + 1}.metadata.json"), meta
-        )
-        _atomic_write_json(self._hint, {"version": version + 1})
+        self._swap_metadata(meta)
         return schema_id
 
     def rename_column(self, old: str, new: str) -> int:
@@ -898,7 +787,6 @@ class IceboxTable:
             next_id += 1
         if not added:
             return meta["current_schema_id"]
-        version = self._version()
         schema_id = max(s["schema_id"] for s in meta["schemas"]) + 1
         # keep engine meta columns (leading "_") last: payload evolves,
         # meta stays the trailing block
@@ -909,8 +797,5 @@ class IceboxTable:
         )
         meta["current_schema_id"] = schema_id
         meta["last_column_id"] = next_id - 1
-        _atomic_write_json(
-            os.path.join(self.meta_dir, f"v{version + 1}.metadata.json"), meta
-        )
-        _atomic_write_json(self._hint, {"version": version + 1})
+        self._swap_metadata(meta)
         return schema_id

@@ -9,7 +9,7 @@ summary's epoch/offsets forward, so a CDC restart after compaction
 resumes exactly where it left off).
 
 Scale notes: compaction reads+rewrites ONLY the selected buckets
-(manifest pruning) and commits O(touched) manifests (format v2); at
+(manifest pruning) and commits O(touched) manifests; at
 1000 executors you compact buckets in batches sized to the cluster.
 Expiry is pure driver-side metadata + file deletion — no Spark job.
 """
@@ -21,13 +21,7 @@ import time
 
 from pyspark.sql import SparkSession
 
-from .core import (
-    IceboxTable,
-    _atomic_write_json,
-    commit_tag,
-    covered_buckets,
-    parse_ref_key,
-)
+from .core import IceboxTable, covered_buckets, parse_ref_key
 from .read import scan
 from .write import bucket_expr, write_data_files
 
@@ -100,53 +94,29 @@ def compact(
     )
 
 
-def _count_delta(entries) -> tuple[int, int]:
-    """(delta_files, delta_commits) over manifest entries."""
-    files = [e for e in entries if e.get("delta")]
-    return len(files), len({commit_tag(e["path"]) for e in files})
-
-
 def delta_counts(table: IceboxTable) -> dict[int, dict]:
     """Per-CURRENT-bucket merge-on-read debt in the current snapshot:
-    ``{bucket: {files, commits}}``.  Metadata-only on format v2 (the
-    manifest list carries both counts per bucket ref); refs written
-    before the fields existed (or format v1) fall back to reading that
-    bucket's manifest.  ``commits`` is the policy-relevant number — one
-    delta commit may fan out into several files per bucket (write
-    salt), and the read-time window depth grows with COMMITS per
-    bucket, not files.  After a rescale, an old-spec ref's debt is
-    attributed to every bucket of its congruence class (an upper bound
-    per bucket — exact again once the class is folded/migrated); zeros
-    stay exact, so "no debt" checks are unaffected."""
+    ``{bucket: {files, commits}}``.  Metadata-only: the manifest list
+    carries both counts per bucket ref.  ``commits`` is the
+    policy-relevant number — one delta commit may fan out into several
+    files per bucket (write salt), and the read-time window depth grows
+    with COMMITS per bucket, not files.  After a rescale, an old-spec
+    ref's debt is attributed to every bucket of its congruence class (an
+    upper bound per bucket — exact again once the class is
+    folded/migrated); zeros stay exact, so "no debt" checks are
+    unaffected."""
     meta = table.metadata()
     sid = table.head_id(meta)
     if sid is None:
         return {}
-    ml = table.manifest_list(sid)
     spec_nb, cur_nb = _spec_map(table)
     out: dict[int, dict] = {}
-
-    def _add(b: int, spec: int, nf: int, nc: int) -> None:
-        for cb in covered_buckets(b, spec_nb.get(spec, cur_nb), cur_nb):
+    for key, ref in table.manifest_list(sid).items():
+        s, b = parse_ref_key(key)
+        for cb in covered_buckets(b, spec_nb.get(s, cur_nb), cur_nb):
             cur = out.setdefault(cb, {"files": 0, "commits": 0})
-            cur["files"] += nf
-            cur["commits"] += nc
-
-    if ml is not None:
-        for key, ref in ml.items():
-            s, b = parse_ref_key(key)
-            if "delta_commits" in ref:
-                nf, nc = int(ref.get("delta_files", 0)), int(ref["delta_commits"])
-            else:
-                nf, nc = _count_delta(table._read_bucket_manifest(ref["manifest"]))
-            _add(b, s, nf, nc)
-        return out
-    by_bucket: dict[int, list] = {}
-    for e in table.files(sid):
-        by_bucket.setdefault(int(e["bucket"]), []).append(e)
-    for b, es in by_bucket.items():
-        nf, nc = _count_delta(es)
-        out[b] = {"files": nf, "commits": nc}
+            cur["files"] += ref["delta_files"]
+            cur["commits"] += ref["delta_commits"]
     return out
 
 
@@ -226,7 +196,7 @@ def expire_snapshots(
 ) -> dict:
     """Drop old snapshots: delete their data files (unless still
     referenced by a kept snapshot) and their manifests (unless shared by
-    reference — format v2 carries untouched buckets' manifests across
+    reference — a commit carries untouched buckets' manifests across
     snapshots).  Time travel remains valid within the retention window;
     the current snapshot is always kept.
 
@@ -280,11 +250,7 @@ def expire_snapshots(
         assert meta["current_snapshot_id"] in kept_set
 
     def _manifest_names(sid: int) -> set[str]:
-        ml = table.manifest_list(sid)
-        if ml is not None:
-            return {ref["manifest"] for ref in ml.values()}
-        p = f"snap-{sid}.manifest.json"
-        return {p} if os.path.exists(os.path.join(table.meta_dir, p)) else set()
+        return {ref["manifest"] for ref in table.manifest_list(sid).values()}
 
     kept_ids = [s["snapshot_id"] for s in kept]
     live_paths: set[str] = set()
@@ -294,7 +260,7 @@ def expire_snapshots(
         live_manifests |= _manifest_names(sid)
 
     # collect EVERYTHING to delete before touching anything — expired
-    # snapshots share manifests by reference (v2), so deleting while
+    # snapshots share manifests by reference, so deleting while
     # iterating would break reads of later expired snapshots mid-pass
     dead_data: set[str] = set()
     dead_manifests: set[str] = set()
@@ -308,12 +274,8 @@ def expire_snapshots(
     # metadata commit FIRST: a crash mid-delete then leaves a consistent
     # table plus harmless orphan files (the same guarantee core.commit
     # gives), never a kept snapshot pointing at deleted manifests
-    version = table._version()
     meta["snapshots"] = kept
-    _atomic_write_json(
-        os.path.join(table.meta_dir, f"v{version + 1}.metadata.json"), meta
-    )
-    _atomic_write_json(table._hint, {"version": version + 1})
+    table._swap_metadata(meta)
 
     n_data = n_manifest = 0
     for rel in sorted(dead_data):
@@ -388,12 +350,8 @@ def gc_orphans(
     live_manifests: set[str] = set()
     for sid in snap_ids:
         live_paths |= {e["path"] for e in table.files(sid)}
-        ml = table.manifest_list(sid)
-        if ml is not None:
-            live_manifests |= {ref["manifest"] for ref in ml.values()}
-            live_manifests.add(f"snap-{sid}.manifest-list.json")
-        else:
-            live_manifests.add(f"snap-{sid}.manifest.json")
+        live_manifests |= {r["manifest"] for r in table.manifest_list(sid).values()}
+        live_manifests.add(f"snap-{sid}.manifest-list.json")
 
     # a commit dir (data/<tag>/) is live iff ANY snapshot references a
     # file under it; fully-orphaned commit dirs are deleted wholesale —
@@ -446,11 +404,11 @@ def gc_orphans(
     }
 
 
-def _branch_chain(table: IceboxTable, branch: str) -> tuple[list[dict], bool]:
-    """(branch-only snapshots oldest-first, truncated) — ``truncated``
-    is True when the walk hit an EXPIRED snapshot before reaching
-    main's head, i.e. the per-snapshot audit evidence is incomplete
-    (retention ran during a long branch window)."""
+def branch_only_snapshots(table: IceboxTable, branch: str) -> list[dict]:
+    """The retained snapshots a branch added on top of main (branch
+    head's parent chain, stopping at main's head or at a snapshot
+    retention expired) — the AUDIT scope of write-audit-publish, oldest
+    first."""
     meta = table.metadata()
     head = meta.get("branches", {}).get(branch)
     if head is None:
@@ -458,23 +416,11 @@ def _branch_chain(table: IceboxTable, branch: str) -> tuple[list[dict], bool]:
     main = meta["current_snapshot_id"]
     by_id = {s["snapshot_id"]: s for s in meta["snapshots"]}
     out: list[dict] = []
-    truncated = False
     node: int | None = head
-    while node is not None and node != main:
-        s = by_id.get(node)
-        if s is None:
-            truncated = True
-            break
-        out.append(s)
-        node = s["parent_snapshot_id"]
-    return list(reversed(out)), truncated
-
-
-def branch_only_snapshots(table: IceboxTable, branch: str) -> list[dict]:
-    """The snapshots a branch added on top of main (branch head's parent
-    chain, stopping at main's head) — the AUDIT scope of
-    write-audit-publish, oldest first."""
-    return _branch_chain(table, branch)[0]
+    while node is not None and node != main and node in by_id:
+        out.append(by_id[node])
+        node = by_id[node]["parent_snapshot_id"]
+    return list(reversed(out))
 
 
 def audit_and_publish(
@@ -504,49 +450,19 @@ def audit_and_publish(
     Returns {published_snapshot_id, audited_snapshots, quarantined}.
     """
     hook = crash_hook or (lambda point: None)
-    audited, truncated = _branch_chain(table, branch)
-    # Gate input (round-5 ADVICE fix): prefer the RUNNING quarantine
-    # counter the commit path binds into every snapshot — head minus
-    # base covers the branch-only span even when retention expired
-    # intermediate branch snapshots (which silently truncated the old
-    # per-snapshot sum), and maintenance commits' carried lineage is
-    # never double-counted.
-    meta = table.metadata()
-    by_id = {s["snapshot_id"]: s for s in meta["snapshots"]}
-    head = audited[-1] if audited else None
-    base = (
-        by_id.get(meta["current_snapshot_id"])
-        if meta["current_snapshot_id"] is not None
-        else None
-    )
-    head_cum = (head or {}).get("summary", {}).get("cum_quarantined")
-    base_cum = (
-        0 if base is None else base.get("summary", {}).get("cum_quarantined")
-    )
-    if head is None:
-        quarantined = 0
-    elif head_cum is not None and base_cum is not None:
-        quarantined = int(head_cum) - int(base_cum)
-    else:
-        # legacy snapshots without the running counter: fall back to the
-        # per-snapshot sum (skipping maintenance commits' CARRIED
-        # lineage — a fold's copy of the parent epoch's stats would
-        # double-count) and refuse when the chain is truncated, because
-        # a partial sum cannot prove the no-quarantine contract.
-        if truncated and require_no_quarantine:
-            raise ValueError(
-                f"branch {branch!r}: retention expired intermediate branch "
-                f"snapshots and these snapshots predate the running "
-                f"quarantine counter — the no-quarantine audit cannot be "
-                f"proven; re-run with require_no_quarantine=False plus an "
-                f"expect_fingerprint audit, or publish from a branch whose "
-                f"snapshots carry cum_quarantined"
-            )
-        quarantined = sum(
-            int((s.get("summary", {}).get("lineage") or {}).get("quarantined", 0))
-            for s in audited
-            if "maintenance" not in s.get("summary", {})
+    audited = branch_only_snapshots(table, branch)
+    # Gate input: the RUNNING quarantine counter every commit binds into
+    # its snapshot — branch head minus main's head covers the
+    # branch-only span even when retention expired intermediate branch
+    # snapshots, and maintenance commits' carried lineage is never
+    # double-counted.
+    quarantined = 0
+    if audited:
+        main = table.metadata()["current_snapshot_id"]
+        base_cum = (
+            0 if main is None else table.snapshot(main)["summary"]["cum_quarantined"]
         )
+        quarantined = audited[-1]["summary"]["cum_quarantined"] - base_cum
     if require_no_quarantine and quarantined:
         raise ValueError(
             f"branch {branch!r} has {quarantined} quarantined row(s) across "

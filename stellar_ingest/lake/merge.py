@@ -113,7 +113,7 @@ def _fused_winner_rows(
     superset of the writer's (__slot, __bucket, conv_id, turn_idx), so
     the writer's in-partition sort is elided too: one exchange + one
     sort where the unfused path paid two of each (plan-asserted in
-    tests/test_round6_fused.py).
+    tests/test_fused_merge.py).
 
     Winners are IDENTICAL to resolve(): the window groups are the same
     (adding a function of the key to partitionBy changes nothing) and

@@ -82,26 +82,22 @@ def _read_aligned(
     added after a file was written backfill NULL.  Files whose era is
     name-compatible with the target share ONE relation (the common
     case stays a single scan node); each incompatible era gets its own
-    relation + projection.  Entries without a recorded ``schema_id``
-    (pre-round-4 files) use the name-compatible path — the legacy
-    behavior they were written under."""
+    relation + projection.  Each entry's era is its ``schema_id``."""
     tstruct = fields_to_struct(tfields)
     by_era: dict[int, list[str]] = {}
     for e in entries:
-        by_era.setdefault(int(e.get("schema_id", -1)), []).append(
+        by_era.setdefault(e["schema_id"], []).append(
             os.path.join(table.root, e["path"])
         )
-    era_fields = {
-        gsid: table.schema_fields(gsid) for gsid in by_era if gsid != -1
-    }
     compat_paths: list[str] = []
     parts: list[DataFrame] = []
     for gsid, paths in sorted(by_era.items()):
-        if gsid == -1 or _era_compatible(era_fields[gsid], tfields):
+        gfields = table.schema_fields(gsid)
+        if _era_compatible(gfields, tfields):
             compat_paths += paths
             continue
-        g_by_id = {f["id"]: f for f in era_fields[gsid]}
-        df = spark.read.schema(fields_to_struct(era_fields[gsid])).parquet(*paths)
+        g_by_id = {f["id"]: f for f in gfields}
+        df = spark.read.schema(fields_to_struct(gfields)).parquet(*paths)
         cols = []
         for t in tfields:
             g = g_by_id.get(t["id"])
@@ -140,7 +136,8 @@ def resolve_stored(df: DataFrame) -> DataFrame:
 def _may_contain(entry: dict, key) -> bool:
     """Manifest-stats file skip: False only when the entry carries key
     bounds (lake/write.py::_key_bounds) that exclude ``key``.  Absent
-    bounds (legacy entries, stats-less footers) ⇒ conservatively True.
+    bounds (a footer without key stats, or a bucket column whose values
+    are not JSON-native) ⇒ conservatively True.
     Safe by construction: every file actually holding the key has
     key_min ≤ key ≤ key_max, so pruning never drops a matching row —
     and therefore never changes the multi-version resolve decision for
@@ -494,22 +491,15 @@ def lookup_many_fast(
     # per-era (target column → physical column) pairs, aligned by
     # COLUMN ID like the Spark read path (_read_aligned): renames keep
     # values, added/dropped-readded columns read None for old files.
-    # Legacy entries without a schema_id align by name (their contract).
     era_pairs: dict[int, list[tuple[str, str | None]]] = {}
 
     def _pairs(gsid: int):
         if gsid not in era_pairs:
-            if gsid == -1:
-                era_pairs[gsid] = [(t["name"], t["name"]) for t in tfields]
-            else:
-                g_by_id = {f["id"]: f for f in table.schema_fields(gsid)}
-                era_pairs[gsid] = [
-                    (
-                        t["name"],
-                        g_by_id[t["id"]]["name"] if t["id"] in g_by_id else None,
-                    )
-                    for t in tfields
-                ]
+            g_by_id = {f["id"]: f for f in table.schema_fields(gsid)}
+            era_pairs[gsid] = [
+                (t["name"], g_by_id[t["id"]]["name"] if t["id"] in g_by_id else None)
+                for t in tfields
+            ]
         return era_pairs[gsid]
 
     # per-file: skip row groups by footer min/max stats (the same skip
@@ -548,7 +538,7 @@ def lookup_many_fast(
             t = pf.read_row_groups(list(rgs))
         if idx is not None:
             t = t.filter(pc.is_in(t.column(col), value_set=pa.array(ks)))
-        pairs = _pairs(int(entry.get("schema_id", -1)))
+        pairs = _pairs(entry["schema_id"])
         return [
             {tn: (r.get(gn) if gn else None) for tn, gn in pairs}
             for r in t.to_pylist()

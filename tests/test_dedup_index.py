@@ -262,3 +262,50 @@ def test_ingest_batch_stats_unchanged_and_action_light(spark, docs, tmp_path):
         for r in current_assignments(spark, root).collect()
     )
     assert got == full_rebuild(docs)
+
+
+def test_ingest_batch_idempotent_and_torn_repair(spark, docs, tmp_path):
+    from stellar_ingest.lake.read import scan
+    from stellar_ingest.lake.write import append
+    from stellar_ingest.ops.dedup import band_signatures
+    from stellar_ingest.ops.dedup_index import _tables
+
+    d1 = docs.filter(F.col("doc_id") < 150)
+    d2 = docs.filter(F.col("doc_id") >= 150)
+    root = str(tmp_path / "idx")
+    dedup_index_init(root)
+    bt, ct = _tables(root)
+    m1 = ingest_batch(spark, d1, root, epoch=1)
+    assert "already_committed" not in m1
+    bands_after_1 = scan(spark, bt).count()
+    assign_1 = sorted(
+        (r["doc_id"], r["cluster_id"])
+        for r in current_assignments(spark, root).collect()
+    )
+    # blind retry of the SAME epoch: no-op, nothing duplicated
+    m1r = ingest_batch(spark, d1, root, epoch=1)
+    assert m1r["already_committed"] is True
+    assert scan(spark, bt).count() == bands_after_1
+    assert (
+        sorted(
+            (r["doc_id"], r["cluster_id"])
+            for r in current_assignments(spark, root).collect()
+        )
+        == assign_1
+    )
+    # torn state: epoch 2's BANDS landed (with its epoch marker) but the
+    # clusters append did not — the retry must not re-append bands and
+    # must still converge to the full-corpus closure
+    append(
+        spark, bt, band_signatures(d2),
+        sort_cols=("doc_id", "band"), summary={"dedup_epoch": 2},
+    )
+    bands_after_torn = scan(spark, bt).count()
+    m2 = ingest_batch(spark, d2, root, epoch=2)
+    assert "already_committed" not in m2
+    assert scan(spark, bt).count() == bands_after_torn  # no duplicate bands
+    got = sorted(
+        (r["doc_id"], r["cluster_id"])
+        for r in current_assignments(spark, root).collect()
+    )
+    assert got == full_rebuild(docs)

@@ -1,4 +1,4 @@
-"""Round-6 fused single-exchange merge path (lake/merge.py::
+"""The fused single-exchange merge path (lake/merge.py::
 _fused_winner_rows): the LWW window and the bucketed write share ONE
 exchange because __bucket is a deterministic function of the key.
 
@@ -6,7 +6,8 @@ Checks: (1) plan shape — exactly one Exchange and one Sort survive in
 the write-side plan (the window's; the writer's sort is elided),
 (2) winners are identical to the unfused resolve() path, including
 duplicates/deletes, (3) a full multi-epoch drain produces a
-fingerprint-identical table fused vs unfused."""
+fingerprint-identical table fused vs unfused, (4) an empty batch on an
+empty table mints no snapshot."""
 
 from __future__ import annotations
 
@@ -181,6 +182,18 @@ def test_fused_drain_fingerprint_matches_unfused(spark, tmp_path):
         del os.environ["STELLAR_WRITE_SALT"]
     fp_old = table_fingerprint(read_live(spark, IceboxTable(f"{w}/t_old")))
     assert fp_new == fp_old
+
+
+def test_merge_apply_skip_noop_on_empty_table(spark, tmp_table):
+    from stellar_ingest.lake.core import IceboxTable
+    from stellar_ingest.lake.merge import merge_apply
+    from stellar_ingest.schema import CHANGELOG_SCHEMA, TABLE_SCHEMA
+
+    t = IceboxTable.create(tmp_table, TABLE_SCHEMA, num_buckets=4)
+    empty = spark.createDataFrame([], CHANGELOG_SCHEMA)  # changelog-shaped
+    sid = merge_apply(spark, t, empty, skip_if_noop=True)
+    assert sid is None
+    assert t.snapshots() == []  # no empty snapshot minted
 
 
 if __name__ == "__main__":

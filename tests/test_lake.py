@@ -185,6 +185,47 @@ def test_commit_is_atomic_under_partial_write(spark, tmp_table):
     assert read_live(spark, t).count() == 1
 
 
+def test_format_v1_table_is_refused_and_left_untouched(spark, tmp_table):
+    """icebox reads and writes format 2 only: a table whose metadata
+    says ``format_version: 1`` is refused with a ValueError naming the
+    version — by reads, appends and schema changes alike — and nothing
+    on disk changes."""
+    import json
+    import os
+
+    t = IceboxTable.create(tmp_table, TABLE_SCHEMA, num_buckets=4)
+    append(spark, t, _rows(spark, [("c1", 0, "user", "x", None, 1, 1, 0, "U")]))
+    mpath = os.path.join(t.meta_dir, f"v{t._version()}.metadata.json")
+    with open(mpath) as fh:
+        meta = json.load(fh)
+    meta["format_version"] = 1
+    with open(mpath, "w") as fh:
+        json.dump(meta, fh)
+
+    def tree() -> dict[str, bytes]:
+        out = {}
+        for root, _dirs, files in os.walk(tmp_table):
+            for fn in files:
+                full = os.path.join(root, fn)
+                with open(full, "rb") as fh:
+                    out[os.path.relpath(full, tmp_table)] = fh.read()
+        return out
+
+    before = tree()
+    opened = IceboxTable(tmp_table)
+    more = _rows(spark, [("c2", 0, "user", "y", None, 2, 2, 0, "U")])
+    for op in (
+        opened.metadata,
+        opened.files,
+        lambda: scan(spark, opened),
+        lambda: append(spark, opened, more),
+        lambda: opened.rename_column("text", "body"),
+    ):
+        with pytest.raises(ValueError, match="format_version 1"):
+            op()
+    assert tree() == before
+
+
 def test_expire_with_shared_manifests_across_expired_snapshots(spark, tmp_table):
     """Two+ expired snapshots share untouched buckets' manifests by
     reference (format v2); expiry must collect-then-delete, not delete

@@ -172,23 +172,6 @@ def test_crash_injection_reconverges(spark, ledger, golden, tmp_path, crash_at):
     assert epochs == list(range(1, max(epochs) + 1))
 
 
-def test_v1_manifest_format_reconverges(spark, ledger, golden, tmp_path):
-    """Legacy monolithic manifests (format v1) stay fully supported:
-    same ingest, same final fingerprint as the sharded v2 golden."""
-    import os
-
-    table_root = str(tmp_path / "t")
-    run_increment(
-        spark, ledger["dir"], table_root, str(tmp_path / "ck"),
-        max_segments_per_part=6, salts=None, format_version=1,
-    )
-    t = IceboxTable(table_root)
-    sid = t.metadata()["current_snapshot_id"]
-    assert os.path.exists(os.path.join(t.meta_dir, f"snap-{sid}.manifest.json"))
-    assert t.manifest_list(sid) is None  # really v1
-    assert table_fingerprint(scan(spark, t)) == golden["fingerprint"]
-
-
 def test_salted_run_reconverges(spark, ledger, golden, tmp_path):
     table_root = str(tmp_path / "t")
     run_increment(

@@ -14,10 +14,12 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from stellar_ingest.cdc.runner import run_increment
+from stellar_ingest.gen.changelog import gen_events, keyspace, write_ledger
 from stellar_ingest.lake.core import IceboxTable, fields_to_struct
 from stellar_ingest.lake.read import lookup, lookup_fast, read_live, scan
 from stellar_ingest.lake.write import append
-from stellar_ingest.schema import TABLE_SCHEMA
+from stellar_ingest.schema import TABLE_SCHEMA, align_renames, ensure_table_schema
 
 from .helpers import ts
 
@@ -165,3 +167,96 @@ def test_rename_then_lookup_matches_spark(spark, tmp_table):
             got = got.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
         assert list(got.columns) == list(want.columns), k
         assert got.astype(str).values.tolist() == want.astype(str).values.tolist(), k
+
+
+def test_rename_changelog_column_survives_ongoing_ingest(spark, tmp_path):
+    """Rename `role` → `speaker` BETWEEN ingest epochs while the ledger
+    keeps sending `role`: later epochs must keep feeding the renamed
+    column (no fresh-id duplicate, no half-populated split)."""
+    n_convs = 10
+    ks = keyspace(n_convs)
+    ev = gen_events(spark, n_convs, parts=2, seed=7)
+    write_ledger(ev, str(tmp_path / "ledger"), n_convs=n_convs, seg_span=ks // 2)
+    t_root, ck = str(tmp_path / "t"), str(tmp_path / "ck")
+    # epoch 1 only, then rename, then drain the rest
+    run_increment(
+        spark, str(tmp_path / "ledger"), t_root, ck,
+        max_segments_per_part=1, max_epochs=1, salts=None,
+    )
+    table = IceboxTable(t_root)
+    table.rename_column("role", "speaker")
+    run_increment(spark, str(tmp_path / "ledger"), t_root, ck, salts=None)
+    table = IceboxTable(t_root)
+    names = [f["name"] for f in table.schema_fields()]
+    assert "speaker" in names and "role" not in names
+    assert len(names) == len(set(names))  # no fresh-id duplicate added
+    live = read_live(spark, table)
+    # every live row has its role value, under the new name, across eras
+    assert live.filter(F.col("speaker").isNull()).count() == 0
+    # values equal the golden run on an un-renamed table
+    g_root, g_ck = str(tmp_path / "g"), str(tmp_path / "gck")
+    run_increment(spark, str(tmp_path / "ledger"), g_root, g_ck, salts=None)
+    golden = read_live(spark, IceboxTable(g_root)).withColumnRenamed(
+        "role", "speaker"
+    )
+    assert live.select(*golden.columns).exceptAll(golden).count() == 0
+    assert golden.exceptAll(live.select(*golden.columns)).count() == 0
+
+
+def test_rename_map_and_align_guards(spark, tmp_table):
+    t = IceboxTable.create(tmp_table, TABLE_SCHEMA, num_buckets=2)
+    assert t.rename_map() == {}
+    t.rename_column("role", "speaker")
+    assert t.rename_map() == {"role": "speaker"}
+    # drop then re-add the OLD name: the fresh-id binding of "role" wins,
+    # the stale mapping disappears
+    t.rename_column("tool", "tool2")
+    t.drop_column("tool2")
+    t.evolve_schema(T.StructType([T.StructField("tool", T.StringType(), True)]))
+    assert t.rename_map() == {"role": "speaker"}
+    df = spark.createDataFrame([("u", "x")], "role string, text string")
+    out = align_renames(t, df)
+    assert out.columns == ["speaker", "text"]
+    both = spark.createDataFrame([("u", "v")], "role string, speaker string")
+    with pytest.raises(ValueError, match="both the pre-rename"):
+        align_renames(t, both)
+    # ensure_table_schema refuses unaligned old names outright
+    with pytest.raises(ValueError, match="pre-rename names"):
+        ensure_table_schema(
+            t, T.StructType([T.StructField("role", T.StringType(), True)])
+        )
+
+
+def test_align_renames_chain_ambiguity_raises(spark, tmp_path):
+    schema = T.StructType(
+        [
+            T.StructField("conv_id", T.StringType()),
+            T.StructField("turn_idx", T.IntegerType()),
+            T.StructField("role", T.StringType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("_ts", T.TimestampType()),
+            T.StructField("_lsn", T.LongType()),
+            T.StructField("_src_part", T.IntegerType()),
+            T.StructField("_op", T.StringType()),
+        ]
+    )
+    t = IceboxTable.create(str(tmp_path / "t"), schema, num_buckets=4)
+    append(
+        spark, t,
+        spark.createDataFrame(
+            [("c1", 0, "user", ts(1), ts(1), 1, 0, "U")], schema
+        ),
+    )
+    t.rename_column("role", "speaker")
+    t.rename_column("speaker", "voice")
+    assert t.rename_map() == {"role": "voice", "speaker": "voice"}
+    # batch carrying only ONE historical name still aligns fine
+    ok = spark.createDataFrame([("c1", "user")], "conv_id string, role string")
+    assert "voice" in align_renames(t, ok).columns
+    # batch carrying BOTH historical names is ambiguous → operator error
+    bad = spark.createDataFrame(
+        [("c1", "user", "assistant")],
+        "conv_id string, role string, speaker string",
+    )
+    with pytest.raises(ValueError, match="multiple historical names"):
+        align_renames(t, bad)

@@ -4,10 +4,11 @@ through foreachBatch must land the same final state as the batch loop."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
-from stellar_ingest.cdc.runner import backfill
+from stellar_ingest.cdc.runner import _prune_quarantine, backfill
 from stellar_ingest.gen.changelog import gen_events, keyspace, write_ledger
 from stellar_ingest.lake.core import IceboxTable, commit_tag
 from stellar_ingest.lake.read import read_live
@@ -228,3 +229,55 @@ def test_streaming_inloop_retention_bounds_metadata(spark, tmp_path):
         expire_every=1, keep_last=1, gc_every=1, gc_grace_ms=0,
     )
     assert len(t.snapshots()) == before
+
+
+def test_streaming_replay_rewrites_lost_quarantine(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from stellar_ingest.streaming.pipeline import run_streaming
+
+    from .helpers import ts as _ts
+
+    seg = tmp_path / "ledger" / "part=0" / "seg=0"
+    seg.mkdir(parents=True)
+    pq.write_table(
+        pa.table(
+            {
+                "lsn": pa.array([1, 2, 3], pa.int64()),
+                "src_part": pa.array([0, 0, 0], pa.int32()),
+                "op": ["I", None, "I"],  # lsn 2 → quarantine
+                "conv_id": ["c1", "c1", "c2"],
+                "turn_idx": pa.array([0, 1, 0], pa.int32()),
+                "role": ["user"] * 3,
+                "text": ["ok1", "bad", "ok2"],
+                "ts": pa.array([_ts(1), _ts(2), _ts(3)], pa.timestamp("us")),
+            }
+        ),
+        seg / "s.parquet",
+    )
+    ck = str(tmp_path / "ck")
+    run_streaming(spark, str(tmp_path / "ledger"), str(tmp_path / "t"), ck, num_buckets=4)
+    qdir = tmp_path / "ck" / "quarantine" / "ss_batch=0"
+    assert qdir.exists()
+    # simulate a crash BETWEEN snapshot commit and quarantine write:
+    # quarantine lost, SS checkpoint lost → the batch replays
+    shutil.rmtree(qdir)
+    shutil.rmtree(tmp_path / "ck" / "ss")
+    t = IceboxTable(str(tmp_path / "t"))
+    snaps_before = len(t.snapshots())
+    run_streaming(spark, str(tmp_path / "ledger"), str(tmp_path / "t"), ck, num_buckets=4)
+    assert len(t.snapshots()) == snaps_before  # fence: no double apply
+    dead = spark.read.parquet(str(qdir))  # re-derived, not lost
+    assert {r["lsn"] for r in dead.collect()} == {2}
+
+
+def test_prune_quarantine_namespaces_independent(tmp_path):
+    q = tmp_path / "quarantine"
+    for d in ["epoch=1", "epoch=2", "epoch=3", "ss_batch=10", "ss_batch=11",
+              "ss_batch=12", "junk"]:
+        (q / d).mkdir(parents=True)
+    n = _prune_quarantine(str(tmp_path), keep=2)
+    assert n == 2
+    left = sorted(os.listdir(q))
+    assert left == ["epoch=2", "epoch=3", "junk", "ss_batch=11", "ss_batch=12"]

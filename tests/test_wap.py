@@ -15,6 +15,7 @@ from stellar_ingest.lake.core import IceboxTable
 from stellar_ingest.lake.maintain import (
     audit_and_publish,
     branch_only_snapshots,
+    compact,
     expire_snapshots,
 )
 from stellar_ingest.lake.read import read_live, scan
@@ -207,3 +208,77 @@ def test_streaming_branch_publish(spark, ledger, golden, tmp_path):
     audit_and_publish(spark, t, "ss-stage")
     # streaming state ≡ the batch runner's state, now on main
     assert table_fingerprint(scan(spark, t)) == golden
+
+
+# -- the quarantine gate reads the running counter ------------------------------
+
+
+def _seg(path, lsns, ops, convs, secs):
+    path.mkdir(parents=True)
+    pq.write_table(
+        pa.table(
+            {
+                "lsn": pa.array(lsns, pa.int64()),
+                "src_part": pa.array([0] * len(lsns), pa.int32()),
+                "op": ops,
+                "conv_id": convs,
+                "turn_idx": pa.array([0] * len(lsns), pa.int32()),
+                "role": ["user"] * len(lsns),
+                "text": ["x"] * len(lsns),
+                "ts": pa.array([_ts(s) for s in secs], pa.timestamp("us")),
+            }
+        ),
+        path / "s.parquet",
+    )
+
+
+def test_quarantine_gate_survives_branch_snapshot_expiry(spark, tmp_path):
+    """Epoch 1 quarantines a row, epoch 2 is clean; retention then
+    expires the epoch-1 branch snapshot.  A per-snapshot sum over the
+    retained chain would see only the clean head and publish the bad
+    epoch silently; the running counter on the head must still trip
+    the gate."""
+    _seg(tmp_path / "ledger" / "part=0" / "seg=0",
+         [1, 2], ["I", None], ["c1", "c1"], [1, 2])  # op NULL → quarantine
+    _seg(tmp_path / "ledger" / "part=0" / "seg=1",
+         [3, 4], ["I", "I"], ["c2", "c3"], [3, 4])
+    root = str(tmp_path / "t")
+    run_increment(
+        spark, str(tmp_path / "ledger"), root, str(tmp_path / "ck"),
+        salts=None, num_buckets=4, branch="staging", max_segments_per_part=1,
+    )
+    staged = IceboxTable(root, branch="staging")
+    assert len(staged.snapshots()) >= 2
+    expire_snapshots(staged, keep_last=1)
+    t = IceboxTable(root)
+    # the intermediate (quarantining) branch snapshot is gone…
+    chain = branch_only_snapshots(t, "staging")
+    assert len(chain) == 1
+    # …but the gate still refuses
+    with pytest.raises(ValueError, match="quarantined"):
+        audit_and_publish(spark, t, "staging")
+    assert t.current_snapshot() is None  # main untouched
+    out = audit_and_publish(spark, t, "staging", require_no_quarantine=False)
+    assert out["quarantined"] == 1
+
+
+def test_maintenance_carried_lineage_not_double_counted(spark, tmp_path):
+    """A compaction/fold carries the parent's lineage summary forward
+    (fence repair needs it); the quarantine counter must count the
+    epoch once, not once per maintenance commit."""
+    _seg(tmp_path / "ledger" / "part=0" / "seg=0",
+         [1, 2, 3], ["I", None, "I"], ["c1", "c1", "c2"], [1, 2, 3])
+    root = str(tmp_path / "t")
+    run_increment(
+        spark, str(tmp_path / "ledger"), root, str(tmp_path / "ck"),
+        salts=None, num_buckets=4, branch="staging",
+    )
+    staged = IceboxTable(root, branch="staging")
+    head_before = staged.current_snapshot()["summary"]["cum_quarantined"]
+    compact(spark, staged, min_files_per_bucket=1)
+    head_after = staged.current_snapshot()["summary"]
+    assert "maintenance" in head_after  # it IS a maintenance commit
+    assert head_after["cum_quarantined"] == head_before == 1
+    t = IceboxTable(root)
+    out = audit_and_publish(spark, t, "staging", require_no_quarantine=False)
+    assert out["quarantined"] == 1  # not 2
