@@ -141,16 +141,16 @@ def bench_cdc(spark, n_convs: int) -> dict:
 
 
 def bench_steady(spark) -> dict:
-    """Bounded steady-state section (the dedicated full-scale run lives
-    in bench/steady_state.py; BENCH/BASELINE.md records it): preload a
-    table, then sustained update epochs in copy-on-write vs
-    merge-on-read.  bench.py (a top-level module) shadows the bench/
-    package name, hence the by-path import."""
+    """Bounded steady-state section (bench/mor_scaling.py::run_steady_state;
+    BENCH/BASELINE.md records full-scale runs): preload a table, then
+    sustained update epochs in copy-on-write vs merge-on-read.  bench.py
+    (a top-level module) shadows the bench/ package name, hence the
+    by-path import."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "steady_state",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench", "steady_state.py"),
+        "mor_scaling",
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench", "mor_scaling.py"),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

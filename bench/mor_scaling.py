@@ -1,7 +1,7 @@
 """N -> 4N scaling criterion on the steady-state merge-on-read path.
 
 Runs the SAME sustained-apply job (preload + K incremental MoR epochs,
-bench/steady_state.py::run_steady_state) at two parallelism levels with
+run_steady_state below) at two parallelism levels with
 a constant physical plan (fixed shuffle partitions, write salt pinned
 via STELLAR_WRITE_SALT=1), each level in a fresh JVM, and reports
 throughput at both plus scaling efficiency.
@@ -25,8 +25,98 @@ import os
 import shutil
 import subprocess
 import sys
+import tempfile
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: first increment lsn: far above any preload lsn (gen_events tops out
+#: around v=23 → lsn < 24*ks; 64*ks leaves room and stays deterministic)
+_INC_LSN_FACTOR = 64
+
+
+def run_steady_state(
+    spark,
+    *,
+    n_convs: int,
+    inc_events: int,
+    inc_epochs: int,
+    modes,
+    parts: int = 8,
+    num_buckets: int = 32,
+) -> dict:
+    """Sustained apply into a PRE-LOADED table: one backfill epoch of a
+    full ``gen_events`` ledger (the same compacted starting state for
+    every mode), then ``inc_epochs`` epochs of ``inc_events`` updates
+    spread over the whole keyspace (every epoch touches every bucket —
+    the adversarial shape for copy-on-write).  ``modes`` holds
+    (name, runner mode, fold_min_deltas) triples; returns per-epoch and
+    mean events/sec per mode.  A COW epoch's cost tracks TABLE size (it
+    rewrites every touched bucket); a MoR epoch's tracks the batch."""
+    from stellar_ingest.cdc.runner import run_increment
+    from stellar_ingest.gen.changelog import (
+        append_update_segment,
+        gen_events,
+        gen_update_stream,
+        keyspace,
+        write_ledger,
+    )
+
+    work = tempfile.mkdtemp(
+        prefix="stellar_steady_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None
+    )
+    ks = keyspace(n_convs)
+    out: dict = {"n_convs": n_convs, "inc_events": inc_events, "inc_epochs": inc_epochs}
+    try:
+        ev = gen_events(spark, n_convs, parts=parts, seed=42)
+        out["preload_events"] = int(ev.count())
+        base_ledger = os.path.join(work, "ledger_base")
+        write_ledger(ev, base_ledger, n_convs=n_convs, seg_span=ks)
+        epochs: dict[str, list[float]] = {}
+        for name, mode, fold_min in modes:
+            mdir = os.path.join(work, name.replace("+", "_"))
+            ledger = os.path.join(mdir, "ledger")
+            table = os.path.join(mdir, "table")
+            ck = os.path.join(mdir, "ck")
+            shutil.copytree(base_ledger, ledger)
+            t0 = time.monotonic()
+            run_increment(
+                spark, ledger, table, ck,
+                max_segments_per_part=None, max_epochs=1, salts=None,
+                num_buckets=num_buckets,
+            )
+            out.setdefault("preload_wall_sec", {})[name] = round(time.monotonic() - t0, 3)
+            walls: list[float] = []
+            for k in range(inc_epochs):
+                inc = gen_update_stream(
+                    spark, n_convs,
+                    n_events=inc_events,
+                    lsn_base=_INC_LSN_FACTOR * ks + k * inc_events,
+                    parts=parts, seed=777,
+                )
+                append_update_segment(inc, ledger, seg_no=1000 + k)
+                t0 = time.monotonic()
+                run_increment(
+                    spark, ledger, table, ck,
+                    max_segments_per_part=None, max_epochs=1, salts=None,
+                    num_buckets=num_buckets, mode=mode, fold_min_deltas=fold_min,
+                )
+                walls.append(time.monotonic() - t0)
+            epochs[name] = [round(inc_events / w, 1) for w in walls]
+            shutil.rmtree(mdir, ignore_errors=True)
+        out["epoch_events_per_sec"] = epochs
+        out["mean_events_per_sec"] = {
+            name: round(sum(e) / len(e), 1) for name, e in epochs.items()
+        }
+        # how much the delta commit mode buys at this table:batch ratio
+        if "cow" in epochs and "mor" in epochs:
+            out["mor_over_cow"] = round(
+                out["mean_events_per_sec"]["mor"] / out["mean_events_per_sec"]["cow"], 2
+            )
+        return out
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
 
 _CHILD = """
 import json, os, sys
@@ -34,7 +124,7 @@ sys.path.insert(0, {repo!r})
 os.environ["STELLAR_WRITE_SALT"] = "1"
 import importlib.util
 spec = importlib.util.spec_from_file_location(
-    "steady_state", os.path.join({repo!r}, "bench", "steady_state.py"))
+    "mor_scaling", os.path.join({repo!r}, "bench", "mor_scaling.py"))
 mod = importlib.util.module_from_spec(spec); spec.loader.exec_module(mod)
 from stellar_ingest.session import get_spark
 extra = {{}}

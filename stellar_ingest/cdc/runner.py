@@ -20,8 +20,9 @@ Exactly-once protocol per epoch ``e → e+1``:
    (BASELINE.json:6 ordering requirement).
 5. MERGE apply → snapshot ``s`` with summary {epoch: e+1, offsets',
    lineage stats} (stats observed during the merge, bound into the
-   same atomic commit).  A merge-on-read epoch that folds does so in
-   this same job and snapshot (lake/merge.py::delta_apply).
+   same atomic commit).  Both modes run lake/merge.py's one apply job:
+   copy-on-write rewrites the buckets the batch touches, merge-on-read
+   rewrites the buckets it folds and appends the rest as deltas.
 6. persist quarantined rows (dead-letter parquet) + emit lineage.
 7. checkpoint := {e+1, offsets', s}.   (crash between 5 and 7 is what
    step 1 repairs — offsets from the summary, lineage re-emitted from
@@ -411,11 +412,8 @@ def run_increment(
                 }
 
             # overlap: discover epoch e+1's segments while this epoch's
-            # merge/write executes (footer reads release the GIL).
-            # STELLAR_NO_PREFETCH=1 disables (A/B measurement seam).
-            if os.environ.get("STELLAR_NO_PREFETCH") != "1" and (
-                max_epochs is None or epochs_done + 1 < max_epochs
-            ):
+            # merge/write executes (footer reads release the GIL)
+            if max_epochs is None or epochs_done + 1 < max_epochs:
                 prefetched = pool.submit(list_segments, ledger_dir)
             if epoch_mode == "mor":
                 # the fold rides this epoch's apply: one job, one snapshot

@@ -60,7 +60,13 @@ def compact(
     """Rewrite fragmented buckets into one file per bucket; returns the
     new snapshot id, or None if nothing needed compacting.  The summary
     carries the parent's epoch/offsets forward so the CDC fence still
-    sees the latest applied epoch."""
+    sees the latest applied epoch.
+
+    A job of its own, not the CDC apply (lake/merge.py): it also
+    rewrites tables that lack the ``_ts/_lsn/_src_part/_op`` envelope
+    the apply's LWW window ranks on (the dedup index's tables bucket on
+    ``doc_id``, ops/dedup_index.py), and routing those through the
+    apply would make shared code branch on its caller."""
     target = plan_compaction(table, min_files_per_bucket=min_files_per_bucket)
     if buckets is not None:
         target = sorted(set(target) & set(buckets))

@@ -1,32 +1,35 @@
-"""Idempotent MERGE upsert — two commit modes (SURVEY.md §2 ops
-7/68/69/78; BASELINE.json:6 "idempotent MERGE upserts,
-key-partitioned"):
+"""Idempotent MERGE upsert — one apply job, two commit modes (SURVEY.md
+§2 ops 7/68/69/78; BASELINE.json:6 "idempotent MERGE upserts,
+key-partitioned").
 
-- ``merge_apply`` — **copy-on-write**: rewrite touched buckets; epoch
-  cost Θ(touched table data).  Best for backfill and read-heavy tables.
-- ``delta_apply`` — **merge-on-read**: append the batch's winners as
-  delta files; epoch cost Θ(batch).  The steady-state choice — readers
-  resolve at scan time (lake/read.py).  Folds ride the same apply: the
-  stored rows of the buckets the fold policy picks
-  (lake/maintain.py::fold_targets) join the batch in its one LWW
-  window, and those buckets are written back as base files in the same
-  job and snapshot.  Measured at a 13.9M-row table: 5.7× COW
-  throughput, flat in table size (BENCH/BASELINE.md §r3).
+Every epoch runs the same body (``_resolve_and_write``), parameterized
+by the buckets it rewrites:
 
-The copy-on-write batch = one plan, two shuffles, one snapshot commit:
-
-1. **Touched buckets** from the batch's keys (tiny distinct collect,
-   bounded by num_buckets, never by data size).
-2. **Manifest prune**: read only the table files of touched buckets
-   (metadata-level partition pruning; untouched files carry into the
-   new snapshot unread).
-3. **Single-window resolve**: existing rows are re-expressed as
+1. **Raw read** of the rewritten buckets' stored files only (manifest
+   prune; every other file carries into the new snapshot unread).
+2. **Single-window resolve**: the stored rows are re-expressed as
    changelog rows and unioned with the batch; ONE ranking window
-   computes last-writer-wins across both at once.  This absorbs
-   in-batch LSN dedupe too (duplicate (src_part, lsn) deliveries carry
-   identical payloads, so whichever copy ranks first is the same row) —
-   saving the separate dropDuplicates shuffle on the hot path.
-4. **Rewrite** touched buckets (write-salted for hot buckets), commit.
+   computes last-writer-wins across stored and incoming versions at
+   once.  This absorbs in-batch LSN dedupe too (duplicate
+   (src_part, lsn) deliveries carry identical payloads, so whichever
+   copy ranks first is the same row) — no separate dropDuplicates
+   shuffle on the hot path.
+3. **Write** the winners bucketed (fused single exchange, or the salted
+   two-exchange plan for skew), then commit one snapshot that removes
+   the rewritten buckets' files.
+
+The two modes differ only in what they rewrite:
+
+- ``merge_apply`` — **copy-on-write**: rewrite = the batch's touched
+  buckets (a tiny distinct collect, bounded by num_buckets); every
+  output is a base file.  Epoch cost Θ(touched table data); best for
+  backfill and read-heavy tables.
+- ``delta_apply`` — **merge-on-read**: rewrite = the fold buckets the
+  policy picks (lake/maintain.py::fold_targets), the rest of the
+  batch's winners as delta files that readers resolve at scan time
+  (lake/read.py).  Epoch cost Θ(batch + folded buckets), flat in table
+  size — the steady-state choice (measured at a 13.9M-row table: 5.7×
+  COW throughput, BENCH/BASELINE.md §r3).
 
 Deletes: the winning mutation may be a delete → kept as a tombstone row
 (_op='D', NULL payload).  Tombstones must persist: dropping them would
@@ -152,6 +155,82 @@ def _fused_winner_rows(
     )
 
 
+def _resolve_and_write(
+    spark: SparkSession,
+    table: IceboxTable,
+    batch: DataFrame,
+    rewrite: list[int],
+    operation: str,
+    *,
+    salts: int | None,
+    summary: dict | None,
+    summary_fn,
+    rn_observation,
+    skip_if_noop: bool,
+    batch_rows: int | None,
+) -> int | None:
+    """The one apply job (module docstring): the ``rewrite`` buckets'
+    stored rows, read raw, join the batch in one LWW window; every
+    output file is a base file except, in a merge-on-read (``delta``)
+    epoch, those of buckets outside ``rewrite``; the commit removes the
+    files the rewrite replaces."""
+    meta = table.metadata()
+    nbuckets = meta["num_buckets"]
+    bexpr = bucket_expr(meta["bucket_column"], nbuckets)
+    union = batch
+    if rewrite:
+        stored = scan(spark, table, buckets=rewrite, resolve=False)
+        union = batch.unionByName(
+            _existing_as_changelog(stored), allowMissingColumns=True
+        )
+    fields = table.schema_struct().fields
+    delta_buckets = (
+        set(range(nbuckets)).difference(rewrite) if operation == "delta" else ()
+    )
+    if (not salts or int(salts) <= 1) and write_salt(batch, nbuckets) == 1:
+        rows = _fused_winner_rows(
+            union,
+            bexpr,
+            nbuckets,
+            rn_observation=rn_observation,
+            batch_rows=batch_rows,
+            fields=fields,
+        )
+        layout = {"pre_partitioned": True, "sort_prefix": ("__slot",)}
+    else:
+        winners = lww_winners(union, salts=salts, rn_observation=rn_observation)
+        rows = to_table_rows(winners, fields=fields).withColumn("__bucket", bexpr)
+        layout = {}
+    new_files = write_data_files(rows, table, delta_buckets=delta_buckets, **layout)
+    summary = dict(summary or {})
+    if summary_fn is not None:
+        # the write above was the batch's action — observations attached
+        # upstream are filled, so summary_fn is safe to call
+        summary.update(summary_fn())
+    if rewrite and "lineage" in summary:
+        empty = not _observed_rows(summary)  # new_files hold rewritten rows too
+    else:
+        empty = not new_files
+    if skip_if_noop and empty and not _observed_quarantined(summary):
+        # an empty batch mints no snapshot and no rewrite: the rewritten
+        # buckets' files are deleted before anything references them
+        for tag in {commit_tag(e["path"]) for e in new_files}:
+            shutil.rmtree(os.path.join(table.data_dir, tag), ignore_errors=True)
+        return None
+    if rewrite and operation == "delta":
+        summary["compacted_buckets"] = rewrite
+    removed = {e["path"] for e in table.files(buckets=rewrite)} if rewrite else None
+    return table.commit(
+        added_files=new_files,
+        removed_paths=removed,
+        summary=summary,
+        operation=operation,
+        # manifest IO stays O(rewrite): only these buckets' manifests are
+        # read+rewritten (None ⇒ derived from the added files)
+        touched_buckets=rewrite or None,
+    )
+
+
 def merge_apply(
     spark: SparkSession,
     table: IceboxTable,
@@ -182,16 +261,13 @@ def merge_apply(
     ``batch_rows``: the batch's row count when the caller knows it
     before the job (it sizes the write's task count,
     lake/write.py::fused_partitions)."""
-    meta = table.metadata()
-    bcol, nbuckets = meta["bucket_column"], meta["num_buckets"]
-    bexpr = bucket_expr(bcol, nbuckets)
-
-    if not table.files():
-        # empty table (backfill epoch 1): nothing to prune or carry —
-        # skip the touched-bucket discovery pass entirely (one full
-        # batch traversal saved on the largest batch of the run)
-        touched = None
-    else:
+    touched: list[int] = []
+    if table.files():
+        # an empty table (backfill epoch 1) has nothing to rewrite: the
+        # touched-bucket pass is skipped (one full traversal saved on
+        # the largest batch of the run)
+        meta = table.metadata()
+        bexpr = bucket_expr(meta["bucket_column"], meta["num_buckets"])
         touched = sorted(
             r[0] for r in batch.select(bexpr.alias("__b")).distinct().collect()
         )
@@ -204,51 +280,10 @@ def merge_apply(
             if skip_if_noop and not _observed_quarantined(summary):
                 return None
             return table.commit(added_files=[], summary=summary, operation="merge")
-
-    existing = scan(spark, table, buckets=touched or [])
-    union = batch.unionByName(
-        _existing_as_changelog(existing), allowMissingColumns=True
-    )
-    fields = table.schema_struct().fields
-    if (not salts or int(salts) <= 1) and write_salt(batch, nbuckets) == 1:
-        rows = _fused_winner_rows(
-            union,
-            bexpr,
-            nbuckets,
-            rn_observation=rn_observation,
-            batch_rows=batch_rows,
-            fields=fields,
-        )
-        new_files = write_data_files(
-            rows, table, pre_partitioned=True, sort_prefix=("__slot",)
-        )
-    else:
-        winners = lww_winners(union, salts=salts, rn_observation=rn_observation)
-        rows = to_table_rows(winners, fields=fields)
-        new_files = write_data_files(rows.withColumn("__bucket", bexpr), table)
-    removed = {e["path"] for e in table.files(buckets=touched)}
-    summary = dict(summary or {})
-    if summary_fn is not None:
-        summary.update(summary_fn())
-    if (
-        skip_if_noop
-        and not new_files
-        and not removed
-        and not _observed_quarantined(summary)
-    ):
-        # empty batch into an EMPTY table (touched stayed None so the
-        # touched-empty early return above never fired): same contract —
-        # the write was the batch's action, but no snapshot is minted
-        return None
-    return table.commit(
-        added_files=new_files,
-        removed_paths=removed,
-        summary=summary,
-        operation="merge",
-        # manifest IO stays O(touched): only these buckets' manifests are
-        # read+rewritten (touched=None ⇒ initial backfill, derived from
-        # the added files)
-        touched_buckets=touched,
+    return _resolve_and_write(
+        spark, table, batch, touched, "merge",
+        salts=salts, summary=summary, summary_fn=summary_fn,
+        rn_observation=rn_observation, skip_if_noop=skip_if_noop, batch_rows=batch_rows,
     )
 
 
@@ -266,8 +301,8 @@ def delta_apply(
     fold_buckets: list[int] | None = None,
 ) -> int | None:
     """Merge-on-read commit: resolve the batch WITHIN itself and append
-    the winners as *delta* files — no table read, no bucket rewrite, no
-    touched-bucket discovery.  Epoch cost is Θ(batch) regardless of
+    the winners as *delta* files — no touched-bucket discovery, and no
+    table read or bucket rewrite beyond ``fold_buckets``.  Epoch cost is Θ(batch) regardless of
     table size, which is what sustained apply into a 10^10-event table
     needs (copy-on-write rewrites every touched bucket, i.e. Θ(table)
     per epoch once batches span all buckets).  Readers resolve LWW
@@ -275,15 +310,12 @@ def delta_apply(
 
     ``fold_buckets``: buckets to fold back to one version per key in
     this same job and snapshot (Iceberg's MoR + rewrite_data_files,
-    without the second job).  Their stored files are read raw, re-
-    expressed as changelog rows and unioned into the batch, so the one
-    exchange + LWW window resolves stored and incoming versions
-    together; their output files are written as base files (no delta
-    flag) and the commit removes the files they replace.  The snapshot
-    summary records them as ``compacted_buckets``.  The rows of an
-    old-spec file that also covers a sibling bucket ride along and land
-    in the sibling's delta file (the same migration compact() does).
-    ``batch_rows``: as in merge_apply.
+    without the second job) — the rewritten buckets of the shared
+    apply, written as base files.  The snapshot summary records them as
+    ``compacted_buckets``.  The rows of an old-spec file that also
+    covers a sibling bucket ride along and land in the sibling's delta
+    file (the same migration compact() does).  ``summary_fn``,
+    ``skip_if_noop``, ``batch_rows``: as in merge_apply.
 
     Correctness is the same associativity argument as copy-on-write:
     stored rows are per-batch winners under the total order
@@ -291,60 +323,8 @@ def delta_apply(
     per-batch maxes.  Re-applying a batch is logically idempotent too —
     duplicate winner rows are bit-identical, so whichever copy the
     read-time window keeps, the resolved state is unchanged."""
-    meta = table.metadata()
-    bexpr = bucket_expr(meta["bucket_column"], meta["num_buckets"])
-    fold = sorted(fold_buckets or ())
-    union = batch
-    if fold:
-        stored = scan(spark, table, buckets=fold, resolve=False)
-        union = batch.unionByName(
-            _existing_as_changelog(stored), allowMissingColumns=True
-        )
-    fields = table.schema_struct().fields
-    if (not salts or int(salts) <= 1) and write_salt(batch, meta["num_buckets"]) == 1:
-        # fused single-exchange path (see _fused_winner_rows): the
-        # Θ(batch) MoR epoch drops from 2 exchanges + 2 sorts to 1 + 1
-        rows = _fused_winner_rows(
-            union,
-            bexpr,
-            meta["num_buckets"],
-            rn_observation=rn_observation,
-            batch_rows=batch_rows,
-            fields=fields,
-        )
-        new_files = write_data_files(
-            rows, table, delta=True, pre_partitioned=True, sort_prefix=("__slot",)
-        )
-    else:
-        winners = lww_winners(union, salts=salts, rn_observation=rn_observation)
-        rows = to_table_rows(winners, fields=fields)
-        new_files = write_data_files(
-            rows.withColumn("__bucket", bexpr), table, delta=True
-        )
-    for e in new_files:
-        if e["bucket"] in fold:
-            del e["delta"]  # the bucket's whole state: a base file
-    summary = dict(summary or {})
-    if summary_fn is not None:
-        # the write above was the batch's action — observations attached
-        # upstream are filled, same contract as merge_apply
-        summary.update(summary_fn())
-    if fold and "lineage" in summary:
-        empty = not _observed_rows(summary)  # new_files hold folded rows too
-    else:
-        empty = not new_files
-    if skip_if_noop and empty and not _observed_quarantined(summary):
-        # an empty batch mints no snapshot and no fold: the folded
-        # buckets' rewrite is deleted before anything references it
-        for tag in {commit_tag(e["path"]) for e in new_files}:
-            shutil.rmtree(os.path.join(table.data_dir, tag), ignore_errors=True)
-        return None
-    if fold:
-        summary["compacted_buckets"] = fold
-    return table.commit(
-        added_files=new_files,
-        removed_paths={e["path"] for e in table.files(buckets=fold)} if fold else None,
-        summary=summary,
-        operation="delta",
-        touched_buckets=fold or None,
+    return _resolve_and_write(
+        spark, table, batch, sorted(fold_buckets or ()), "delta",
+        salts=salts, summary=summary, summary_fn=summary_fn,
+        rn_observation=rn_observation, skip_if_noop=skip_if_noop, batch_rows=batch_rows,
     )

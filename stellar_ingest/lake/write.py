@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from collections.abc import Collection
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -144,16 +145,16 @@ def write_data_files(
     sort_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     shuffle_partitions: int | None = None,
     salt_n: int | None = None,
-    delta: bool = False,
+    delta_buckets: Collection[int] = (),
     pre_partitioned: bool = False,
     sort_prefix: tuple[str, ...] = (),
 ) -> list[dict]:
     """Materialize ``df`` (must carry a ``__bucket`` int column) as
     immutable parquet under a fresh commit dir; returns manifest entries
     ``{path, bucket, rows}``.  This is an action (the one big job).
-    ``delta=True`` marks the entries as merge-on-read delta files —
-    readers resolve LWW across a bucket's files when deltas are present
-    (lake/read.py).
+    The entries of buckets in ``delta_buckets`` are marked as
+    merge-on-read delta files — readers resolve LWW across a bucket's
+    files when deltas are present (lake/read.py).
 
     ``pre_partitioned=True``: the caller already hash-partitioned ``df``
     by its write layout (the fused single-exchange merge path,
@@ -222,7 +223,7 @@ def write_data_files(
             # schema era of this file: lets the read path align renamed /
             # widened columns by COLUMN ID (Iceberg rule) instead of name
             entry["schema_id"] = int(meta.get("current_schema_id", 0))
-            if delta:
+            if b in delta_buckets:
                 entry["delta"] = True
             lo, hi = _key_bounds(md, key_col)
             # manifests are JSON — only store bounds of JSON-native

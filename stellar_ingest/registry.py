@@ -157,14 +157,17 @@ _PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _PLAN_CACHE_MAX = 4096
 
 #: builders with per-call side effects (they construct scratch icebox
-#: tables / temp files as part of building the frame) — never memoized:
-#: each invocation must redo that work by design
+#: tables / temp files, or localCheckpoint() intermediate results, as
+#: part of building the frame) — never memoized: a memo would serve the
+#: materialized result instead of recomputing it from the inputs
 _STATEFUL_KEYS = {
     "scan_csv",
     "scan_json",
     "cdc_transcripts",
     "dedup_incremental",
     "ann_ivf_indexed",
+    "dedup_clusters",
+    "ann_ivf_topk",
 }
 
 

@@ -7,11 +7,13 @@ the write-side plan (the window's; the writer's sort is elided),
 (2) winners are identical to the unfused resolve() path, including
 duplicates/deletes, (3) a full multi-epoch drain produces a
 fingerprint-identical table fused vs unfused, (4) an empty batch on an
-empty table mints no snapshot."""
+empty table mints no snapshot, (5) a copy-on-write epoch writes what a
+merge-on-read epoch folding the same buckets writes (one apply body)."""
 
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 import pytest
@@ -194,6 +196,90 @@ def test_merge_apply_skip_noop_on_empty_table(spark, tmp_table):
     sid = merge_apply(spark, t, empty, skip_if_noop=True)
     assert sid is None
     assert t.snapshots() == []  # no empty snapshot minted
+
+
+def _epoch_rows(lsn0: int, convs, *, op: str = "U", sec=None):
+    return [
+        (lsn0 + i, i % 2, op, c, turn, None if op == "D" else "user",
+         None if op == "D" else f"v{lsn0 + i}", None,
+         lsn0 + i if sec is None else sec)
+        for i, (c, turn) in enumerate((c, turn) for c in convs for turn in range(2))
+    ]
+
+
+@pytest.mark.parametrize(
+    "rescaled,salts", [(False, None), (False, 2), (True, None)],
+    ids=["fused", "salted", "rescaled"],
+)
+def test_cow_epoch_equals_mor_epoch_folding_touched_buckets(
+    spark, tmp_path, rescaled, salts
+):
+    """merge_apply and delta_apply(fold_buckets=touched) run the same
+    body from the same stored state (a base file plus a delta file in
+    every touched bucket): the rewritten files hold the same rows in the
+    same order, the manifest entries match apart from paths, and the
+    tables fingerprint-equal.  After a rescale, the rows of an old-spec
+    file's untouched sibling bucket ride along: copy-on-write writes
+    them as base files, merge-on-read as deltas."""
+    import pyarrow.parquet as pq
+
+    from stellar_ingest.lake.core import IceboxTable
+    from stellar_ingest.lake.merge import delta_apply, merge_apply
+    from stellar_ingest.lake.read import key_bucket, scan
+    from stellar_ingest.schema import TABLE_SCHEMA
+    from stellar_ingest.verify.fingerprint import table_fingerprint
+
+    convs = [f"c{i}" for i in range(16)]
+    base = IceboxTable.create(
+        str(tmp_path / "base"), TABLE_SCHEMA, num_buckets=2 if rescaled else 4
+    )
+    merge_apply(spark, base, make_changelog(spark, _epoch_rows(0, convs, op="I")))
+    if rescaled:
+        base.rescale_buckets(4)
+    delta_apply(spark, base, make_changelog(spark, _epoch_rows(100, convs)))
+    # the applied batch touches buckets 0 and 1 only: an update, a
+    # delete, and a stale update that loses to the stored version
+    hit = [c for c in convs if key_bucket(spark, c, 4) in (0, 1)]
+    touched = sorted({key_bucket(spark, c, 4) for c in hit})
+    assert touched == [0, 1] and len(hit) > 4
+    rows = (
+        _epoch_rows(200, hit[:2])
+        + _epoch_rows(300, hit[2:4], op="D")
+        + _epoch_rows(400, hit[4:], sec=1)
+    )
+    assert any(e.get("delta") for e in base.files(buckets=touched))
+
+    out = {}
+    for mode in ("cow", "mor"):
+        shutil.copytree(base.root, str(tmp_path / mode))
+        t = IceboxTable(str(tmp_path / mode))
+        before = {e["path"] for e in t.files()}
+        batch = make_changelog(spark, rows)
+        if mode == "cow":
+            merge_apply(spark, t, batch, salts=salts)
+        else:
+            delta_apply(spark, t, batch, salts=salts, fold_buckets=touched)
+        added = sorted(
+            (e for e in t.files() if e["path"] not in before), key=lambda e: e["bucket"]
+        )
+        files = {
+            e["bucket"]: pq.read_table(os.path.join(t.root, e["path"])).to_pylist()
+            for e in added
+        }
+        assert len(files) == len(added)  # one file per rewritten bucket
+        out[mode] = (t, added, files)
+    (cow, cow_added, cow_files), (mor, mor_added, mor_files) = out["cow"], out["mor"]
+
+    siblings = {e["bucket"] for e in cow_added} - set(touched)
+    assert siblings == ({2, 3} if rescaled else set())
+    assert not any("delta" in e for e in cow_added)
+    for e in mor_added:
+        assert e.pop("delta", False) == (e["bucket"] in siblings)
+    strip = [[{k: v for k, v in e.items() if k != "path"} for e in es]
+             for es in (cow_added, mor_added)]
+    assert strip[0] == strip[1]
+    assert cow_files == mor_files
+    assert table_fingerprint(scan(spark, cow)) == table_fingerprint(scan(spark, mor))
 
 
 if __name__ == "__main__":

@@ -75,3 +75,12 @@ def test_oracle_parity(spark, harness, con, key):
     qs, oracles = harness
     res = check_key(spark, con, SF, key, qs[key], oracles.get(key))
     assert res["ok"], res
+
+
+@pytest.mark.parametrize("key", ["dedup_clusters", "ann_ivf_topk"])
+def test_checkpointing_builders_are_not_memoized(spark, harness, key):
+    """Both builders localCheckpoint() while they build, so a memoized
+    frame would serve the materialized result on every later call
+    instead of recomputing it from the fixture."""
+    qs, _ = harness
+    assert qs[key](spark, SF) is not qs[key](spark, SF)
