@@ -15,10 +15,18 @@ order" is associative — max(max per salt) = max overall
 
 Scale: phase 1 spreads one hot key over S shuffle partitions, bounding
 any single task at ~rows(hot)/S; phase 2 touches only #keys x S rows.
+
+Small inputs resolve on the driver instead (``lww_arrow`` and
+``to_table_rows_arrow``): the same total order and the same projection
+over a pyarrow table, with one sort and no Python per row — used by the
+driver-side apply (lake/merge.py) and by ``lookup_many_fast``.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -118,6 +126,72 @@ def to_table_rows(
             e = f"CASE WHEN {deleted} THEN NULL ELSE {q} END"
         exprs.append(e if e == q else f"{e} AS {q}")
     return winners.selectExpr(*exprs, *[f"`{c}`" for c in carry_cols])
+
+
+def lww_arrow(
+    tbl: pa.Table,
+    *,
+    order: tuple[str, ...] = ("ts", "lsn", "src_part"),
+    keys: tuple[str, ...] = ("conv_id", "turn_idx"),
+    lead: str | None = None,
+) -> tuple[pa.Table, int]:
+    """``lww_winners`` on the driver: (one row per key, the largest
+    number of rows any key had).  ONE sort on (``lead``, keys, ``order``
+    descending), then the first row of each key — the row the ranking
+    window numbers 1 (NULLs order last, as Spark's DESC).  The winners
+    come out sorted by (``lead``, keys); ``lead`` is a column that is a
+    function of the key (the bucket), so a key's rows stay adjacent.
+    Keys must be non-NULL (validity guarantees it for changelog rows)."""
+    n = tbl.num_rows
+    if n == 0:
+        return tbl, 0
+    sort_keys = [(lead, "ascending")] if lead is not None else []
+    sort_keys += [(k, "ascending") for k in keys]
+    sort_keys += [(o, "descending") for o in order]
+    srt = tbl.take(pc.sort_indices(tbl, sort_keys=sort_keys, null_placement="at_end"))
+    changed = np.zeros(n - 1, bool)
+    for k in keys:
+        col = srt.column(k)
+        changed |= pc.not_equal(col.slice(1), col.slice(0, n - 1)).to_numpy(
+            zero_copy_only=False
+        )
+    starts = np.flatnonzero(np.concatenate(([True], changed)))
+    max_rn = int(np.diff(np.append(starts, n)).max())
+    return srt.take(starts), max_rn
+
+
+def to_table_rows_arrow(
+    winners: pa.Table, schema: pa.Schema, *, carry_cols: tuple[str, ...] = ()
+) -> pa.Table:
+    """``to_table_rows(fields=...)`` on the driver: changelog-shaped
+    winners → the stored-table layout ``schema`` (the table's fields, in
+    order, with their Arrow types).  Deletes become tombstones with a
+    NULL payload, I/U become 'U', columns the winners lack are NULL;
+    ``carry_cols`` are appended untouched."""
+    have = set(winners.column_names)
+    deleted = pc.fill_null(pc.equal(winners.column("op"), "D"), False)
+    derived = {
+        "_ts": "ts",
+        "_lsn": "lsn",
+        "_src_part": "src_part",
+    }
+    cols = []
+    for f in schema:
+        if f.name == "_op":
+            col = pc.if_else(deleted, "D", "U")
+        elif f.name in derived:
+            col = winners.column(derived[f.name])
+        elif f.name not in have:
+            col = pa.nulls(winners.num_rows, f.type)
+        elif f.name in ("conv_id", "turn_idx"):
+            col = winners.column(f.name)
+        else:
+            col = pc.if_else(deleted, pa.scalar(None, f.type), winners.column(f.name))
+        cols.append(col.cast(f.type))
+    out = pa.Table.from_arrays(cols, schema=schema)
+    for c in carry_cols:
+        out = out.append_column(c, winners.column(c))
+    return out
 
 
 def resolve(

@@ -13,17 +13,27 @@ Exactly-once protocol per epoch ``e → e+1``:
    snapshot-commit and checkpoint-write → repair the checkpoint from the
    snapshot summary (the summary stores the offsets) and continue.
    Replayed work is thereby skipped, never double-applied.
-2. discover + select the next batch (footer metadata only).
+2. discover + select the next batch (footer metadata only), and pick
+   the epoch's data path from metadata (``_driver_apply_fits``): an
+   unsalted epoch whose batch footer rows plus the stored rows it
+   rewrites are at most ``DRIVER_APPLY_MAX_ROWS`` runs on the driver
+   with pyarrow and starts no Spark job; any other epoch is a Spark job.
 3. read → validate/quarantine → HWM-filter (dedupe is absorbed by the
-   MERGE window, see lake/merge.py).
+   MERGE window, see lake/merge.py): a lazy Spark read whose lineage
+   counts are observed by the apply job, or on the driver path one
+   pyarrow read (source.py::read_batch_arrow) validated and counted at
+   once (validate.py::split_valid_arrow).
 4. additive schema evolution committed BEFORE the data write
    (BASELINE.json:6 ordering requirement).
 5. MERGE apply → snapshot ``s`` with summary {epoch: e+1, offsets',
    lineage stats} (stats observed during the merge, bound into the
-   same atomic commit).  Both modes run lake/merge.py's one apply job:
+   same atomic commit).  Both modes run lake/merge.py's one apply:
    copy-on-write rewrites the buckets the batch touches, merge-on-read
-   rewrites the buckets it folds and appends the rest as deltas.
-6. persist quarantined rows (dead-letter parquet) + emit lineage.
+   rewrites the buckets it folds and appends the rest as deltas.  A
+   Spark batch is applied by one Spark job, a pyarrow batch on the
+   driver; both give the same files, manifest entries and snapshot.
+6. persist quarantined rows (dead-letter parquet, written by Spark on
+   both paths, only when the epoch had any) + emit lineage.
 7. checkpoint := {e+1, offsets', s}.   (crash between 5 and 7 is what
    step 1 repairs — offsets from the summary, lineage re-emitted from
    the summary's stats)
@@ -40,17 +50,65 @@ from collections.abc import Callable
 from functools import partial
 
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
-from ..lake.core import IceboxTable
+from ..lake.core import IceboxTable, type_to_spark
 from ..lake.maintain import fold_targets
 from ..lake.merge import delta_apply, merge_apply
+from ..lake import write as lake_write
 from ..schema import align_renames, ensure_table_schema, table_schema_for
 from . import checkpoint as ckpt
 from . import lineage as lin
 from .skew import DEFAULT_HOT_THRESHOLD, DEFAULT_SALTS
-from .source import list_segments, read_batch, select_batch
-from .validate import observe_valid, validity_predicate
+from .source import (
+    Segment,
+    batch_schema,
+    list_segments,
+    read_batch,
+    read_batch_arrow,
+    select_batch,
+    spark_schema,
+)
+from .validate import observe_valid, split_valid_arrow, validity_predicate
+
+
+def _driver_apply_fits(
+    spark: SparkSession,
+    table: IceboxTable,
+    chosen: list[Segment],
+    salts: int | None,
+    mode: str,
+    fold: list[int] | None,
+    num_buckets: int,
+) -> bool:
+    """Whether this epoch's data path runs on the driver (pyarrow, no
+    Spark job) — decided from metadata alone, before any row is read.
+    Only where the Spark path would take the fused plan (LWW salting off
+    for the epoch and ``write_salt`` 1), and only when the chosen
+    segments' footer rows plus the stored rows the epoch rewrites are at
+    most ``DRIVER_APPLY_MAX_ROWS``: the fold buckets' manifest rows in
+    a merge-on-read epoch, the whole table in a copy-on-write one (its
+    touched buckets are only known after the read).  A batch column
+    whose table column has another type stays on Spark too (Spark's
+    union would widen it)."""
+    if salts and int(salts) > 1:
+        return False
+    exists = table.exists()
+    if lake_write.write_salt(spark, table.num_buckets if exists else num_buckets) != 1:
+        return False
+    rows = sum(s.rows for s in chosen)
+    if exists:
+        if mode == "mor":
+            rows += sum(e["rows"] for e in table.files(buckets=fold)) if fold else 0
+        else:
+            snap = table.current_snapshot()
+            rows += snap["total_rows"] if snap else 0
+        types = {f["name"]: f["type"] for f in table.schema_fields()}
+        renamed = table.rename_map()
+        for f in batch_schema(chosen).fields:
+            t = types.get(renamed.get(f.name, f.name))
+            if t is not None and type_to_spark(t) != f.dataType:
+                return False
+    return rows <= lake_write.DRIVER_APPLY_MAX_ROWS
 
 
 def _fence_and_repair(
@@ -335,16 +393,6 @@ def run_increment(
                 if not chosen:
                     break
 
-            # no persist: the batch is consumed twice (stats agg + merge) and
-            # re-decoding footer-pruned parquet is cheaper than materializing
-            # the rows into executor memory — and stays true at 100 TB where
-            # caching a batch would evict everything else
-            raw = read_batch(spark, chosen, ck["offsets"], cutoffs)
-            # lineage + quarantine stats ride along as an `observe` node —
-            # the ledger is scanned exactly ONCE per epoch (by the merge)
-            parts = sorted(cutoffs)
-            valid, obs = observe_valid(raw, parts)
-
             # new offsets: planned cutoffs (deterministic even for
             # batches whose rows were all duplicates/quarantined)
             new_offsets = dict(ck["offsets"])
@@ -360,26 +408,6 @@ def run_increment(
             else:
                 epoch_mode = mode
 
-            # additive schema evolution BEFORE write (BASELINE.json:6);
-            # incoming columns are first mapped through the table's
-            # rename history so a renamed payload column the ledger
-            # keeps sending under its old wire name feeds the renamed
-            # column instead of re-evolving a fresh duplicate
-            if not table.exists():
-                batch_table_schema = table_schema_for(
-                    T.StructType([f for f in valid.schema.fields])
-                )
-                IceboxTable.create(
-                    table_root, batch_table_schema, num_buckets=num_buckets
-                )
-                table = IceboxTable(table_root, branch=branch)
-            else:
-                valid = align_renames(table, valid)
-                batch_table_schema = table_schema_for(
-                    T.StructType([f for f in valid.schema.fields])
-                )
-                ensure_table_schema(table, batch_table_schema, hook=hook)
-
             # salts="auto": decide THIS epoch's salting from the LAST
             # epoch's observed per-key max (skew persists across adjacent
             # batches), and observe this epoch's max for free on the LWW
@@ -387,13 +415,65 @@ def run_increment(
             # exactly once per epoch under every salts config.  The hint
             # rides the checkpoint so restarts keep the decision.
             auto_salt = salts == "auto"
-            if auto_salt:
-                from pyspark.sql import Observation
+            batch_salts = (ck.get("salt_hint") or None) if auto_salt else salts
 
-                batch_salts = ck.get("salt_hint") or None
-                rn_obs = Observation()
+            # the fold rides a MoR epoch's apply: one job, one snapshot
+            # (a table created this epoch picks its fold after creation)
+            fold = None
+            if epoch_mode == "mor" and table.exists():
+                fold = fold_targets(
+                    table,
+                    min_delta_commits=fold_min_deltas,
+                    max_buckets=fold_max_buckets,
+                    pending_commit=True,
+                )
+            batch_rows = sum(s.rows for s in chosen)
+            parts = sorted(cutoffs)
+            if _driver_apply_fits(
+                spark, table, chosen, batch_salts, epoch_mode, fold, num_buckets
+            ):
+                # a small epoch: read, validate, resolve and write on the
+                # driver with pyarrow, no Spark job (lake/merge.py)
+                raw = None
+                valid, pstats, n_bad = split_valid_arrow(
+                    read_batch_arrow(chosen, ck["offsets"], cutoffs), parts
+                )
+                observed = lambda: (pstats, n_bad)  # noqa: E731
+                rn_obs = {} if auto_salt else None
             else:
-                batch_salts, rn_obs = salts, None
+                # no persist: the batch is consumed twice (stats agg +
+                # merge) and re-decoding footer-pruned parquet is cheaper
+                # than materializing the rows into executor memory — and
+                # stays true at 100 TB where caching a batch would evict
+                # everything else
+                raw = read_batch(spark, chosen, ck["offsets"], cutoffs)
+                # lineage + quarantine stats ride along as an `observe`
+                # node — the ledger is scanned exactly ONCE per epoch (by
+                # the merge)
+                valid, obs = observe_valid(raw, parts)
+                observed = partial(lin.collect_observed_stats, obs, parts)
+                if auto_salt:
+                    from pyspark.sql import Observation
+
+                    rn_obs = Observation()
+                else:
+                    rn_obs = None
+
+            # additive schema evolution BEFORE write (BASELINE.json:6);
+            # incoming columns are first mapped through the table's
+            # rename history so a renamed payload column the ledger
+            # keeps sending under its old wire name feeds the renamed
+            # column instead of re-evolving a fresh duplicate
+            if not table.exists():
+                batch_table_schema = table_schema_for(spark_schema(valid))
+                IceboxTable.create(
+                    table_root, batch_table_schema, num_buckets=num_buckets
+                )
+                table = IceboxTable(table_root, branch=branch)
+            else:
+                valid = align_renames(table, valid)
+                batch_table_schema = table_schema_for(spark_schema(valid))
+                ensure_table_schema(table, batch_table_schema, hook=hook)
 
             epoch = ck["epoch"] + 1
             hook("pre_merge")
@@ -405,7 +485,7 @@ def run_increment(
             stash: dict = {}
 
             def _lineage_summary() -> dict:
-                pstats, n_bad = lin.collect_observed_stats(obs, parts)
+                pstats, n_bad = observed()
                 stash["pstats"], stash["n_bad"] = pstats, n_bad
                 return {
                     "lineage": {"partition_stats": pstats, "quarantined": n_bad}
@@ -416,13 +496,13 @@ def run_increment(
             if max_epochs is None or epochs_done + 1 < max_epochs:
                 prefetched = pool.submit(list_segments, ledger_dir)
             if epoch_mode == "mor":
-                # the fold rides this epoch's apply: one job, one snapshot
-                fold = fold_targets(
-                    table,
-                    min_delta_commits=fold_min_deltas,
-                    max_buckets=fold_max_buckets,
-                    pending_commit=True,
-                )
+                if fold is None:
+                    fold = fold_targets(
+                        table,
+                        min_delta_commits=fold_min_deltas,
+                        max_buckets=fold_max_buckets,
+                        pending_commit=True,
+                    )
                 apply_fn = partial(delta_apply, fold_buckets=fold)
             else:
                 apply_fn = merge_apply
@@ -437,7 +517,7 @@ def run_increment(
                 },
                 summary_fn=_lineage_summary,
                 rn_observation=rn_obs,
-                batch_rows=sum(s.rows for s in chosen),
+                batch_rows=batch_rows,
             )
             hook("post_snapshot")
             # a zero-valid-row epoch carries the previous hint (no new
@@ -446,8 +526,10 @@ def run_increment(
             if auto_salt and sum(p["rows"] for p in stash["pstats"]) > 0:
                 # observation filled by the epoch's own action (guarded:
                 # a zero-valid-row COW epoch short-circuits before the
-                # resolve window, leaving the observation empty)
-                per_salt_max = int(rn_obs.get.get("max_rn") or 0)
+                # resolve window, leaving the observation empty); the
+                # driver path fills a dict instead
+                got = rn_obs if isinstance(rn_obs, dict) else rn_obs.get
+                per_salt_max = int(got.get("max_rn") or 0)
                 est_max = per_salt_max * int(batch_salts or 1)
                 salt_hint = DEFAULT_SALTS if est_max >= salt_threshold else None
             # dead-letter sink: quarantined rows are persisted, never silently
@@ -457,8 +539,11 @@ def run_increment(
             # window is covered too: _fence_and_repair re-derives the torn
             # batch's quarantined rows from the immutable ledger.  The rows
             # come off `raw`, not the observed plan, so writing them doesn't
-            # re-trigger the observation.
+            # re-trigger the observation.  A driver-path epoch reads them
+            # with Spark here, only when it had any.
             if stash["n_bad"]:
+                if raw is None:
+                    raw = read_batch(spark, chosen, ck["offsets"], cutoffs)
                 raw.filter(~validity_predicate()).write.mode("overwrite").parquet(
                     os.path.join(checkpoint_dir, "quarantine", f"epoch={epoch}")
                 )

@@ -19,6 +19,10 @@ read back as NULL (additive semantics).
 Scale: discovery is a driver-side listing, O(segments) — on a real lake
 this is the object-store listing every table format does; per-epoch cost
 is bounded by segment count, not data volume.
+
+``read_batch_arrow`` is the same read on the driver, into a pyarrow
+table, for the epochs small enough to apply without Spark
+(cdc/runner.py picks the path).
 """
 
 from __future__ import annotations
@@ -26,11 +30,15 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..lake.core import spark_to_type, type_to_arrow
+from ..lake.read import _io_pool
 from ..schema import CHANGELOG_SCHEMA
 from .dedupe import hwm_sql
 
@@ -64,8 +72,6 @@ def _lsn_range(pf: pq.ParquetFile) -> tuple[int, int]:
         hi = st.max if hi is None else max(hi, st.max)
     if lo is None:
         col = pf.read(columns=["lsn"]).column("lsn")
-        import pyarrow.compute as pc
-
         mm = pc.min_max(col).as_py()
         lo, hi = mm["min"], mm["max"]
     return int(lo), int(hi)
@@ -142,6 +148,17 @@ def _spark_type(arrow_type: pa.DataType) -> T.DataType:
     if pa.types.is_timestamp(arrow_type):
         return T.TimestampType()
     return _ARROW_TO_SPARK[str(arrow_type)]
+
+
+def spark_schema(batch) -> T.StructType:
+    """Spark schema of a batch: a DataFrame's own, or that of the
+    pyarrow table ``read_batch_arrow`` built, as Spark's file reader
+    gives it (every column nullable)."""
+    if not isinstance(batch, pa.Table):
+        return batch.schema
+    return T.StructType(
+        [T.StructField(f.name, _spark_type(f.type), True) for f in batch.schema]
+    )
 
 
 def batch_schema(segments: list[Segment]) -> T.StructType:
@@ -238,3 +255,48 @@ def read_batch(
         f"(({hwm_sql(offsets)}) AND ({ceil_sql})) OR lsn IS NULL OR src_part IS NULL"
     )
     return df.filter(bounds)
+
+
+def _bounds_mask(tbl: pa.Table, offsets: dict[int, int], cutoffs: dict[int, int]) -> np.ndarray:
+    """``read_batch``'s bounds, row by row as a numpy mask: (hwm, cutoff]
+    per source partition, and every row with a NULL lsn or src_part."""
+    lsn, part = tbl.column("lsn"), tbl.column("src_part")
+    keep = pc.or_(pc.is_null(lsn), pc.is_null(part)).to_numpy(zero_copy_only=False)
+    # NULLs are kept above; filled, they stay int64 / int32 in numpy
+    lsn = lsn.fill_null(0).to_numpy(zero_copy_only=False)
+    part = part.fill_null(0).to_numpy(zero_copy_only=False)
+    for p, hi in cutoffs.items():
+        ok = (part == p) & (lsn <= hi)
+        if p in offsets:
+            ok &= lsn > offsets[p]
+        keep = keep | ok
+    return keep
+
+
+def read_batch_arrow(
+    segments: list[Segment],
+    offsets: dict[int, int],
+    cutoffs: dict[int, int],
+) -> pa.Table:
+    """``read_batch`` on the driver: the selected segments' rows within
+    the same bounds, as one pyarrow table with ``batch_schema``'s
+    columns and types (columns a segment lacks read NULL; INT96
+    timestamps truncate to microseconds, as Spark's reader does)."""
+    schema = batch_schema(segments)
+    target = pa.schema(
+        [pa.field(f.name, type_to_arrow(spark_to_type(f.dataType))) for f in schema.fields]
+    )
+
+    def read(seg: Segment) -> pa.Table:
+        got = pq.ParquetFile(seg.path, coerce_int96_timestamp_unit="us").read()
+        cols = [
+            got.column(f.name).cast(f.type, safe=not pa.types.is_timestamp(f.type))
+            if f.name in got.column_names
+            else pa.nulls(got.num_rows, f.type)
+            for f in target
+        ]
+        tbl = pa.Table.from_arrays(cols, schema=target)
+        return tbl.filter(_bounds_mask(tbl, offsets, cutoffs))
+
+    parts = list(_io_pool().map(read, segments))
+    return pa.concat_tables(parts) if parts else target.empty_table()

@@ -42,6 +42,7 @@ import os
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
@@ -69,6 +70,28 @@ def type_to_spark(t: str) -> T.DataType:
     if t.startswith("array<") and t.endswith(">"):
         return T.ArrayType(type_to_spark(t[6:-1]))
     return _TYPE_TO_SPARK[t]
+
+
+_TYPE_TO_ARROW = {
+    "string": pa.string(),
+    "int": pa.int32(),
+    "long": pa.int64(),
+    "double": pa.float64(),
+    "float": pa.float32(),
+    "boolean": pa.bool_(),
+    # Spark's TimestampType holds microseconds
+    "timestamp": pa.timestamp("us"),
+    "date": pa.date32(),
+    "binary": pa.binary(),
+}
+
+
+def type_to_arrow(t: str) -> pa.DataType:
+    """icebox type string → the Arrow type the driver-side apply holds
+    its values in (lake/merge.py)."""
+    if t.startswith("array<") and t.endswith(">"):
+        return pa.list_(type_to_arrow(t[6:-1]))
+    return _TYPE_TO_ARROW[t]
 
 
 def spark_to_type(dt: T.DataType) -> str:

@@ -45,6 +45,18 @@ one task per core or per bucket, _fused_winner_rows); salted ones hash
 (conv_id, turn_idx)[+salt] for the window and (bucket, write-salt) for
 the write.  A 1000-executor run changes only partition counts, not the
 plan.
+
+Two data paths, one tail.  The batch arrives either as a Spark
+DataFrame (the Spark job above) or as a pyarrow table: a small
+unsalted epoch, which cdc/runner.py reads and validates on the driver
+when the batch rows plus the stored rows it rewrites are at most
+``DRIVER_APPLY_MAX_ROWS`` (lake/write.py).  The driver path
+(``_driver_winner_rows``) does the same steps in pyarrow and numpy
+with no Spark job: the rewritten buckets' files read raw, one sort for
+LWW, the numpy XXH64 for buckets, one file per bucket.  It gives the
+fused Spark path's rows, row order, manifest entries and ``max_rn``
+(tests/test_driver_apply.py runs both on the same events).  Summary,
+no-op rule and commit are shared.
 """
 
 from __future__ import annotations
@@ -52,12 +64,21 @@ from __future__ import annotations
 import os
 import shutil
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cdc.resolve import _desc_order, lww_winners, to_table_rows
-from .core import IceboxTable, commit_tag
-from .read import scan
+from ..cdc.resolve import (
+    _desc_order,
+    lww_arrow,
+    lww_winners,
+    to_table_rows,
+    to_table_rows_arrow,
+)
+from .core import IceboxTable, commit_tag, type_to_arrow
+from .read import read_files_arrow, scan
 from .write import (
     bucket_expr,
     fused_partitions,
@@ -65,6 +86,7 @@ from .write import (
     write_data_files,
     write_salt,
 )
+from .xxh import bucket_ids
 
 
 def _existing_as_changelog(existing: DataFrame) -> DataFrame:
@@ -80,6 +102,57 @@ def _existing_as_changelog(existing: DataFrame) -> DataFrame:
     # envelope ts is the LWW key; tombstones have NULL payload ts but a real _ts
     cols.append(F.col("_ts").alias("ts"))
     return existing.select(*cols)
+
+
+def _existing_as_changelog_arrow(stored: pa.Table) -> pa.Table:
+    """``_existing_as_changelog`` for stored rows held in pyarrow."""
+    payload = [c for c in stored.column_names if not c.startswith("_") and c != "ts"]
+    deleted = pc.fill_null(pc.equal(stored.column("_op"), "D"), False)
+    return pa.Table.from_arrays(
+        [
+            stored.column("_lsn"),
+            stored.column("_src_part"),
+            pc.if_else(deleted, "D", "U"),
+            *[stored.column(c) for c in payload],
+            stored.column("_ts"),
+        ],
+        names=["lsn", "src_part", "op", *payload, "ts"],
+    )
+
+
+def _batch_buckets(meta: dict, fields: list[dict], rows: pa.Table) -> np.ndarray:
+    """Bucket id of every row, as ``bucket_expr`` assigns it."""
+    col = meta["bucket_column"]
+    ktype = next(f["type"] for f in fields if f["name"] == col)
+    return bucket_ids(rows.column(col), meta["num_buckets"], ktype)
+
+
+def _driver_winner_rows(
+    table: IceboxTable, batch: pa.Table, rewrite: list[int]
+) -> tuple[pa.Table, int]:
+    """``_fused_winner_rows`` on the driver: (the stored-table rows to
+    write plus ``__bucket``, sorted by bucket then (conv_id, turn_idx);
+    the most rows any key had — the window's ``max_rn``).  The
+    ``rewrite`` buckets' files join the batch as changelog rows, one
+    sort resolves LWW (cdc/resolve.py::lww_arrow), and the winners take
+    the table's layout (to_table_rows_arrow: ``_op`` is the one
+    non-NULL column, as in the Spark projection)."""
+    meta = table.metadata()
+    fields = table.schema_fields()
+    union = batch
+    if rewrite:
+        stored = read_files_arrow(table, table.files(buckets=rewrite), fields)
+        union = pa.concat_tables(
+            [batch, _existing_as_changelog_arrow(stored)], promote_options="default"
+        )
+    union = union.append_column(
+        "__bucket", pa.array(_batch_buckets(meta, fields, union))
+    )
+    winners, max_rn = lww_arrow(union, lead="__bucket")
+    schema = pa.schema(
+        [pa.field(f["name"], type_to_arrow(f["type"]), f["name"] != "_op") for f in fields]
+    )
+    return to_table_rows_arrow(winners, schema, carry_cols=("__bucket",)), max_rn
 
 
 def _observed_quarantined(summary: dict) -> int:
@@ -158,7 +231,7 @@ def _fused_winner_rows(
 def _resolve_and_write(
     spark: SparkSession,
     table: IceboxTable,
-    batch: DataFrame,
+    batch: DataFrame | pa.Table,
     rewrite: list[int],
     operation: str,
     *,
@@ -173,35 +246,26 @@ def _resolve_and_write(
     stored rows, read raw, join the batch in one LWW window; every
     output file is a base file except, in a merge-on-read (``delta``)
     epoch, those of buckets outside ``rewrite``; the commit removes the
-    files the rewrite replaces."""
+    files the rewrite replaces.
+
+    A pyarrow ``batch`` takes the driver path (module docstring); its
+    ``rn_observation`` is a dict that receives ``max_rn``, and it is
+    never salted (the runner sends one only with salting off)."""
     meta = table.metadata()
     nbuckets = meta["num_buckets"]
-    bexpr = bucket_expr(meta["bucket_column"], nbuckets)
-    union = batch
-    if rewrite:
-        stored = scan(spark, table, buckets=rewrite, resolve=False)
-        union = batch.unionByName(
-            _existing_as_changelog(stored), allowMissingColumns=True
-        )
-    fields = table.schema_struct().fields
     delta_buckets = (
         set(range(nbuckets)).difference(rewrite) if operation == "delta" else ()
     )
-    if (not salts or int(salts) <= 1) and write_salt(batch, nbuckets) == 1:
-        rows = _fused_winner_rows(
-            union,
-            bexpr,
-            nbuckets,
-            rn_observation=rn_observation,
-            batch_rows=batch_rows,
-            fields=fields,
-        )
-        layout = {"pre_partitioned": True, "sort_prefix": ("__slot",)}
+    if isinstance(batch, pa.Table):
+        rows, max_rn = _driver_winner_rows(table, batch, rewrite)
+        if rn_observation is not None:
+            rn_observation["max_rn"] = max_rn
+        new_files = write_data_files(rows, table, delta_buckets=delta_buckets)
     else:
-        winners = lww_winners(union, salts=salts, rn_observation=rn_observation)
-        rows = to_table_rows(winners, fields=fields).withColumn("__bucket", bexpr)
-        layout = {}
-    new_files = write_data_files(rows, table, delta_buckets=delta_buckets, **layout)
+        new_files = _spark_write(
+            spark, table, batch, rewrite, delta_buckets,
+            salts=salts, rn_observation=rn_observation, batch_rows=batch_rows,
+        )
     summary = dict(summary or {})
     if summary_fn is not None:
         # the write above was the batch's action — observations attached
@@ -231,10 +295,51 @@ def _resolve_and_write(
     )
 
 
-def merge_apply(
+def _spark_write(
     spark: SparkSession,
     table: IceboxTable,
     batch: DataFrame,
+    rewrite: list[int],
+    delta_buckets,
+    *,
+    salts: int | None,
+    rn_observation,
+    batch_rows: int | None,
+) -> list[dict]:
+    """The Spark data path of ``_resolve_and_write``: the rewritten
+    buckets read raw, one LWW window over them and the batch, the
+    bucketed write (fused or salted); returns the manifest entries."""
+    meta = table.metadata()
+    nbuckets = meta["num_buckets"]
+    bexpr = bucket_expr(meta["bucket_column"], nbuckets)
+    union = batch
+    if rewrite:
+        stored = scan(spark, table, buckets=rewrite, resolve=False)
+        union = batch.unionByName(
+            _existing_as_changelog(stored), allowMissingColumns=True
+        )
+    fields = table.schema_struct().fields
+    if (not salts or int(salts) <= 1) and write_salt(spark, nbuckets) == 1:
+        rows = _fused_winner_rows(
+            union,
+            bexpr,
+            nbuckets,
+            rn_observation=rn_observation,
+            batch_rows=batch_rows,
+            fields=fields,
+        )
+        layout = {"pre_partitioned": True, "sort_prefix": ("__slot",)}
+    else:
+        winners = lww_winners(union, salts=salts, rn_observation=rn_observation)
+        rows = to_table_rows(winners, fields=fields).withColumn("__bucket", bexpr)
+        layout = {}
+    return write_data_files(rows, table, delta_buckets=delta_buckets, **layout)
+
+
+def merge_apply(
+    spark: SparkSession,
+    table: IceboxTable,
+    batch: DataFrame | pa.Table,
     *,
     salts: int | None = None,
     summary: dict | None = None,
@@ -244,7 +349,9 @@ def merge_apply(
     batch_rows: int | None = None,
 ) -> int | None:
     """Apply one changelog batch (validated + HWM-filtered) as a
-    copy-on-write MERGE; returns the committed snapshot id.
+    copy-on-write MERGE; returns the committed snapshot id.  ``batch``
+    is a Spark DataFrame, or a pyarrow table for the driver path
+    (module docstring).
 
     ``summary_fn``: optional callable evaluated AFTER the batch's action
     ran but BEFORE the commit; its dict is merged into the snapshot
@@ -267,10 +374,15 @@ def merge_apply(
         # touched-bucket pass is skipped (one full traversal saved on
         # the largest batch of the run)
         meta = table.metadata()
-        bexpr = bucket_expr(meta["bucket_column"], meta["num_buckets"])
-        touched = sorted(
-            r[0] for r in batch.select(bexpr.alias("__b")).distinct().collect()
-        )
+        if isinstance(batch, pa.Table):
+            touched = sorted(
+                set(_batch_buckets(meta, table.schema_fields(), batch).tolist())
+            )
+        else:
+            bexpr = bucket_expr(meta["bucket_column"], meta["num_buckets"])
+            touched = sorted(
+                r[0] for r in batch.select(bexpr.alias("__b")).distinct().collect()
+            )
         if not touched:
             # the distinct() above was this batch's action — observations
             # attached upstream are filled, so summary_fn is safe to call
@@ -290,7 +402,7 @@ def merge_apply(
 def delta_apply(
     spark: SparkSession,
     table: IceboxTable,
-    batch: DataFrame,
+    batch: DataFrame | pa.Table,
     *,
     salts: int | None = None,
     summary: dict | None = None,

@@ -26,11 +26,14 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..schema import KEY_COLS, ORDER_COLS
 from .core import (
+    type_to_arrow,
     type_to_spark,
     IceboxTable,
     commit_tag,
@@ -117,6 +120,45 @@ def _read_aligned(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def align_arrow(tbl: pa.Table, gfields: list[dict], tfields: list[dict]) -> pa.Table:
+    """``_read_aligned`` for one file's rows held in pyarrow: the
+    columns of ``tfields`` matched by COLUMN ID in the file's era
+    ``gfields``, cast to the target types; a column the era (or the
+    file) lacks reads NULL."""
+    g_by_id = {f["id"]: f for f in gfields}
+    have = set(tbl.column_names)
+    cols = []
+    for t in tfields:
+        typ = type_to_arrow(t["type"])
+        g = g_by_id.get(t["id"])
+        if g is None or g["name"] not in have:
+            cols.append(pa.nulls(tbl.num_rows, typ))
+        else:
+            col = tbl.column(g["name"])
+            cols.append(col if col.type == typ else col.cast(typ))
+    return pa.Table.from_arrays(cols, names=[t["name"] for t in tfields])
+
+
+def read_files_arrow(
+    table: IceboxTable, entries: list[dict], tfields: list[dict]
+) -> pa.Table:
+    """``scan(resolve=False)`` of ``entries`` on the driver: every
+    stored row of those files, aligned to ``tfields``."""
+    eras = {sid: table.schema_fields(sid) for sid in {e["schema_id"] for e in entries}}
+
+    def read(e: dict) -> pa.Table:
+        path = os.path.join(table.root, e["path"])
+        got = pq.ParquetFile(path, coerce_int96_timestamp_unit="us").read()
+        return align_arrow(got, eras[e["schema_id"]], tfields)
+
+    parts = list(_io_pool().map(read, entries))
+    if parts:
+        return pa.concat_tables(parts)
+    return pa.schema(
+        [pa.field(t["name"], type_to_arrow(t["type"])) for t in tfields]
+    ).empty_table()
 
 
 def resolve_stored(df: DataFrame) -> DataFrame:
@@ -429,7 +471,8 @@ def lookup_many_fast(
     read DRIVER-SIDE with pyarrow (the feature-store request shape: one
     request, k entity keys, single-digit-ms budget).
 
-    Pruning is identical to ``lookup_many`` — pure-Python bucket ids,
+    Pruning is identical to ``lookup_many`` — driver-side bucket ids
+    (lake/xxh.py::bucket_ids),
     then manifest key bounds restrict to files that may hold ≥1 of that
     bucket's requested keys; per file, row groups are skipped by footer
     min/max and one vectorized Arrow ``is_in`` filter keeps only the
@@ -440,10 +483,10 @@ def lookup_many_fast(
     exceeds ``max_files`` or the key type has no driver-side hash;
     ``spark`` may be None and is only materialized on that fallback."""
     import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    import pyarrow.compute as pc
 
-    from .xxh import bucket_of
+    from ..cdc.resolve import lww_arrow
+    from .xxh import bucket_ids
 
     uniq = list(dict.fromkeys(keys))
     if not uniq:
@@ -460,14 +503,12 @@ def lookup_many_fast(
     meta = table.metadata()
     col = meta["bucket_column"]
     try:
-        ktype = _bucket_col_type(table)
-        by_bucket: dict[int, list] = {}
-        for k in uniq:
-            by_bucket.setdefault(
-                bucket_of(k, meta["num_buckets"], ktype), []
-            ).append(k)
+        ids = bucket_ids(uniq, meta["num_buckets"], _bucket_col_type(table))
     except TypeError:
         return _fallback()
+    by_bucket: dict[int, list] = {}
+    for k, b in zip(uniq, ids.tolist()):
+        by_bucket.setdefault(b, []).append(k)
     sid = table.head_id(meta) if snapshot_id is None else snapshot_id
     tfields = (
         table.schema_fields()
@@ -488,31 +529,19 @@ def lookup_many_fast(
     if len(work) > max_files:
         return _fallback()
 
-    # per-era (target column → physical column) pairs, aligned by
-    # COLUMN ID like the Spark read path (_read_aligned): renames keep
-    # values, added/dropped-readded columns read None for old files.
-    era_pairs: dict[int, list[tuple[str, str | None]]] = {}
-
-    def _pairs(gsid: int):
-        if gsid not in era_pairs:
-            g_by_id = {f["id"]: f for f in table.schema_fields(gsid)}
-            era_pairs[gsid] = [
-                (t["name"], g_by_id[t["id"]]["name"] if t["id"] in g_by_id else None)
-                for t in tfields
-            ]
-        return era_pairs[gsid]
+    # each file's era, to align its columns by COLUMN ID like the Spark
+    # read path (_read_aligned): renames keep values, added and
+    # dropped-readded columns read NULL for old files
+    eras = {sid: table.schema_fields(sid) for sid in {e["schema_id"] for e, _ in work}}
 
     # per-file: skip row groups by footer min/max stats (the same skip
     # Spark's scan gets from parquet), decode only surviving groups,
     # then one vectorized Arrow is_in filter.  Manual stats-skip +
     # filter measured ~2x faster than pq.read_table(filters=...)'s
     # dataset machinery; files read on a shared thread pool so latency
-    # is ~the slowest single file, not the sum.  The surviving rows are
-    # a handful (the requested conversations), so they leave Arrow as
-    # plain dicts — pandas conversion per file costs more than the rows.
-    import pyarrow.compute as pc
+    # is ~the slowest single file, not the sum.
 
-    def _read_matching(job: tuple[dict, list]) -> list[dict]:
+    def _read_matching(job: tuple[dict, list]) -> tuple[int, pa.Table] | None:
         entry, ks = job
         # warm calls skip the open + footer parse: _PF_CACHE revalidates
         # by (mtime, size) stat — measured the dominant warm-path cost
@@ -533,42 +562,38 @@ def lookup_many_fast(
                     return True
             rgs = [i for i in rgs if _may(md.row_group(i).column(idx).statistics)]
         if not rgs:
-            return []
+            return None
         with pf_lock:
             t = pf.read_row_groups(list(rgs))
         if idx is not None:
             t = t.filter(pc.is_in(t.column(col), value_set=pa.array(ks)))
-        pairs = _pairs(entry["schema_id"])
-        return [
-            {tn: (r.get(gn) if gn else None) for tn, gn in pairs}
-            for r in t.to_pylist()
-        ]
+        return (entry["schema_id"], t) if t.num_rows else None
 
     if len(work) > 1:
         chunks = list(_io_pool().map(_read_matching, work))
     else:
         chunks = [_read_matching(j) for j in work]
-    rows = [r for chunk in chunks for r in chunk]
-    if not rows:
+    by_era: dict[int, list[pa.Table]] = {}
+    for c in chunks:
+        if c is not None:
+            by_era.setdefault(c[0], []).append(c[1])
+    if not by_era:
         return pd.DataFrame(columns=user_cols)
+    # one alignment per schema era, over that era's rows of every file
+    rows = pa.concat_tables(
+        [
+            align_arrow(pa.concat_tables(ts, promote_options="permissive"), eras[sid], tfields)
+            for sid, ts in by_era.items()
+        ]
+    )
     # LWW: max (_ts, _lsn, _src_part) per key — always applied (safe for
-    # single-version buckets, required for unfolded multi-commit ones)
-    best: dict = {}
-    for r in rows:
-        k = tuple(r[c] for c in KEY_COLS)
-        ordv = tuple(r[c] for c in ORDER_COLS)
-        cur = best.get(k)
-        if cur is None or ordv > cur[0]:
-            best[k] = (ordv, r)
-    live = sorted(
-        (r for _, r in best.values() if r.get("_op") != "D"),
-        key=lambda r: tuple(r[c] for c in KEY_COLS),
-    )
-    # .get backfills columns evolved after a file was written as NULL —
-    # the same additive-read semantics as the Spark scan
-    return pd.DataFrame(
-        [{c: r.get(c) for c in user_cols} for r in live], columns=user_cols
-    )
+    # single-version buckets, required for unfolded multi-commit ones);
+    # the winners come out sorted by key
+    live, _ = lww_arrow(rows, order=ORDER_COLS, keys=KEY_COLS)
+    live = live.filter(pc.not_equal(live.column("_op"), "D"))
+    # the surviving rows are a handful (the requested conversations):
+    # plain dicts build the frame faster than a pandas conversion
+    return pd.DataFrame(live.select(user_cols).to_pylist(), columns=user_cols)
 
 
 def read_changes(

@@ -10,19 +10,30 @@ Scale notes: the write repartitions by ``(bucket, salt)`` — the salt
 spreads a hot bucket across many tasks/files, so one whale conversation
 cannot serialize the write stage (BASELINE.json:6 skew requirement); at
 1000 executors this is the same plan, just more shuffle partitions.
+
+A small epoch's winners arrive as a pyarrow table instead (the
+driver-side apply, lake/merge.py): ``write_data_files`` then writes the
+same layout from the driver with pyarrow, in files Spark reads as its
+own (INT96 timestamps, snappy, Spark's footer keys).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 from collections.abc import Collection
 
+import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
+import pyspark
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .core import IceboxTable
+from .core import IceboxTable, type_to_spark
+from .read import _io_pool
 
 #: write-side salt fan-out within a bucket (files per bucket per commit
 #: is bounded by this x tasks actually holding the bucket).  Adaptive by
@@ -33,11 +44,11 @@ from .core import IceboxTable
 #: salt = clamp(cores / buckets, 1, 8).  Env override for A/B runs.
 
 
-def write_salt(df, num_buckets: int) -> int:
+def write_salt(spark: SparkSession, num_buckets: int) -> int:
     env = os.environ.get("STELLAR_WRITE_SALT")
     if env:
         return int(env)
-    cores = df.sparkSession.sparkContext.defaultParallelism
+    cores = spark.sparkContext.defaultParallelism
     return max(1, min(8, cores // max(num_buckets, 1)))
 
 
@@ -82,6 +93,19 @@ _SLOT_MAPS: dict[int, list[int]] = {}
 #: 3.2M; at 6.4M rows one task per bucket took 10-20% less executor time
 #: (each task sorts and writes one bucket, not a core's whole share).
 BUCKET_TASK_ROWS_PER_CORE = 1_000_000
+
+#: rows (the batch's footer rows plus the stored rows it rewrites) up
+#: to which an unsalted epoch is applied on the driver with pyarrow
+#: instead of as a Spark job (cdc/runner.py::_driver_apply_fits).
+#: Sweep: one merge-on-read epoch of uniform updates into a 20,000-
+#: conversation table, 4 cores, 16 buckets, no fold, median of 3
+#: interleaved runs per path (driver / Spark, seconds): 2.5k rows
+#: 0.106 / 1.318, 10k 0.101 / 1.195, 40k 0.230 / 1.349, 160k 0.318 /
+#: 1.557, 640k 1.104 / 2.844, 1.28M 2.153 / 3.883.  The driver path won
+#: at every size, by less as the batch grows, while the driver's memory
+#: grows with it (the Python process peaked at 662 MB at 1.28M rows):
+#: the bound is the largest size at which it was at least twice as fast.
+DRIVER_APPLY_MAX_ROWS = 640_000
 
 
 def fused_partitions(df, num_buckets: int, batch_rows: int | None = None) -> int:
@@ -139,7 +163,7 @@ def fused_slot_expr(partitions: int):
 
 
 def write_data_files(
-    df: DataFrame,
+    df: DataFrame | pa.Table,
     table: IceboxTable,
     *,
     sort_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
@@ -166,7 +190,14 @@ def write_data_files(
     dropped right after the sort (never written).  The fused path passes
     its ``__slot`` partition key here so the required sort stays a prefix
     of the window's sort and the planner can keep eliding it; the
-    physical row order is unchanged (one slot value per partition)."""
+    physical row order is unchanged (one slot value per partition).
+
+    A pyarrow table (the driver-side apply) is written by
+    ``_write_arrow_files``; it must already be sorted by ``__bucket``
+    and then by the sort columns, and the layout arguments do not
+    apply."""
+    if isinstance(df, pa.Table):
+        return _write_arrow_files(df, table, delta_buckets)
     # the default sort/salt columns are the transcript key; generic
     # tables (dedup/ANN indexes, any non-CDC icebox table) lack them —
     # resolve against the actual frame, falling back to the table's own
@@ -182,7 +213,9 @@ def write_data_files(
     else:
         salt = F.pmod(
             F.xxhash64(*[F.col(c) for c in sort_cols]),
-            F.lit(salt_n if salt_n is not None else write_salt(df, table.num_buckets)),
+            F.lit(
+                salt_n if salt_n is not None else write_salt(df.sparkSession, table.num_buckets)
+            ),
         )
         # no explicit partition count: AQE coalesces the repartition to the
         # batch's actual size, so small batches don't fragment into hundreds
@@ -202,8 +235,6 @@ def write_data_files(
         .parquet(out)
     )
     meta = table.metadata()
-    key_col = meta["bucket_column"]
-    cur_spec = int(meta.get("current_spec_id", 0))
     entries = []
     for bdir in sorted(os.listdir(out)):
         if not bdir.startswith("__bucket="):
@@ -213,26 +244,150 @@ def write_data_files(
             if not fn.endswith(".parquet"):
                 continue
             full = os.path.join(out, bdir, fn)
-            md = pq.ParquetFile(full).metadata
-            rows = md.num_rows
-            if rows == 0:
-                continue
-            entry = {"path": os.path.relpath(full, table.root), "bucket": b, "rows": rows}
-            if cur_spec:
-                entry["spec_id"] = cur_spec
-            # schema era of this file: lets the read path align renamed /
-            # widened columns by COLUMN ID (Iceberg rule) instead of name
-            entry["schema_id"] = int(meta.get("current_schema_id", 0))
-            if b in delta_buckets:
-                entry["delta"] = True
-            lo, hi = _key_bounds(md, key_col)
-            # manifests are JSON — only store bounds of JSON-native
-            # types (a timestamp/binary bucket column would otherwise
-            # break every commit); absent bounds read conservatively
-            if isinstance(lo, (str, int, float)) and isinstance(hi, (str, int, float)):
-                entry["key_min"], entry["key_max"] = lo, hi
-            entries.append(entry)
+            entry = _manifest_entry(table, meta, full, b, delta_buckets)
+            if entry is not None:
+                entries.append(entry)
     return entries
+
+
+def _manifest_entry(
+    table: IceboxTable, meta: dict, full: str, bucket: int, delta_buckets
+) -> dict | None:
+    """Manifest entry of one written data file (None when it is empty),
+    from its parquet footer."""
+    md = pq.ParquetFile(full).metadata
+    rows = md.num_rows
+    if rows == 0:
+        return None
+    entry = {"path": os.path.relpath(full, table.root), "bucket": bucket, "rows": rows}
+    cur_spec = int(meta.get("current_spec_id", 0))
+    if cur_spec:
+        entry["spec_id"] = cur_spec
+    # schema era of this file: lets the read path align renamed /
+    # widened columns by COLUMN ID (Iceberg rule) instead of name
+    entry["schema_id"] = int(meta.get("current_schema_id", 0))
+    if bucket in delta_buckets:
+        entry["delta"] = True
+    lo, hi = _key_bounds(md, meta["bucket_column"])
+    # manifests are JSON — only store bounds of JSON-native
+    # types (a timestamp/binary bucket column would otherwise
+    # break every commit); absent bounds read conservatively
+    if isinstance(lo, (str, int, float)) and isinstance(hi, (str, int, float)):
+        entry["key_min"], entry["key_max"] = lo, hi
+    return entry
+
+
+def _spark_row_metadata(table: IceboxTable, schema: pa.Schema) -> str:
+    """The Spark schema of rows with Arrow ``schema`` (nullability as
+    there), as Spark's parquet writer puts it in the footer under
+    ``org.apache.spark.sql.parquet.row.metadata``: compact JSON, keys
+    in Spark's order (name, type, nullable, metadata)."""
+    types = {f["name"]: f["type"] for f in table.schema_fields()}
+    struct = T.StructType(
+        [T.StructField(f.name, type_to_spark(types[f.name]), f.nullable) for f in schema]
+    )
+    return json.dumps(struct.jsonValue(), separators=(",", ":"))
+
+
+def _varint(buf: bytes, i: int) -> tuple[int, int]:
+    out = shift = 0
+    while True:
+        b = buf[i]
+        i += 1
+        out |= (b & 0x7F) << shift
+        if not b & 0x80:
+            return out, i
+        shift += 7
+
+
+def _uvarint(n: int) -> bytes:
+    out = bytearray()
+    while True:
+        b, n = n & 0x7F, n >> 7
+        out.append(b | (0x80 if n else 0))
+        if not n:
+            return bytes(out)
+
+
+def _swap_arrow_schema_blob(path: str, key: str, value: str) -> None:
+    """Replace the ``ARROW:schema`` footer entry of a parquet file that
+    pyarrow just wrote with ``key: value``, in place.  pyarrow writes a
+    schema's metadata only together with that blob, which is larger
+    than the rest of a small data file's footer.  The footer is thrift
+    compact FileMetaData: its key-value list (field 5) ends with the
+    blob's KeyValue struct (field 1 key, field 2 value, stop byte), and
+    the ``created_by`` string (field 6) follows; the list keeps its
+    length, and no column chunk offset moves."""
+    with open(path, "r+b") as fh:
+        fh.seek(-8, os.SEEK_END)
+        n = int.from_bytes(fh.read(4), "little")
+        fh.seek(-8 - n, os.SEEK_END)
+        start = fh.tell()
+        buf = fh.read(n)
+        head = b"\x18\x0cARROW:schema\x18"
+        i = buf.rfind(head)
+        vlen, j = _varint(buf, i + len(head)) if i >= 0 else (0, 0)
+        end = j + vlen + 1
+        if i < 0 or buf[end - 1] != 0 or buf[end] != 0x18:
+            raise ValueError(f"unexpected parquet footer layout in {path}")
+        kv = b"".join(
+            b"\x18" + _uvarint(len(x)) + x for x in (key.encode(), value.encode())
+        )
+        buf = buf[:i] + kv + b"\x00" + buf[end:]
+        fh.seek(start)
+        fh.write(buf + len(buf).to_bytes(4, "little") + b"PAR1")
+        fh.truncate()
+
+
+def _write_arrow_files(
+    rows: pa.Table, table: IceboxTable, delta_buckets: Collection[int]
+) -> list[dict]:
+    """``write_data_files`` for winners held on the driver: one file per
+    bucket under a fresh commit dir, in the Spark write's layout
+    (``__bucket=b/part-*.snappy.parquet``) and with its manifest entries
+    (same keys, buckets in the same directory-name order).  Written
+    with snappy, INT96 timestamps and Spark's two footer keys, in
+    Spark's order, without dictionary pages and without pyarrow's
+    ``ARROW:schema`` footer blob (``_swap_arrow_schema_blob``): on a
+    small table's 253 files, pyarrow's defaults made them 1.14x the
+    bytes of parquet-mr's (dictionary pages on unique or all-NULL
+    columns, where parquet-mr falls back to plain), these settings
+    1.007x.  The files are written in parallel (pyarrow releases the
+    GIL)."""
+    if not rows.num_rows:
+        return []
+    meta = table.metadata()
+    out = os.path.join(table.data_dir, f"snap-pending-{uuid.uuid4().hex[:12]}")
+    buckets = rows.column("__bucket").to_numpy()
+    data = rows.drop_columns(["__bucket"])
+    row_meta = _spark_row_metadata(table, data.schema)
+    data = pa.Table.from_arrays(
+        data.columns,
+        schema=data.schema.with_metadata(
+            {"org.apache.spark.sql.parquet.row.metadata": row_meta}
+        ),
+    )
+    starts = np.flatnonzero(np.concatenate(([True], buckets[1:] != buckets[:-1])))
+    ends = np.append(starts[1:], len(buckets))
+
+    def write_one(span) -> dict | None:
+        lo, hi = span
+        b = int(buckets[lo])
+        bdir = os.path.join(out, f"__bucket={b}")
+        os.makedirs(bdir)
+        full = os.path.join(bdir, f"part-00000-{uuid.uuid4()}.c000.snappy.parquet")
+        pq.write_table(
+            data.slice(lo, hi - lo),
+            full,
+            compression="snappy",
+            use_dictionary=False,
+            use_deprecated_int96_timestamps=True,
+        )
+        _swap_arrow_schema_blob(full, "org.apache.spark.version", pyspark.__version__)
+        return _manifest_entry(table, meta, full, b, delta_buckets)
+
+    spans = sorted(zip(starts, ends), key=lambda se: f"__bucket={buckets[se[0]]}")
+    return [e for e in _io_pool().map(write_one, spans) if e is not None]
 
 
 def _key_bounds(md, key_col: str):

@@ -35,14 +35,31 @@ _TBL_CACHE: dict[tuple[str, str], DataFrame] = {}
 _TBL_CACHE_MAX = 1024
 
 
+def memo_put(cache: dict, key: tuple, df: DataFrame, cap: int) -> None:
+    """Insert into a per-session memo keyed by (applicationId, ...):
+    entries of other applicationIds (stopped sessions) are evicted
+    first, so their plans are released and a long-lived process that
+    starts sessions one after another keeps memoizing; past ``cap``
+    entries of the current session, nothing more is memoized."""
+    for stale in [k for k in cache if k[0] != key[0]]:
+        del cache[stale]
+    if len(cache) < cap:
+        cache[key] = df
+
+
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The ``name`` table of a fixture directory, read once per session.
+
+    Precondition: ``sf_dir`` is immutable for the session's lifetime.
+    The DataFrame is memoized with the file listing of its first read,
+    so files added to or removed from the directory later are not seen
+    by this session."""
     path = f"{sf_dir}/{name}.parquet"
     key = (spark.sparkContext.applicationId, path)
     df = _TBL_CACHE.get(key)
     if df is None:
         df = spark.read.parquet(path)
-        if len(_TBL_CACHE) < _TBL_CACHE_MAX:
-            _TBL_CACHE[key] = df
+        memo_put(_TBL_CACHE, key, df, _TBL_CACHE_MAX)
     return df
 
 

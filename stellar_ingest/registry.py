@@ -30,7 +30,7 @@ from .ops import (
     udx,
     windows,
 )
-from .ops.relational import tbl
+from .ops.relational import memo_put, tbl
 
 _MODULES = [relational, joins, aggregates, windows, functions, text, dedup, dedup_index, similarity, ivf_index, multimodal, repair, udx, composites]
 
@@ -177,8 +177,7 @@ def _memo_plan(name: str, fn: Callable) -> Callable:
         df = _PLAN_CACHE.get(key)
         if df is None:
             df = fn(spark, sf_dir)
-            if len(_PLAN_CACHE) < _PLAN_CACHE_MAX:
-                _PLAN_CACHE[key] = df
+            memo_put(_PLAN_CACHE, key, df, _PLAN_CACHE_MAX)
         return df
 
     wrapped.__name__ = getattr(fn, "__name__", name)

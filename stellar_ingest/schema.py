@@ -14,6 +14,7 @@ The stored table row = user columns + engine meta columns:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import types as T
 
 KEY_COLS = ("conv_id", "turn_idx")
@@ -68,15 +69,17 @@ def align_renames(table, df):
     (lake/core.py::rename_map) so that renaming a column the source
     keeps sending does NOT split data: the old wire name keeps feeding
     the renamed column instead of being re-added under a fresh id with
-    the stored values forever half-populated.  Raises when the batch
-    carries BOTH the old and the new name (the source itself evolved —
-    which of the two is the renamed column is ambiguous and must be an
-    operator decision, not a silent merge)."""
+    the stored values forever half-populated.  ``df`` is a Spark
+    DataFrame or a pyarrow table (the driver-side apply).  Raises when
+    the batch carries BOTH the old and the new name (the source itself
+    evolved — which of the two is the renamed column is ambiguous and
+    must be an operator decision, not a silent merge)."""
+    columns = df.column_names if isinstance(df, pa.Table) else df.columns
     rmap = table.rename_map()
-    hits = {old: new for old, new in rmap.items() if old in df.columns}
+    hits = {old: new for old, new in rmap.items() if old in columns}
     if not hits:
         return df
-    clash = sorted(old for old, new in hits.items() if new in df.columns)
+    clash = sorted(old for old, new in hits.items() if new in columns)
     if clash:
         raise ValueError(
             f"batch carries both the pre-rename and post-rename name for "
@@ -98,6 +101,8 @@ def align_renames(table, df):
             f"renamed column: {chain_clash}; drop or rename all but one "
             f"side in the source before ingesting"
         )
+    if isinstance(df, pa.Table):
+        return df.rename_columns([hits.get(c, c) for c in columns])
     return df.withColumnsRenamed(hits)
 
 

@@ -22,6 +22,15 @@ def spark():
 
 
 @pytest.fixture()
+def spark_apply(monkeypatch):
+    """Every CDC epoch takes the Spark data path: no epoch is small
+    enough for the driver-side apply (lake/write.py)."""
+    from stellar_ingest.lake import write
+
+    monkeypatch.setattr(write, "DRIVER_APPLY_MAX_ROWS", 0)
+
+
+@pytest.fixture()
 def tmp_table(tmp_path):
     return str(tmp_path / "table")
 

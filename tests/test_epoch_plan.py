@@ -4,12 +4,13 @@ to build (py4j round trips per epoch).
 
 Checks: (1) delta files and folded base files keep the footer schema
 they had before validity was computed once per row and the winners were
-projected to the stored layout in one select, (2) lineage and dead
+projected to the stored layout in one select, on the driver-side and
+the Spark data path alike, (2) lineage and dead
 letters of a MoR epoch with invalid, NULL-envelope and delete rows over
 two source partitions equal a direct groupBy over the same rows, also
 when the epoch crashes after its snapshot and the fence repair
-re-derives them, (3) a warm MoR epoch stays within its py4j round-trip
-budget."""
+re-derives them, (3) a warm MoR epoch on the Spark data path stays
+within its py4j round-trip budget."""
 
 from __future__ import annotations
 
@@ -108,6 +109,12 @@ def test_delta_and_folded_base_files_keep_their_footer_schema(spark, tmp_path):
     for paths in kinds.values():
         for p in paths:
             assert _footer_fields(os.path.join(t.root, p)) == STORED_FIELDS, p
+
+
+def test_footer_schema_is_the_same_on_the_spark_path(spark, tmp_path, spark_apply):
+    """The table above is small enough for the driver-side apply; the
+    same files written by the Spark job carry the same footer schema."""
+    test_delta_and_folded_base_files_keep_their_footer_schema(spark, tmp_path)
 
 
 # -- (2) lineage and dead letters ----------------------------------------------------
@@ -278,7 +285,9 @@ def _count_package_round_trips(spark):
         del client.send_command  # back to the class's method
 
 
-def test_warm_mor_epoch_round_trip_budget(spark, tmp_path):
+def test_warm_mor_epoch_round_trip_budget(spark, tmp_path, spark_apply):
+    """The budget is the Spark plan's: this epoch would otherwise be
+    applied on the driver, which builds no plan (``spark_apply``)."""
     w = str(tmp_path)
     _tiny_mor_table(spark, w, 1, mode="auto")  # warm: one MoR epoch done
     _append_updates(spark, w, 1)

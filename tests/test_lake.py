@@ -407,6 +407,53 @@ def test_python_xxh64_matches_spark(spark):
         assert bucket_of(r["k"], 16) == r["b"], repr(r["k"])
 
 
+def test_vectorized_xxh64_matches_spark(spark):
+    """lake/xxh.py::xxh64_column (numpy, one pass per key byte length)
+    must equal Spark's xxhash64 bit for bit: keys of every byte length
+    from 0 to 72 (every tail path and one to two 32-byte stripes),
+    multi-byte UTF-8 keys, a NULL, int and long keys — and bucket_ids
+    must equal Spark's pmod bucket."""
+    import pyarrow as pa
+
+    from stellar_ingest.lake.xxh import bucket_ids, xxh64_column, xxh64_signed
+
+    alphabet = "abcdefghijklmnopqrstuvwxyz0123456789"
+    keys = [(alphabet * 3)[n % 7 : n % 7 + n] for n in range(73)]
+    keys += ["日本語テキスト", "émoji🙂", "ü" * 20, "漢" * 11, "🙂" * 9, "tab\tnl\n"]
+    keys.append(None)
+    df = spark.createDataFrame([(k,) for k in keys], "k string").select(
+        "k",
+        F.xxhash64("k").alias("h"),
+        F.pmod(F.xxhash64("k"), F.lit(16)).cast("int").alias("b"),
+    )
+    rows = df.collect()
+    assert {len((r["k"] or "").encode("utf-8")) for r in rows} >= set(range(73))
+    col = pa.array([r["k"] for r in rows], pa.string())
+    assert xxh64_column(col).tolist() == [r["h"] for r in rows]
+    # ... and the per-key loop it vectorizes (NULL hashes to the seed)
+    assert xxh64_column(col).tolist() == [
+        42 if k is None else xxh64_signed(k.encode("utf-8")) for k in col.to_pylist()
+    ]
+    assert bucket_ids(col, 16).tolist() == [r["b"] for r in rows]
+    # a sliced column reads its own offsets
+    assert xxh64_column(col.slice(3, 40)).tolist() == [r["h"] for r in rows[3:43]]
+
+    longs = [0, 1, -1, 42, 2**40 + 7, -(2**35), 9223372036854775807, -9223372036854775808]
+    ints = [0, 1, -1, 42, 2147483647, -2147483648, 123456]
+    for values, sql_type, type_name in ((longs, "long", "long"), (ints, "int", "int")):
+        got = spark.createDataFrame([(v,) for v in values], f"k {sql_type}").select(
+            F.xxhash64("k").alias("h"), F.pmod(F.xxhash64("k"), F.lit(16)).cast("int").alias("b")
+        ).collect()
+        assert xxh64_column(values, type_name).tolist() == [r["h"] for r in got]
+        assert bucket_ids(values, 16, type_name).tolist() == [r["b"] for r in got]
+        arrow_type = pa.int64() if type_name == "long" else pa.int32()
+        assert xxh64_column(pa.array(values, arrow_type)).tolist() == [r["h"] for r in got]
+    with pytest.raises(TypeError):
+        xxh64_column([1.5])
+    with pytest.raises(TypeError):
+        xxh64_column([True])
+
+
 def test_lookup_many_matches_filter_and_prunes(spark, tmp_table):
     """Batched lookup: result ≡ full-scan isin filter; reads only the
     requested keys' buckets; file pruning still applies per bucket."""

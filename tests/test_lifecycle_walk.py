@@ -16,6 +16,7 @@ from __future__ import annotations
 import random
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from stellar_ingest.lake.core import IceboxTable
@@ -77,8 +78,40 @@ def _assert_model(spark, table, applied_rows, step):
     assert live.values.tolist() == exp.values.tolist(), f"step {step}"
 
 
+def _arrow_changelog(rows):
+    """The rows of ``make_changelog`` as the pyarrow batch the
+    driver-side apply takes (cdc/source.py::read_batch_arrow's types)."""
+    from .helpers import ts as _ts
+
+    cols = list(zip(*rows))
+    return pa.table(
+        {
+            "lsn": pa.array(cols[0], pa.int64()),
+            "src_part": pa.array(cols[1], pa.int32()),
+            "op": pa.array(cols[2], pa.string()),
+            "conv_id": pa.array(cols[3], pa.string()),
+            "turn_idx": pa.array(cols[4], pa.int32()),
+            "role": pa.array(cols[5], pa.string()),
+            "text": pa.array(cols[6], pa.string()),
+            "tool": pa.array(cols[7], pa.string()),
+            "ts": pa.array([_ts(s) for s in cols[8]], pa.timestamp("us")),
+        }
+    )
+
+
 @pytest.mark.parametrize("seed", [11, 23, 47])
 def test_lifecycle_walk_matches_pandas_model(spark, tmp_path, seed):
+    _walk(spark, tmp_path, seed, lambda rows: make_changelog(spark, rows))
+
+
+@pytest.mark.parametrize("seed", [11, 23, 47])
+def test_lifecycle_walk_matches_pandas_model_driver_apply(spark, tmp_path, seed):
+    """The same walk with every apply on the driver-side path (a
+    pyarrow batch); fold and compact still run as Spark jobs."""
+    _walk(spark, tmp_path, seed, _arrow_changelog)
+
+
+def _walk(spark, tmp_path, seed: int, to_batch) -> None:
     rng = random.Random(seed)
     t = IceboxTable.create(str(tmp_path / "t"), TABLE_SCHEMA, num_buckets=4)
     applied: list = []
@@ -94,7 +127,7 @@ def test_lifecycle_walk_matches_pandas_model(spark, tmp_path, seed):
             n = rng.randrange(5, 25)
             rows = _gen_batch(rng, lsn, n)
             lsn += n
-            batch = make_changelog(spark, rows)
+            batch = to_batch(rows)
             fn = delta_apply if rng.random() < 0.6 else merge_apply
             fn(spark, t, batch, summary={"epoch": step + 1})
             applied += rows

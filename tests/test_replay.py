@@ -552,7 +552,7 @@ def test_mor_bounded_fold_smooths_and_reconverges(spark, ledger, golden, tmp_pat
 # ---------------------------------------------------------------------------
 
 
-def test_auto_mode_defaults_to_mor_once_loaded(spark, ledger, tmp_path):
+def test_auto_mode_defaults_to_mor_once_loaded(spark, ledger, tmp_path, spark_apply):
     """mode='auto' (the default): backfill commits copy-on-write, but a
     sustained incremental epoch into the loaded table commits
     merge-on-read — Θ(batch), one action (AQE may split it into stage
@@ -560,7 +560,10 @@ def test_auto_mode_defaults_to_mor_once_loaded(spark, ledger, tmp_path):
     Evidence: the default epoch's snapshot operation is 'delta', its
     Spark job count is IDENTICAL to an explicit mode='mor' epoch, and
     an explicit mode='cow' epoch costs strictly more jobs (the
-    touched-bucket discovery action + the table-side read)."""
+    touched-bucket discovery action + the table-side read).  Job counts
+    are the Spark data path's, so that path is forced (``spark_apply``):
+    these epochs are small enough for the driver-side apply, which
+    starts no job in any mode."""
     from stellar_ingest.gen.changelog import append_update_segment, gen_update_stream
 
     table_root = str(tmp_path / "t")
@@ -677,3 +680,34 @@ def test_longevity_soak_bounded_metadata(spark, tmp_path):
     assert ckpt.load(ck)["epoch"] >= cur["epoch"]
     assert table_fingerprint(scan(spark, t)) == fp_before
     assert more == []  # nothing new applied — repair only
+
+
+# -- the crash-injection tests on the Spark data path --------------------------------
+# This ledger's epochs are small enough for the driver-side apply
+# (lake/merge.py), so the tests above exercise it; these run the same
+# bodies with every epoch on the Spark data path (``spark_apply``).
+
+
+@pytest.mark.parametrize(
+    "crash_at", ["pre_evolve", "pre_merge", "post_snapshot", "post_checkpoint"]
+)
+def test_crash_injection_reconverges_on_spark_path(
+    spark, ledger, golden, tmp_path, crash_at, spark_apply
+):
+    test_crash_injection_reconverges(spark, ledger, golden, tmp_path, crash_at)
+
+
+@pytest.mark.parametrize(
+    "crash_at", ["pre_evolve", "pre_merge", "post_snapshot", "post_checkpoint"]
+)
+def test_mor_crash_injection_reconverges_on_spark_path(
+    spark, ledger, golden, tmp_path, crash_at, spark_apply
+):
+    test_mor_crash_injection_reconverges(spark, ledger, golden, tmp_path, crash_at)
+
+
+@pytest.mark.parametrize("crash_at", ["pre_merge", "post_snapshot", "post_checkpoint"])
+def test_mor_folding_epoch_crash_reconverges_on_spark_path(
+    spark, ledger, golden, tmp_path, crash_at, spark_apply
+):
+    test_mor_folding_epoch_crash_reconverges(spark, ledger, golden, tmp_path, crash_at)

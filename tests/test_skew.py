@@ -129,10 +129,13 @@ def test_auto_salt_hint_engages_from_window_observation(spark, tmp_path):
         table_fingerprint(scan(spark, IceboxTable(str(tmp_path / "t_plain"))))
 
 
-def test_auto_salts_costs_no_extra_job(spark, tmp_path):
+def test_auto_salts_costs_no_extra_job(spark, tmp_path, spark_apply):
     """The round-2 census ran sample().groupBy().collect() as its own
     per-epoch action; the observe-based census must add ZERO jobs —
-    salts='auto' and salts=None run the identical job count."""
+    salts='auto' and salts=None run the identical job count.  Both runs
+    take the Spark data path (``spark_apply``): the census is the Spark
+    window's observation, and the plain run's epochs would otherwise be
+    applied on the driver, with no job to compare."""
     df = _whale_ledger_df(spark, 2000)
     ledger = str(tmp_path / "ledger")
     _write_whale_ledger(spark, df, ledger)
