@@ -13,7 +13,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 LINEAGE_FILE = "lineage.jsonl"
@@ -34,8 +34,6 @@ def observed_stats(raw: DataFrame, valid_sql: str, parts: list[int]):
     chains (~250 py4j round-trips, ~0.1 s/epoch of driver time,
     round-6 profile).  Identical expressions: count(CASE WHEN … THEN 1
     END) counts non-nulls exactly like count(when(pred, 1))."""
-    from pyspark.sql import Observation
-
     exprs = [
         F.expr(f"count(CASE WHEN NOT ({valid_sql}) THEN 1 END) AS quarantined")
     ]
@@ -46,13 +44,32 @@ def observed_stats(raw: DataFrame, valid_sql: str, parts: list[int]):
             F.expr(f"max(CASE WHEN {ok} THEN lsn END) AS to_{p}"),
             F.expr(f"count(CASE WHEN {ok} THEN 1 END) AS rows_{p}"),
         ]
-    obs = Observation("batch_stats")
+    obs = _BatchStats(raw, exprs)
     return raw.observe(obs, *exprs), obs
+
+
+class _BatchStats(Observation):
+    """The batch-stats Observation, plus the aggregate that recomputes
+    the same stats.  Adaptive execution can leave an observe node out
+    of the job that ran: when a shuffle stage's output is empty (an
+    epoch with no valid row), the rest of the plan becomes an empty
+    relation and the observation fills with an empty row, which
+    ``Observation.get`` cannot read."""
+
+    def __init__(self, raw: DataFrame, exprs: list):
+        super().__init__("batch_stats")
+        self._raw, self._exprs = raw, exprs
+
+    def stats(self) -> dict:
+        if self._jo.getRow().length():
+            return self.get
+        # one more scan of the batch, only when the observation is empty
+        return self._raw.agg(*self._exprs).first().asDict()
 
 
 def collect_observed_stats(obs, parts: list[int]) -> tuple[list[dict], int]:
     """(partition_stats, quarantined) from a filled Observation."""
-    got = obs.get
+    got = obs.stats()
     stats = []
     for p in sorted(parts):
         if got[f"rows_{p}"]:

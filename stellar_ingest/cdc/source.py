@@ -23,11 +23,17 @@ is bounded by segment count, not data volume.
 ``read_batch_arrow`` is the same read on the driver, into a pyarrow
 table, for the epochs small enough to apply without Spark
 (cdc/runner.py picks the path).
+
+A segment whose every ``lsn`` is NULL has no position in the log: no
+offset can ever cover it, so discovery leaves it out (with a warning,
+once per file version) instead of failing every epoch.  NULL-lsn rows
+in a segment that has positioned rows are read and quarantined.
 """
 
 from __future__ import annotations
 
 import os
+import warnings
 from dataclasses import dataclass
 
 import numpy as np
@@ -54,7 +60,8 @@ class Segment:
     arrow_schema: pa.Schema
 
 
-def _lsn_range(pf: pq.ParquetFile) -> tuple[int, int]:
+def _lsn_range(pf: pq.ParquetFile) -> tuple[int, int] | None:
+    """(min, max) non-NULL lsn of a file; None when every lsn is NULL."""
     md, schema = pf.metadata, pf.schema_arrow
     idx = schema.names.index("lsn")
     lo, hi = None, None
@@ -74,6 +81,8 @@ def _lsn_range(pf: pq.ParquetFile) -> tuple[int, int]:
         col = pf.read(columns=["lsn"]).column("lsn")
         mm = pc.min_max(col).as_py()
         lo, hi = mm["min"], mm["max"]
+        if lo is None:
+            return None
     return int(lo), int(hi)
 
 
@@ -85,7 +94,7 @@ def _lsn_range(pf: pq.ParquetFile) -> tuple[int, int]:
 #: A rewritten file (new mtime/size) re-parses; entries are dropped
 #: lazily when their file disappears from a listing.  Metadata only —
 #: no row data is ever cached.
-_SEG_CACHE: dict[str, tuple[tuple[int, int], Segment]] = {}
+_SEG_CACHE: dict[str, tuple[tuple[int, int], Segment | None]] = {}
 _SEG_CACHE_MAX = 65536
 
 
@@ -108,12 +117,22 @@ def list_segments(ledger_dir: str) -> list[Segment]:
                 stkey = (st.st_mtime_ns, st.st_size)
                 hit = _SEG_CACHE.get(full)
                 if hit is not None and hit[0] == stkey:
-                    out.append(hit[1])
+                    if hit[1] is not None:
+                        out.append(hit[1])
                     continue
                 pf = pq.ParquetFile(full)
                 if pf.metadata.num_rows == 0:
                     continue
-                lo, hi = _lsn_range(pf)
+                rng = _lsn_range(pf)
+                if rng is None:
+                    warnings.warn(
+                        f"ledger segment {full} has no non-NULL lsn; it is not read",
+                        stacklevel=2,
+                    )
+                    if len(_SEG_CACHE) < _SEG_CACHE_MAX:
+                        _SEG_CACHE[full] = (stkey, None)
+                    continue
+                lo, hi = rng
                 seg = Segment(
                     path=full,
                     src_part=part,

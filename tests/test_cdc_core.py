@@ -124,6 +124,23 @@ def test_validate_null_op_is_quarantined_not_vanished(spark):
     assert {r["lsn"] for r in bad.collect()} == {2, 3}  # nothing vanishes
 
 
+def test_observed_stats_survive_an_empty_shuffle_stage(spark):
+    """A batch with no valid row: adaptive execution turns the plan
+    above the empty shuffle stage into an empty relation, the observe
+    node does not run and the observation fills with an empty row.  The
+    stats are still the batch's."""
+    df = make_changelog(
+        spark,
+        [
+            (1, 0, "X", "c1", 0, "user", "bad-op", None, 1),
+            (2, 0, "I", "c1", 1, "robot", "bad-role", None, 1),
+        ],
+    )
+    valid, obs = observe_valid(df, [0])
+    assert valid.groupBy("conv_id").count().collect() == []
+    assert collect_observed_stats(obs, [0]) == ([], 2)
+
+
 def test_runner_dead_letters_quarantined_rows(spark, tmp_path):
     """Quarantined rows are persisted to a dead-letter sink (never
     silently dropped) and counted in lineage; valid rows still apply."""
@@ -333,6 +350,47 @@ def test_null_envelope_rows_are_quarantined_not_dropped(spark, tmp_path):
     assert {r["text"] for r in dead.collect()} == {"null-lsn", "null-part"}
     live = read_live(spark, IceboxTable(table_root))
     assert {r["text"] for r in live.collect()} == {"ok"}
+
+
+def test_segment_without_lsn_is_left_out(spark, tmp_path):
+    """A segment whose every lsn is NULL has no log position: discovery
+    leaves it out with a warning, and the other segments still apply."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest as _pytest
+
+    from stellar_ingest.cdc.runner import run_increment
+    from stellar_ingest.cdc.source import list_segments
+    from stellar_ingest.lake.core import IceboxTable
+    from stellar_ingest.lake.read import read_live
+
+    from .helpers import ts as _ts
+
+    ledger = tmp_path / "ledger"
+    for k, lsn in enumerate([1, None]):
+        seg = ledger / "part=0" / f"seg={k}"
+        seg.mkdir(parents=True)
+        t = pa.table(
+            {
+                "lsn": pa.array([lsn], pa.int64()),
+                "src_part": pa.array([0], pa.int32()),
+                "op": ["I"],
+                "conv_id": [f"c{k}"],
+                "turn_idx": pa.array([0], pa.int32()),
+                "role": ["user"],
+                "text": [f"seg{k}"],
+                "ts": pa.array([_ts(k)], pa.timestamp("us")),
+            }
+        )
+        pq.write_table(t, seg / "s.parquet")
+    with _pytest.warns(UserWarning, match="no non-NULL lsn"):
+        segs = list_segments(str(ledger))
+    assert [s.path.split("/")[-2] for s in segs] == ["seg=0"]
+    table_root, ck = str(tmp_path / "t"), str(tmp_path / "ck")
+    recs = run_increment(spark, str(ledger), table_root, ck, salts=None)
+    assert [r["rows"] for r in recs] == [1]
+    live = read_live(spark, IceboxTable(table_root))
+    assert {r["text"] for r in live.collect()} == {"seg0"}
 
 
 def test_fence_repair_walks_past_maintenance_snapshots(spark, tmp_path):
