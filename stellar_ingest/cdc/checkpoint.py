@@ -21,11 +21,16 @@ def _norm(ck: dict) -> dict:
         # advisory skew hint (salting fan-out for the next epoch) — not
         # part of the fencing triple, correctness never depends on it
         "salt_hint": ck.get("salt_hint"),
+        # {path: mtime_ns} of the ledger segments without an lsn that an
+        # epoch already read (cdc/source.py::select_batch)
+        "unpositioned": {
+            str(k): int(v) for k, v in (ck.get("unpositioned") or {}).items()
+        },
     }
 
 
 def initial() -> dict:
-    return {"epoch": 0, "offsets": {}, "snapshot_id": None}
+    return {"epoch": 0, "offsets": {}, "snapshot_id": None, "unpositioned": {}}
 
 
 def load(checkpoint_dir: str) -> dict:
@@ -46,6 +51,8 @@ def save(checkpoint_dir: str, ck: dict) -> None:
         "snapshot_id": ck["snapshot_id"],
         "salt_hint": ck.get("salt_hint"),
     }
+    if ck.get("unpositioned"):
+        payload["unpositioned"] = dict(ck["unpositioned"])
     with open(tmp, "w") as fh:
         json.dump(payload, fh, indent=1, sort_keys=True)
         fh.flush()

@@ -15,9 +15,10 @@ Exactly-once protocol per epoch ``e → e+1``:
    Replayed work is thereby skipped, never double-applied.
 2. discover + select the next batch (footer metadata only), and pick
    the epoch's data path from metadata (``_driver_apply_fits``): an
-   unsalted epoch whose batch footer rows plus the stored rows it
-   rewrites are at most ``DRIVER_APPLY_MAX_ROWS`` runs on the driver
-   with pyarrow and starts no Spark job; any other epoch is a Spark job.
+   unsalted epoch whose batch plus the stored data it rewrites are at
+   most ``DRIVER_APPLY_MAX_ROWS`` rows and ``DRIVER_APPLY_MAX_BYTES``
+   bytes runs on the driver with pyarrow and starts no Spark job; any
+   other epoch is a Spark job.
 3. read → validate/quarantine → HWM-filter (dedupe is absorbed by the
    MERGE window, see lake/merge.py): a lazy Spark read whose lineage
    counts are observed by the apply job, or on the driver path one
@@ -53,7 +54,7 @@ from pyspark.sql import SparkSession
 
 from ..lake.core import IceboxTable, type_to_spark
 from ..lake.maintain import fold_targets
-from ..lake.merge import delta_apply, merge_apply
+from ..lake.merge import DriverObservation, delta_apply, merge_apply
 from ..lake import write as lake_write
 from ..schema import align_renames, ensure_table_schema, table_schema_for
 from . import checkpoint as ckpt
@@ -83,32 +84,44 @@ def _driver_apply_fits(
     """Whether this epoch's data path runs on the driver (pyarrow, no
     Spark job) — decided from metadata alone, before any row is read.
     Only where the Spark path would take the fused plan (LWW salting off
-    for the epoch and ``write_salt`` 1), and only when the chosen
-    segments' footer rows plus the stored rows the epoch rewrites are at
-    most ``DRIVER_APPLY_MAX_ROWS``: the fold buckets' manifest rows in
-    a merge-on-read epoch, the whole table in a copy-on-write one (its
-    touched buckets are only known after the read).  A batch column
-    whose table column has another type stays on Spark too (Spark's
-    union would widen it)."""
+    for the epoch and ``write_salt`` 1), and only when the epoch's input
+    is small in both rows and bytes: the chosen segments' footer rows
+    plus the stored rows the epoch rewrites at most
+    ``DRIVER_APPLY_MAX_ROWS``, and the segments' uncompressed row-group
+    bytes plus the rewritten files' sizes at most
+    ``DRIVER_APPLY_MAX_BYTES``.  The rewritten rows are the fold
+    buckets' in a merge-on-read epoch, the whole table's in a
+    copy-on-write one (its touched buckets are only known after the
+    read).  A batch column whose table column has another type stays on
+    Spark too (Spark's union would widen it)."""
     if salts and int(salts) > 1:
         return False
     exists = table.exists()
     if lake_write.write_salt(spark, table.num_buckets if exists else num_buckets) != 1:
         return False
     rows = sum(s.rows for s in chosen)
+    nbytes = sum(s.bytes for s in chosen)
     if exists:
         if mode == "mor":
-            rows += sum(e["rows"] for e in table.files(buckets=fold)) if fold else 0
+            stored = table.files(buckets=fold) if fold else []
         else:
             snap = table.current_snapshot()
-            rows += snap["total_rows"] if snap else 0
+            # the row bound first: it needs no manifest read
+            if snap and rows + snap["total_rows"] > lake_write.DRIVER_APPLY_MAX_ROWS:
+                return False
+            stored = table.files() if snap else []
+        rows += sum(e["rows"] for e in stored)
+        nbytes += sum(os.path.getsize(os.path.join(table.root, e["path"])) for e in stored)
         types = {f["name"]: f["type"] for f in table.schema_fields()}
         renamed = table.rename_map()
         for f in batch_schema(chosen).fields:
             t = types.get(renamed.get(f.name, f.name))
             if t is not None and type_to_spark(t) != f.dataType:
                 return False
-    return rows <= lake_write.DRIVER_APPLY_MAX_ROWS
+    return (
+        rows <= lake_write.DRIVER_APPLY_MAX_ROWS
+        and nbytes <= lake_write.DRIVER_APPLY_MAX_BYTES
+    )
 
 
 def _fence_and_repair(
@@ -131,6 +144,7 @@ def _fence_and_repair(
     if snap_epoch <= ck["epoch"]:
         return ck
     new_offsets = {int(k): int(v) for k, v in summary.get("offsets", {}).items()}
+    torn_unpositioned = summary.get("unpositioned") or {}
     linfo = summary.get("lineage")
     # If maintenance (compaction/fold) ran while the fence was armed, the
     # CURRENT snapshot is the maintenance one — its parent is the torn
@@ -187,8 +201,12 @@ def _fence_and_repair(
                 segs = [
                     s
                     for s in list_segments(ledger_dir)
-                    if s.max_lsn > parent_offsets.get(s.src_part, -1)
-                    and s.src_part in new_offsets
+                    if (
+                        s.max_lsn is not None
+                        and s.max_lsn > parent_offsets.get(s.src_part, -1)
+                        and s.src_part in new_offsets
+                    )
+                    or torn_unpositioned.get(s.path) == s.mtime_ns
                 ]
                 if segs:
                     torn = read_batch(spark, segs, parent_offsets, new_offsets)
@@ -230,6 +248,7 @@ def _fence_and_repair(
         # advisory skew hint survives the repair (losing it would run
         # the first post-crash epoch unsalted on a known-hot key)
         "salt_hint": ck.get("salt_hint"),
+        "unpositioned": {**ck.get("unpositioned", {}), **torn_unpositioned},
     }
     ckpt.save(checkpoint_dir, ck)
     return ck
@@ -380,18 +399,23 @@ def run_increment(
             # segment counts — hidden entirely behind the write)
             segments = prefetched.result() if prefetched is not None else list_segments(ledger_dir)
             prefetched = None
-            chosen, cutoffs = select_batch(
-                segments, ck["offsets"], max_segments_per_part=max_segments_per_part
+            select = partial(
+                select_batch,
+                offsets=ck["offsets"],
+                max_segments_per_part=max_segments_per_part,
+                unpositioned=ck["unpositioned"],
             )
+            chosen, cutoffs = select(segments)
             if not chosen:
                 # the listing may have been prefetched before new segments
                 # arrived — confirm emptiness with a fresh listing
                 segments = list_segments(ledger_dir)
-                chosen, cutoffs = select_batch(
-                    segments, ck["offsets"], max_segments_per_part=max_segments_per_part
-                )
+                chosen, cutoffs = select(segments)
                 if not chosen:
                     break
+            # segments without an lsn are read once: the summary and the
+            # checkpoint record them (cdc/source.py module docstring)
+            unpositioned = {s.path: s.mtime_ns for s in chosen if s.max_lsn is None}
 
             # new offsets: planned cutoffs (deterministic even for
             # batches whose rows were all duplicates/quarantined)
@@ -439,7 +463,7 @@ def run_increment(
                     read_batch_arrow(chosen, ck["offsets"], cutoffs), parts
                 )
                 observed = lambda: (pstats, n_bad)  # noqa: E731
-                rn_obs = {} if auto_salt else None
+                rn_obs = DriverObservation() if auto_salt else None
             else:
                 # no persist: the batch is consumed twice (stats agg +
                 # merge) and re-decoding footer-pruned parquet is cheaper
@@ -514,6 +538,7 @@ def run_increment(
                 summary={
                     "epoch": epoch,
                     "offsets": {str(k): int(v) for k, v in new_offsets.items()},
+                    **({"unpositioned": unpositioned} if unpositioned else {}),
                 },
                 summary_fn=_lineage_summary,
                 rn_observation=rn_obs,
@@ -526,10 +551,8 @@ def run_increment(
             if auto_salt and sum(p["rows"] for p in stash["pstats"]) > 0:
                 # observation filled by the epoch's own action (guarded:
                 # a zero-valid-row COW epoch short-circuits before the
-                # resolve window, leaving the observation empty); the
-                # driver path fills a dict instead
-                got = rn_obs if isinstance(rn_obs, dict) else rn_obs.get
-                per_salt_max = int(got.get("max_rn") or 0)
+                # resolve window, leaving the observation empty)
+                per_salt_max = int(rn_obs.get.get("max_rn") or 0)
                 est_max = per_salt_max * int(batch_salts or 1)
                 salt_hint = DEFAULT_SALTS if est_max >= salt_threshold else None
             # dead-letter sink: quarantined rows are persisted, never silently
@@ -566,6 +589,7 @@ def run_increment(
                     "offsets": new_offsets,
                     "snapshot_id": snapshot_id,
                     "salt_hint": salt_hint,
+                    "unpositioned": {**ck["unpositioned"], **unpositioned},
                 },
             )
             hook("post_checkpoint")

@@ -24,16 +24,17 @@ is bounded by segment count, not data volume.
 table, for the epochs small enough to apply without Spark
 (cdc/runner.py picks the path).
 
-A segment whose every ``lsn`` is NULL has no position in the log: no
-offset can ever cover it, so discovery leaves it out (with a warning,
-once per file version) instead of failing every epoch.  NULL-lsn rows
-in a segment that has positioned rows are read and quarantined.
+A segment whose every ``lsn`` is NULL has no position in the log, so
+no offset can ever cover it.  ``select_batch`` hands it to the first
+epoch that sees it, whose validation quarantines all of its rows; the
+checkpoint records it by path and mtime (``unpositioned``) so no later
+epoch reads it again.  NULL-lsn rows in a segment that has positioned
+rows are read and quarantined with each epoch that reads the segment.
 """
 
 from __future__ import annotations
 
 import os
-import warnings
 from dataclasses import dataclass
 
 import numpy as np
@@ -53,11 +54,15 @@ from .dedupe import hwm_sql
 class Segment:
     path: str
     src_part: int
-    min_lsn: int
-    max_lsn: int
+    #: the non-NULL lsn range; both None when every lsn is NULL
+    min_lsn: int | None
+    max_lsn: int | None
     rows: int
     columns: tuple[str, ...]
     arrow_schema: pa.Schema
+    mtime_ns: int
+    #: the row groups' uncompressed bytes (footer ``total_byte_size``)
+    bytes: int
 
 
 def _lsn_range(pf: pq.ParquetFile) -> tuple[int, int] | None:
@@ -94,7 +99,7 @@ def _lsn_range(pf: pq.ParquetFile) -> tuple[int, int] | None:
 #: A rewritten file (new mtime/size) re-parses; entries are dropped
 #: lazily when their file disappears from a listing.  Metadata only —
 #: no row data is ever cached.
-_SEG_CACHE: dict[str, tuple[tuple[int, int], Segment | None]] = {}
+_SEG_CACHE: dict[str, tuple[tuple[int, int], Segment]] = {}
 _SEG_CACHE_MAX = 65536
 
 
@@ -117,30 +122,25 @@ def list_segments(ledger_dir: str) -> list[Segment]:
                 stkey = (st.st_mtime_ns, st.st_size)
                 hit = _SEG_CACHE.get(full)
                 if hit is not None and hit[0] == stkey:
-                    if hit[1] is not None:
-                        out.append(hit[1])
+                    out.append(hit[1])
                     continue
                 pf = pq.ParquetFile(full)
-                if pf.metadata.num_rows == 0:
+                md = pf.metadata
+                if md.num_rows == 0:
                     continue
-                rng = _lsn_range(pf)
-                if rng is None:
-                    warnings.warn(
-                        f"ledger segment {full} has no non-NULL lsn; it is not read",
-                        stacklevel=2,
-                    )
-                    if len(_SEG_CACHE) < _SEG_CACHE_MAX:
-                        _SEG_CACHE[full] = (stkey, None)
-                    continue
-                lo, hi = rng
+                lo, hi = _lsn_range(pf) or (None, None)
                 seg = Segment(
                     path=full,
                     src_part=part,
                     min_lsn=lo,
                     max_lsn=hi,
-                    rows=pf.metadata.num_rows,
+                    rows=md.num_rows,
                     columns=tuple(pf.schema_arrow.names),
                     arrow_schema=pf.schema_arrow,
+                    mtime_ns=st.st_mtime_ns,
+                    bytes=sum(
+                        md.row_group(i).total_byte_size for i in range(md.num_row_groups)
+                    ),
                 )
                 if len(_SEG_CACHE) < _SEG_CACHE_MAX:
                     _SEG_CACHE[full] = (stkey, seg)
@@ -207,15 +207,24 @@ def select_batch(
     offsets: dict[int, int],
     *,
     max_segments_per_part: int | None = None,
+    unpositioned: dict[str, int] | None = None,
 ) -> tuple[list[Segment], dict[int, int]]:
     """Pick the next micro-batch: per source partition, the earliest
     pending segments (capped), and the lsn cutoff the batch will consume
-    through.  Deterministic — same offsets + same ledger → same batch."""
+    through.  Deterministic — same offsets + same ledger → same batch.
+
+    Segments without an lsn (module docstring) join the batch unless
+    ``unpositioned``, the checkpoint's ``{path: mtime_ns}`` of those
+    already read, holds them; they add no cutoff."""
     chosen: list[Segment] = []
     cutoffs: dict[int, int] = {}
     by_part: dict[int, list[Segment]] = {}
+    done = unpositioned or {}
     for s in segments:
-        if s.max_lsn > offsets.get(s.src_part, -1):
+        if s.max_lsn is None:
+            if done.get(s.path) != s.mtime_ns:
+                chosen.append(s)
+        elif s.max_lsn > offsets.get(s.src_part, -1):
             by_part.setdefault(s.src_part, []).append(s)
     for part, segs in sorted(by_part.items()):
         if max_segments_per_part is None:
@@ -270,9 +279,9 @@ def read_batch(
     # a ledger; consumers dedupe if they need exactly-once counts.
     # One SQL string, parsed in one py4j call (same rationale as
     # dedupe.hwm_sql).
-    bounds = (
-        f"(({hwm_sql(offsets)}) AND ({ceil_sql})) OR lsn IS NULL OR src_part IS NULL"
-    )
+    bounds = "lsn IS NULL OR src_part IS NULL"
+    if cutoffs:
+        bounds = f"(({hwm_sql(offsets)}) AND ({ceil_sql})) OR {bounds}"
     return df.filter(bounds)
 
 

@@ -49,8 +49,9 @@ plan.
 Two data paths, one tail.  The batch arrives either as a Spark
 DataFrame (the Spark job above) or as a pyarrow table: a small
 unsalted epoch, which cdc/runner.py reads and validates on the driver
-when the batch rows plus the stored rows it rewrites are at most
-``DRIVER_APPLY_MAX_ROWS`` (lake/write.py).  The driver path
+when the batch plus the stored data it rewrites are at most
+``DRIVER_APPLY_MAX_ROWS`` rows and ``DRIVER_APPLY_MAX_BYTES`` bytes
+(lake/write.py).  The driver path
 (``_driver_winner_rows``) does the same steps in pyarrow and numpy
 with no Spark job: the rewritten buckets' files read raw, one sort for
 LWW, the numpy XXH64 for buckets, one file per bucket.  It gives the
@@ -83,10 +84,20 @@ from .write import (
     bucket_expr,
     fused_partitions,
     fused_slot_expr,
+    write_arrow_files,
     write_data_files,
     write_salt,
 )
 from .xxh import bucket_ids
+
+
+class DriverObservation:
+    """The driver path's counterpart of the ``pyspark.sql.Observation``
+    the Spark path puts on its LWW window: once the apply ran, ``get``
+    holds ``{"max_rn": ...}``, the most rows any key had."""
+
+    def __init__(self) -> None:
+        self.get: dict = {}
 
 
 def _existing_as_changelog(existing: DataFrame) -> DataFrame:
@@ -249,8 +260,8 @@ def _resolve_and_write(
     files the rewrite replaces.
 
     A pyarrow ``batch`` takes the driver path (module docstring); its
-    ``rn_observation`` is a dict that receives ``max_rn``, and it is
-    never salted (the runner sends one only with salting off)."""
+    ``rn_observation`` is a ``DriverObservation``, and it is never
+    salted (the runner sends one only with salting off)."""
     meta = table.metadata()
     nbuckets = meta["num_buckets"]
     delta_buckets = (
@@ -259,8 +270,8 @@ def _resolve_and_write(
     if isinstance(batch, pa.Table):
         rows, max_rn = _driver_winner_rows(table, batch, rewrite)
         if rn_observation is not None:
-            rn_observation["max_rn"] = max_rn
-        new_files = write_data_files(rows, table, delta_buckets=delta_buckets)
+            rn_observation.get["max_rn"] = max_rn
+        new_files = write_arrow_files(rows, table, delta_buckets)
     else:
         new_files = _spark_write(
             spark, table, batch, rewrite, delta_buckets,

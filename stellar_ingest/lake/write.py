@@ -12,7 +12,7 @@ cannot serialize the write stage (BASELINE.json:6 skew requirement); at
 1000 executors this is the same plan, just more shuffle partitions.
 
 A small epoch's winners arrive as a pyarrow table instead (the
-driver-side apply, lake/merge.py): ``write_data_files`` then writes the
+driver-side apply, lake/merge.py): ``write_arrow_files`` writes the
 same layout from the driver with pyarrow, in files Spark reads as its
 own (INT96 timestamps, snappy, Spark's footer keys).
 """
@@ -107,6 +107,27 @@ BUCKET_TASK_ROWS_PER_CORE = 1_000_000
 #: the bound is the largest size at which it was at least twice as fast.
 DRIVER_APPLY_MAX_ROWS = 640_000
 
+#: bytes (the batch segments' uncompressed row-group bytes plus the
+#: on-disk sizes of the stored files the epoch rewrites) up to which an
+#: unsalted epoch may take the driver path.  With wide rows (long
+#: texts, binary media) it binds long before the row bound; rows of
+#: ~100 bytes reach the row bound first.  Sweep: as above, with a
+#: batch of updates whose ``text`` held 1 KiB or 16 KiB of words or
+#: whose binary ``media`` column held 16 KiB of random bytes; driver /
+#: Spark seconds and the driver process's RSS rise, by batch footer
+#: bytes: 1 KiB text 32 MiB 0.233 / 1.380 (225 MB), 128 MiB 0.625 /
+#: 1.778 (850 MB), 514 MiB 2.847 / 3.320 (1.95 GB); 16 KiB binary
+#: 31 MiB 0.265 / 1.248 (240 MB), 125 MiB 0.659 / 1.515 (850 MB),
+#: 501 MiB 2.934 / 2.901 (1.95 GB); 16 KiB text 31 MiB 0.343 / 1.978
+#: (260 MB), 125 MiB 1.004 / 3.433 (950 MB), 501 MiB 3.221 / 3.328
+#: (2.1 GB).  The driver holds ~7x the batch's bytes at its peak and
+#: stops gaining near 500 MiB; at 128 MiB it was at least 2.3x as fast
+#: at every width.  Stored files count at their compressed size, which
+#: understates their memory by the compression ratio (1.2x for this
+#: text).  The bound also keeps every Arrow string or binary column far
+#: below the 2 GiB of 32-bit offsets.
+DRIVER_APPLY_MAX_BYTES = 128 * 2**20
+
 
 def fused_partitions(df, num_buckets: int, batch_rows: int | None = None) -> int:
     """Reduce partitions of the fused merge exchange.  A batch of fewer
@@ -163,7 +184,7 @@ def fused_slot_expr(partitions: int):
 
 
 def write_data_files(
-    df: DataFrame | pa.Table,
+    df: DataFrame,
     table: IceboxTable,
     *,
     sort_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
@@ -190,14 +211,7 @@ def write_data_files(
     dropped right after the sort (never written).  The fused path passes
     its ``__slot`` partition key here so the required sort stays a prefix
     of the window's sort and the planner can keep eliding it; the
-    physical row order is unchanged (one slot value per partition).
-
-    A pyarrow table (the driver-side apply) is written by
-    ``_write_arrow_files``; it must already be sorted by ``__bucket``
-    and then by the sort columns, and the layout arguments do not
-    apply."""
-    if isinstance(df, pa.Table):
-        return _write_arrow_files(df, table, delta_buckets)
+    physical row order is unchanged (one slot value per partition)."""
     # the default sort/salt columns are the transcript key; generic
     # tables (dedup/ANN indexes, any non-CDC icebox table) lack them —
     # resolve against the actual frame, falling back to the table's own
@@ -317,7 +331,14 @@ def _swap_arrow_schema_blob(path: str, key: str, value: str) -> None:
     compact FileMetaData: its key-value list (field 5) ends with the
     blob's KeyValue struct (field 1 key, field 2 value, stop byte), and
     the ``created_by`` string (field 6) follows; the list keeps its
-    length, and no column chunk offset moves."""
+    length, and no column chunk offset moves.
+
+    Needed with pyarrow 16.1: its ``store_schema=False`` drops every
+    key-value pair, and its ``ParquetWriter`` has no
+    ``add_key_value_metadata``.  With a pyarrow whose ParquetWriter has
+    that method, write with ``store_schema=False``, add Spark's two keys
+    before ``close`` and delete this function (``_varint``/``_uvarint``
+    with it)."""
     with open(path, "r+b") as fh:
         fh.seek(-8, os.SEEK_END)
         n = int.from_bytes(fh.read(4), "little")
@@ -339,11 +360,12 @@ def _swap_arrow_schema_blob(path: str, key: str, value: str) -> None:
         fh.truncate()
 
 
-def _write_arrow_files(
+def write_arrow_files(
     rows: pa.Table, table: IceboxTable, delta_buckets: Collection[int]
 ) -> list[dict]:
-    """``write_data_files`` for winners held on the driver: one file per
-    bucket under a fresh commit dir, in the Spark write's layout
+    """``write_data_files`` for winners held on the driver, which must
+    be sorted by ``__bucket`` and then by (conv_id, turn_idx): one file
+    per bucket under a fresh commit dir, in the Spark write's layout
     (``__bucket=b/part-*.snappy.parquet``) and with its manifest entries
     (same keys, buckets in the same directory-name order).  Written
     with snappy, INT96 timestamps and Spark's two footer keys, in

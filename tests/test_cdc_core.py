@@ -3,6 +3,10 @@ validation (SURVEY.md §2 ops 15, 25, 35, 66, 67)."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from pyspark.sql import functions as F
 
 from stellar_ingest.cdc.dedupe import hwm_predicate
@@ -352,45 +356,87 @@ def test_null_envelope_rows_are_quarantined_not_dropped(spark, tmp_path):
     assert {r["text"] for r in live.collect()} == {"ok"}
 
 
-def test_segment_without_lsn_is_left_out(spark, tmp_path):
-    """A segment whose every lsn is NULL has no log position: discovery
-    leaves it out with a warning, and the other segments still apply."""
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_segment_without_lsn_is_quarantined_once(spark, tmp_path, request, path):
+    """A segment whose every lsn is NULL has no log position: the first
+    epoch that sees it quarantines all of its rows (dead letters and the
+    lineage count), and the checkpoint keeps any later epoch from reading
+    it again — also when that epoch's checkpoint write was lost."""
+    import json
+
     import pyarrow as pa
     import pyarrow.parquet as pq
-    import pytest as _pytest
 
+    from stellar_ingest.cdc import checkpoint as ckpt
+    from stellar_ingest.cdc.lineage import read_lineage
     from stellar_ingest.cdc.runner import run_increment
-    from stellar_ingest.cdc.source import list_segments
     from stellar_ingest.lake.core import IceboxTable
     from stellar_ingest.lake.read import read_live
 
     from .helpers import ts as _ts
 
+    if path == "spark":
+        request.getfixturevalue("spark_apply")
     ledger = tmp_path / "ledger"
-    for k, lsn in enumerate([1, None]):
-        seg = ledger / "part=0" / f"seg={k}"
-        seg.mkdir(parents=True)
-        t = pa.table(
-            {
-                "lsn": pa.array([lsn], pa.int64()),
-                "src_part": pa.array([0], pa.int32()),
-                "op": ["I"],
-                "conv_id": [f"c{k}"],
-                "turn_idx": pa.array([0], pa.int32()),
-                "role": ["user"],
-                "text": [f"seg{k}"],
-                "ts": pa.array([_ts(k)], pa.timestamp("us")),
-            }
+
+    def seg(k, lsns):
+        d = ledger / "part=0" / f"seg={k}"
+        d.mkdir(parents=True)
+        n = len(lsns)
+        pq.write_table(
+            pa.table(
+                {
+                    "lsn": pa.array(lsns, pa.int64()),
+                    "src_part": pa.array([0] * n, pa.int32()),
+                    "op": ["I"] * n,
+                    "conv_id": [f"c{k}_{i}" for i in range(n)],
+                    "turn_idx": pa.array([0] * n, pa.int32()),
+                    "role": ["user"] * n,
+                    "text": [f"seg{k}"] * n,
+                    "ts": pa.array([_ts(k)] * n, pa.timestamp("us")),
+                }
+            ),
+            d / "s.parquet",
         )
-        pq.write_table(t, seg / "s.parquet")
-    with _pytest.warns(UserWarning, match="no non-NULL lsn"):
-        segs = list_segments(str(ledger))
-    assert [s.path.split("/")[-2] for s in segs] == ["seg=0"]
+        return str(d / "s.parquet")
+
+    def dead_letters(epoch):
+        q = tmp_path / "ck" / "quarantine" / f"epoch={epoch}"
+        return sorted(r["conv_id"] for r in spark.read.parquet(str(q)).collect())
+
+    seg(0, [1])
+    lost = seg(1, [None, None])
     table_root, ck = str(tmp_path / "t"), str(tmp_path / "ck")
     recs = run_increment(spark, str(ledger), table_root, ck, salts=None)
-    assert [r["rows"] for r in recs] == [1]
+    assert [(r["epoch"], r["rows"], r["quarantined"]) for r in recs] == [(1, 1, 2)]
+    assert dead_letters(1) == ["c1_0", "c1_1"]
+    assert ckpt.load(ck)["unpositioned"] == {lost: os.stat(lost).st_mtime_ns}
+
+    # a second segment without lsn, read by an epoch whose checkpoint
+    # write is lost: the fence repair restores the dead letters and the
+    # checkpoint entry from the snapshot summary
+    seg(2, [2])
+    lost2 = seg(3, [None])
+
+    def crash(point):
+        if point == "post_snapshot":
+            raise RuntimeError("crash")
+
+    with pytest.raises(RuntimeError):
+        run_increment(spark, str(ledger), table_root, ck, salts=None, crash_hook=crash)
+    assert run_increment(spark, str(ledger), table_root, ck, salts=None) == []
+    assert dead_letters(2) == ["c3_0"]
+    assert set(ckpt.load(ck)["unpositioned"]) == {lost, lost2}
+
+    seg(4, [3])
+    recs = run_increment(spark, str(ledger), table_root, ck, salts=None)
+    assert [(r["epoch"], r["rows"], r["quarantined"]) for r in recs] == [(3, 1, 0)]
+    lineage = [(r["epoch"], r["quarantined"]) for r in read_lineage(ck)]
+    assert lineage == [(1, 2), (2, 1), (3, 0)]
     live = read_live(spark, IceboxTable(table_root))
-    assert {r["text"] for r in live.collect()} == {"seg0"}
+    assert sorted(r["text"] for r in live.collect()) == ["seg0", "seg2", "seg4"]
+    with open(os.path.join(ck, "checkpoint.json")) as fh:
+        assert json.load(fh)["epoch"] == 3
 
 
 def test_fence_repair_walks_past_maintenance_snapshots(spark, tmp_path):

@@ -15,7 +15,8 @@ same ledger and must agree on everything they leave behind:
    same snapshot summaries, lineage, dead letters and ``salt_hint``;
 2. a crash test that switches paths mid-stream and reaches the golden
    fingerprint;
-3. a clean driver epoch starts no Spark job.
+3. a clean driver epoch starts no Spark job, and one over the byte
+   bound runs on Spark.
 """
 
 from __future__ import annotations
@@ -268,7 +269,8 @@ def test_crash_while_switching_paths_reconverges(spark, tmp_path, monkeypatch, c
 # -- no Spark job ------------------------------------------------------------------
 
 
-def test_clean_driver_epoch_starts_no_spark_job(spark, tmp_path):
+def _loaded_table_and_update(spark, tmp_path):
+    """A 30-conversation table and a pending 200-update ledger segment."""
     from stellar_ingest.gen.changelog import (
         append_update_segment,
         gen_events,
@@ -284,12 +286,56 @@ def test_clean_driver_epoch_starts_no_spark_job(spark, tmp_path):
         spark, 30, n_events=200, lsn_base=64 * keyspace(30), parts=2, seed=8, preload_seed=7
     )
     append_update_segment(upd, ledger, seg_no=1000)
+    return ledger, root, ck
+
+
+def _epoch_jobs(spark, run) -> list[int]:
     sc = spark.sparkContext
-    sc.setJobGroup("driver-epoch", "driver-epoch")
+    sc.setJobGroup("epoch", "epoch")
     try:
-        recs = run_increment(spark, ledger, root, ck, max_epochs=1)
+        run()
     finally:
         sc.setJobGroup("", "")
+    return sc.statusTracker().getJobIdsForGroup("epoch")
+
+
+def test_clean_driver_epoch_starts_no_spark_job(spark, tmp_path):
+    ledger, root, ck = _loaded_table_and_update(spark, tmp_path)
+    recs = []
+    jobs = _epoch_jobs(
+        spark, lambda: recs.extend(run_increment(spark, ledger, root, ck, max_epochs=1))
+    )
     assert IceboxTable(root).current_snapshot()["operation"] == "delta"
     assert sum(r["rows"] for r in recs) == 200 and recs[0]["quarantined"] == 0
-    assert sc.statusTracker().getJobIdsForGroup("driver-epoch") == []
+    assert jobs == []
+
+
+def test_byte_bound_counts_batch_and_rewritten_bytes(spark, tmp_path, monkeypatch):
+    """The byte bound holds the batch segments' uncompressed row-group
+    bytes plus the on-disk bytes of the files the epoch rewrites; an
+    epoch one byte over it runs as a Spark job."""
+    from stellar_ingest.cdc import checkpoint as ckpt
+    from stellar_ingest.cdc.runner import _driver_apply_fits
+    from stellar_ingest.cdc.source import list_segments, select_batch
+
+    ledger, root, ck = _loaded_table_and_update(spark, tmp_path)
+    table = IceboxTable(root)
+    chosen, _ = select_batch(list_segments(ledger), ckpt.load(ck)["offsets"])
+    batch = sum(s.bytes for s in chosen)
+    stored = sum(os.path.getsize(p) for p in table.file_paths())
+    assert batch > 0 and stored > 0
+
+    def fits(mode, bound, fold=None):
+        monkeypatch.setattr(write, "DRIVER_APPLY_MAX_BYTES", bound)
+        return _driver_apply_fits(spark, table, chosen, None, mode, fold, 4)
+
+    assert fits("mor", batch) and not fits("mor", batch - 1)
+    assert fits("cow", batch + stored) and not fits("cow", batch + stored - 1)
+    b0 = table.files()[0]["bucket"]
+    stored_b0 = sum(os.path.getsize(p) for p in table.file_paths(buckets=[b0]))
+    assert fits("mor", batch + stored_b0, [b0])
+    assert not fits("mor", batch + stored_b0 - 1, [b0])
+
+    monkeypatch.setattr(write, "DRIVER_APPLY_MAX_BYTES", batch - 1)
+    jobs = _epoch_jobs(spark, lambda: run_increment(spark, ledger, root, ck, max_epochs=1))
+    assert jobs != []
