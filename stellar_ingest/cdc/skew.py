@@ -11,51 +11,12 @@ salting (SURVEY.md §4).  Three pieces:
 - census: the RUNNER's census is free — it observes ``max(row_number)``
   on the LWW window itself (cdc/resolve.py ``rn_observation``) and
   decides the NEXT epoch's salting from it (skew persists across
-  adjacent batches), so ``salts="auto"`` costs no extra scan.  The
-  sampled census below remains as a standalone utility for one-shot
-  analyses where no window is about to run anyway.
+  adjacent batches), so ``salts="auto"`` costs no extra scan.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 #: keys whose estimated per-batch mutation count exceeds this trigger salting
 DEFAULT_HOT_THRESHOLD = 100_000
 #: two-phase fan-out when salting engages
 DEFAULT_SALTS = 32
-
-
-def census_hot_keys(
-    df: DataFrame,
-    *,
-    threshold: int = DEFAULT_HOT_THRESHOLD,
-    sample_fraction: float = 0.01,
-    seed: int = 42,
-) -> list[tuple]:
-    """Estimated hot (conv_id, turn_idx) keys above ``threshold``
-    mutations.  Sampled: count on the sample, scale back up."""
-    scaled = max(1, int(threshold * sample_fraction))
-    rows = (
-        df.sample(fraction=sample_fraction, seed=seed)
-        .groupBy("conv_id", "turn_idx")
-        .count()
-        .filter(F.col("count") >= scaled)
-        .select("conv_id", "turn_idx")
-        .limit(1000)
-        .collect()
-    )
-    return [(r["conv_id"], r["turn_idx"]) for r in rows]
-
-
-def plan_salts(
-    df: DataFrame,
-    *,
-    threshold: int = DEFAULT_HOT_THRESHOLD,
-    sample_fraction: float = 0.01,
-    salts: int = DEFAULT_SALTS,
-) -> int | None:
-    """Salting fan-out for this batch, or None when unskewed."""
-    hot = census_hot_keys(df, threshold=threshold, sample_fraction=sample_fraction)
-    return salts if hot else None

@@ -46,6 +46,7 @@ from pyspark.sql import types as T
 
 from ..lake.core import spark_to_type, type_to_arrow
 from ..lake.read import _io_pool
+from ..memo import Memo, stat_token
 from ..schema import CHANGELOG_SCHEMA
 from .dedupe import hwm_sql
 
@@ -91,16 +92,33 @@ def _lsn_range(pf: pq.ParquetFile) -> tuple[int, int] | None:
     return int(lo), int(hi)
 
 
-#: footer-stat memo keyed by (path, mtime_ns, size): ledger segments are
-#: immutable once written (append-only ledger contract), so each
-#: discovery pass only parses footers of files it has not seen — the
-#: steady-state loop otherwise re-parses EVERY segment's footer once or
-#: twice per epoch (~0.2 s at 400 segments, growing with ledger age).
-#: A rewritten file (new mtime/size) re-parses; entries are dropped
-#: lazily when their file disappears from a listing.  Metadata only —
-#: no row data is ever cached.
-_SEG_CACHE: dict[str, tuple[tuple[int, int], Segment]] = {}
-_SEG_CACHE_MAX = 65536
+#: ledger segment footers, keyed by path and validated by
+#: ``(mtime_ns, size)``: ledger segments are immutable once written
+#: (append-only ledger contract), so each discovery pass only parses
+#: footers of files it has not seen — the steady-state loop otherwise
+#: re-parses EVERY segment's footer once or twice per epoch (~0.2 s at
+#: 400 segments, growing with ledger age).  A rewritten file re-parses;
+#: an empty segment is memoized as None.  Metadata only — no row data.
+_SEG_CACHE = Memo(65536)
+
+
+def _parse_segment(full: str, part: int, mtime_ns: int) -> Segment | None:
+    pf = pq.ParquetFile(full)
+    md = pf.metadata
+    if md.num_rows == 0:
+        return None
+    lo, hi = _lsn_range(pf) or (None, None)
+    return Segment(
+        path=full,
+        src_part=part,
+        min_lsn=lo,
+        max_lsn=hi,
+        rows=md.num_rows,
+        columns=tuple(pf.schema_arrow.names),
+        arrow_schema=pf.schema_arrow,
+        mtime_ns=mtime_ns,
+        bytes=sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups)),
+    )
 
 
 def list_segments(ledger_dir: str) -> list[Segment]:
@@ -118,33 +136,12 @@ def list_segments(ledger_dir: str) -> list[Segment]:
                 if not fn.endswith(".parquet"):
                     continue
                 full = os.path.join(root, fn)
-                st = os.stat(full)
-                stkey = (st.st_mtime_ns, st.st_size)
-                hit = _SEG_CACHE.get(full)
-                if hit is not None and hit[0] == stkey:
-                    out.append(hit[1])
-                    continue
-                pf = pq.ParquetFile(full)
-                md = pf.metadata
-                if md.num_rows == 0:
-                    continue
-                lo, hi = _lsn_range(pf) or (None, None)
-                seg = Segment(
-                    path=full,
-                    src_part=part,
-                    min_lsn=lo,
-                    max_lsn=hi,
-                    rows=md.num_rows,
-                    columns=tuple(pf.schema_arrow.names),
-                    arrow_schema=pf.schema_arrow,
-                    mtime_ns=st.st_mtime_ns,
-                    bytes=sum(
-                        md.row_group(i).total_byte_size for i in range(md.num_row_groups)
-                    ),
+                token = stat_token(full)
+                seg = _SEG_CACHE.get(
+                    full, lambda: _parse_segment(full, part, token[0]), token=token
                 )
-                if len(_SEG_CACHE) < _SEG_CACHE_MAX:
-                    _SEG_CACHE[full] = (stkey, seg)
-                out.append(seg)
+                if seg is not None:
+                    out.append(seg)
     return out
 
 

@@ -126,12 +126,6 @@ def delta_counts(table: IceboxTable) -> dict[int, dict]:
     return out
 
 
-def delta_file_counts(table: IceboxTable) -> dict[int, int]:
-    """Per-bucket count of merge-on-read delta FILES (see delta_counts
-    for the commit-granularity view the fold policy uses)."""
-    return {b: c["files"] for b, c in delta_counts(table).items()}
-
-
 def fold_targets(
     table: IceboxTable,
     *,

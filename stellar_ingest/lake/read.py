@@ -25,12 +25,14 @@ over all mutations (same argument as cdc/resolve.py salting).
 from __future__ import annotations
 
 import os
+from threading import Lock
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import Memo, stat_token
 from ..schema import KEY_COLS, ORDER_COLS
 from .core import (
     type_to_arrow,
@@ -393,52 +395,16 @@ def _io_pool():
     return _IO_POOL
 
 
-class _ParquetFileCache:
-    """Driver-side LRU of open ``pq.ParquetFile`` handles keyed by path
-    and validated by ``(mtime_ns, size)`` — a warm serving lookup pays
-    one ``stat`` instead of re-opening and re-parsing the footer each
-    call (the dominant warm-path cost; data files are immutable, so the
-    stat check only matters against path reuse, and fold/compaction
-    naturally invalidates by switching manifests to NEW paths — stale
-    entries just age out of the LRU).  Each entry carries a lock:
-    pyarrow readers are not documented thread-safe, and concurrent
-    serving calls may share a file."""
-
-    def __init__(self, capacity: int = 256):
-        from collections import OrderedDict
-        from threading import Lock
-
-        self.capacity = capacity
-        self._entries: "OrderedDict[str, tuple]" = OrderedDict()
-        self._lock = Lock()
-
-    def get(self, path: str):
-        """(ParquetFile, entry_lock) for ``path``, opened or revalidated."""
-        import pyarrow.parquet as pq
-        from threading import Lock
-
-        st = os.stat(path)
-        key = (st.st_mtime_ns, st.st_size)
-        with self._lock:
-            hit = self._entries.get(path)
-            if hit is not None and hit[0] == key:
-                self._entries.move_to_end(path)
-                return hit[1], hit[2]
-        pf = pq.ParquetFile(path)
-        entry = (key, pf, Lock())
-        with self._lock:
-            self._entries[path] = entry
-            self._entries.move_to_end(path)
-            while len(self._entries) > self.capacity:
-                self._entries.popitem(last=False)
-        return entry[1], entry[2]
-
-    def clear(self) -> None:
-        with self._lock:
-            self._entries.clear()
-
-
-_PF_CACHE = _ParquetFileCache()
+#: open ``pq.ParquetFile`` handles of the files lookups read, keyed by
+#: path and validated by ``(mtime_ns, size)`` — a warm serving lookup
+#: pays one ``stat`` instead of re-opening and re-parsing the footer each
+#: call (the dominant warm-path cost; data files are immutable, so the
+#: stat check only matters against path reuse, and fold/compaction
+#: naturally invalidates by switching manifests to NEW paths — stale
+#: entries just age out of the LRU).  Each entry carries a lock: pyarrow
+#: readers are not documented thread-safe, and concurrent serving calls
+#: may share a file.
+_PF_CACHE = Memo(256)
 
 
 def lookup_fast(
@@ -545,7 +511,10 @@ def lookup_many_fast(
         entry, ks = job
         # warm calls skip the open + footer parse: _PF_CACHE revalidates
         # by (mtime, size) stat — measured the dominant warm-path cost
-        pf, pf_lock = _PF_CACHE.get(os.path.join(table.root, entry["path"]))
+        path = os.path.join(table.root, entry["path"])
+        pf, pf_lock = _PF_CACHE.get(
+            path, lambda: (pq.ParquetFile(path), Lock()), token=stat_token(path)
+        )
         md = pf.metadata
         try:
             idx = md.schema.names.index(col)

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..memo import Memo
 from .core import IceboxTable, type_to_spark
 from .read import _io_pool
 
@@ -84,7 +85,7 @@ def _mmh3_int(v: int, seed: int = 42) -> int:
 
 #: partition -> slot tables, memoized per partition count (pure function
 #: of the count; coupon-collector search is O(n log n) driver-side ints)
-_SLOT_MAPS: dict[int, list[int]] = {}
+_SLOT_MAPS = Memo(64)
 
 
 #: batch rows per core from which the fused write gives every bucket its
@@ -157,19 +158,19 @@ def fused_slot_map(partitions: int) -> list[int]:
     Repartitioning on ``slots[__bucket mod partitions]`` instead sends
     bucket b to partition b mod P: every partition carries the same
     number of buckets (±1) by construction, zero empty tasks."""
-    slots = _SLOT_MAPS.get(partitions)
-    if slots is None:
-        found: list[int | None] = [None] * partitions
-        need, v = partitions, 0
-        while need:
-            r = _mmh3_int(v) % partitions
-            if found[r] is None:
-                found[r] = v
-                need -= 1
-            v += 1
-        slots = [int(s) for s in found]  # type: ignore[arg-type]
-        _SLOT_MAPS[partitions] = slots
-    return slots
+    return _SLOT_MAPS.get(partitions, lambda: _slot_map(partitions))
+
+
+def _slot_map(partitions: int) -> list[int]:
+    found: list[int | None] = [None] * partitions
+    need, v = partitions, 0
+    while need:
+        r = _mmh3_int(v) % partitions
+        if found[r] is None:
+            found[r] = v
+            need -= 1
+        v += 1
+    return [int(s) for s in found]  # type: ignore[arg-type]
 
 
 def fused_slot_expr(partitions: int):
@@ -188,7 +189,6 @@ def write_data_files(
     table: IceboxTable,
     *,
     sort_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    shuffle_partitions: int | None = None,
     salt_n: int | None = None,
     delta_buckets: Collection[int] = (),
     pre_partitioned: bool = False,
@@ -234,10 +234,7 @@ def write_data_files(
         # no explicit partition count: AQE coalesces the repartition to the
         # batch's actual size, so small batches don't fragment into hundreds
         # of tiny files while big batches still fan out
-        if shuffle_partitions:
-            shuffled = df.repartition(shuffle_partitions, F.col("__bucket"), salt)
-        else:
-            shuffled = df.repartition(F.col("__bucket"), salt)
+        shuffled = df.repartition(F.col("__bucket"), salt)
     sorted_df = shuffled.sortWithinPartitions(*sort_prefix, "__bucket", *sort_cols)
     if sort_prefix:
         # projection after the sort: row order is untouched, the helper

@@ -20,6 +20,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import Memo
+
 
 #: per-session memo of the base-table DataFrames (logical plans —
 #: METADATA only, never results: no .cache()/persist, every action still
@@ -28,23 +30,9 @@ from pyspark.sql import functions as F
 #: per table on this host), and a multi-table query build pays it once
 #: per table per build.  A DataFrame is an immutable plan, so returning
 #: the same object to every builder is safe — transformations mint new
-#: frames.  The fixture dirs are immutable (read-only testdata), so the
-#: frozen file listing cannot go stale within a session.  Keyed by
-#: applicationId so a new session (or driver rerun) re-reads.
-_TBL_CACHE: dict[tuple[str, str], DataFrame] = {}
-_TBL_CACHE_MAX = 1024
-
-
-def memo_put(cache: dict, key: tuple, df: DataFrame, cap: int) -> None:
-    """Insert into a per-session memo keyed by (applicationId, ...):
-    entries of other applicationIds (stopped sessions) are evicted
-    first, so their plans are released and a long-lived process that
-    starts sessions one after another keeps memoizing; past ``cap``
-    entries of the current session, nothing more is memoized."""
-    for stale in [k for k in cache if k[0] != key[0]]:
-        del cache[stale]
-    if len(cache) < cap:
-        cache[key] = df
+#: frames.  Scoped by applicationId: a new session (or driver rerun)
+#: drops every entry and re-reads.
+_TBL_CACHE = Memo(1024)
 
 
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -55,12 +43,11 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     so files added to or removed from the directory later are not seen
     by this session."""
     path = f"{sf_dir}/{name}.parquet"
-    key = (spark.sparkContext.applicationId, path)
-    df = _TBL_CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        memo_put(_TBL_CACHE, key, df, _TBL_CACHE_MAX)
-    return df
+    return _TBL_CACHE.get(
+        path,
+        lambda: spark.read.parquet(path),
+        scope=spark.sparkContext.applicationId,
+    )
 
 
 #: parallelism floor: inputs smaller than this per core cannot fill the

@@ -30,7 +30,8 @@ from .ops import (
     udx,
     windows,
 )
-from .ops.relational import memo_put, tbl
+from .memo import Memo
+from .ops.relational import tbl
 
 _MODULES = [relational, joins, aggregates, windows, functions, text, dedup, dedup_index, similarity, ivf_index, multimodal, repair, udx, composites]
 
@@ -151,10 +152,9 @@ _PRIORITY_KEYS = [
 #: plan; re-running an action on it re-executes the full computation from
 #: the parquet inputs (nothing is persisted or .cache()d), so results are
 #: identical — only the redundant re-ANALYSIS of an unchanged query over
-#: an immutable fixture dir is skipped.  Keyed by applicationId so a new
-#: session rebuilds.
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_PLAN_CACHE_MAX = 4096
+#: an immutable fixture dir is skipped.  Scoped by applicationId so a
+#: new session rebuilds.
+_PLAN_CACHE = Memo(4096)
 
 #: builders with per-call side effects (they construct scratch icebox
 #: tables / temp files, or localCheckpoint() intermediate results, as
@@ -173,12 +173,11 @@ _STATEFUL_KEYS = {
 
 def _memo_plan(name: str, fn: Callable) -> Callable:
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (spark.sparkContext.applicationId, sf_dir, name)
-        df = _PLAN_CACHE.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            memo_put(_PLAN_CACHE, key, df, _PLAN_CACHE_MAX)
-        return df
+        return _PLAN_CACHE.get(
+            (sf_dir, name),
+            lambda: fn(spark, sf_dir),
+            scope=spark.sparkContext.applicationId,
+        )
 
     wrapped.__name__ = getattr(fn, "__name__", name)
     wrapped.__doc__ = fn.__doc__

@@ -146,6 +146,7 @@ def test_fused_slot_literal_is_bounded_at_65536_buckets(spark):
     at 65,536 buckets the fused plan builds in under 1 s and keeps its
     1 Exchange + 1 Sort shape, rows still landing in bucket mod P."""
     nb = 65_536
+    _SLOT_MAPS.clear()
     t0 = time.perf_counter()
     rows = _fused_winner_rows(_many_convs(spark), bucket_expr("conv_id", nb), nb)
     final = _writer_shape(rows)
@@ -154,7 +155,8 @@ def test_fused_slot_literal_is_bounded_at_65536_buckets(spark):
     assert plan.count("Exchange") == 1, plan
     assert plan.count("Sort [") == 1, plan
     parts = spark.sparkContext.defaultParallelism
-    assert nb not in _SLOT_MAPS  # no per-bucket map is built
+    # one map, of the write task count: no per-bucket map is built
+    assert parts in _SLOT_MAPS and nb not in _SLOT_MAPS and len(_SLOT_MAPS) == 1
     pairs = rows.select(F.spark_partition_id().alias("p"), "__bucket").collect()
     assert all(r["p"] == r["__bucket"] % parts for r in pairs)
 

@@ -88,7 +88,7 @@ def test_checkpointing_builders_are_not_memoized(spark, harness, key):
 
 def test_memo_insert_evicts_other_sessions(spark, harness):
     """A plan memoized under a stopped session's applicationId is
-    dropped when the current session inserts, in both memos (the
+    dropped when the current session reads, in both memos (the
     base-table one of ops/relational.py::tbl and the plan one of the
     registry)."""
     from stellar_ingest import registry
@@ -96,17 +96,19 @@ def test_memo_insert_evicts_other_sessions(spark, harness):
 
     qs, _ = harness
     app = spark.sparkContext.applicationId
-    stale_tbl = ("app-stopped", f"{SF}/lineitem.parquet")
-    stale_plan = ("app-stopped", SF, "agg_basic")
-    relational._TBL_CACHE[stale_tbl] = object()
-    registry._PLAN_CACHE[stale_plan] = object()
-    relational._TBL_CACHE.pop((app, f"{SF}/nation.parquet"), None)
-    registry._PLAN_CACHE.pop((app, SF, "project"), None)
+    stale_tbl = f"{SF}/lineitem.parquet"
+    stale_plan = (SF, "agg_basic")
+    relational._TBL_CACHE.get(stale_tbl, object, scope="app-stopped")
+    registry._PLAN_CACHE.get(stale_plan, object, scope="app-stopped")
     df = relational.tbl(spark, SF, "nation")
     plan = qs["project"](spark, SF)
     assert stale_tbl not in relational._TBL_CACHE
     assert stale_plan not in registry._PLAN_CACHE
-    assert relational._TBL_CACHE[(app, f"{SF}/nation.parquet")] is df
-    assert registry._PLAN_CACHE[(app, SF, "project")] is plan
-    assert all(k[0] == app for k in relational._TBL_CACHE)
-    assert all(k[0] == app for k in registry._PLAN_CACHE)
+
+    def unmemoized():
+        raise AssertionError("live entry missing")
+
+    live_tbl = relational._TBL_CACHE.get(f"{SF}/nation.parquet", unmemoized, scope=app)
+    live_plan = registry._PLAN_CACHE.get((SF, "project"), unmemoized, scope=app)
+    assert live_tbl is df
+    assert live_plan is plan

@@ -300,7 +300,7 @@ def test_mor_fold_restores_plain_reads(spark, ledger, golden, tmp_path):
     """fold_deltas compacts every delta bucket to one resolved file:
     fingerprint unchanged, delta counts zero, and the scan plan loses
     the resolve window (the no-shuffle fast path is back)."""
-    from stellar_ingest.lake.maintain import delta_file_counts, fold_deltas
+    from stellar_ingest.lake.maintain import delta_counts, fold_deltas
 
     table_root = str(tmp_path / "t")
     ck = str(tmp_path / "ck")
@@ -309,10 +309,10 @@ def test_mor_fold_restores_plain_reads(spark, ledger, golden, tmp_path):
         max_segments_per_part=4, salts=None, mode="mor",
     )
     t = IceboxTable(table_root)
-    assert sum(delta_file_counts(t).values()) > 0
+    assert sum(c["files"] for c in delta_counts(t).values()) > 0
     sid = fold_deltas(spark, t, min_delta_commits=1)
     assert sid is not None
-    assert sum(delta_file_counts(t).values()) == 0
+    assert sum(c["files"] for c in delta_counts(t).values()) == 0
     assert table_fingerprint(scan(spark, t)) == golden["fingerprint"]
     plan = scan(spark, t)._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan

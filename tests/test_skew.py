@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from stellar_ingest.cdc.resolve import lww_winners
 from stellar_ingest.cdc.runner import run_increment
-from stellar_ingest.cdc.skew import census_hot_keys, plan_salts
 from stellar_ingest.gen.changelog import keyspace
 from stellar_ingest.lake.core import IceboxTable
 from stellar_ingest.lake.read import read_live, scan
@@ -46,16 +45,6 @@ def _whale_ledger_df(spark, n_events: int = 4000):
         F.timestamp_seconds(1767225600 + F.col("id")).alias("ts"),
     )
     return whale.unionByName(rest)
-
-
-def test_census_detects_whale(spark):
-    df = _whale_ledger_df(spark)
-    hot = census_hot_keys(df, threshold=500, sample_fraction=0.2)
-    assert ("whale", 0) in hot
-    assert plan_salts(df, threshold=500, sample_fraction=0.2) is not None
-    # uniform data does not trigger salting
-    uniform = df.filter(F.col("conv_id") != "whale")
-    assert plan_salts(uniform, threshold=500, sample_fraction=0.2) is None
 
 
 def test_salted_equals_unsalted_on_whale(spark):
