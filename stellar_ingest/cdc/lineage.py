@@ -244,5 +244,5 @@ def read_lineage(checkpoint_dir: str) -> list[dict]:
                     obj = json.loads(line)
                 except json.JSONDecodeError:
                     continue  # torn trailing line from a crash mid-append
-                out.extend(obj["records"]) if "records" in obj else out.append(obj)
+                out.extend(obj["records"])
     return out

@@ -39,6 +39,10 @@ Exactly-once protocol per epoch ``e → e+1``:
    step 1 repairs — offsets from the summary, lineage re-emitted from
    the summary's stats)
 
+Steps 4-6 and the in-loop expiry/GC are the epoch tail the Structured
+Streaming adapter (streaming/pipeline.py) runs too: ``_create_or_evolve``,
+``_commit_epoch`` and ``_maintain``.
+
 ``crash_hook(point)`` is a test seam — tests/test_replay.py injects
 crashes at every boundary and asserts byte-identical reconvergence.
 """
@@ -50,10 +54,10 @@ import time
 from collections.abc import Callable
 from functools import partial
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from ..lake.core import IceboxTable, type_to_spark
-from ..lake.maintain import fold_targets
+from ..lake.maintain import expire_snapshots, fold_targets, gc_orphans
 from ..lake.merge import DriverObservation, delta_apply, merge_apply
 from ..lake import write as lake_write
 from ..schema import align_renames, ensure_table_schema, table_schema_for
@@ -124,6 +128,164 @@ def _driver_apply_fits(
     )
 
 
+# -- the epoch tail, shared with streaming/pipeline.py ------------------------
+# Callees are looked up in this module's namespace, and ``lin.emit`` /
+# ``ckpt.save`` as module attributes, at call time: perfbench wraps them there.
+
+
+def _no_hook(point: str) -> None:
+    pass
+
+
+def _create_or_evolve(
+    table: IceboxTable, batch, num_buckets: int, hook: Callable[[str], None] = _no_hook
+) -> tuple[IceboxTable, object]:
+    """Additive schema evolution BEFORE the data write (BASELINE.json:6):
+    create the table from the batch's schema, or map the batch's columns
+    through the table's rename history (a renamed payload column the
+    ledger keeps sending under its old wire name feeds the renamed
+    column instead of re-evolving a fresh duplicate) and commit the
+    columns it adds.  Returns the table handle and the aligned batch."""
+    if not table.exists():
+        IceboxTable.create(
+            table.root, table_schema_for(spark_schema(batch)), num_buckets=num_buckets
+        )
+        return IceboxTable(table.root, branch=table.branch), batch
+    batch = align_renames(table, batch)
+    ensure_table_schema(table, table_schema_for(spark_schema(batch)), hook=hook)
+    return table, batch
+
+
+def _fold_pick(
+    table: IceboxTable,
+    mode: str,
+    fold_min_deltas: int | None,
+    fold_max_buckets: int | None,
+) -> list[int] | None:
+    """The buckets a merge-on-read epoch folds inside its own apply (one
+    job, one snapshot), counting the epoch's own commit; None in a
+    copy-on-write epoch or before the table exists."""
+    if mode != "mor" or not table.exists():
+        return None
+    return fold_targets(
+        table,
+        min_delta_commits=fold_min_deltas,
+        max_buckets=fold_max_buckets,
+        pending_commit=True,
+    )
+
+
+def _write_dead_letters(rows: DataFrame, checkpoint_dir: str, name: str) -> None:
+    """Persist the invalid rows of ``rows`` to ``quarantine/<name>``:
+    quarantined rows are never silently dropped (validate.py contract).
+    Overwrite keeps a replayed or repaired epoch idempotent."""
+    rows.filter(~validity_predicate()).write.mode("overwrite").parquet(
+        os.path.join(checkpoint_dir, "quarantine", name)
+    )
+
+
+def _emit_repaired(
+    checkpoint_dir: str, epoch: int, snapshot_id: int, linfo: dict | None
+) -> None:
+    """Re-emit a committed epoch's lineage from its snapshot summary
+    (no wall-clock available).  A summary without lineage (legacy
+    snapshots) gets one placeholder record, so the audit log stays
+    gap-free in epochs."""
+    linfo = linfo or {}
+    lin.emit(
+        checkpoint_dir,
+        epoch=epoch,
+        snapshot_id=snapshot_id,
+        partition_stats=linfo.get("partition_stats", []),
+        wall_ms=0.0,
+        quarantined=int(linfo.get("quarantined", 0)),
+        repaired=True,
+    )
+
+
+def _commit_epoch(
+    spark: SparkSession,
+    table: IceboxTable,
+    valid,
+    checkpoint_dir: str,
+    *,
+    epoch: int,
+    mode: str,
+    fold: list[int] | None,
+    fold_min_deltas: int | None,
+    fold_max_buckets: int | None,
+    summary: dict,
+    observed: Callable[[], tuple[list[dict], int]],
+    bad_rows: Callable[[], DataFrame],
+    quarantine: str,
+    t0: float,
+    hook: Callable[[str], None] = _no_hook,
+    **apply_kw,
+) -> tuple[int | None, list[dict]]:
+    """Apply one epoch, then persist its dead letters, then emit its
+    lineage; returns (snapshot id or None if ``skip_if_noop`` minted
+    none, lineage records).  The snapshot summary is ``epoch`` +
+    ``summary`` + the lineage stats ``observed`` reads once the write
+    action filled them, bound into the same atomic commit, so a crash
+    before the emit is repairable from the snapshot alone.  ``bad_rows``
+    is called only when the epoch quarantined rows."""
+    stash: dict = {}
+
+    def _lineage_summary() -> dict:
+        pstats, n_bad = observed()
+        stash["pstats"], stash["n_bad"] = pstats, n_bad
+        return {"lineage": {"partition_stats": pstats, "quarantined": n_bad}}
+
+    if fold is None:  # a table created this epoch picks its fold now
+        fold = _fold_pick(table, mode, fold_min_deltas, fold_max_buckets)
+    apply_fn = merge_apply if mode == "cow" else partial(delta_apply, fold_buckets=fold)
+    snapshot_id = apply_fn(
+        spark,
+        table,
+        valid,
+        summary={"epoch": epoch, **summary},
+        summary_fn=_lineage_summary,
+        **apply_kw,
+    )
+    if snapshot_id is None:
+        return None, []
+    hook("post_snapshot")
+    if stash["n_bad"]:
+        _write_dead_letters(bad_rows(), checkpoint_dir, quarantine)
+    # lineage BEFORE the checkpoint save: a crash in between replays the
+    # emit on restart (idempotent per epoch), so the audit log can never
+    # have a gap
+    records = lin.emit(
+        checkpoint_dir,
+        epoch=epoch,
+        snapshot_id=snapshot_id,
+        partition_stats=stash["pstats"],
+        wall_ms=(time.monotonic() - t0) * 1000.0,
+        quarantined=stash["n_bad"],
+    )
+    return snapshot_id, records
+
+
+def _maintain(
+    table: IceboxTable,
+    epoch: int,
+    *,
+    expire_every: int | None,
+    keep_last: int,
+    older_than_ms: int | None,
+    gc_every: int | None,
+    gc_grace_ms: int,
+    hook: Callable[[str], None] = _no_hook,
+) -> None:
+    """In-loop retention after a committed epoch: snapshot expiry every
+    ``expire_every`` epochs, orphan GC every ``gc_every``."""
+    if expire_every and epoch % int(expire_every) == 0:
+        expire_snapshots(table, keep_last=keep_last, older_than_ms=older_than_ms)
+        hook("post_expire")
+    if gc_every and epoch % int(gc_every) == 0:
+        gc_orphans(table, grace_ms=gc_grace_ms)
+
+
 def _fence_and_repair(
     spark: SparkSession,
     ledger_dir: str,
@@ -164,81 +326,54 @@ def _fence_and_repair(
             epoch_snap = None  # torn snapshot expired while fence armed
         if epoch_snap is None:
             break
-    if linfo is not None:
-        # 1. the torn epoch's quarantined ROWS: re-derive them from the
-        #    immutable ledger — the torn batch is exactly
-        #    (parent offsets, committed offsets].  Always rewritten
-        #    (overwrite is idempotent): a bare directory-exists check
-        #    would be fooled by a half-written quarantine dir from the
-        #    crash itself.
-        if int(linfo.get("quarantined", 0)) > 0:
-            qdir = os.path.join(
-                checkpoint_dir, "quarantine", f"epoch={snap_epoch}"
+    # 1. the torn epoch's quarantined ROWS: re-derive them from the
+    #    immutable ledger — the torn batch is exactly
+    #    (parent offsets, committed offsets].  Always rewritten
+    #    (overwrite is idempotent): a bare directory-exists check would
+    #    be fooled by a half-written quarantine dir from the crash itself.
+    if int((linfo or {}).get("quarantined", 0)) > 0:
+        parent_id = (
+            epoch_snap.get("parent_snapshot_id") if epoch_snap is not None else None
+        )
+        try:
+            parent_offsets = (
+                {
+                    int(k): int(v)
+                    for k, v in table.snapshot(parent_id)["summary"]
+                    .get("offsets", {})
+                    .items()
+                }
+                if parent_id is not None
+                else ({} if epoch_snap is not None else None)
             )
-            parent_id = (
-                epoch_snap.get("parent_snapshot_id")
-                if epoch_snap is not None
-                else None
-            )
-            try:
-                parent_offsets = (
-                    {
-                        int(k): int(v)
-                        for k, v in table.snapshot(parent_id)["summary"]
-                        .get("offsets", {})
-                        .items()
-                    }
-                    if parent_id is not None
-                    else ({} if epoch_snap is not None else None)
+        except KeyError:
+            # parent snapshot expired while the fence was armed: the
+            # exact torn batch can no longer be reconstructed — keep
+            # ingest alive (lineage still records the count) rather
+            # than crash on every start
+            parent_offsets = None
+        if parent_offsets is not None:
+            segs = [
+                s
+                for s in list_segments(ledger_dir)
+                if (
+                    s.max_lsn is not None
+                    and s.max_lsn > parent_offsets.get(s.src_part, -1)
+                    and s.src_part in new_offsets
                 )
-            except KeyError:
-                # parent snapshot expired while the fence was armed: the
-                # exact torn batch can no longer be reconstructed — keep
-                # ingest alive (lineage still records the count) rather
-                # than crash on every start
-                parent_offsets = None
-            if parent_offsets is not None:
-                segs = [
-                    s
-                    for s in list_segments(ledger_dir)
-                    if (
-                        s.max_lsn is not None
-                        and s.max_lsn > parent_offsets.get(s.src_part, -1)
-                        and s.src_part in new_offsets
-                    )
-                    or torn_unpositioned.get(s.path) == s.mtime_ns
-                ]
-                if segs:
-                    torn = read_batch(spark, segs, parent_offsets, new_offsets)
-                    torn.filter(~validity_predicate()).write.mode(
-                        "overwrite"
-                    ).parquet(qdir)
-        # 2. lineage BEFORE the checkpoint save (same invariant as the
-        #    normal path: the audit log can never have an epoch gap).
-        #    Attribute the records to the snapshot that committed the
-        #    epoch, not a maintenance snapshot that may now be current.
-        lin.emit(
-            checkpoint_dir,
-            epoch=snap_epoch,
-            snapshot_id=(epoch_snap or snap)["snapshot_id"],
-            partition_stats=linfo["partition_stats"],
-            wall_ms=0.0,
-            quarantined=int(linfo.get("quarantined", 0)),
-            repaired=True,
-        )
-    else:
-        # torn snapshot has no lineage in its summary (pre-v2 code or a
-        # streaming-path commit) — emit a placeholder record so the audit
-        # log stays gap-free even across legacy snapshots
-        lin.emit(
-            checkpoint_dir,
-            epoch=snap_epoch,
-            snapshot_id=(epoch_snap or snap)["snapshot_id"],
-            partition_stats=[],
-            wall_ms=0.0,
-            quarantined=0,
-            repaired=True,
-        )
+                or torn_unpositioned.get(s.path) == s.mtime_ns
+            ]
+            if segs:
+                _write_dead_letters(
+                    read_batch(spark, segs, parent_offsets, new_offsets),
+                    checkpoint_dir,
+                    f"epoch={snap_epoch}",
+                )
+    # 2. lineage BEFORE the checkpoint save (same invariant as the normal
+    #    path: the audit log can never have an epoch gap).  Attribute the
+    #    records to the snapshot that committed the epoch, not a
+    #    maintenance snapshot that may now be current.
+    _emit_repaired(checkpoint_dir, snap_epoch, (epoch_snap or snap)["snapshot_id"], linfo)
     # 3. checkpoint last — the fence stays armed until everything above
     #    landed
     ck = {
@@ -377,7 +512,7 @@ def run_increment(
         fold_min_deltas = 8
         if fold_max_buckets is None:
             fold_max_buckets = max(1, num_buckets // 8)
-    hook = crash_hook or (lambda point: None)
+    hook = crash_hook or _no_hook
     # branch-bound handle: every read/commit of this run resolves to
     # the branch head; main is untouched until lake.maintain.
     # audit_and_publish fast-forwards it (write-audit-publish)
@@ -443,26 +578,19 @@ def run_increment(
 
             # the fold rides a MoR epoch's apply: one job, one snapshot
             # (a table created this epoch picks its fold after creation)
-            fold = None
-            if epoch_mode == "mor" and table.exists():
-                fold = fold_targets(
-                    table,
-                    min_delta_commits=fold_min_deltas,
-                    max_buckets=fold_max_buckets,
-                    pending_commit=True,
-                )
-            batch_rows = sum(s.rows for s in chosen)
+            fold = _fold_pick(table, epoch_mode, fold_min_deltas, fold_max_buckets)
             parts = sorted(cutoffs)
             if _driver_apply_fits(
                 spark, table, chosen, batch_salts, epoch_mode, fold, num_buckets
             ):
                 # a small epoch: read, validate, resolve and write on the
                 # driver with pyarrow, no Spark job (lake/merge.py)
-                raw = None
                 valid, pstats, n_bad = split_valid_arrow(
                     read_batch_arrow(chosen, ck["offsets"], cutoffs), parts
                 )
                 observed = lambda: (pstats, n_bad)  # noqa: E731
+                # its dead letters are read with Spark, only when it had any
+                bad_rows = partial(read_batch, spark, chosen, ck["offsets"], cutoffs)
                 rn_obs = DriverObservation() if auto_salt else None
             else:
                 # no persist: the batch is consumed twice (stats agg +
@@ -476,112 +604,52 @@ def run_increment(
                 # the merge)
                 valid, obs = observe_valid(raw, parts)
                 observed = partial(lin.collect_observed_stats, obs, parts)
-                if auto_salt:
-                    from pyspark.sql import Observation
+                # dead letters come off `raw`, not the observed plan, so
+                # writing them doesn't re-trigger the observation
+                bad_rows = lambda: raw  # noqa: E731
+                rn_obs = Observation() if auto_salt else None
 
-                    rn_obs = Observation()
-                else:
-                    rn_obs = None
-
-            # additive schema evolution BEFORE write (BASELINE.json:6);
-            # incoming columns are first mapped through the table's
-            # rename history so a renamed payload column the ledger
-            # keeps sending under its old wire name feeds the renamed
-            # column instead of re-evolving a fresh duplicate
-            if not table.exists():
-                batch_table_schema = table_schema_for(spark_schema(valid))
-                IceboxTable.create(
-                    table_root, batch_table_schema, num_buckets=num_buckets
-                )
-                table = IceboxTable(table_root, branch=branch)
-            else:
-                valid = align_renames(table, valid)
-                batch_table_schema = table_schema_for(spark_schema(valid))
-                ensure_table_schema(table, batch_table_schema, hook=hook)
-
+            table, valid = _create_or_evolve(table, valid, num_buckets, hook)
             epoch = ck["epoch"] + 1
             hook("pre_merge")
-            # the snapshot summary carries the fencing essentials (epoch +
-            # offsets) PLUS the observed lineage stats (bound in by
-            # summary_fn after the write action fills the observation) — a
-            # crash between snapshot-commit and lineage-emit is repairable
-            # from the snapshot alone (_fence_and_repair re-emits)
-            stash: dict = {}
-
-            def _lineage_summary() -> dict:
-                pstats, n_bad = observed()
-                stash["pstats"], stash["n_bad"] = pstats, n_bad
-                return {
-                    "lineage": {"partition_stats": pstats, "quarantined": n_bad}
-                }
-
             # overlap: discover epoch e+1's segments while this epoch's
             # merge/write executes (footer reads release the GIL)
             if max_epochs is None or epochs_done + 1 < max_epochs:
                 prefetched = pool.submit(list_segments, ledger_dir)
-            if epoch_mode == "mor":
-                if fold is None:
-                    fold = fold_targets(
-                        table,
-                        min_delta_commits=fold_min_deltas,
-                        max_buckets=fold_max_buckets,
-                        pending_commit=True,
-                    )
-                apply_fn = partial(delta_apply, fold_buckets=fold)
-            else:
-                apply_fn = merge_apply
-            snapshot_id = apply_fn(
+            snapshot_id, records = _commit_epoch(
                 spark,
                 table,
                 valid,
-                salts=batch_salts,
+                checkpoint_dir,
+                epoch=epoch,
+                mode=epoch_mode,
+                fold=fold,
+                fold_min_deltas=fold_min_deltas,
+                fold_max_buckets=fold_max_buckets,
                 summary={
-                    "epoch": epoch,
                     "offsets": {str(k): int(v) for k, v in new_offsets.items()},
                     **({"unpositioned": unpositioned} if unpositioned else {}),
                 },
-                summary_fn=_lineage_summary,
+                observed=observed,
+                bad_rows=bad_rows,
+                quarantine=f"epoch={epoch}",
+                t0=t0,
+                hook=hook,
+                salts=batch_salts,
                 rn_observation=rn_obs,
-                batch_rows=batch_rows,
+                batch_rows=sum(s.rows for s in chosen),
             )
-            hook("post_snapshot")
+            all_records += records
             # a zero-valid-row epoch carries the previous hint (no new
             # information); otherwise re-decide from this epoch's max
             salt_hint = batch_salts if auto_salt else None
-            if auto_salt and sum(p["rows"] for p in stash["pstats"]) > 0:
+            if auto_salt and sum(r["rows"] for r in records) > 0:
                 # observation filled by the epoch's own action (guarded:
                 # a zero-valid-row COW epoch short-circuits before the
                 # resolve window, leaving the observation empty)
                 per_salt_max = int(rn_obs.get.get("max_rn") or 0)
                 est_max = per_salt_max * int(batch_salts or 1)
                 salt_hint = DEFAULT_SALTS if est_max >= salt_threshold else None
-            # dead-letter sink: quarantined rows are persisted, never silently
-            # dropped (validate.py contract).  Costs a second ledger scan only
-            # on epochs that actually had bad rows; overwrite mode keeps
-            # crash-replays idempotent.  A crash inside the snapshot→checkpoint
-            # window is covered too: _fence_and_repair re-derives the torn
-            # batch's quarantined rows from the immutable ledger.  The rows
-            # come off `raw`, not the observed plan, so writing them doesn't
-            # re-trigger the observation.  A driver-path epoch reads them
-            # with Spark here, only when it had any.
-            if stash["n_bad"]:
-                if raw is None:
-                    raw = read_batch(spark, chosen, ck["offsets"], cutoffs)
-                raw.filter(~validity_predicate()).write.mode("overwrite").parquet(
-                    os.path.join(checkpoint_dir, "quarantine", f"epoch={epoch}")
-                )
-            wall_ms = (time.monotonic() - t0) * 1000.0
-            # lineage BEFORE the checkpoint save: a crash in between replays
-            # the emit on restart (idempotent per epoch), so the audit log
-            # can never have a gap
-            all_records += lin.emit(
-                checkpoint_dir,
-                epoch=epoch,
-                snapshot_id=snapshot_id,
-                partition_stats=stash["pstats"],
-                wall_ms=wall_ms,
-                quarantined=stash["n_bad"],
-            )
             ckpt.save(
                 checkpoint_dir,
                 {
@@ -593,17 +661,11 @@ def run_increment(
                 },
             )
             hook("post_checkpoint")
-            if expire_every and epoch % int(expire_every) == 0:
-                from ..lake.maintain import expire_snapshots
-
-                expire_snapshots(
-                    table, keep_last=keep_last, older_than_ms=older_than_ms
-                )
-                hook("post_expire")
-            if gc_every and epoch % int(gc_every) == 0:
-                from ..lake.maintain import gc_orphans
-
-                gc_orphans(table, grace_ms=gc_grace_ms)
+            _maintain(
+                table, epoch, expire_every=expire_every, keep_last=keep_last,
+                older_than_ms=older_than_ms, gc_every=gc_every, gc_grace_ms=gc_grace_ms,
+                hook=hook,
+            )
             if lineage_rotate_bytes:
                 lin.rotate(checkpoint_dir, int(lineage_rotate_bytes))
             if quarantine_keep is not None:

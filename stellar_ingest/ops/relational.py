@@ -89,13 +89,6 @@ def widen(df: DataFrame, parts: int | None = None, *, key_cols: list[str] | None
     return df
 
 
-def ts_utc(col):
-    """Parquet timestamps read back as TIMESTAMP_NTZ in Spark 4; cast to
-    session-TZ (UTC) TIMESTAMP so epoch functions accept them — wall
-    time is unchanged."""
-    return F.col(col).cast("timestamp") if isinstance(col, str) else col.cast("timestamp")
-
-
 def dbl(col):
     """Final-output numeric convention: exact DECIMAL math internally,
     one correctly-rounded cast to DOUBLE at the end — DuckDB's pandas

@@ -5,19 +5,19 @@ The engine's canonical driver is the self-driven batch loop
 §7 M2 decision).  This module is the Structured Streaming expression of
 the same pipeline for deployments that want SS semantics: file-source
 ``readStream`` over ledger segments → watermark + in-stream dedupe →
-``foreachBatch`` into the SAME MERGE/commit path, with
-``availableNow`` for drain-style runs.
+``foreachBatch`` into the batch loop's own epoch tail (cdc/runner.py:
+table create-or-evolve, apply with the in-apply fold, dead letters,
+lineage, expiry/GC), with ``availableNow`` for drain-style runs.
 
 Note the exactly-once story differs: SS tracks file-source offsets in
-its own checkpoint; our epoch fence on the snapshot summary makes the
-``foreachBatch`` body idempotent anyway, so replays of a batch after an
-SS restart cannot double-apply (the same property tests/test_replay.py
-proves for the batch loop).
+its own checkpoint; the ``ss_batch_id`` fence on the snapshot summary
+makes the ``foreachBatch`` body idempotent anyway, so a batch replayed
+after an SS restart cannot double-apply (the same property
+tests/test_replay.py proves for the batch loop).
 """
 
 from __future__ import annotations
 
-import os
 import time
 from functools import partial
 
@@ -25,17 +25,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cdc import lineage as lin
-from ..cdc.source import batch_schema, list_segments
-from ..cdc.validate import observe_valid, validity_predicate
-from ..lake.core import IceboxTable
-from ..lake.maintain import fold_targets
-from ..lake.merge import delta_apply, merge_apply
-from ..schema import (
-    CHANGELOG_SCHEMA,
-    align_renames,
-    ensure_table_schema,
-    table_schema_for,
+from ..cdc.runner import (
+    _commit_epoch,
+    _create_or_evolve,
+    _emit_repaired,
+    _maintain,
+    _write_dead_letters,
 )
+from ..cdc.source import batch_schema, list_segments
+from ..cdc.validate import observe_valid
+from ..lake.core import IceboxTable
+from ..schema import CHANGELOG_SCHEMA
 
 
 def ledger_stream_schema(ledger_dir: str):
@@ -91,22 +91,13 @@ def run_streaming(
     branch: str | None = None,
 ):
     """Drain the ledger through Structured Streaming into the icebox
-    table.  One snapshot per micro-batch; epoch = SS batch id + 1.
-
-    ``mode="mor"`` commits each micro-batch as merge-on-read delta
-    files (Θ(batch) — the steady-state choice, same contract as the
-    batch runner's mode flag); ``fold_min_deltas`` folds buckets
-    holding deltas from ≥K commits, counting the batch's own, inside
-    the batch's apply (one job, one snapshot — same policy as the batch
-    runner; an empty micro-batch folds nothing).
-    ``expire_every``/``gc_every`` run snapshot expiry / orphan GC every
-    K batches (after the commit
-    + lineage emit — same in-loop retention contract as the batch
-    runner, so a long-lived stream keeps metadata O(retained)).
-
-    ``branch``: commit every micro-batch to a named branch instead of
-    main (write-audit-publish, same contract as the batch runner — see
-    cdc/runner.py and lake/maintain.py::audit_and_publish)."""
+    table: one snapshot, and one epoch, per non-empty micro-batch,
+    committed by the batch loop's epoch tail.  ``mode`` (``"cow"`` or
+    ``"mor"``), ``fold_min_deltas``/``fold_max_buckets``,
+    ``expire_every``/``gc_every`` (every K epochs, after the lineage
+    emit) and ``branch`` (write-audit-publish) keep the contracts of
+    cdc/runner.py::run_increment; an empty micro-batch commits and
+    folds nothing."""
     if mode not in ("cow", "mor"):
         raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
     stream = with_stream_dedupe(
@@ -118,19 +109,7 @@ def run_streaming(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
         table = IceboxTable(table_root, branch=branch)
-        if not table.exists():
-            IceboxTable.create(
-                table_root,
-                table_schema_for(batch_df.schema),
-                num_buckets=num_buckets,
-            )
-            table = IceboxTable(table_root, branch=branch)
-        else:
-            # rename mapping + additive evolution, same rule as the
-            # batch runner (cdc/runner.py)
-            batch_df = align_renames(table, batch_df)
-            ensure_table_schema(table, table_schema_for(batch_df.schema))
-        snap = table.current_snapshot()
+        snap = table.current_snapshot() if table.exists() else None
         epoch = int(snap["summary"].get("epoch", 0)) if snap else 0
         if snap and int(snap["summary"].get("ss_batch_id", -1)) >= batch_id:
             # epoch fence: this SS batch already committed.  Consume the
@@ -138,15 +117,14 @@ def run_streaming(
             # processed every partition (the dedupe operator's state
             # store must commit), so an early return without an action
             # fails the query with STATE_STORE_COMMIT_VALIDATION_FAILED.
-            # A crash between merge_apply and lin.emit replays the batch
-            # here — re-emit the torn epoch's lineage from the snapshot
-            # summary (idempotent: emit skips epochs already in the
-            # log), so the audit log stays gap-free on this path too.
+            # A crash between the commit and the lineage emit replays the
+            # batch here — re-emit the torn epoch's lineage from the
+            # snapshot summary (idempotent: emit skips epochs already in
+            # the log), so the audit log stays gap-free on this path too.
             linfo = snap["summary"].get("lineage")
             if (
-                linfo is not None
-                and int(snap["summary"].get("ss_batch_id", -1)) == batch_id
-                and int(linfo.get("quarantined", 0)) > 0
+                int(snap["summary"]["ss_batch_id"]) == batch_id
+                and int((linfo or {}).get("quarantined", 0)) > 0
             ):
                 # the batch also had dead-letter rows: a crash between
                 # the snapshot commit and the quarantine write would
@@ -154,88 +132,46 @@ def run_streaming(
                 # them from the immutable ledger; SS must re-derive from
                 # the replayed batch).  Rewrite is idempotent
                 # (overwrite) and doubles as the required batch action.
-                batch_df.filter(~validity_predicate()).write.mode(
-                    "overwrite"
-                ).parquet(
-                    os.path.join(
-                        checkpoint_dir, "quarantine", f"ss_batch={batch_id}"
-                    )
-                )
+                _write_dead_letters(batch_df, checkpoint_dir, f"ss_batch={batch_id}")
             else:
                 batch_df.count()
-            if linfo is not None:
-                lin.emit(
-                    checkpoint_dir,
-                    epoch=epoch,
-                    snapshot_id=snap["snapshot_id"],
-                    partition_stats=linfo["partition_stats"],
-                    wall_ms=0.0,
-                    quarantined=int(linfo.get("quarantined", 0)),
-                    repaired=True,
-                )
+            _emit_repaired(checkpoint_dir, epoch, snap["snapshot_id"], linfo)
             return
-        # validation audit parity with the batch runner (cdc/runner.py):
-        # quarantined rows persist to the dead-letter sink and every
-        # batch emits lineage — and the stats ride an `observe` node on
-        # the SAME action that applies the batch (the write), so the
-        # adapter now matches the batch loop's per-epoch job count: one
-        # action, plus a dead-letter write only on batches that actually
-        # had bad rows.  ``parts`` comes from the ledger listing (driver
-        # footer metadata — the batch's rows can only come from listed
-        # segments).
+        # the stats ride an `observe` node on the SAME action that
+        # applies the batch (the write): one action per batch, plus a
+        # dead-letter write only on batches that had bad rows.  ``parts``
+        # comes from the ledger listing (driver footer metadata — the
+        # batch's rows can only come from listed segments).  Validity is
+        # judged on the ledger's column names, before the rename mapping,
+        # as in the batch loop.
         parts = sorted({s.src_part for s in list_segments(ledger_dir)})
         valid, obs = observe_valid(batch_df, parts)
-        stash: dict = {}
-
-        def _lineage_summary() -> dict:
-            pstats, n_bad = lin.collect_observed_stats(obs, parts)
-            stash["pstats"], stash["n_bad"] = pstats, n_bad
-            return {"lineage": {"partition_stats": pstats, "quarantined": n_bad}}
-
-        if mode == "mor":
-            fold = fold_targets(
-                table,
-                min_delta_commits=fold_min_deltas,
-                max_buckets=fold_max_buckets,
-                pending_commit=True,
-            )
-            apply_fn = partial(delta_apply, fold_buckets=fold)
-        else:
-            apply_fn = merge_apply
-        sid = apply_fn(
+        table, valid = _create_or_evolve(table, valid, num_buckets)
+        sid, _ = _commit_epoch(
             spark,
             table,
             valid,
-            summary={"epoch": epoch + 1, "ss_batch_id": batch_id},
-            summary_fn=_lineage_summary,
+            checkpoint_dir,
+            epoch=epoch + 1,
+            mode=mode,
+            fold=None,
+            fold_min_deltas=fold_min_deltas,
+            fold_max_buckets=fold_max_buckets,
+            summary={"ss_batch_id": batch_id},
+            observed=partial(lin.collect_observed_stats, obs, parts),
+            bad_rows=lambda: batch_df,
+            quarantine=f"ss_batch={batch_id}",
+            t0=t0,
             # availableNow + watermarked dedupe emits a trailing empty
             # flush batch — its plan executes (state-store contract) but
             # no empty snapshot/lineage is minted for it
             skip_if_noop=True,
         )
-        if sid is None:
-            return
-        if stash["n_bad"]:
-            qdir = os.path.join(
-                checkpoint_dir, "quarantine", f"ss_batch={batch_id}"
+        if sid is not None:
+            _maintain(
+                table, epoch + 1, expire_every=expire_every, keep_last=keep_last,
+                older_than_ms=older_than_ms, gc_every=gc_every, gc_grace_ms=gc_grace_ms,
             )
-            batch_df.filter(~validity_predicate()).write.mode("overwrite").parquet(qdir)
-        lin.emit(
-            checkpoint_dir,
-            epoch=epoch + 1,
-            snapshot_id=sid,
-            partition_stats=stash["pstats"],
-            wall_ms=(time.monotonic() - t0) * 1000.0,
-            quarantined=stash["n_bad"],
-        )
-        if expire_every and (epoch + 1) % int(expire_every) == 0:
-            from ..lake.maintain import expire_snapshots
-
-            expire_snapshots(table, keep_last=keep_last, older_than_ms=older_than_ms)
-        if gc_every and (epoch + 1) % int(gc_every) == 0:
-            from ..lake.maintain import gc_orphans
-
-            gc_orphans(table, grace_ms=gc_grace_ms)
 
     writer = stream.writeStream.foreachBatch(apply_batch).option(
         "checkpointLocation", f"{checkpoint_dir}/ss"

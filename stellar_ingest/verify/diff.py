@@ -14,9 +14,3 @@ def states_equal(a: DataFrame, b: DataFrame) -> bool:
         return False
     a2, b2 = a.select(*cols), b.select(*cols)
     return a2.exceptAll(b2).isEmpty() and b2.exceptAll(a2).isEmpty()
-
-
-def diff_counts(a: DataFrame, b: DataFrame) -> tuple[int, int]:
-    cols = sorted(a.columns)
-    a2, b2 = a.select(*cols), b.select(*cols)
-    return a2.exceptAll(b2).count(), b2.exceptAll(a2).count()

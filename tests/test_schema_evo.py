@@ -203,6 +203,38 @@ def test_rename_changelog_column_survives_ongoing_ingest(spark, tmp_path):
     assert golden.exceptAll(live.select(*golden.columns)).count() == 0
 
 
+def test_rename_changelog_column_survives_ongoing_streaming_ingest(spark, tmp_path):
+    """The streaming adapter's rename mapping: the ledger arrives in two
+    halves and `role` → `speaker` is renamed between the two
+    run_streaming calls, while the second half keeps sending `role`."""
+    from stellar_ingest.streaming.pipeline import run_streaming
+
+    n_convs = 10
+    ks = keyspace(n_convs)
+    ev = gen_events(spark, n_convs, parts=2, seed=7)
+    ledger = str(tmp_path / "ledger")
+    t_root, ck = str(tmp_path / "t"), str(tmp_path / "ck")
+    write_ledger(ev, ledger, n_convs=n_convs, seg_span=ks // 2, lsn_max=ks)
+    run_streaming(spark, ledger, t_root, ck, num_buckets=4)
+    IceboxTable(t_root).rename_column("role", "speaker")
+    write_ledger(ev, ledger, n_convs=n_convs, seg_span=ks // 2, lsn_min=ks)
+    run_streaming(spark, ledger, t_root, ck, num_buckets=4)
+    table = IceboxTable(t_root)
+    names = [f["name"] for f in table.schema_fields()]
+    assert "speaker" in names and "role" not in names
+    assert len(names) == len(set(names))  # no fresh-id duplicate added
+    live = read_live(spark, table)
+    assert live.filter(F.col("speaker").isNull()).count() == 0
+    # values equal the batch loop's run on an un-renamed table
+    g_root, g_ck = str(tmp_path / "g"), str(tmp_path / "gck")
+    run_increment(spark, ledger, g_root, g_ck, salts=None)
+    golden = read_live(spark, IceboxTable(g_root)).withColumnRenamed(
+        "role", "speaker"
+    )
+    assert live.select(*golden.columns).exceptAll(golden).count() == 0
+    assert golden.exceptAll(live.select(*golden.columns)).count() == 0
+
+
 def test_rename_map_and_align_guards(spark, tmp_table):
     t = IceboxTable.create(tmp_table, TABLE_SCHEMA, num_buckets=2)
     assert t.rename_map() == {}

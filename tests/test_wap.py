@@ -282,3 +282,32 @@ def test_maintenance_carried_lineage_not_double_counted(spark, tmp_path):
     t = IceboxTable(root)
     out = audit_and_publish(spark, t, "staging", require_no_quarantine=False)
     assert out["quarantined"] == 1  # not 2
+
+
+def test_drop_branch_leaves_main_untouched(spark, ledger, tmp_path):
+    """Abandoning a branch is metadata-only: main's head, files and
+    content stay as they were, and the branch can no longer be
+    published or dropped again."""
+    root = str(tmp_path / "t")
+    ck = str(tmp_path / "ck")
+    run_increment(spark, ledger, root, ck, salts=None,
+                  max_segments_per_part=2, max_epochs=1)
+    t = IceboxTable(root)
+    main_head = t.current_snapshot()["snapshot_id"]
+    main_files = t.files()
+    run_increment(spark, ledger, root, ck, salts=None,
+                  max_segments_per_part=2, branch="staging")
+    assert "staging" in t.branches()
+    # fingerprint main after the branch ingest: the branch evolved the
+    # table-wide schema, which main's scan reads as NULL columns
+    main_fp = table_fingerprint(scan(spark, t))
+    t.drop_branch("staging")
+    t = IceboxTable(root)
+    assert "staging" not in t.branches()
+    assert t.current_snapshot()["snapshot_id"] == main_head
+    assert t.files() == main_files
+    assert table_fingerprint(scan(spark, t)) == main_fp
+    with pytest.raises(KeyError):
+        t.publish_branch("staging")
+    with pytest.raises(KeyError):
+        t.drop_branch("no-such-branch")
