@@ -16,7 +16,7 @@ Usage (spark-submit --py-files stellar_ingest.zip)::
     python -m stellar_ingest.cli expire   --table T [--keep-last N] [--older-than-ms MS]
     python -m stellar_ingest.cli gc       --table T [--grace-ms MS]
     python -m stellar_ingest.cli changes  --table T --since SNAPSHOT_ID
-    python -m stellar_ingest.cli lookup   --table T --key CONV_ID [--snapshot ID] [--fast]
+    python -m stellar_ingest.cli lookup   --table T --key CONV_ID [--snapshot ID]
     python -m stellar_ingest.cli tag      --table T --name N [--snapshot ID] [--drop]
     python -m stellar_ingest.cli rescale  --table T --num-buckets N
     python -m stellar_ingest.cli evolve   --table T (--rename OLD:NEW | --widen COL:TYPE | --drop COL)
@@ -104,15 +104,10 @@ def main(argv: list[str] | None = None) -> int:
     ch.add_argument("--since", type=int, required=True)
     ch.add_argument("--limit", type=int, default=20)
 
-    lk = sub.add_parser("lookup", parents=[common])
+    lk = sub.add_parser("lookup")
     lk.add_argument("--table", required=True)
     lk.add_argument("--key", required=True)
     lk.add_argument("--snapshot", type=int, default=None)
-    lk.add_argument(
-        "--fast",
-        action="store_true",
-        help="driver-side pyarrow read (no Spark job; ~10 ms vs ~200 ms)",
-    )
 
     tg = sub.add_parser("tag")
     tg.add_argument("--table", required=True)
@@ -203,9 +198,9 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps({"tagged": args.name, "snapshot_id": sid}))
         return 0
 
-    if args.cmd == "lookup" and args.fast:
-        # no SparkSession at all on this path — serving latency is
-        # file IO, not JVM startup + job scheduling
+    if args.cmd == "lookup":
+        # driver-side pyarrow read: no SparkSession unless the key needs
+        # the Spark fallback (lake/read.py::lookup_many_fast)
         from .lake.core import IceboxTable
         from .lake.read import lookup_fast
 
@@ -213,7 +208,7 @@ def main(argv: list[str] | None = None) -> int:
         pdf = lookup_fast(None, t, args.key, snapshot_id=args.snapshot)
         for r in pdf.head(50).to_dict("records"):
             print(r)
-        print(json.dumps({"rows": len(pdf), "fast": True}))
+        print(json.dumps({"rows": len(pdf)}))
         return 0
 
     if args.cmd == "show":
@@ -333,25 +328,6 @@ def main(argv: list[str] | None = None) -> int:
         n = df.count()
         df.show(args.limit, truncate=40)
         print(json.dumps({"changed_rows": n, "since": args.since}))
-        return 0
-
-    if args.cmd == "lookup":
-        from .lake.core import IceboxTable
-        from .lake.read import key_bucket, lookup
-
-        t = IceboxTable(args.table)
-        df = lookup(spark, t, args.key, snapshot_id=args.snapshot)
-        # one action: collect once, print from the driver (count+show
-        # would re-read the pruned files twice)
-        rows = df.orderBy("turn_idx").collect()
-        for r in rows[:50]:
-            print(r.asDict())
-        b = key_bucket(spark, args.key, t.num_buckets)
-        print(
-            json.dumps(
-                {"rows": len(rows), "bucket": b, "files_read": len(df.inputFiles())}
-            )
-        )
         return 0
 
     from .cdc.runner import backfill, run_increment

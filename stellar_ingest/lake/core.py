@@ -515,7 +515,6 @@ class IceboxTable:
         added_files: list[dict],
         removed_paths: set[str] | None = None,
         summary: dict | None = None,
-        new_schema_fields: list[dict] | None = None,
         operation: str = "append",
         touched_buckets: list[int] | None = None,
     ) -> int:
@@ -529,8 +528,7 @@ class IceboxTable:
         this); only those buckets' manifests are read and rewritten —
         everything else carries by reference.  If omitted it is derived
         from ``added_files`` (plus, when removals exist, a full-bucket
-        fallback).  ``new_schema_fields``: full field list
-        for an evolved schema (additive; ids already assigned).
+        fallback).
         Crash-safety: everything is written under non-current names
         first; the single ``os.replace`` of the version hint is the
         commit point.  A crash before it leaves the table at the old
@@ -542,13 +540,6 @@ class IceboxTable:
         total_files, total_rows = self._write_manifests(
             new_id, prev_id, added_files, removed_paths or set(), touched_buckets
         )
-
-        schema_id = meta["current_schema_id"]
-        if new_schema_fields is not None:
-            schema_id = max(s["schema_id"] for s in meta["schemas"]) + 1
-            meta["schemas"].append({"schema_id": schema_id, "fields": new_schema_fields})
-            meta["current_schema_id"] = schema_id
-            meta["last_column_id"] = max(f["id"] for f in new_schema_fields)
 
         summary = dict(summary or {})
         # running quarantine total along the parent chain (round-5
@@ -570,7 +561,7 @@ class IceboxTable:
         snap = {
             "snapshot_id": new_id,
             "parent_snapshot_id": prev_id,
-            "schema_id": schema_id,
+            "schema_id": meta["current_schema_id"],
             "operation": operation,
             "timestamp_ms": int(time.time() * 1000),
             "summary": summary,
@@ -810,15 +801,8 @@ class IceboxTable:
             next_id += 1
         if not added:
             return meta["current_schema_id"]
-        schema_id = max(s["schema_id"] for s in meta["schemas"]) + 1
         # keep engine meta columns (leading "_") last: payload evolves,
         # meta stays the trailing block
         payload = [f for f in cur if not f["name"].startswith("_")]
         metacols = [f for f in cur if f["name"].startswith("_")]
-        meta["schemas"].append(
-            {"schema_id": schema_id, "fields": payload + added + metacols}
-        )
-        meta["current_schema_id"] = schema_id
-        meta["last_column_id"] = next_id - 1
-        self._swap_metadata(meta)
-        return schema_id
+        return self._commit_schema(payload + added + metacols)

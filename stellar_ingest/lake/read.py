@@ -438,9 +438,8 @@ def lookup_many_fast(
     request, k entity keys, single-digit-ms budget).
 
     Pruning is identical to ``lookup_many`` — driver-side bucket ids
-    (lake/xxh.py::bucket_ids),
-    then manifest key bounds restrict to files that may hold ≥1 of that
-    bucket's requested keys; per file, row groups are skipped by footer
+    (lake/xxh.py::bucket_of), then manifest key bounds restrict to files
+    that may hold ≥1 of that bucket's requested keys; per file, row groups are skipped by footer
     min/max and one vectorized Arrow ``is_in`` filter keeps only the
     requested keys.  LWW resolve + tombstone filtering run in pure
     Python over the surviving handful of rows (per-batch-winners
@@ -452,7 +451,7 @@ def lookup_many_fast(
     import pyarrow.compute as pc
 
     from ..cdc.resolve import lww_arrow
-    from .xxh import bucket_ids
+    from .xxh import bucket_of
 
     uniq = list(dict.fromkeys(keys))
     if not uniq:
@@ -468,13 +467,13 @@ def lookup_many_fast(
 
     meta = table.metadata()
     col = meta["bucket_column"]
+    ktype = _bucket_col_type(table)
+    by_bucket: dict[int, list] = {}
     try:
-        ids = bucket_ids(uniq, meta["num_buckets"], _bucket_col_type(table))
+        for k in uniq:
+            by_bucket.setdefault(bucket_of(k, meta["num_buckets"], ktype), []).append(k)
     except TypeError:
         return _fallback()
-    by_bucket: dict[int, list] = {}
-    for k, b in zip(uniq, ids.tolist()):
-        by_bucket.setdefault(b, []).append(k)
     sid = table.head_id(meta) if snapshot_id is None else snapshot_id
     tfields = (
         table.schema_fields()

@@ -141,7 +141,7 @@ def q_scan_csv(spark, sf):
 
 
 def q_scan_json(spark, sf):
-    """JSON-lines round-trip (io/scan.py op 2, json form): export nation
+    """JSON-lines round-trip (SURVEY.md §2 op 2, json form): export nation
     deterministically, read it back typed."""
     import os
     import tempfile
