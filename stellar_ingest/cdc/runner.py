@@ -43,6 +43,10 @@ Steps 4-6 and the in-loop expiry/GC are the epoch tail the Structured
 Streaming adapter (streaming/pipeline.py) runs too: ``_create_or_evolve``,
 ``_commit_epoch`` and ``_maintain``.
 
+An epoch reads one pinned metadata version (lake/core.py::pinned) and
+commits on it; another writer's commit in between makes it raise
+``CommitConflict`` before its checkpoint, and a rerun reapplies it.
+
 ``crash_hook(point)`` is a test seam — tests/test_replay.py injects
 crashes at every boundary and asserts byte-identical reconvergence.
 """
@@ -145,14 +149,17 @@ def _create_or_evolve(
     through the table's rename history (a renamed payload column the
     ledger keeps sending under its old wire name feeds the renamed
     column instead of re-evolving a fresh duplicate) and commit the
-    columns it adds.  Returns the table handle and the aligned batch."""
+    columns it adds.  Returns the handle the epoch commits from (pinned
+    anew after a create or an evolution) and the aligned batch."""
     if not table.exists():
         IceboxTable.create(
             table.root, table_schema_for(spark_schema(batch)), num_buckets=num_buckets
         )
-        return IceboxTable(table.root, branch=table.branch), batch
+        return IceboxTable(table.root, branch=table.branch).pinned(), batch
     batch = align_renames(table, batch)
-    ensure_table_schema(table, table_schema_for(spark_schema(batch)), hook=hook)
+    added = ensure_table_schema(table, table_schema_for(spark_schema(batch)), hook=hook)
+    if added.fields:
+        table = IceboxTable(table.root, branch=table.branch).pinned()
     return table, batch
 
 
@@ -516,7 +523,7 @@ def run_increment(
     # branch-bound handle: every read/commit of this run resolves to
     # the branch head; main is untouched until lake.maintain.
     # audit_and_publish fast-forwards it (write-audit-publish)
-    table = IceboxTable(table_root, branch=branch)
+    live = IceboxTable(table_root, branch=branch)
     all_records: list[dict] = []
     epochs_done = 0
     pool = ThreadPoolExecutor(max_workers=1)
@@ -526,6 +533,7 @@ def run_increment(
         while max_epochs is None or epochs_done < max_epochs:
             t0 = time.monotonic()
             ck = ckpt.load(checkpoint_dir)
+            table = live.pinned() if live.exists() else live
             if table.exists():
                 ck = _fence_and_repair(spark, ledger_dir, table, checkpoint_dir, ck)
 
@@ -662,7 +670,7 @@ def run_increment(
             )
             hook("post_checkpoint")
             _maintain(
-                table, epoch, expire_every=expire_every, keep_last=keep_last,
+                live, epoch, expire_every=expire_every, keep_last=keep_last,
                 older_than_ms=older_than_ms, gc_every=gc_every, gc_grace_ms=gc_grace_ms,
                 hook=hook,
             )

@@ -140,10 +140,13 @@ def main(argv: list[str] | None = None) -> int:
     mt.add_argument("--grace-ms", type=int, default=24 * 3600 * 1000)
 
     args = ap.parse_args(argv)
+    from .lake.core import IceboxTable
+    from .lake.maintain import (
+        audit_and_publish, compact, delta_counts, expire_snapshots, fold_deltas, gc_orphans,
+    )
+    from .lake.read import lookup_fast, read_changes
 
     if args.cmd == "evolve":
-        from .lake.core import IceboxTable
-
         t = IceboxTable(args.table)
         if args.rename:
             old, new = args.rename.split(":", 1)
@@ -161,8 +164,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "rescale":
-        from .lake.core import IceboxTable
-
         t = IceboxTable(args.table)
         spec = t.rescale_buckets(args.num_buckets)
         print(
@@ -175,9 +176,6 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "publish":
         # pure metadata audit + atomic fast-forward; no SparkSession
-        from .lake.core import IceboxTable
-        from .lake.maintain import audit_and_publish
-
         t = IceboxTable(args.table)
         out = audit_and_publish(
             None, t, args.branch,
@@ -187,8 +185,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "tag":
-        from .lake.core import IceboxTable
-
         t = IceboxTable(args.table)
         if args.drop:
             t.drop_tag(args.name)
@@ -201,9 +197,6 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "lookup":
         # driver-side pyarrow read: no SparkSession unless the key needs
         # the Spark fallback (lake/read.py::lookup_many_fast)
-        from .lake.core import IceboxTable
-        from .lake.read import lookup_fast
-
         t = IceboxTable(args.table)
         pdf = lookup_fast(None, t, args.key, snapshot_id=args.snapshot)
         for r in pdf.head(50).to_dict("records"):
@@ -212,26 +205,20 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "show":
-        from .lake.core import IceboxTable
-
-        t = IceboxTable(args.table)
-        meta = t.metadata()
+        t = IceboxTable(args.table).pinned()
         out = {
-            "current_snapshot_id": meta["current_snapshot_id"],
-            "num_buckets": meta["num_buckets"],
+            "current_snapshot_id": t.head_id(),
+            "num_buckets": t.num_buckets,
             "schema": [f["name"] for f in t.schema_fields()],
             "snapshots": [
                 {k: s_[k] for k in ("snapshot_id", "operation", "total_rows", "summary")}
-                for s_ in meta["snapshots"]
+                for s_ in t.snapshots()
             ],
         }
         print(json.dumps(out, indent=1))
         return 0
 
     if args.cmd == "expire":
-        from .lake.core import IceboxTable
-        from .lake.maintain import expire_snapshots
-
         out = expire_snapshots(
             IceboxTable(args.table),
             keep_last=args.keep_last,
@@ -241,9 +228,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "gc":
-        from .lake.core import IceboxTable
-        from .lake.maintain import gc_orphans
-
         out = gc_orphans(IceboxTable(args.table), grace_ms=args.grace_ms)
         print(json.dumps(out))
         return 0
@@ -258,14 +242,6 @@ def main(argv: list[str] | None = None) -> int:
         # the full maintenance pass, in dependency order: fold MoR debt,
         # compact small files, expire old snapshots (+ metadata version
         # prune), then GC orphans — one verb for a cron slot
-        from .lake.core import IceboxTable
-        from .lake.maintain import (
-            compact,
-            expire_snapshots,
-            fold_deltas,
-            gc_orphans,
-        )
-
         t = IceboxTable(args.table)
         folded = fold_deltas(spark, t, min_delta_commits=args.min_delta_commits)
         compacted = compact(spark, t, min_files_per_bucket=args.min_files)
@@ -297,18 +273,12 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "compact":
-        from .lake.core import IceboxTable
-        from .lake.maintain import compact
-
         t = IceboxTable(args.table)
         sid = compact(spark, t, min_files_per_bucket=args.min_files)
         print(json.dumps({"snapshot_id": sid, "files": len(t.files())}))
         return 0
 
     if args.cmd == "fold":
-        from .lake.core import IceboxTable
-        from .lake.maintain import delta_counts, fold_deltas
-
         t = IceboxTable(args.table)
         sid = fold_deltas(
             spark,
@@ -321,9 +291,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "changes":
-        from .lake.core import IceboxTable
-        from .lake.read import read_changes
-
         df = read_changes(spark, IceboxTable(args.table), args.since)
         n = df.count()
         df.show(args.limit, truncate=40)

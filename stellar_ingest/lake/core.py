@@ -4,10 +4,13 @@ No Iceberg/Delta/Hudi jars exist in this sandbox (SURVEY.md §0), so the
 snapshot-table feature set the north rule requires (atomic multi-file
 commit, snapshot ids, time travel, additive schema evolution with stable
 column ids, partition/bucket file pruning — BASELINE.json:6,14) is
-implemented here on plain Parquet + JSON metadata.  Single-writer by
-design: the epoch-fenced CDC commit protocol (cdc/commit.py) guarantees
-one writer, so atomicity reduces to one ``os.replace`` of a
-version-hint file — the same trick Iceberg's HadoopCatalog uses.
+implemented here on plain Parquet + JSON metadata.  Atomicity is one
+``os.replace`` of a version-hint file — the same trick Iceberg's
+HadoopCatalog uses.  An operation reads one metadata version N
+(``IceboxTable.pinned``), and its commit raises ``CommitConflict``
+instead of writing ``v{N+1}`` when the hint moved past N.  Check and
+swap are two steps: two processes that both check before either swaps
+can still both swap (no create-if-absent or lock closes that window).
 
 Layout::
 
@@ -37,6 +40,7 @@ relocates.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import time
@@ -144,20 +148,21 @@ def ref_key(spec_id: int, bucket: int) -> str:
     return str(bucket) if spec_id == 0 else f"{spec_id}:{bucket}"
 
 
-def covered_buckets(bucket: int, spec_nb: int, cur_nb: int) -> list[int]:
-    """CURRENT-spec bucket ids a file written under an older spec may
-    hold rows of.  Bucket assignment is ``xxhash64(key) pmod n``, and a
-    rescale multiplies n by an integer factor, so a row in old bucket b
-    (mod n_old) lands in exactly one of {b, b+n_old, b+2·n_old, ...}
-    (mod n_cur) — the congruence class of b.  Same-spec files cover
-    just their own bucket."""
-    if spec_nb == cur_nb:
-        return [bucket]
-    return list(range(bucket, cur_nb, spec_nb))
-
-
 #: the one table format this code reads and writes
 FORMAT_VERSION = 2
+
+
+class CommitConflict(RuntimeError):
+    """Another writer committed after this operation read the metadata;
+    nothing of this commit became visible.  Rerun the operation."""
+
+
+class Metadata(dict):
+    """One parsed ``v{version}.metadata.json`` (IceboxTable.metadata)."""
+
+    def __init__(self, version: int, fields: dict):
+        super().__init__(fields)
+        self.version = version
 
 
 def _atomic_write_json(path: str, obj) -> None:
@@ -177,7 +182,8 @@ class IceboxTable:
     pointer instead of main — main stays untouched until
     ``publish_branch`` fast-forwards it (the Iceberg branch-ref
     analogue).  An unborn branch forks implicitly from the current main
-    head on its first commit.  ``None`` (default) is main."""
+    head on its first commit.  ``None`` (default) is main.  Each
+    accessor of a live handle parses the current version (``pinned``)."""
 
     def __init__(self, root: str, branch: str | None = None):
         self.root = root
@@ -185,10 +191,13 @@ class IceboxTable:
         self.meta_dir = os.path.join(root, "metadata")
         self.data_dir = os.path.join(root, "data")
         self._hint = os.path.join(self.meta_dir, "version-hint.text")
+        self._pin: Metadata | None = None
 
     def for_branch(self, branch: str | None) -> "IceboxTable":
-        """A handle to the same table bound to ``branch`` (None = main)."""
-        return IceboxTable(self.root, branch=branch)
+        """The same table bound to ``branch`` (None = main), same pin."""
+        t = IceboxTable(self.root, branch=branch)
+        t._pin = self._pin
+        return t
 
     # -- existence / creation ------------------------------------------------
 
@@ -235,10 +244,11 @@ class IceboxTable:
         with open(self._hint) as fh:
             return json.load(fh)["version"]
 
-    def metadata(self) -> dict:
+    def metadata(self) -> Metadata:
+        """Parse the version the hint names now (on any handle)."""
         v = self._version()
         with open(os.path.join(self.meta_dir, f"v{v}.metadata.json")) as fh:
-            meta = json.load(fh)
+            meta = Metadata(v, json.load(fh))
         if meta.get("format_version") != FORMAT_VERSION:
             raise ValueError(
                 f"icebox table at {self.root} has format_version "
@@ -247,12 +257,39 @@ class IceboxTable:
             )
         return meta
 
-    def _swap_metadata(self, meta: dict) -> None:
-        """Commit ``meta`` as the next metadata version: write
-        ``v{N+1}.metadata.json``, then swap the version hint to it.  The
-        hint swap is the commit point — a crash before it leaves the
-        table at version N with an unread orphan file."""
-        version = self._version()
+    def pinned(self) -> "IceboxTable":
+        """A handle whose accessors all answer from ONE parse of the
+        current version (self when already pinned) and whose commits are
+        based on it.  An operation pins once and passes the handle down;
+        the view never changes, also not by its own commit."""
+        if self._pin is not None:
+            return self
+        t = IceboxTable(self.root, branch=self.branch)
+        t._pin = self.metadata()
+        return t
+
+    def _meta(self) -> dict:
+        return self.metadata() if self._pin is None else self._pin
+
+    def _draft(self) -> Metadata:
+        """The pin, copied for a mutator to edit and ``_swap_metadata``."""
+        return copy.deepcopy(self._pin)
+
+    def _check_base(self, version: int) -> None:
+        if self._version() != version:
+            raise CommitConflict(
+                f"icebox table at {self.root} moved past metadata version "
+                f"{version} after this operation read it; rerun it"
+            )
+
+    def _swap_metadata(self, meta: Metadata) -> None:
+        """Commit ``meta``, an edited copy of version N, as version N+1:
+        write ``v{N+1}.metadata.json``, then swap the version hint to it.
+        The hint swap is the commit point — a crash before it leaves the
+        table at version N with an unread orphan file.  Raises
+        CommitConflict, writing nothing, when the hint no longer names N."""
+        version = meta.version
+        self._check_base(version)
         _atomic_write_json(
             os.path.join(self.meta_dir, f"v{version + 1}.metadata.json"), meta
         )
@@ -260,20 +297,42 @@ class IceboxTable:
 
     @property
     def num_buckets(self) -> int:
-        return self.metadata()["num_buckets"]
+        return self._meta()["num_buckets"]
+
+    @property
+    def bucket_column(self) -> str:
+        return self._meta()["bucket_column"]
+
+    @property
+    def schema_id(self) -> int:
+        return self._meta()["current_schema_id"]
+
+    def bucket_key_type(self) -> str | None:
+        """icebox type of the bucket column in the current schema."""
+        t = self.pinned()
+        return next((f["type"] for f in t.schema_fields() if f["name"] == t.bucket_column), None)
 
     def bucket_specs(self) -> list[dict]:
         """Bucket-spec history ``[{spec_id, num_buckets}]`` (Iceberg
-        partition-spec-evolution analogue).  Pre-rescale tables have the
-        implicit single spec 0."""
-        meta = self.metadata()
+        partition-spec-evolution analogue), oldest first: the last is
+        the current spec.  Pre-rescale tables have the implicit single
+        spec 0."""
+        meta = self._meta()
         return meta.get(
             "bucket_specs",
             [{"spec_id": 0, "num_buckets": meta["num_buckets"]}],
         )
 
-    def current_spec_id(self) -> int:
-        return self.metadata().get("current_spec_id", 0)
+    def covered_buckets(self, bucket: int, spec_id: int = 0) -> list[int]:
+        """CURRENT-spec bucket ids a file (or manifest ref) of ``bucket``
+        under spec ``spec_id`` may hold rows of.  Buckets are
+        ``xxhash64(key) pmod n`` and a rescale multiplies n, so old
+        bucket b covers its congruence class {b, b+n_old, ...} mod
+        n_cur; a same-spec file covers just its own bucket."""
+        t = self.pinned()
+        cur_nb = int(t.num_buckets)
+        nb = {s["spec_id"]: s["num_buckets"] for s in t.bucket_specs()}.get(int(spec_id), cur_nb)
+        return list(range(int(bucket), cur_nb, nb)) if nb != cur_nb else [int(bucket)]
 
     def rescale_buckets(self, new_num_buckets: int) -> int:
         """Grow the bucket count (metadata-only commit; returns the new
@@ -288,7 +347,8 @@ class IceboxTable:
         Shrinking is not supported — at 10^10 events the operational need
         is always more parallelism/pruning granularity, and growth keeps
         the congruence invariant one-directional."""
-        meta = self.metadata()
+        t = self.pinned()
+        meta = t._draft()
         cur = int(meta["num_buckets"])
         new = int(new_num_buckets)
         if new <= cur or new % cur != 0:
@@ -296,17 +356,17 @@ class IceboxTable:
                 f"new_num_buckets must be a strict integer multiple of the "
                 f"current count ({cur}), got {new}"
             )
-        specs = self.bucket_specs()
+        specs = t.bucket_specs()
         new_id = max(s["spec_id"] for s in specs) + 1
         specs = specs + [{"spec_id": new_id, "num_buckets": new}]
         meta["bucket_specs"] = specs
         meta["current_spec_id"] = new_id
         meta["num_buckets"] = new
-        self._swap_metadata(meta)
+        t._swap_metadata(meta)
         return new_id
 
     def schema_fields(self, schema_id: int | None = None) -> list[dict]:
-        meta = self.metadata()
+        meta = self._meta()
         sid = meta["current_schema_id"] if schema_id is None else schema_id
         for s in meta["schemas"]:
             if s["schema_id"] == sid:
@@ -317,14 +377,14 @@ class IceboxTable:
         return fields_to_struct(self.schema_fields(schema_id))
 
     def snapshots(self) -> list[dict]:
-        return self.metadata()["snapshots"]
+        return self._meta()["snapshots"]
 
-    def head_id(self, meta: dict | None = None) -> int | None:
+    def head_id(self) -> int | None:
         """The snapshot id this handle's reads/commits are based on:
         the bound branch's head when a branch is bound AND born, else
         main (``current_snapshot_id`` — also the fork point an unborn
         branch commits on top of)."""
-        meta = self.metadata() if meta is None else meta
+        meta = self._meta()
         if self.branch is not None:
             b = meta.get("branches", {}).get(self.branch)
             if b is not None:
@@ -332,13 +392,14 @@ class IceboxTable:
         return meta["current_snapshot_id"]
 
     def current_snapshot(self) -> dict | None:
-        sid = self.head_id()
+        t = self.pinned()
+        sid = t.head_id()
         if sid is None:
             return None
-        return self.snapshot(sid)
+        return t.snapshot(sid)
 
     def snapshot(self, snapshot_id: int) -> dict:
-        for s in self.metadata()["snapshots"]:
+        for s in self.snapshots():
             if s["snapshot_id"] == snapshot_id:
                 return s
         raise KeyError(f"no snapshot {snapshot_id}")
@@ -349,9 +410,7 @@ class IceboxTable:
         ``timestamp_ms`` every snapshot already records.  Raises
         KeyError when the table has no snapshot that old (e.g. the
         window was expired by retention)."""
-        cands = [
-            s for s in self.metadata()["snapshots"] if s["timestamp_ms"] <= ts_ms
-        ]
+        cands = [s for s in self.snapshots() if s["timestamp_ms"] <= ts_ms]
         if not cands:
             raise KeyError(
                 f"no snapshot at or before {ts_ms} (earliest retained may "
@@ -365,26 +424,28 @@ class IceboxTable:
         """Named snapshot refs ``{tag: snapshot_id}`` (Iceberg tag
         analogue).  Tagged snapshots are retention anchors:
         ``expire_snapshots`` never drops them."""
-        return dict(self.metadata().get("refs", {}))
+        return dict(self._meta().get("refs", {}))
 
     def tag(self, name: str, snapshot_id: int | None = None) -> int:
         """Create/move a named tag (metadata-only commit); ``None`` tags
         the current snapshot.  Returns the tagged snapshot id."""
-        meta = self.metadata()
-        sid = self.head_id(meta) if snapshot_id is None else snapshot_id
+        t = self.pinned()
+        sid = t.head_id() if snapshot_id is None else snapshot_id
         if sid is None:
             raise ValueError("cannot tag an empty table (no snapshot)")
-        self.snapshot(sid)  # KeyError if unknown
+        t.snapshot(sid)  # KeyError if unknown
+        meta = t._draft()
         meta.setdefault("refs", {})[name] = sid
-        self._swap_metadata(meta)
+        t._swap_metadata(meta)
         return sid
 
     def drop_tag(self, name: str) -> None:
-        meta = self.metadata()
+        t = self.pinned()
+        meta = t._draft()
         if name not in meta.get("refs", {}):
             raise KeyError(f"no tag {name!r}")
         del meta["refs"][name]
-        self._swap_metadata(meta)
+        t._swap_metadata(meta)
 
     # -- branches (write-audit-publish) --------------------------------------
 
@@ -392,12 +453,12 @@ class IceboxTable:
         """Named branch heads ``{branch: snapshot_id}``.  Branch heads
         (and their ancestry within the retention window) are retention
         anchors like tags."""
-        return dict(self.metadata().get("branches", {}))
+        return dict(self._meta().get("branches", {}))
 
     def resolve_ref(self, name: str) -> int:
         """Snapshot id for a named ref: tags first, then branch heads
         (read path for ``scan(ref=...)``)."""
-        meta = self.metadata()
+        meta = self._meta()
         if name in meta.get("refs", {}):
             return meta["refs"][name]
         if name in meta.get("branches", {}):
@@ -411,7 +472,7 @@ class IceboxTable:
         by following recorded parent ids only while they resolve."""
         if ancestor_id is None:
             return True
-        by_id = {s["snapshot_id"]: s for s in self.metadata()["snapshots"]}
+        by_id = {s["snapshot_id"]: s for s in self.snapshots()}
         node: int | None = descendant_id
         while node is not None:
             if node == ancestor_id:
@@ -426,9 +487,10 @@ class IceboxTable:
         commit (single version-hint swap), so a crash any time before
         it leaves main byte-identically untouched and the branch ready
         to re-publish.  Refuses a non-fast-forward (main moved since the
-        branch forked) — that is a concurrent-writer violation of the
-        single-writer protocol, not something to silently merge."""
-        meta = self.metadata()
+        branch forked) — a concurrent main writer, not something to
+        silently merge."""
+        t = self.pinned()
+        meta = t._draft()
         head = meta.get("branches", {}).get(name)
         if head is None:
             raise KeyError(f"no branch {name!r}")
@@ -438,7 +500,7 @@ class IceboxTable:
         # else provable ancestry on the retained parent chain
         forks = meta.get("branch_forks", {})
         unmoved = name in forks and forks[name] == main
-        if not (unmoved or self.is_ancestor(main, head)):
+        if not (unmoved or t.is_ancestor(main, head)):
             raise ValueError(
                 f"branch {name!r} is not a fast-forward of main "
                 f"(main={main}, branch head={head})"
@@ -446,18 +508,19 @@ class IceboxTable:
         meta["current_snapshot_id"] = head
         del meta["branches"][name]
         meta.get("branch_forks", {}).pop(name, None)
-        self._swap_metadata(meta)
+        t._swap_metadata(meta)
         return head
 
     def drop_branch(self, name: str) -> None:
         """Abandon a branch (metadata-only; its snapshots age out via
         normal retention once unreferenced)."""
-        meta = self.metadata()
+        t = self.pinned()
+        meta = t._draft()
         if name not in meta.get("branches", {}):
             raise KeyError(f"no branch {name!r}")
         del meta["branches"][name]
         meta.get("branch_forks", {}).pop(name, None)
-        self._swap_metadata(meta)
+        t._swap_metadata(meta)
 
     def manifest_list(self, snapshot_id: int) -> dict:
         """Per-bucket manifest pointers of a snapshot:
@@ -484,24 +547,19 @@ class IceboxTable:
         across mixed specs; callers get a SUPERSET of the requested
         buckets' rows when an old-spec file also holds sibling-bucket
         rows (scan/lookup filter rows; merge/compact migrate them)."""
-        meta = self.metadata()
-        sid = self.head_id(meta) if snapshot_id is None else snapshot_id
+        t = self.pinned()
+        sid = t.head_id() if snapshot_id is None else snapshot_id
         if sid is None:
             return []
         bset = None if buckets is None else {int(b) for b in buckets}
-        spec_nb = {s["spec_id"]: s["num_buckets"] for s in self.bucket_specs()}
-        cur_nb = int(meta["num_buckets"])
         out: list[dict] = []
         for key, ref in sorted(
-            self.manifest_list(sid).items(), key=lambda kv: parse_ref_key(kv[0])
+            t.manifest_list(sid).items(), key=lambda kv: parse_ref_key(kv[0])
         ):
             s, b = parse_ref_key(key)
-            if bset is not None and not any(
-                cb in bset
-                for cb in covered_buckets(b, spec_nb.get(s, cur_nb), cur_nb)
-            ):
+            if bset is not None and not any(cb in bset for cb in t.covered_buckets(b, s)):
                 continue
-            out += self._read_bucket_manifest(ref["manifest"])
+            out += t._read_bucket_manifest(ref["manifest"])
         return out
 
     def file_paths(self, snapshot_id: int | None = None, buckets=None) -> list[str]:
@@ -532,12 +590,16 @@ class IceboxTable:
         Crash-safety: everything is written under non-current names
         first; the single ``os.replace`` of the version hint is the
         commit point.  A crash before it leaves the table at the old
-        snapshot with orphan files (harmless, rewritten on retry).
+        snapshot with orphan files (harmless, rewritten on retry).  The
+        base is checked before the manifests too: a moved base may have
+        used their snapshot id already.
         """
-        meta = self.metadata()
-        prev_id = self.head_id(meta)
+        t = self.pinned()
+        meta = t._draft()
+        t._check_base(meta.version)
+        prev_id = t.head_id()
         new_id = meta["last_snapshot_id"] + 1
-        total_files, total_rows = self._write_manifests(
+        total_files, total_rows = t._write_manifests(
             new_id, prev_id, added_files, removed_paths or set(), touched_buckets
         )
 
@@ -583,7 +645,7 @@ class IceboxTable:
         else:
             meta["current_snapshot_id"] = new_id
         meta["last_snapshot_id"] = new_id
-        self._swap_metadata(meta)
+        t._swap_metadata(meta)
         return new_id
 
     def _write_manifests(
@@ -615,11 +677,9 @@ class IceboxTable:
 
         touched: set[tuple[int, int]] = set(added_by_ref)
         if touched_buckets is not None:
-            spec_nb = {s["spec_id"]: s["num_buckets"] for s in self.bucket_specs()}
-            cur_nb = int(self.metadata()["num_buckets"])
             for b in touched_buckets:
-                for s, nb in spec_nb.items():
-                    touched.add((s, int(b) % nb))
+                for spec in self.bucket_specs():
+                    touched.add((spec["spec_id"], int(b) % spec["num_buckets"]))
         elif removed:
             # caller didn't say where the removals live — inspect all
             # previous refs (correct, just not O(touched))
@@ -680,7 +740,7 @@ class IceboxTable:
     #: or retyped without breaking LWW resolution and bucket pruning
     def _protected_cols(self) -> set[str]:
         return {
-            self.metadata()["bucket_column"],
+            self.bucket_column,
             "conv_id",
             "turn_idx",
             "_ts",
@@ -697,10 +757,11 @@ class IceboxTable:
         path maps incoming changelog columns through this so a rename
         does not split data across two half-populated columns
         (schema.py::align_renames)."""
-        cur = {f["id"]: f["name"] for f in self.schema_fields()}
+        t = self.pinned()
+        cur = {f["id"]: f["name"] for f in t.schema_fields()}
         cur_names = set(cur.values())
         out: dict[str, str] = {}
-        for s in self.metadata()["schemas"]:
+        for s in t._pin["schemas"]:
             for f in s["fields"]:
                 name = cur.get(f["id"])
                 if (
@@ -712,11 +773,11 @@ class IceboxTable:
         return out
 
     def _commit_schema(self, new_fields: list[dict]) -> int:
-        """Append a schema (metadata-only commit), return its id.  Every
-        manifest entry records the schema era it was written under, so
-        the read path aligns old files by column id without rewriting
-        any manifest here."""
-        meta = self.metadata()
+        """Append a schema (metadata-only commit from this pinned
+        handle), return its id.  Every manifest entry records the schema
+        era it was written under, so the read path aligns old files by
+        column id without rewriting any manifest here."""
+        meta = self._draft()
         schema_id = max(s["schema_id"] for s in meta["schemas"]) + 1
         meta["schemas"].append({"schema_id": schema_id, "fields": new_fields})
         meta["current_schema_id"] = schema_id
@@ -731,9 +792,10 @@ class IceboxTable:
         the Iceberg identity rule).  Files written under older schemas
         keep their physical name; the read path re-aligns them by id
         (lake/read.py).  Key/bucket/meta columns are protected."""
-        if old in self._protected_cols():
+        t = self.pinned()
+        if old in t._protected_cols():
             raise ValueError(f"cannot rename protected column {old!r}")
-        fields = [dict(f) for f in self.schema_fields()]
+        fields = [dict(f) for f in t.schema_fields()]
         names = {f["name"] for f in fields}
         if old not in names:
             raise KeyError(f"no column {old!r}")
@@ -742,26 +804,27 @@ class IceboxTable:
         for f in fields:
             if f["name"] == old:
                 f["name"] = new
-        return self._commit_schema(fields)
+        return t._commit_schema(fields)
 
     def widen_column(self, name: str, new_type: str) -> int:
         """Widen a payload column's type (int→long, float→double; the
         exact-value promotions).  Column id unchanged; old files read
         back through a cast (lake/read.py)."""
-        if name in self._protected_cols():
+        t = self.pinned()
+        if name in t._protected_cols():
             raise ValueError(f"cannot retype protected column {name!r}")
-        fields = [dict(f) for f in self.schema_fields()]
+        fields = [dict(f) for f in t.schema_fields()]
         for f in fields:
             if f["name"] == name:
                 if f["type"] == new_type:
-                    return self.metadata()["current_schema_id"]
+                    return t.schema_id
                 if (f["type"], new_type) not in self._WIDEN_OK:
                     raise ValueError(
                         f"cannot widen {name!r} {f['type']} → {new_type}; "
                         f"allowed: {sorted(self._WIDEN_OK)}"
                     )
                 f["type"] = new_type
-                return self._commit_schema(fields)
+                return t._commit_schema(fields)
         raise KeyError(f"no column {name!r}")
 
     def drop_column(self, name: str) -> int:
@@ -769,21 +832,23 @@ class IceboxTable:
         bytes, reads exclude the id).  Re-adding the same NAME later
         mints a FRESH id, so old values can never resurrect (ids are
         never reused — the rule that makes rename/drop unambiguous)."""
-        if name in self._protected_cols():
+        t = self.pinned()
+        if name in t._protected_cols():
             raise ValueError(f"cannot drop protected column {name!r}")
-        fields = [dict(f) for f in self.schema_fields()]
+        fields = [dict(f) for f in t.schema_fields()]
         kept = [f for f in fields if f["name"] != name]
         if len(kept) == len(fields):
             raise KeyError(f"no column {name!r}")
-        return self._commit_schema(kept)
+        return t._commit_schema(kept)
 
     def evolve_schema(self, new_fields_spark: T.StructType) -> int:
         """Additive schema evolution (metadata-only commit) — new columns
         get fresh column ids, ids are never reused (Iceberg rule).
         Idempotent: columns already present are skipped; returns the
         current schema_id."""
-        meta = self.metadata()
-        cur = self.schema_fields()
+        t = self.pinned()
+        meta = t._pin
+        cur = t.schema_fields()
         have = {f["name"] for f in cur}
         next_id = meta["last_column_id"] + 1
         added = []
@@ -805,4 +870,4 @@ class IceboxTable:
         # meta stays the trailing block
         payload = [f for f in cur if not f["name"].startswith("_")]
         metacols = [f for f in cur if f["name"].startswith("_")]
-        return self._commit_schema(payload + added + metacols)
+        return t._commit_schema(payload + added + metacols)

@@ -21,17 +21,9 @@ import time
 
 from pyspark.sql import SparkSession
 
-from .core import IceboxTable, covered_buckets, parse_ref_key
+from .core import IceboxTable, parse_ref_key
 from .read import scan
 from .write import bucket_expr, write_data_files
-
-
-def _spec_map(table: IceboxTable) -> tuple[dict[int, int], int]:
-    """({spec_id: num_buckets}, current num_buckets)."""
-    return (
-        {s["spec_id"]: s["num_buckets"] for s in table.bucket_specs()},
-        int(table.metadata()["num_buckets"]),
-    )
 
 
 def plan_compaction(
@@ -40,12 +32,10 @@ def plan_compaction(
     """CURRENT-spec buckets whose file count warrants a rewrite (an
     old-spec file counts toward every bucket of its congruence class —
     compacting any of them migrates it to the current spec)."""
-    spec_nb, cur_nb = _spec_map(table)
+    table = table.pinned()
     counts: dict[int, int] = {}
     for e in table.files():
-        for b in covered_buckets(
-            int(e["bucket"]), spec_nb.get(int(e.get("spec_id", 0)), cur_nb), cur_nb
-        ):
+        for b in table.covered_buckets(e["bucket"], e.get("spec_id", 0)):
             counts[b] = counts.get(b, 0) + 1
     return sorted(b for b, n in counts.items() if n >= min_files_per_bucket)
 
@@ -67,16 +57,14 @@ def compact(
     the apply's LWW window ranks on (the dedup index's tables bucket on
     ``doc_id``, ops/dedup_index.py), and routing those through the
     apply would make shared code branch on its caller."""
+    table = table.pinned()
     target = plan_compaction(table, min_files_per_bucket=min_files_per_bucket)
     if buckets is not None:
         target = sorted(set(target) & set(buckets))
     if not target:
         return None
-    meta = table.metadata()
     df = scan(spark, table, buckets=target)  # full fidelity: tombstones + meta cols
-    dfb = df.withColumn(
-        "__bucket", bucket_expr(meta["bucket_column"], meta["num_buckets"])
-    )
+    dfb = df.withColumn("__bucket", bucket_expr(table.bucket_column, table.num_buckets))
     # salt_n=1 → exactly one output file per bucket per task group
     entries = write_data_files(dfb, table, salt_n=1)
     removed = {e["path"] for e in table.files(buckets=target)}
@@ -111,15 +99,14 @@ def delta_counts(table: IceboxTable) -> dict[int, dict]:
     upper bound per bucket — exact again once the class is
     folded/migrated); zeros stay exact, so "no debt" checks are
     unaffected."""
-    meta = table.metadata()
-    sid = table.head_id(meta)
+    table = table.pinned()
+    sid = table.head_id()
     if sid is None:
         return {}
-    spec_nb, cur_nb = _spec_map(table)
     out: dict[int, dict] = {}
     for key, ref in table.manifest_list(sid).items():
         s, b = parse_ref_key(key)
-        for cb in covered_buckets(b, spec_nb.get(s, cur_nb), cur_nb):
+        for cb in table.covered_buckets(b, s):
             cur = out.setdefault(cb, {"files": 0, "commits": 0})
             cur["files"] += ref["delta_files"]
             cur["commits"] += ref["delta_commits"]
@@ -147,6 +134,7 @@ def fold_targets(
     epoch as under a fold that runs after the commit."""
     if not min_delta_commits:
         return []
+    table = table.pinned()
     counts = {b: c["commits"] for b, c in delta_counts(table).items()}
     if pending_commit:
         counts = {b: counts.get(b, 0) + 1 for b in range(table.num_buckets)}
@@ -179,6 +167,7 @@ def fold_deltas(
     of one call absorbing a full-table fold — measured ≈ a COW epoch,
     BENCH/BASELINE.md §r3 — each call folds at most K buckets,
     most-indebted first)."""
+    table = table.pinned()
     target = fold_targets(
         table, min_delta_commits=min_delta_commits, max_buckets=max_buckets
     )
@@ -216,8 +205,10 @@ def expire_snapshots(
     metadata directory O(retained snapshots), not O(total epochs)).
 
     Driver-side only; returns {snapshots_expired, data_files_deleted,
-    manifests_deleted}."""
-    meta = table.metadata()
+    manifests_deleted}; CommitConflict (nothing deleted) when a commit
+    lands while it runs."""
+    table = table.pinned()
+    meta = table._draft()
     snaps = meta["snapshots"]
     cut = max(0, len(snaps) - max(1, keep_last))
     if older_than_ms is not None:
@@ -245,7 +236,7 @@ def expire_snapshots(
         _prune_metadata_versions(table)
         return {"snapshots_expired": 0, "data_files_deleted": 0, "manifests_deleted": 0}
     kept_set = {s["snapshot_id"] for s in kept}
-    assert table.head_id(meta) in kept_set
+    assert table.head_id() in kept_set
     if meta["current_snapshot_id"] is not None:
         assert meta["current_snapshot_id"] in kept_set
 
@@ -335,16 +326,18 @@ def gc_orphans(
     snapshot references it, so neither commit retries nor
     ``expire_snapshots`` (which only deletes files KNOWN to expired
     snapshots) will ever reclaim it.  Candidates must be older than
-    ``grace_ms`` — an in-flight commit's files are always younger than
-    any sane grace window, so the single-writer protocol stays safe.
+    ``grace_ms`` — an in-flight commit's files are younger than any
+    sane grace window.  GC commits nothing, so it raises no conflict: a
+    grace shorter than a concurrent commit's write-to-swap time lets it
+    delete that commit's files.
 
     Driver-side only (a directory walk + metadata diff); at object-store
     scale this is the same listing job Iceberg's procedure runs.
     Returns {data_files_deleted, manifests_deleted, bytes_reclaimed}."""
     now = int(time.time() * 1000) if now_ms is None else int(now_ms)
     cutoff_s = (now - int(grace_ms)) / 1000.0
-    meta = table.metadata()
-    snap_ids = [s["snapshot_id"] for s in meta["snapshots"]]
+    table = table.pinned()
+    snap_ids = [s["snapshot_id"] for s in table.snapshots()]
 
     live_paths: set[str] = set()
     live_manifests: set[str] = set()
@@ -409,12 +402,12 @@ def branch_only_snapshots(table: IceboxTable, branch: str) -> list[dict]:
     head's parent chain, stopping at main's head or at a snapshot
     retention expired) — the AUDIT scope of write-audit-publish, oldest
     first."""
-    meta = table.metadata()
-    head = meta.get("branches", {}).get(branch)
+    table = table.pinned()
+    head = table.branches().get(branch)
     if head is None:
         raise KeyError(f"no branch {branch!r}")
-    main = meta["current_snapshot_id"]
-    by_id = {s["snapshot_id"]: s for s in meta["snapshots"]}
+    main = table.for_branch(None).head_id()
+    by_id = {s["snapshot_id"]: s for s in table.snapshots()}
     out: list[dict] = []
     node: int | None = head
     while node is not None and node != main and node in by_id:
@@ -447,9 +440,11 @@ def audit_and_publish(
         full-fidelity scan) must equal it — the audit a backfill or
         migration runs against a known-good answer.  Needs ``spark``.
 
-    Returns {published_snapshot_id, audited_snapshots, quarantined}.
+    The publish commits on the version the gates read (CommitConflict
+    if anything committed since).  Returns {published_snapshot_id, audited_snapshots, quarantined}.
     """
     hook = crash_hook or (lambda point: None)
+    table = table.pinned()
     audited = branch_only_snapshots(table, branch)
     # Gate input: the RUNNING quarantine counter every commit binds into
     # its snapshot — branch head minus main's head covers the
@@ -458,7 +453,7 @@ def audit_and_publish(
     # double-counted.
     quarantined = 0
     if audited:
-        main = table.metadata()["current_snapshot_id"]
+        main = table.for_branch(None).head_id()
         base_cum = (
             0 if main is None else table.snapshot(main)["summary"]["cum_quarantined"]
         )

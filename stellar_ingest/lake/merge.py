@@ -131,11 +131,11 @@ def _existing_as_changelog_arrow(stored: pa.Table) -> pa.Table:
     )
 
 
-def _batch_buckets(meta: dict, fields: list[dict], rows: pa.Table) -> np.ndarray:
+def _batch_buckets(table: IceboxTable, rows: pa.Table) -> np.ndarray:
     """Bucket id of every row, as ``bucket_expr`` assigns it."""
-    col = meta["bucket_column"]
-    ktype = next(f["type"] for f in fields if f["name"] == col)
-    return bucket_ids(rows.column(col), meta["num_buckets"], ktype)
+    return bucket_ids(
+        rows.column(table.bucket_column), table.num_buckets, table.bucket_key_type()
+    )
 
 
 def _driver_winner_rows(
@@ -148,7 +148,6 @@ def _driver_winner_rows(
     sort resolves LWW (cdc/resolve.py::lww_arrow), and the winners take
     the table's layout (to_table_rows_arrow: ``_op`` is the one
     non-NULL column, as in the Spark projection)."""
-    meta = table.metadata()
     fields = table.schema_fields()
     union = batch
     if rewrite:
@@ -156,9 +155,7 @@ def _driver_winner_rows(
         union = pa.concat_tables(
             [batch, _existing_as_changelog_arrow(stored)], promote_options="default"
         )
-    union = union.append_column(
-        "__bucket", pa.array(_batch_buckets(meta, fields, union))
-    )
+    union = union.append_column("__bucket", pa.array(_batch_buckets(table, union)))
     winners, max_rn = lww_arrow(union, lead="__bucket")
     schema = pa.schema(
         [pa.field(f["name"], type_to_arrow(f["type"]), f["name"] != "_op") for f in fields]
@@ -261,9 +258,9 @@ def _resolve_and_write(
 
     A pyarrow ``batch`` takes the driver path (module docstring); its
     ``rn_observation`` is a ``DriverObservation``, and it is never
-    salted (the runner sends one only with salting off)."""
-    meta = table.metadata()
-    nbuckets = meta["num_buckets"]
+    salted (the runner sends one only with salting off).  ``table`` is
+    pinned: the epoch reads and commits on one metadata version."""
+    nbuckets = table.num_buckets
     delta_buckets = (
         set(range(nbuckets)).difference(rewrite) if operation == "delta" else ()
     )
@@ -320,9 +317,8 @@ def _spark_write(
     """The Spark data path of ``_resolve_and_write``: the rewritten
     buckets read raw, one LWW window over them and the batch, the
     bucketed write (fused or salted); returns the manifest entries."""
-    meta = table.metadata()
-    nbuckets = meta["num_buckets"]
-    bexpr = bucket_expr(meta["bucket_column"], nbuckets)
+    nbuckets = table.num_buckets
+    bexpr = bucket_expr(table.bucket_column, nbuckets)
     union = batch
     if rewrite:
         stored = scan(spark, table, buckets=rewrite, resolve=False)
@@ -379,18 +375,16 @@ def merge_apply(
     ``batch_rows``: the batch's row count when the caller knows it
     before the job (it sizes the write's task count,
     lake/write.py::fused_partitions)."""
+    table = table.pinned()
     touched: list[int] = []
     if table.files():
         # an empty table (backfill epoch 1) has nothing to rewrite: the
         # touched-bucket pass is skipped (one full traversal saved on
         # the largest batch of the run)
-        meta = table.metadata()
         if isinstance(batch, pa.Table):
-            touched = sorted(
-                set(_batch_buckets(meta, table.schema_fields(), batch).tolist())
-            )
+            touched = sorted(set(_batch_buckets(table, batch).tolist()))
         else:
-            bexpr = bucket_expr(meta["bucket_column"], meta["num_buckets"])
+            bexpr = bucket_expr(table.bucket_column, table.num_buckets)
             touched = sorted(
                 r[0] for r in batch.select(bexpr.alias("__b")).distinct().collect()
             )
@@ -447,7 +441,7 @@ def delta_apply(
     duplicate winner rows are bit-identical, so whichever copy the
     read-time window keeps, the resolved state is unchanged."""
     return _resolve_and_write(
-        spark, table, batch, sorted(fold_buckets or ()), "delta",
+        spark, table.pinned(), batch, sorted(fold_buckets or ()), "delta",
         salts=salts, summary=summary, summary_fn=summary_fn,
         rn_observation=rn_observation, skip_if_noop=skip_if_noop, batch_rows=batch_rows,
     )

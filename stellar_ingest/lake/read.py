@@ -25,6 +25,7 @@ over all mutations (same argument as cdc/resolve.py salting).
 from __future__ import annotations
 
 import os
+from functools import reduce
 from threading import Lock
 
 import pyarrow as pa
@@ -39,7 +40,6 @@ from .core import (
     type_to_spark,
     IceboxTable,
     commit_tag,
-    covered_buckets,
     fields_to_struct,
 )
 
@@ -87,7 +87,8 @@ def _read_aligned(
     added after a file was written backfill NULL.  Files whose era is
     name-compatible with the target share ONE relation (the common
     case stays a single scan node); each incompatible era gets its own
-    relation + projection.  Each entry's era is its ``schema_id``."""
+    relation + projection.  Each entry's era is its ``schema_id``;
+    ``table`` is the caller's pinned handle."""
     tstruct = fields_to_struct(tfields)
     by_era: dict[int, list[str]] = {}
     for e in entries:
@@ -118,10 +119,7 @@ def _read_aligned(
         parts.append(df.select(*cols))
     if compat_paths:
         parts.insert(0, spark.read.schema(tstruct).parquet(*compat_paths))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, parts)
 
 
 def align_arrow(tbl: pa.Table, gfields: list[dict], tfields: list[dict]) -> pa.Table:
@@ -147,7 +145,8 @@ def read_files_arrow(
     table: IceboxTable, entries: list[dict], tfields: list[dict]
 ) -> pa.Table:
     """``scan(resolve=False)`` of ``entries`` on the driver: every
-    stored row of those files, aligned to ``tfields``."""
+    stored row of those files, aligned to ``tfields`` (``table`` is the
+    caller's pinned handle)."""
     eras = {sid: table.schema_fields(sid) for sid in {e["schema_id"] for e in entries}}
 
     def read(e: dict) -> pa.Table:
@@ -217,15 +216,16 @@ def scan(
     bucket-key value (point-lookup path; the caller still applies the
     row-level equality filter).  ``resolve=False`` returns the stored
     rows as written, every version of every key (the in-apply fold
-    resolves them in its own LWW window, lake/merge.py::delta_apply)."""
+    resolves them in its own LWW window, lake/merge.py::delta_apply).
+    Every metadata read of one scan comes from one pinned version."""
     if sum(x is not None for x in (snapshot_id, as_of_ms, ref)) > 1:
         raise ValueError("pass at most one of snapshot_id / as_of_ms / ref")
+    table = table.pinned()
     if ref is not None:
         snapshot_id = table.resolve_ref(ref)  # tags, then branch heads
     elif as_of_ms is not None:
         snapshot_id = table.snapshot_as_of(as_of_ms)["snapshot_id"]
-    meta = table.metadata()
-    sid = table.head_id(meta) if snapshot_id is None else snapshot_id
+    sid = table.head_id() if snapshot_id is None else snapshot_id
     if sid is None:
         return spark.createDataFrame([], table.schema_struct())
     # time travel reads the snapshot's schema; current reads use the
@@ -254,14 +254,10 @@ def scan(
     # class); a file is resolved if ANY bucket it covers can hold
     # multiple versions — resolving single-version rows that ride along
     # is a no-op, skipping a multi-version bucket would be wrong
-    spec_nb = {s["spec_id"]: s["num_buckets"] for s in table.bucket_specs()}
-    cur_nb = int(meta["num_buckets"])
     cover: dict[int, list[dict]] = {}
     ecov: list[tuple[dict, list[int]]] = []
     for e in entries:
-        cov = covered_buckets(
-            int(e["bucket"]), spec_nb.get(int(e.get("spec_id", 0)), cur_nb), cur_nb
-        )
+        cov = table.covered_buckets(e["bucket"], e.get("spec_id", 0))
         ecov.append((e, cov))
         for b in cov:
             cover.setdefault(b, []).append(e)
@@ -275,10 +271,7 @@ def scan(
         parts.append(_read_aligned(spark, table, plain, tfields))
     if multi:
         parts.append(resolve_stored(_read_aligned(spark, table, multi, tfields)))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+    return reduce(DataFrame.unionByName, parts)
 
 
 def key_bucket(
@@ -308,13 +301,6 @@ def key_bucket(
     )
 
 
-def _bucket_col_type(table: IceboxTable) -> str | None:
-    col = table.metadata()["bucket_column"]
-    return next(
-        (f["type"] for f in table.schema_fields() if f["name"] == col), None
-    )
-
-
 def lookup(
     spark: SparkSession,
     table: IceboxTable,
@@ -330,15 +316,9 @@ def lookup(
     — files are clustered by (conv_id, turn_idx), so row-group min/max
     stats skip all but the matching groups.  Total IO is O(bucket /
     num_row_groups), independent of table size for fixed bucket count,
-    vs O(table) for a naive filter over a full scan."""
-    meta = table.metadata()
-    b = key_bucket(
-        spark, key, meta["num_buckets"], type_name=_bucket_col_type(table)
-    )
-    df = read_live(
-        spark, table, snapshot_id=snapshot_id, buckets=[b], key_equals=key
-    )
-    return df.filter(F.col(meta["bucket_column"]) == F.lit(key))
+    vs O(table) for a naive filter over a full scan.  One key of
+    :func:`lookup_many`."""
+    return lookup_many(spark, table, [key], snapshot_id=snapshot_id)
 
 
 def lookup_many(
@@ -357,16 +337,16 @@ def lookup_many(
     hold the requested keys, instead of 100 separate jobs or a full
     table scan.  The serving-path pattern for feature-store style
     reads."""
-    meta = table.metadata()
-    col = meta["bucket_column"]
     uniq = list(dict.fromkeys(keys))
     if not uniq:
         raise ValueError("lookup_many needs at least one key")
-    ktype = _bucket_col_type(table)
+    table = table.pinned()
+    col = table.bucket_column
+    ktype = table.bucket_key_type()
     by_bucket: dict[int, list] = {}
     for k in uniq:
         by_bucket.setdefault(
-            key_bucket(spark, k, meta["num_buckets"], type_name=ktype), []
+            key_bucket(spark, k, table.num_buckets, type_name=ktype), []
         ).append(k)
     parts = []
     for b, ks in sorted(by_bucket.items()):
@@ -374,10 +354,7 @@ def lookup_many(
             spark, table, snapshot_id=snapshot_id, buckets=[b], key_equals=ks
         )
         parts.append(df.filter(F.col(col).isin(ks)))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, parts)
 
 
 _IO_POOL = None
@@ -456,6 +433,7 @@ def lookup_many_fast(
     uniq = list(dict.fromkeys(keys))
     if not uniq:
         raise ValueError("lookup_many_fast needs at least one key")
+    table = table.pinned()
 
     def _fallback():
         s = spark
@@ -465,16 +443,15 @@ def lookup_many_fast(
             s = get_spark("stellar-lookup")
         return lookup_many(s, table, uniq, snapshot_id=snapshot_id).toPandas()
 
-    meta = table.metadata()
-    col = meta["bucket_column"]
-    ktype = _bucket_col_type(table)
+    col = table.bucket_column
+    ktype = table.bucket_key_type()
     by_bucket: dict[int, list] = {}
     try:
         for k in uniq:
-            by_bucket.setdefault(bucket_of(k, meta["num_buckets"], ktype), []).append(k)
+            by_bucket.setdefault(bucket_of(k, table.num_buckets, ktype), []).append(k)
     except TypeError:
         return _fallback()
-    sid = table.head_id(meta) if snapshot_id is None else snapshot_id
+    sid = table.head_id() if snapshot_id is None else snapshot_id
     tfields = (
         table.schema_fields()
         if snapshot_id is None
@@ -587,6 +564,7 @@ def read_changes(
     event history if needed)."""
     from ..cdc.dedupe import hwm_predicate
 
+    table = table.pinned()
     base = table.snapshot(since_snapshot_id)["summary"].get("offsets", {})
     if not base:
         # a snapshot without checkpointed watermarks (plain append,

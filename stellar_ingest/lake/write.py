@@ -212,14 +212,13 @@ def write_data_files(
     its ``__slot`` partition key here so the required sort stays a prefix
     of the window's sort and the planner can keep eliding it; the
     physical row order is unchanged (one slot value per partition)."""
+    table = table.pinned()
     # the default sort/salt columns are the transcript key; generic
     # tables (dedup/ANN indexes, any non-CDC icebox table) lack them —
     # resolve against the actual frame, falling back to the table's own
     # bucket column so compaction works on every table
     have = df.columns
-    sort_cols = tuple(c for c in sort_cols if c in have) or (
-        table.metadata()["bucket_column"],
-    )
+    sort_cols = tuple(c for c in sort_cols if c in have) or (table.bucket_column,)
     tag = f"snap-pending-{uuid.uuid4().hex[:12]}"
     out = os.path.join(table.data_dir, tag)
     if pre_partitioned:
@@ -245,7 +244,6 @@ def write_data_files(
         .mode("overwrite")
         .parquet(out)
     )
-    meta = table.metadata()
     entries = []
     for bdir in sorted(os.listdir(out)):
         if not bdir.startswith("__bucket="):
@@ -255,31 +253,31 @@ def write_data_files(
             if not fn.endswith(".parquet"):
                 continue
             full = os.path.join(out, bdir, fn)
-            entry = _manifest_entry(table, meta, full, b, delta_buckets)
+            entry = _manifest_entry(table, full, b, delta_buckets)
             if entry is not None:
                 entries.append(entry)
     return entries
 
 
 def _manifest_entry(
-    table: IceboxTable, meta: dict, full: str, bucket: int, delta_buckets
+    table: IceboxTable, full: str, bucket: int, delta_buckets
 ) -> dict | None:
     """Manifest entry of one written data file (None when it is empty),
-    from its parquet footer."""
+    from its parquet footer and the writer's pinned ``table``."""
     md = pq.ParquetFile(full).metadata
     rows = md.num_rows
     if rows == 0:
         return None
     entry = {"path": os.path.relpath(full, table.root), "bucket": bucket, "rows": rows}
-    cur_spec = int(meta.get("current_spec_id", 0))
+    cur_spec = int(table.bucket_specs()[-1]["spec_id"])
     if cur_spec:
         entry["spec_id"] = cur_spec
     # schema era of this file: lets the read path align renamed /
     # widened columns by COLUMN ID (Iceberg rule) instead of name
-    entry["schema_id"] = int(meta.get("current_schema_id", 0))
+    entry["schema_id"] = int(table.schema_id)
     if bucket in delta_buckets:
         entry["delta"] = True
-    lo, hi = _key_bounds(md, meta["bucket_column"])
+    lo, hi = _key_bounds(md, table.bucket_column)
     # manifests are JSON — only store bounds of JSON-native
     # types (a timestamp/binary bucket column would otherwise
     # break every commit); absent bounds read conservatively
@@ -375,7 +373,7 @@ def write_arrow_files(
     GIL)."""
     if not rows.num_rows:
         return []
-    meta = table.metadata()
+    table = table.pinned()
     out = os.path.join(table.data_dir, f"snap-pending-{uuid.uuid4().hex[:12]}")
     buckets = rows.column("__bucket").to_numpy()
     data = rows.drop_columns(["__bucket"])
@@ -403,7 +401,7 @@ def write_arrow_files(
             use_deprecated_int96_timestamps=True,
         )
         _swap_arrow_schema_blob(full, "org.apache.spark.version", pyspark.__version__)
-        return _manifest_entry(table, meta, full, b, delta_buckets)
+        return _manifest_entry(table, full, b, delta_buckets)
 
     spans = sorted(zip(starts, ends), key=lambda se: f"__bucket={buckets[se[0]]}")
     return [e for e in _io_pool().map(write_one, spans) if e is not None]
@@ -441,8 +439,8 @@ def append(
     ``sort_cols`` sets the partition-local clustering (op 43) — the CDC
     default suits transcript tables; non-transcript tables (e.g. the IVF
     index's assignments) pass their own."""
-    meta = table.metadata()
-    dfb = df.withColumn("__bucket", bucket_expr(meta["bucket_column"], meta["num_buckets"]))
+    table = table.pinned()
+    dfb = df.withColumn("__bucket", bucket_expr(table.bucket_column, table.num_buckets))
     entries = write_data_files(dfb, table, sort_cols=sort_cols)
     return table.commit(added_files=entries, summary=summary or {}, operation="append")
 
@@ -461,25 +459,18 @@ def overwrite_buckets(
     old-spec congruence classes (an old-spec file holds sibling buckets'
     rows too — replacing only part of its class would drop the rest), so
     a non-closed request raises instead of losing rows."""
-    meta = table.metadata()
-    from .core import covered_buckets
-
-    spec_nb = {s["spec_id"]: s["num_buckets"] for s in table.bucket_specs()}
+    table = table.pinned()
     bset = {int(b) for b in buckets}
     old_files = table.files(buckets=buckets)
     for e in old_files:
-        cov = covered_buckets(
-            int(e["bucket"]),
-            spec_nb.get(int(e.get("spec_id", 0)), meta["num_buckets"]),
-            meta["num_buckets"],
-        )
+        cov = table.covered_buckets(e["bucket"], e.get("spec_id", 0))
         if not set(cov) <= bset:
             raise ValueError(
                 f"overwrite of buckets {sorted(bset)} would drop rows of "
                 f"buckets {sorted(set(cov) - bset)} held by old-spec file "
                 f"{e['path']}; include the full congruence class"
             )
-    dfb = df.withColumn("__bucket", bucket_expr(meta["bucket_column"], meta["num_buckets"]))
+    dfb = df.withColumn("__bucket", bucket_expr(table.bucket_column, table.num_buckets))
     entries = write_data_files(dfb, table)
     removed = {e["path"] for e in old_files}
     return table.commit(

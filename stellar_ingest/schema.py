@@ -116,6 +116,7 @@ def ensure_table_schema(table, batch_table_schema, *, hook=None):
     still carrying a renamed column's OLD name here would silently
     re-add it under a fresh column id (splitting the data), so that
     case raises instead."""
+    table = table.pinned()
     stale = sorted(
         set(table.rename_map()) & {f.name for f in batch_table_schema.fields}
     )

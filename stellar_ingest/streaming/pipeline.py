@@ -108,7 +108,8 @@ def run_streaming(
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
-        table = IceboxTable(table_root, branch=branch)
+        live = IceboxTable(table_root, branch=branch)
+        table = live.pinned() if live.exists() else live
         snap = table.current_snapshot() if table.exists() else None
         epoch = int(snap["summary"].get("epoch", 0)) if snap else 0
         if snap and int(snap["summary"].get("ss_batch_id", -1)) >= batch_id:
@@ -169,7 +170,7 @@ def run_streaming(
         )
         if sid is not None:
             _maintain(
-                table, epoch + 1, expire_every=expire_every, keep_last=keep_last,
+                live, epoch + 1, expire_every=expire_every, keep_last=keep_last,
                 older_than_ms=older_than_ms, gc_every=gc_every, gc_grace_ms=gc_grace_ms,
             )
 

@@ -10,7 +10,8 @@ letters of a MoR epoch with invalid, NULL-envelope and delete rows over
 two source partitions equal a direct groupBy over the same rows, also
 when the epoch crashes after its snapshot and the fence repair
 re-derives them, (3) a warm MoR epoch on the Spark data path stays
-within its py4j round-trip budget."""
+within its py4j round-trip budget, (4) a folding MoR epoch on the
+driver path parses the table's metadata at most three times."""
 
 from __future__ import annotations
 
@@ -296,3 +297,30 @@ def test_warm_mor_epoch_round_trip_budget(spark, tmp_path, spark_apply):
     assert IceboxTable(f"{w}/t").current_snapshot()["operation"] == "delta"
     assert sum(r["rows"] for r in recs) > 0
     assert count[0] <= 1.25 * EPOCH_ROUND_TRIPS, count[0]
+
+
+# -- (4) one metadata version per epoch ------------------------------------------
+
+
+def test_driver_mor_epoch_parses_metadata_at_most_three_times(spark, tmp_path, monkeypatch):
+    """A merge-on-read epoch on the driver path that folds in its own
+    apply pins the table's metadata once and reads everything from that
+    pin: at most 3 parses of the metadata version per
+    ``run_increment(max_epochs=1)``."""
+    w = str(tmp_path)
+    t = _tiny_mor_table(spark, w, 1, mode="mor", fold_min_deltas=2)
+    _append_updates(spark, w, 1)
+    parses: list[int] = []
+    real = IceboxTable.metadata
+
+    def counted(self):
+        parses.append(1)
+        return real(self)
+
+    monkeypatch.setattr(IceboxTable, "metadata", counted)
+    recs = run_increment(
+        spark, f"{w}/ledger", f"{w}/t", f"{w}/ck", max_epochs=1, mode="mor", fold_min_deltas=2
+    )
+    monkeypatch.undo()
+    assert recs and t.current_snapshot()["summary"]["compacted_buckets"]
+    assert len(parses) <= 3, len(parses)

@@ -743,3 +743,149 @@ def test_lookup_fast_footer_cache(spark, tmp_table):
     os.utime(paths[0], ns=(1, 1))  # force a distinct stat key either way
     tampered = lookup_fast(spark, t, "c3").set_index("turn_idx")
     assert tampered.loc[0, "text"] == "TAMPERED"
+
+
+# -- one metadata version per operation; commits refuse a moved base ----------
+# These tests start no Spark session: the tables are pyarrow files
+# committed with IceboxTable.commit.
+
+
+def _commit_convs(t: IceboxTable, convs: list[str], lsn: int) -> int:
+    """Commit one turn per conversation in ``convs`` as pyarrow files,
+    one per bucket (lake/write.py::write_arrow_files); returns the new
+    snapshot id."""
+    import pyarrow as pa
+
+    from stellar_ingest.lake.core import type_to_arrow
+    from stellar_ingest.lake.write import write_arrow_files
+    from stellar_ingest.lake.xxh import bucket_of
+
+    rows = sorted((bucket_of(c, t.num_buckets, "string"), c) for c in convs)
+    cols = {
+        "__bucket": pa.array([b for b, _ in rows], pa.int32()),
+        "conv_id": [c for _, c in rows],
+        "turn_idx": pa.array([0] * len(rows), pa.int32()),
+        "role": ["user"] * len(rows),
+        "text": [f"{c}@{lsn}" for _, c in rows],
+        "tool": pa.nulls(len(rows), pa.string()),
+        "ts": [ts(lsn)] * len(rows),
+        "_ts": [ts(lsn)] * len(rows),
+        "_lsn": pa.array([lsn] * len(rows), pa.int64()),
+        "_src_part": pa.array([0] * len(rows), pa.int32()),
+        "_op": ["U"] * len(rows),
+    }
+    fields = {f["name"]: type_to_arrow(f["type"]) for f in t.schema_fields()}
+    table = pa.table({n: pa.array(v, fields.get(n, pa.int32())) for n, v in cols.items()})
+    entries = write_arrow_files(table, t, delta_buckets=())
+    return t.commit(added_files=entries, summary={"epoch": lsn})
+
+
+def _live_files_exist(t: IceboxTable) -> bool:
+    import os
+
+    return all(os.path.exists(os.path.join(t.root, e["path"])) for e in t.files())
+
+
+def test_expire_refuses_a_commit_that_lands_while_it_runs(tmp_table, monkeypatch):
+    """A second handle commits snapshot 4 while ``expire_snapshots``
+    reads manifests.  Expiry raises CommitConflict and deletes nothing,
+    so snapshot 4 stays the head, ``last_snapshot_id`` stays 4 (id 4 is
+    never minted again) and a GC with no grace keeps its data file."""
+    from stellar_ingest.lake.core import CommitConflict
+    from stellar_ingest.lake.maintain import expire_snapshots, gc_orphans
+    from stellar_ingest.lake.read import lookup_fast
+
+    t = IceboxTable.create(tmp_table, TABLE_SCHEMA, num_buckets=4)
+    for lsn in (1, 2, 3):
+        _commit_convs(t, [f"c{i}" for i in range(6)], lsn)
+    other = IceboxTable(tmp_table)
+    landed: list[int] = []
+    real = IceboxTable.manifest_list
+
+    def racing_manifest_list(self, snapshot_id):
+        if not landed:
+            landed.append(-1)
+            landed.append(_commit_convs(other, ["late"], 4))
+        return real(self, snapshot_id)
+
+    monkeypatch.setattr(IceboxTable, "manifest_list", racing_manifest_list)
+    with pytest.raises(CommitConflict):
+        expire_snapshots(IceboxTable(tmp_table), keep_last=1)
+    monkeypatch.undo()
+
+    t = IceboxTable(tmp_table)
+    assert landed[-1] == 4
+    assert t.head_id() == 4 and t.metadata()["last_snapshot_id"] == 4
+    assert [s["snapshot_id"] for s in t.snapshots()] == [1, 2, 3, 4]
+    gc_orphans(t, grace_ms=0)
+    assert _live_files_exist(t)
+    assert lookup_fast(None, t, "late")["text"].tolist() == ["late@4"]
+    # the rerun expires on the new head
+    assert expire_snapshots(t, keep_last=1)["snapshots_expired"] == 3
+    assert t.head_id() == 4
+
+
+def test_tag_refuses_a_commit_after_its_read(tmp_table, monkeypatch):
+    """A second handle commits between a tag's metadata read and its
+    swap — through a seam inside ``tag``, and between an explicitly
+    pinned handle's read and its ``tag``.  Both tags raise
+    CommitConflict; the other commit stays the head with its id and
+    data, and the rerun tags it."""
+    from stellar_ingest.lake.core import CommitConflict
+    from stellar_ingest.lake.maintain import gc_orphans
+
+    t = IceboxTable.create(tmp_table, TABLE_SCHEMA, num_buckets=4)
+    _commit_convs(t, ["a", "b", "c"], 1)
+    other = IceboxTable(tmp_table)
+    landed: list[int] = []
+    real = IceboxTable.snapshot
+
+    def racing_snapshot(self, snapshot_id):
+        if not landed:
+            landed.append(-1)
+            landed.append(_commit_convs(other, ["d"], 2))
+        return real(self, snapshot_id)
+
+    monkeypatch.setattr(IceboxTable, "snapshot", racing_snapshot)
+    with pytest.raises(CommitConflict):
+        IceboxTable(tmp_table).tag("audit")
+    monkeypatch.undo()
+    assert landed[-1] == 2
+
+    pinned = IceboxTable(tmp_table).pinned()
+    assert _commit_convs(other, ["e"], 3) == 3
+    with pytest.raises(CommitConflict):
+        pinned.tag("audit")
+    assert pinned.head_id() == 2  # a pinned view never moves
+
+    t = IceboxTable(tmp_table)
+    assert t.refs() == {}
+    assert t.head_id() == 3 and t.metadata()["last_snapshot_id"] == 3
+    gc_orphans(t, grace_ms=0)
+    assert _live_files_exist(t) and len(t.files()) >= 3
+    assert t.tag("audit") == 3 and t.refs() == {"audit": 3}
+
+
+def test_lookup_fast_parses_metadata_once_per_key(tmp_table, monkeypatch):
+    """A ``lookup_fast`` on a live handle pins the table once: one parse
+    of the metadata version per looked-up key."""
+    from stellar_ingest.lake.read import lookup_fast
+
+    t = IceboxTable.create(tmp_table, TABLE_SCHEMA, num_buckets=4)
+    convs = [f"c{i}" for i in range(12)]
+    _commit_convs(t, convs, 1)
+    _commit_convs(t, convs[::3], 2)  # a second file in some buckets
+    parses: list[int] = []
+    real = IceboxTable.metadata
+
+    def counted(self):
+        parses.append(1)
+        return real(self)
+
+    monkeypatch.setattr(IceboxTable, "metadata", counted)
+    live = IceboxTable(tmp_table)
+    for key, want in (("c0", "c0@2"), ("c1", "c1@1"), ("nope", None)):
+        parses.clear()
+        got = lookup_fast(None, live, key)["text"].tolist()
+        assert got == ([want] if want else []), key
+        assert len(parses) == 1, key

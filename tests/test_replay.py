@@ -415,6 +415,36 @@ def test_mor_folding_epoch_crash_reconverges(spark, ledger, golden, tmp_path, cr
     )
 
 
+def test_epoch_refuses_a_tag_committed_after_its_pin(spark, ledger, golden, tmp_path):
+    """A second handle tags the table after an epoch pinned its metadata
+    and before the epoch commits.  The epoch raises CommitConflict (the
+    runner does not retry) and commits nothing; a rerun reaches the
+    golden fingerprint with one snapshot per epoch, and the tag
+    survives."""
+    from stellar_ingest.lake.core import CommitConflict
+
+    table_root, ck = str(tmp_path / "t"), str(tmp_path / "ck")
+    kw = dict(max_segments_per_part=6, salts=None)
+    merges: list[str] = []
+
+    def hook(point):
+        if point == "pre_merge":
+            merges.append(point)
+            if len(merges) == 2:  # epoch 2: its pin precedes this seam
+                IceboxTable(table_root).tag("audit")
+
+    with pytest.raises(CommitConflict):
+        run_increment(spark, ledger["dir"], table_root, ck, crash_hook=hook, **kw)
+    t = IceboxTable(table_root)
+    assert [s["summary"]["epoch"] for s in t.snapshots()] == [1]
+    assert t.refs() == {"audit": 1}
+    run_increment(spark, ledger["dir"], table_root, ck, **kw)
+    assert table_fingerprint(scan(spark, t)) == golden["fingerprint"]
+    snaps = t.snapshots()
+    assert [s["summary"]["epoch"] for s in snaps] == list(range(1, len(snaps) + 1))
+    assert len(snaps) > 1 and t.refs() == {"audit": 1}
+
+
 def test_mor_read_changes_between_snapshots(spark, ledger, tmp_path):
     """Incremental consumer reads work over merge-on-read tables: scan
     resolves first, then the HWM filter applies — net-effect semantics

@@ -53,7 +53,7 @@ def test_rescale_mid_stream_reconverges(spark, rledger, tmp_path):
     )
     t = IceboxTable(t_root)
     new_spec = t.rescale_buckets(8)
-    assert t.num_buckets == 8 and t.current_spec_id() == new_spec
+    assert t.num_buckets == 8 and t.pinned().bucket_specs()[-1]["spec_id"] == new_spec
     # drain the rest at the new bucket count
     run_increment(
         spark, rledger, t_root, ck,
@@ -133,7 +133,7 @@ def test_rescale_with_outstanding_deltas_folds_clean(spark, rledger, tmp_path):
     fold_deltas(spark, t, min_delta_commits=1)
     compact(spark, t, min_files_per_bucket=1)
     assert sum(c["files"] for c in delta_counts(t).values()) == 0
-    assert _ref_specs(t) == {t.current_spec_id()}
+    assert _ref_specs(t) == {t.pinned().bucket_specs()[-1]["spec_id"]}
     assert table_fingerprint(scan(spark, t)) == fp
     # and the resolve window is gone from the plan (plain fast path)
     plan = scan(spark, t)._jdf.queryExecution().executedPlan().toString()
