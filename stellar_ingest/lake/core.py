@@ -23,10 +23,13 @@ Layout::
       data/
         snap-{id}/bucket={b}/*.parquet   # immutable data files, per commit
 
-Manifests are sharded per bucket, exactly like Iceberg manifest lists:
-a commit REWRITES only the touched buckets' manifests and carries
-untouched buckets by reference (same manifest file, no read), so commit
-cost and ``files(buckets=...)`` reads are O(touched), not O(table).
+Manifests are sharded per bucket, exactly like Iceberg manifest lists.
+A commit names the buckets it REPLACES (every stored file of theirs is
+dropped) and the files it adds: a replaced bucket's manifest is never
+read, a bucket that only gains files is read once and appended to, and
+every other bucket carries by reference (same manifest file, no read),
+so commit cost and ``files(buckets=...)`` reads are O(touched), not
+O(table).
 This is icebox format 2, the only layout read or written: every
 manifest entry records its ``schema_id``, every manifest-list ref its
 delta counts, every snapshot summary its ``cum_quarantined``.
@@ -45,6 +48,7 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Iterable
 
 import pyarrow as pa
 from pyspark.sql import types as T
@@ -551,15 +555,22 @@ class IceboxTable:
         sid = t.head_id() if snapshot_id is None else snapshot_id
         if sid is None:
             return []
-        bset = None if buckets is None else {int(b) for b in buckets}
+        refs = t.manifest_list(sid)
+        keys = refs if buckets is None else t._covering_refs(refs, buckets)
         out: list[dict] = []
-        for key, ref in sorted(
-            t.manifest_list(sid).items(), key=lambda kv: parse_ref_key(kv[0])
-        ):
+        for key in sorted(keys, key=parse_ref_key):
+            out += t._read_bucket_manifest(refs[key]["manifest"])
+        return out
+
+    def _covering_refs(self, refs: dict[str, dict], buckets: Iterable[int]) -> set[str]:
+        """Keys of the manifest-list ``refs`` whose files may hold rows
+        of the CURRENT-spec ``buckets`` (covered_buckets)."""
+        bset = {int(b) for b in buckets}
+        out: set[str] = set()
+        for key in refs:
             s, b = parse_ref_key(key)
-            if bset is not None and not any(cb in bset for cb in t.covered_buckets(b, s)):
-                continue
-            out += t._read_bucket_manifest(ref["manifest"])
+            if not bset.isdisjoint(self.covered_buckets(b, s)):
+                out.add(key)
         return out
 
     def file_paths(self, snapshot_id: int | None = None, buckets=None) -> list[str]:
@@ -571,22 +582,20 @@ class IceboxTable:
         self,
         *,
         added_files: list[dict],
-        removed_paths: set[str] | None = None,
+        replaced_buckets: Iterable[int] = (),
         summary: dict | None = None,
         operation: str = "append",
-        touched_buckets: list[int] | None = None,
     ) -> int:
         """Atomically produce the next snapshot.
 
         ``added_files``: ``{path (rel to root), bucket, rows, schema_id}``
         entries (lake/write.py::write_data_files).
-        ``removed_paths``: rel paths from the current snapshot to drop
-        (copy-on-write replacement).  ``touched_buckets``: the buckets
-        the removals live in (callers that pruned by bucket already know
-        this); only those buckets' manifests are read and rewritten —
-        everything else carries by reference.  If omitted it is derived
-        from ``added_files`` (plus, when removals exist, a full-bucket
-        fallback).
+        ``replaced_buckets``: CURRENT-spec buckets whose stored files the
+        commit drops in full — exactly the files ``files(buckets=...)``
+        returns for them, so an old-spec file covering one of them is
+        dropped too (copy-on-write rewrite, fold, compaction, overwrite).
+        Their manifests are not read; the files added to them form their
+        new manifests.
         Crash-safety: everything is written under non-current names
         first; the single ``os.replace`` of the version hint is the
         commit point.  A crash before it leaves the table at the old
@@ -600,7 +609,7 @@ class IceboxTable:
         prev_id = t.head_id()
         new_id = meta["last_snapshot_id"] + 1
         total_files, total_rows = t._write_manifests(
-            new_id, prev_id, added_files, removed_paths or set(), touched_buckets
+            new_id, prev_id, added_files, replaced_buckets
         )
 
         summary = dict(summary or {})
@@ -653,18 +662,16 @@ class IceboxTable:
         new_id: int,
         prev_id: int | None,
         added_files: list[dict],
-        removed: set[str],
-        touched_buckets: list[int] | None,
+        replaced_buckets: Iterable[int],
     ) -> tuple[int, int]:
-        """Write per-(spec, bucket) manifests for the touched refs + the
-        manifest list; untouched refs reference their previous manifest
-        files unread.  Returns (total_files, total_rows).
+        """Write the manifest list and one manifest per (spec, bucket)
+        ref that gains files; returns (total_files, total_rows).
 
-        ``touched_buckets`` is CURRENT-spec bucket ids; after a rescale
-        it expands to every older spec's covering ref (the same
-        congruence rule ``files()`` prunes with), so removals inside
-        old-spec files are dropped from exactly the manifests that could
-        hold them — commit cost stays O(touched refs)."""
+        A ref covering a replaced bucket (``_covering_refs``, the rule
+        ``files()`` prunes with) is dropped unread, or rewritten with
+        its added files only.  A ref that only gains files is read once
+        and appended to; every other ref carries its previous manifest
+        file unread — commit cost stays O(touched refs)."""
         added_by_ref: dict[tuple[int, int], list[dict]] = {}
         for e in added_files:
             added_by_ref.setdefault(
@@ -674,34 +681,18 @@ class IceboxTable:
         prev_list: dict[str, dict] = {}
         if prev_id is not None:
             prev_list = self.manifest_list(prev_id)
-
-        touched: set[tuple[int, int]] = set(added_by_ref)
-        if touched_buckets is not None:
-            for b in touched_buckets:
-                for spec in self.bucket_specs():
-                    touched.add((spec["spec_id"], int(b) % spec["num_buckets"]))
-        elif removed:
-            # caller didn't say where the removals live — inspect all
-            # previous refs (correct, just not O(touched))
-            touched |= {parse_ref_key(k) for k in prev_list}
+        replaced = self._covering_refs(prev_list, replaced_buckets)
 
         new_list: dict[str, dict] = {
             k: dict(ref)
             for k, ref in prev_list.items()
-            if parse_ref_key(k) not in touched
+            if k not in replaced and parse_ref_key(k) not in added_by_ref
         }
-        for s, b in sorted(touched):
-            carried: list[dict] = []
-            prev_ref = prev_list.get(ref_key(s, b))
-            if prev_ref is not None:
-                carried = [
-                    e
-                    for e in self._read_bucket_manifest(prev_ref["manifest"])
-                    if e["path"] not in removed
-                ]
-            entries = carried + added_by_ref.get((s, b), [])
-            if not entries:
-                continue  # ref emptied: drop it from the list
+        for (s, b), added in sorted(added_by_ref.items()):
+            key = ref_key(s, b)
+            entries = added
+            if key in prev_list and key not in replaced:
+                entries = self._read_bucket_manifest(prev_list[key]["manifest"]) + added
             fname = (
                 f"snap-{new_id}-b{b}.manifest.json"
                 if s == 0
@@ -711,7 +702,7 @@ class IceboxTable:
                 os.path.join(self.meta_dir, fname),
                 {"snapshot_id": new_id, "bucket": b, "spec_id": s, "files": entries},
             )
-            new_list[ref_key(s, b)] = {
+            new_list[key] = {
                 "manifest": fname,
                 "files": len(entries),
                 "rows": sum(e["rows"] for e in entries),

@@ -67,7 +67,6 @@ def compact(
     dfb = df.withColumn("__bucket", bucket_expr(table.bucket_column, table.num_buckets))
     # salt_n=1 → exactly one output file per bucket per task group
     entries = write_data_files(dfb, table, salt_n=1)
-    removed = {e["path"] for e in table.files(buckets=target)}
     prev = table.current_snapshot()
     # carry the FULL fencing state forward — including the torn-epoch
     # lineage stats, so compacting while the CDC fence is armed doesn't
@@ -81,10 +80,9 @@ def compact(
     summary["compacted_buckets"] = target
     return table.commit(
         added_files=entries,
-        removed_paths=removed,
+        replaced_buckets=target,
         summary=summary,
         operation="replace",
-        touched_buckets=target,
     )
 
 

@@ -15,8 +15,8 @@ by the buckets it rewrites:
    copy ranks first is the same row) — no separate dropDuplicates
    shuffle on the hot path.
 3. **Write** the winners bucketed (fused single exchange, or the salted
-   two-exchange plan for skew), then commit one snapshot that removes
-   the rewritten buckets' files.
+   two-exchange plan for skew), then commit one snapshot that replaces
+   the rewritten buckets (``IceboxTable.commit(replaced_buckets=...)``).
 
 The two modes differ only in what they rewrite:
 
@@ -253,8 +253,8 @@ def _resolve_and_write(
     """The one apply job (module docstring): the ``rewrite`` buckets'
     stored rows, read raw, join the batch in one LWW window; every
     output file is a base file except, in a merge-on-read (``delta``)
-    epoch, those of buckets outside ``rewrite``; the commit removes the
-    files the rewrite replaces.
+    epoch, those of buckets outside ``rewrite``; the commit drops every
+    stored file of the ``rewrite`` buckets (``replaced_buckets``).
 
     A pyarrow ``batch`` takes the driver path (module docstring); its
     ``rn_observation`` is a ``DriverObservation``, and it is never
@@ -291,15 +291,11 @@ def _resolve_and_write(
         return None
     if rewrite and operation == "delta":
         summary["compacted_buckets"] = rewrite
-    removed = {e["path"] for e in table.files(buckets=rewrite)} if rewrite else None
     return table.commit(
         added_files=new_files,
-        removed_paths=removed,
+        replaced_buckets=rewrite,
         summary=summary,
         operation=operation,
-        # manifest IO stays O(rewrite): only these buckets' manifests are
-        # read+rewritten (None ⇒ derived from the added files)
-        touched_buckets=rewrite or None,
     )
 
 
@@ -377,7 +373,8 @@ def merge_apply(
     lake/write.py::fused_partitions)."""
     table = table.pinned()
     touched: list[int] = []
-    if table.files():
+    head = table.current_snapshot()
+    if head is not None and head["total_files"]:
         # an empty table (backfill epoch 1) has nothing to rewrite: the
         # touched-bucket pass is skipped (one full traversal saved on
         # the largest batch of the run)

@@ -383,6 +383,10 @@ def _io_pool():
 #: may share a file.
 _PF_CACHE = Memo(256)
 
+#: most files a driver-side lookup reads before it falls back to a Spark
+#: job (``lookup_many_fast``), for one key or many
+LOOKUP_MAX_FILES = 64
+
 
 def lookup_fast(
     spark: SparkSession,
@@ -390,16 +394,13 @@ def lookup_fast(
     key,
     *,
     snapshot_id: int | None = None,
-    max_files: int = 32,
 ):
     """Serving-path point lookup: same result as ``lookup`` (user-facing
     live rows for one bucket-key value) but read DRIVER-SIDE with
     pyarrow — no Spark job at all, so latency is file IO (~ms), not job
     scheduling (~130 ms floor, BENCH §point-lookup).  Returns a pandas
     DataFrame.  Thin wrapper over :func:`lookup_many_fast`."""
-    return lookup_many_fast(
-        spark, table, [key], snapshot_id=snapshot_id, max_files=max_files
-    )
+    return lookup_many_fast(spark, table, [key], snapshot_id=snapshot_id)
 
 
 def lookup_many_fast(
@@ -408,7 +409,6 @@ def lookup_many_fast(
     keys,
     *,
     snapshot_id: int | None = None,
-    max_files: int = 64,
 ):
     """Batched serving read: live rows for a set of bucket-key values,
     read DRIVER-SIDE with pyarrow (the feature-store request shape: one
@@ -422,7 +422,7 @@ def lookup_many_fast(
     Python over the surviving handful of rows (per-batch-winners
     argument, as ``resolve_stored``); schema eras align by column id.
     Falls back to ``lookup_many(...).toPandas()`` when the pruned list
-    exceeds ``max_files`` or the key type has no driver-side hash;
+    exceeds ``LOOKUP_MAX_FILES`` or the key type has no driver-side hash;
     ``spark`` may be None and is only materialized on that fallback."""
     import pandas as pd
     import pyarrow.compute as pc
@@ -468,7 +468,7 @@ def lookup_many_fast(
         for e in table.files(sid, [b]):
             if any(_may_contain(e, k) for k in ks):
                 work.append((e, ks))
-    if len(work) > max_files:
+    if len(work) > LOOKUP_MAX_FILES:
         return _fallback()
 
     # each file's era, to align its columns by COLUMN ID like the Spark

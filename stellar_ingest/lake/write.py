@@ -461,8 +461,7 @@ def overwrite_buckets(
     a non-closed request raises instead of losing rows."""
     table = table.pinned()
     bset = {int(b) for b in buckets}
-    old_files = table.files(buckets=buckets)
-    for e in old_files:
+    for e in table.files(buckets=buckets):
         cov = table.covered_buckets(e["bucket"], e.get("spec_id", 0))
         if not set(cov) <= bset:
             raise ValueError(
@@ -472,11 +471,9 @@ def overwrite_buckets(
             )
     dfb = df.withColumn("__bucket", bucket_expr(table.bucket_column, table.num_buckets))
     entries = write_data_files(dfb, table)
-    removed = {e["path"] for e in old_files}
     return table.commit(
         added_files=entries,
-        removed_paths=removed,
+        replaced_buckets=buckets,
         summary=summary or {},
         operation="overwrite",
-        touched_buckets=buckets,
     )

@@ -59,13 +59,10 @@ def get_spark(
         # JOB whose fixed overhead dwarfs stat-ing local files (measured:
         # 646 ms -> 101 ms to plan a 416-segment ledger read).  Local
         # filesystems stat in ~µs, so serial listing wins far past the
-        # 32-path default; on an object store (real cluster) set the env
-        # to a low value again — listing latency there is network-bound
-        # and the parallel job is the right call.
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("STELLAR_PAR_DISCOVERY_THRESHOLD", "4096"),
-        )
+        # 32-path default.  On an object store listing latency is
+        # network-bound and the parallel job is the right call: pass a
+        # low value back through ``extra_conf``.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # DataFrame debugging capture wraps EVERY PySpark API call: an

@@ -573,10 +573,11 @@ def test_expire_prunes_metadata_versions(spark, tmp_table):
     assert read_live(spark, t).count() == 7
 
 
-def test_lookup_fast_matches_lookup(spark, tmp_table):
+def test_lookup_fast_matches_lookup(spark, tmp_table, monkeypatch):
     """Driver-side pyarrow lookup ≡ Spark lookup on a MoR table with
     unfolded deltas, tombstones, and an evolved column — including the
-    fallback path (max_files=0 forces it)."""
+    fallback path (LOOKUP_MAX_FILES=0 forces it)."""
+    from stellar_ingest.lake import read
     from stellar_ingest.lake.merge import delta_apply
     from stellar_ingest.lake.read import lookup, lookup_fast
     from stellar_ingest.schema import CHANGELOG_SCHEMA
@@ -625,7 +626,9 @@ def test_lookup_fast_matches_lookup(spark, tmp_table):
         assert list(got.columns) == list(want.columns), key
         assert got.astype(str).values.tolist() == want.astype(str).values.tolist(), key
         # fallback path returns the same thing
-        fb = lookup_fast(spark, t, key, max_files=0)
+        with monkeypatch.context() as m:
+            m.setattr(read, "LOOKUP_MAX_FILES", 0)
+            fb = lookup_fast(spark, t, key)
         assert sorted(map(str, fb.values.tolist())) == sorted(
             map(str, want.values.tolist())
         ), key
@@ -636,9 +639,10 @@ def test_lookup_fast_matches_lookup(spark, tmp_table):
     assert 2 not in c3.index  # tombstone filtered
 
 
-def test_lookup_many_fast_matches_spark(spark, tmp_table):
+def test_lookup_many_fast_matches_spark(spark, tmp_table, monkeypatch):
     """Batched driver-side lookup ≡ lookup_many across buckets, MoR
     deltas, tombstones, duplicates and unknown keys — incl. fallback."""
+    from stellar_ingest.lake import read
     from stellar_ingest.lake.merge import delta_apply
     from stellar_ingest.lake.read import lookup_many, lookup_many_fast
     from stellar_ingest.schema import CHANGELOG_SCHEMA
@@ -675,7 +679,8 @@ def test_lookup_many_fast_matches_spark(spark, tmp_table):
     assert "t3.0-v2" in set(got["text"])  # delta resolved
     assert ("c7", 1) not in set(zip(got["conv_id"], got["turn_idx"]))  # tombstone
     # fallback path agrees
-    fb = lookup_many_fast(spark, t, keys, max_files=0)
+    monkeypatch.setattr(read, "LOOKUP_MAX_FILES", 0)
+    fb = lookup_many_fast(spark, t, keys)
     assert sorted(map(str, fb.values.tolist())) == sorted(
         map(str, want.values.tolist())
     )
@@ -889,3 +894,55 @@ def test_lookup_fast_parses_metadata_once_per_key(tmp_table, monkeypatch):
         got = lookup_fast(None, live, key)["text"].tolist()
         assert got == ([want] if want else []), key
         assert len(parses) == 1, key
+
+
+def test_driver_apply_reads_each_manifest_once(tmp_table, monkeypatch):
+    """A driver-path copy-on-write apply and a merge-on-read apply that
+    folds 4 of 16 buckets read no bucket manifest twice: a replaced
+    bucket's manifest is read only for its stored rows, and the commit
+    reads only the buckets that gain a delta file.  No Spark session."""
+    import collections
+
+    import pyarrow as pa
+
+    from stellar_ingest.lake.merge import delta_apply, merge_apply
+    from stellar_ingest.lake.read import lookup_fast
+    from stellar_ingest.lake.xxh import bucket_of
+
+    t = IceboxTable.create(tmp_table, TABLE_SCHEMA, num_buckets=16)
+    convs = [f"c{i}" for i in range(64)]
+    assert {bucket_of(c, 16, "string") for c in convs} == set(range(16))
+    _commit_convs(t, convs, 1)
+
+    def batch(lsn: int) -> pa.Table:
+        n = len(convs)
+        return pa.table(
+            {
+                "lsn": pa.array([lsn * 1000 + i for i in range(n)], pa.int64()),
+                "src_part": pa.array([0] * n, pa.int32()),
+                "op": ["U"] * n,
+                "conv_id": convs,
+                "turn_idx": pa.array([0] * n, pa.int32()),
+                "role": ["user"] * n,
+                "text": [f"{c}@{lsn}" for c in convs],
+                "tool": pa.nulls(n, pa.string()),
+                "ts": pa.array([ts(lsn)] * n, pa.timestamp("us")),
+            }
+        )
+
+    reads: collections.Counter = collections.Counter()
+    real = IceboxTable._read_bucket_manifest
+
+    def counted(self, fname):
+        reads[fname] += 1
+        return real(self, fname)
+
+    monkeypatch.setattr(IceboxTable, "_read_bucket_manifest", counted)
+    merge_apply(None, t, batch(2))
+    assert len(reads) == 16 and max(reads.values()) == 1, reads
+    reads.clear()
+    delta_apply(None, t, batch(3), fold_buckets=[0, 1, 2, 3])
+    assert len(reads) == 16 and max(reads.values()) == 1, reads
+    monkeypatch.undo()
+    assert lookup_fast(None, t, "c5")["text"].tolist() == ["c5@3"]
+    assert t.current_snapshot()["summary"]["compacted_buckets"] == [0, 1, 2, 3]
