@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
+
+from ..lake.core import _atomic_write_json
 
 
 def _norm(ck: dict) -> dict:
@@ -43,8 +44,6 @@ def load(checkpoint_dir: str) -> dict:
 
 def save(checkpoint_dir: str, ck: dict) -> None:
     os.makedirs(checkpoint_dir, exist_ok=True)
-    path = os.path.join(checkpoint_dir, "checkpoint.json")
-    tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
     payload = {
         "epoch": int(ck["epoch"]),
         "offsets": {str(k): int(v) for k, v in ck["offsets"].items()},
@@ -53,8 +52,4 @@ def save(checkpoint_dir: str, ck: dict) -> None:
     }
     if ck.get("unpositioned"):
         payload["unpositioned"] = dict(ck["unpositioned"])
-    with open(tmp, "w") as fh:
-        json.dump(payload, fh, indent=1, sort_keys=True)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, path)
+    _atomic_write_json(os.path.join(checkpoint_dir, "checkpoint.json"), payload)

@@ -33,11 +33,14 @@ Exactly-once protocol per epoch ``e → e+1``:
    rewrites the buckets it folds and appends the rest as deltas.  A
    Spark batch is applied by one Spark job, a pyarrow batch on the
    driver; both give the same files, manifest entries and snapshot.
-6. persist quarantined rows (dead-letter parquet, written by Spark on
-   both paths, only when the epoch had any) + emit lineage.
+   Between the apply's action and its commit the epoch persists its
+   quarantined rows (dead-letter parquet, written by Spark on both
+   paths, only when the epoch had any; a stale attempt's directory is
+   removed otherwise), so they land before ``s``.
+6. emit lineage.
 7. checkpoint := {e+1, offsets', s}.   (crash between 5 and 7 is what
    step 1 repairs — offsets from the summary, lineage re-emitted from
-   the summary's stats)
+   the summary's stats; no Spark job and no ledger read)
 
 Steps 4-6 and the in-loop expiry/GC are the epoch tail the Structured
 Streaming adapter (streaming/pipeline.py) runs too: ``_create_or_evolve``,
@@ -54,6 +57,7 @@ crashes at every boundary and asserts byte-identical reconvergence.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from collections.abc import Callable
 from functools import partial
@@ -182,13 +186,19 @@ def _fold_pick(
     )
 
 
-def _write_dead_letters(rows: DataFrame, checkpoint_dir: str, name: str) -> None:
-    """Persist the invalid rows of ``rows`` to ``quarantine/<name>``:
-    quarantined rows are never silently dropped (validate.py contract).
-    Overwrite keeps a replayed or repaired epoch idempotent."""
-    rows.filter(~validity_predicate()).write.mode("overwrite").parquet(
-        os.path.join(checkpoint_dir, "quarantine", name)
-    )
+def _write_dead_letters(rows: DataFrame | None, checkpoint_dir: str, name: str) -> None:
+    """Persist the invalid rows of ``rows`` to ``quarantine/<name>``, or
+    remove that directory when ``rows`` is None: quarantined rows are
+    never silently dropped (validate.py contract).  Runs before the
+    epoch's commit, so after a commit the directory holds exactly the
+    committed batch's invalid rows.  An uncommitted attempt's dead
+    letters stay until a rerun of that epoch overwrites or removes them,
+    as its data files stay until ``gc_orphans``."""
+    path = os.path.join(checkpoint_dir, "quarantine", name)
+    if rows is None:
+        shutil.rmtree(path, ignore_errors=True)
+    else:
+        rows.filter(~validity_predicate()).write.mode("overwrite").parquet(path)
 
 
 def _emit_repaired(
@@ -229,18 +239,21 @@ def _commit_epoch(
     hook: Callable[[str], None] = _no_hook,
     **apply_kw,
 ) -> tuple[int | None, list[dict]]:
-    """Apply one epoch, then persist its dead letters, then emit its
-    lineage; returns (snapshot id or None if ``skip_if_noop`` minted
-    none, lineage records).  The snapshot summary is ``epoch`` +
-    ``summary`` + the lineage stats ``observed`` reads once the write
-    action filled them, bound into the same atomic commit, so a crash
-    before the emit is repairable from the snapshot alone.  ``bad_rows``
-    is called only when the epoch quarantined rows."""
+    """Apply one epoch, then emit its lineage; returns (snapshot id or
+    None if ``skip_if_noop`` minted none, lineage records).  The
+    snapshot summary is ``epoch`` + ``summary`` + the lineage stats
+    ``observed`` reads once the write action filled them, bound into the
+    same atomic commit, so a crash before the emit is repairable from
+    the snapshot alone.  At that same point, between the action and the
+    commit, the dead letters go to ``quarantine/<quarantine>``
+    (``bad_rows`` is called only when the epoch quarantined rows;
+    otherwise a stale attempt's directory is removed)."""
     stash: dict = {}
 
     def _lineage_summary() -> dict:
         pstats, n_bad = observed()
         stash["pstats"], stash["n_bad"] = pstats, n_bad
+        _write_dead_letters(bad_rows() if n_bad else None, checkpoint_dir, quarantine)
         return {"lineage": {"partition_stats": pstats, "quarantined": n_bad}}
 
     if fold is None:  # a table created this epoch picks its fold now
@@ -257,8 +270,6 @@ def _commit_epoch(
     if snapshot_id is None:
         return None, []
     hook("post_snapshot")
-    if stash["n_bad"]:
-        _write_dead_letters(bad_rows(), checkpoint_dir, quarantine)
     # lineage BEFORE the checkpoint save: a crash in between replays the
     # emit on restart (idempotent per epoch), so the audit log can never
     # have a gap
@@ -293,18 +304,13 @@ def _maintain(
         gc_orphans(table, grace_ms=gc_grace_ms)
 
 
-def _fence_and_repair(
-    spark: SparkSession,
-    ledger_dir: str,
-    table: IceboxTable,
-    checkpoint_dir: str,
-    ck: dict,
-) -> dict:
+def _fence_and_repair(table: IceboxTable, checkpoint_dir: str, ck: dict) -> dict:
     """Torn-commit repair (crash between snapshot-commit and
-    checkpoint-write).  Repair order mirrors the normal epoch tail —
-    dead-letter, then lineage, then checkpoint — so a crash at ANY point
-    during repair just re-enters repair on the next start; every step is
-    idempotent."""
+    checkpoint-write).  The torn epoch's dead letters landed before its
+    commit, so repair replays only metadata from the snapshot summary —
+    lineage, then checkpoint, as in the normal epoch tail — with no
+    Spark job and no ledger read.  A crash at ANY point during repair
+    just re-enters repair on the next start; every step is idempotent."""
     snap = table.current_snapshot() if table.exists() else None
     if snap is None:
         return ck
@@ -312,17 +318,13 @@ def _fence_and_repair(
     snap_epoch = int(summary.get("epoch", 0))
     if snap_epoch <= ck["epoch"]:
         return ck
-    new_offsets = {int(k): int(v) for k, v in summary.get("offsets", {}).items()}
-    torn_unpositioned = summary.get("unpositioned") or {}
-    linfo = summary.get("lineage")
     # If maintenance (compaction/fold) ran while the fence was armed, the
-    # CURRENT snapshot is the maintenance one — its parent is the torn
-    # snapshot itself, whose offsets equal the committed offsets, so the
-    # torn batch would re-derive as empty.  Walk the parent chain past
-    # maintenance snapshots to the snapshot that actually committed the
-    # torn epoch; its parent holds the true pre-epoch offsets.
+    # CURRENT snapshot is the maintenance one: walk the parent chain past
+    # maintenance snapshots to the snapshot that committed the torn
+    # epoch, which the repaired lineage names (the current one if the
+    # torn snapshot expired while the fence was armed).
     epoch_snap = snap
-    while (
+    while epoch_snap is not None and (
         epoch_snap.get("operation") == "replace"
         or "maintenance" in epoch_snap.get("summary", {})
     ):
@@ -330,67 +332,21 @@ def _fence_and_repair(
         try:
             epoch_snap = table.snapshot(pid) if pid is not None else None
         except KeyError:
-            epoch_snap = None  # torn snapshot expired while fence armed
-        if epoch_snap is None:
-            break
-    # 1. the torn epoch's quarantined ROWS: re-derive them from the
-    #    immutable ledger — the torn batch is exactly
-    #    (parent offsets, committed offsets].  Always rewritten
-    #    (overwrite is idempotent): a bare directory-exists check would
-    #    be fooled by a half-written quarantine dir from the crash itself.
-    if int((linfo or {}).get("quarantined", 0)) > 0:
-        parent_id = (
-            epoch_snap.get("parent_snapshot_id") if epoch_snap is not None else None
-        )
-        try:
-            parent_offsets = (
-                {
-                    int(k): int(v)
-                    for k, v in table.snapshot(parent_id)["summary"]
-                    .get("offsets", {})
-                    .items()
-                }
-                if parent_id is not None
-                else ({} if epoch_snap is not None else None)
-            )
-        except KeyError:
-            # parent snapshot expired while the fence was armed: the
-            # exact torn batch can no longer be reconstructed — keep
-            # ingest alive (lineage still records the count) rather
-            # than crash on every start
-            parent_offsets = None
-        if parent_offsets is not None:
-            segs = [
-                s
-                for s in list_segments(ledger_dir)
-                if (
-                    s.max_lsn is not None
-                    and s.max_lsn > parent_offsets.get(s.src_part, -1)
-                    and s.src_part in new_offsets
-                )
-                or torn_unpositioned.get(s.path) == s.mtime_ns
-            ]
-            if segs:
-                _write_dead_letters(
-                    read_batch(spark, segs, parent_offsets, new_offsets),
-                    checkpoint_dir,
-                    f"epoch={snap_epoch}",
-                )
-    # 2. lineage BEFORE the checkpoint save (same invariant as the normal
-    #    path: the audit log can never have an epoch gap).  Attribute the
-    #    records to the snapshot that committed the epoch, not a
-    #    maintenance snapshot that may now be current.
-    _emit_repaired(checkpoint_dir, snap_epoch, (epoch_snap or snap)["snapshot_id"], linfo)
-    # 3. checkpoint last — the fence stays armed until everything above
-    #    landed
+            epoch_snap = None
+    # lineage BEFORE the checkpoint save (same invariant as the normal
+    # path: the audit log can never have an epoch gap)
+    _emit_repaired(
+        checkpoint_dir, snap_epoch, (epoch_snap or snap)["snapshot_id"], summary.get("lineage")
+    )
+    # checkpoint last — the fence stays armed until everything above landed
     ck = {
         "epoch": snap_epoch,
-        "offsets": new_offsets,
+        "offsets": {int(k): int(v) for k, v in summary.get("offsets", {}).items()},
         "snapshot_id": snap["snapshot_id"],
         # advisory skew hint survives the repair (losing it would run
         # the first post-crash epoch unsalted on a known-hot key)
         "salt_hint": ck.get("salt_hint"),
-        "unpositioned": {**ck.get("unpositioned", {}), **torn_unpositioned},
+        "unpositioned": {**ck.get("unpositioned", {}), **(summary.get("unpositioned") or {})},
     }
     ckpt.save(checkpoint_dir, ck)
     return ck
@@ -402,8 +358,6 @@ def _prune_quarantine(checkpoint_dir: str, keep: int) -> int:
     ``ss_batch=N`` naming).  Opt-in: quarantined rows are audit
     evidence; an unbounded loop that never prunes them grows one dir
     per bad epoch forever."""
-    import shutil
-
     qroot = os.path.join(checkpoint_dir, "quarantine")
     if not os.path.isdir(qroot):
         return 0
@@ -496,7 +450,7 @@ def run_increment(
     epochs.  Both run AFTER the epoch's checkpoint, so the
     just-committed snapshot is always retained and a crash inside
     maintenance leaves a consistent, resumable table; the fence-repair
-    path tolerates expired parents by design (_fence_and_repair).
+    path reads only the torn snapshot's own summary (_fence_and_repair).
     ``lineage_rotate_bytes`` rolls the audit log into epoch-named
     archives past that size (read_lineage reads across archives);
     ``quarantine_keep`` bounds the dead-letter directory to the newest
@@ -535,7 +489,7 @@ def run_increment(
             ck = ckpt.load(checkpoint_dir)
             table = live.pinned() if live.exists() else live
             if table.exists():
-                ck = _fence_and_repair(spark, ledger_dir, table, checkpoint_dir, ck)
+                ck = _fence_and_repair(table, checkpoint_dir, ck)
 
             # epoch e+1's ledger discovery overlapped epoch e's merge
             # (driver-side footer listing costs ~seconds at production

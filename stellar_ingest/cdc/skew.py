@@ -4,8 +4,10 @@ AQE's skew handling only splits skewed *join* partitions; the LWW
 ranking **window** and the bucket-clustered **write** need explicit
 salting (SURVEY.md §4).  Three pieces:
 
-- write-side salt: always on (lake/write.py WRITE_SALT) — hot buckets
-  fan out across tasks unconditionally, costs nothing when unskewed.
+- write-side salt: lake/write.py::write_salt, clamp(cores // buckets,
+  1, 8) (``STELLAR_WRITE_SALT`` overrides it) — each bucket's rows fan
+  out across that many tasks.  At 1 (e.g. 16 buckets on 4 cores) the
+  write is unsalted and the fused single-exchange plan runs.
 - resolve-side salt: two-phase window (cdc/resolve.py) — an extra
   shuffle, so it is gated by this census.
 - census: the RUNNER's census is free — it observes ``max(row_number)``

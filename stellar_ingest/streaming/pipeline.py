@@ -6,8 +6,9 @@ The engine's canonical driver is the self-driven batch loop
 the same pipeline for deployments that want SS semantics: file-source
 ``readStream`` over ledger segments → watermark + in-stream dedupe →
 ``foreachBatch`` into the batch loop's own epoch tail (cdc/runner.py:
-table create-or-evolve, apply with the in-apply fold, dead letters,
-lineage, expiry/GC), with ``availableNow`` for drain-style runs.
+table create-or-evolve, apply with the in-apply fold, dead letters
+written before the commit, lineage, expiry/GC), with ``availableNow``
+for drain-style runs.
 
 Note the exactly-once story differs: SS tracks file-source offsets in
 its own checkpoint; the ``ss_batch_id`` fence on the snapshot summary
@@ -30,7 +31,6 @@ from ..cdc.runner import (
     _create_or_evolve,
     _emit_repaired,
     _maintain,
-    _write_dead_letters,
 )
 from ..cdc.source import batch_schema, list_segments
 from ..cdc.validate import observe_valid
@@ -122,21 +122,11 @@ def run_streaming(
             # batch here — re-emit the torn epoch's lineage from the
             # snapshot summary (idempotent: emit skips epochs already in
             # the log), so the audit log stays gap-free on this path too.
-            linfo = snap["summary"].get("lineage")
-            if (
-                int(snap["summary"]["ss_batch_id"]) == batch_id
-                and int((linfo or {}).get("quarantined", 0)) > 0
-            ):
-                # the batch also had dead-letter rows: a crash between
-                # the snapshot commit and the quarantine write would
-                # lose them permanently (the batch runner re-derives
-                # them from the immutable ledger; SS must re-derive from
-                # the replayed batch).  Rewrite is idempotent
-                # (overwrite) and doubles as the required batch action.
-                _write_dead_letters(batch_df, checkpoint_dir, f"ss_batch={batch_id}")
-            else:
-                batch_df.count()
-            _emit_repaired(checkpoint_dir, epoch, snap["snapshot_id"], linfo)
+            # Its dead letters landed before the commit.
+            batch_df.count()
+            _emit_repaired(
+                checkpoint_dir, epoch, snap["snapshot_id"], snap["summary"].get("lineage")
+            )
             return
         # the stats ride an `observe` node on the SAME action that
         # applies the batch (the write): one action per batch, plus a

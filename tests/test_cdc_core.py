@@ -264,11 +264,11 @@ def test_read_changes_refuses_offsetless_base(spark, tmp_path):
         read_changes(spark, t, sid)
 
 
-def test_torn_commit_rederives_quarantine_and_lineage(spark, tmp_path):
+def test_torn_commit_keeps_quarantine_and_repairs_lineage(spark, tmp_path):
     """Crash between snapshot-commit and checkpoint on an epoch WITH
-    quarantined rows: the fence repair re-derives the dead-letter rows
-    from the immutable ledger and re-emits the epoch's lineage — no gap,
-    no lost rows."""
+    quarantined rows: the dead-letter rows landed before the commit, and
+    the fence repair re-emits the epoch's lineage — no gap, no lost
+    rows."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest as _pytest
@@ -307,9 +307,10 @@ def test_torn_commit_rederives_quarantine_and_lineage(spark, tmp_path):
     with _pytest.raises(Boom):
         run_increment(spark, str(tmp_path / "ledger"), table_root, ck,
                       salts=None, crash_hook=hook)
-    # snapshot committed, but neither quarantine nor lineage nor
-    # checkpoint landed — restart must repair all three
-    assert not (tmp_path / "ck" / "quarantine").exists()
+    # snapshot and dead letters committed, but neither lineage nor
+    # checkpoint landed — restart must repair both
+    dead = spark.read.parquet(f"{ck}/quarantine/epoch=1")
+    assert {r["lsn"] for r in dead.collect()} == {2}
     run_increment(spark, str(tmp_path / "ledger"), table_root, ck, salts=None)
     dead = spark.read.parquet(f"{ck}/quarantine/epoch=1")
     assert {r["lsn"] for r in dead.collect()} == {2}
@@ -317,6 +318,115 @@ def test_torn_commit_rederives_quarantine_and_lineage(spark, tmp_path):
     assert [r["epoch"] for r in recs] == [1]
     assert recs[0]["repaired"] is True and recs[0]["quarantined"] == 1
     assert {r["text"] for r in read_live(spark, IceboxTable(table_root)).collect()} == {"ok1", "ok2"}
+
+
+def _quarantine_ledger(tmp_path, segments):
+    """One ledger partition, one segment per ``(lsn, op, text)`` list;
+    a None op quarantines its row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from .helpers import ts as _ts
+
+    for k, rows in enumerate(segments):
+        d = tmp_path / "ledger" / "part=0" / f"seg={k}"
+        d.mkdir(parents=True)
+        pq.write_table(
+            pa.table(
+                {
+                    "lsn": pa.array([r[0] for r in rows], pa.int64()),
+                    "src_part": pa.array([0] * len(rows), pa.int32()),
+                    "op": [r[1] for r in rows],
+                    "conv_id": [f"c{r[0]}" for r in rows],
+                    "turn_idx": pa.array([0] * len(rows), pa.int32()),
+                    "role": ["user"] * len(rows),
+                    "text": [r[2] for r in rows],
+                    "ts": pa.array([_ts(r[0]) for r in rows], pa.timestamp("us")),
+                }
+            ),
+            d / "s.parquet",
+        )
+    return str(tmp_path / "ledger"), str(tmp_path / "t"), str(tmp_path / "ck")
+
+
+def _dead_lsns(spark, ck, name):
+    return sorted(r["lsn"] for r in spark.read.parquet(f"{ck}/quarantine/{name}").collect())
+
+
+def _failing_commit(*args, **kwargs):
+    raise RuntimeError("commit failed")
+
+
+def test_dead_letters_land_before_the_commit(spark, tmp_path, monkeypatch):
+    """An epoch whose commit fails has already written its dead letters
+    and minted no snapshot; the rerun commits once and overwrites them."""
+    from stellar_ingest.cdc.runner import run_increment
+    from stellar_ingest.lake.core import IceboxTable
+
+    ledger, root, ck = _quarantine_ledger(tmp_path, [[(1, "I", "ok1"), (2, None, "bad")]])
+    with monkeypatch.context() as m:
+        m.setattr(IceboxTable, "commit", _failing_commit)
+        with pytest.raises(RuntimeError, match="commit failed"):
+            run_increment(spark, ledger, root, ck, salts=None)
+    assert IceboxTable(root).snapshots() == []
+    assert _dead_lsns(spark, ck, "epoch=1") == [2]
+    recs = run_increment(spark, ledger, root, ck, salts=None)
+    assert {r["epoch"] for r in recs} == {1}
+    assert len(IceboxTable(root).snapshots()) == 1
+    assert _dead_lsns(spark, ck, "epoch=1") == [2]
+
+
+def test_clean_epoch_removes_stale_dead_letters(spark, tmp_path, monkeypatch):
+    """An uncommitted attempt at epoch 2 took two segments and wrote dead
+    letters; the rerun takes one clean segment, so the committed epoch 2
+    removes them, and epoch 3 writes them for the segment that had them."""
+    from stellar_ingest.cdc.runner import run_increment
+    from stellar_ingest.lake.core import IceboxTable
+
+    ledger, root, ck = _quarantine_ledger(
+        tmp_path, [[(1, "I", "a")], [(2, "I", "b")], [(3, None, "bad"), (4, "I", "c")]]
+    )
+    run_increment(spark, ledger, root, ck, salts=None, max_segments_per_part=1, max_epochs=1)
+    with monkeypatch.context() as m:
+        m.setattr(IceboxTable, "commit", _failing_commit)
+        with pytest.raises(RuntimeError, match="commit failed"):
+            run_increment(spark, ledger, root, ck, salts=None, max_segments_per_part=2)
+    assert _dead_lsns(spark, ck, "epoch=2") == [3]
+    recs = run_increment(spark, ledger, root, ck, salts=None, max_segments_per_part=1)
+    assert sorted({(r["epoch"], r["quarantined"]) for r in recs}) == [(2, 0), (3, 1)]
+    assert sorted(os.listdir(os.path.join(ck, "quarantine"))) == ["epoch=3"]
+    assert _dead_lsns(spark, ck, "epoch=3") == [3]
+
+
+def test_torn_epoch_keeps_dead_letters_when_its_parent_expired(spark, tmp_path):
+    """Retention expires the torn epoch's parent snapshot while the fence
+    is armed: the dead letters written before the torn commit survive,
+    and repair needs neither the parent nor the ledger."""
+    from stellar_ingest.cdc.lineage import read_lineage
+    from stellar_ingest.cdc.runner import run_increment
+    from stellar_ingest.lake.core import IceboxTable
+    from stellar_ingest.lake.maintain import expire_snapshots
+
+    ledger, root, ck = _quarantine_ledger(
+        tmp_path, [[(1, "I", "ok1")], [(2, None, "bad"), (3, "I", "ok2")]]
+    )
+    one = {"salts": None, "max_segments_per_part": 1}
+    run_increment(spark, ledger, root, ck, max_epochs=1, **one)
+
+    def crash(point):
+        if point == "post_snapshot":
+            raise RuntimeError("crash")
+
+    with pytest.raises(RuntimeError):
+        run_increment(spark, ledger, root, ck, crash_hook=crash, **one)
+    table = IceboxTable(root)
+    expire_snapshots(table, keep_last=1)
+    assert [s["summary"]["epoch"] for s in table.snapshots()] == [2]
+    assert run_increment(spark, ledger, root, ck, **one) == []
+    assert _dead_lsns(spark, ck, "epoch=2") == [2]
+    assert [(r["epoch"], r["quarantined"], r["repaired"]) for r in read_lineage(ck)] == [
+        (1, 0, False), (2, 1, True)
+    ]
 
 
 def test_null_envelope_rows_are_quarantined_not_dropped(spark, tmp_path):
@@ -440,10 +550,10 @@ def test_segment_without_lsn_is_quarantined_once(spark, tmp_path, request, path)
 
 
 def test_fence_repair_walks_past_maintenance_snapshots(spark, tmp_path):
-    """Compaction while the fence is armed: the current snapshot's parent
-    is the torn snapshot itself — repair must walk past the maintenance
-    snapshot to find the true pre-epoch offsets, or the torn epoch's
-    quarantined rows are silently never written."""
+    """Compaction while the fence is armed: the current snapshot is the
+    maintenance one — repair must walk past it, so the repaired lineage
+    names the snapshot that committed the torn epoch, and the dead
+    letters written before that commit are kept."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest as _pytest
@@ -483,8 +593,10 @@ def test_fence_repair_walks_past_maintenance_snapshots(spark, tmp_path):
         run_increment(spark, str(tmp_path / "ledger"), table_root, ck,
                       salts=None, crash_hook=hook)
     table = IceboxTable(table_root)
+    torn_sid = table.current_snapshot()["snapshot_id"]
     # operator compacts while the fence is armed
-    assert compact(spark, table, min_files_per_bucket=1) is not None
+    compact_sid = compact(spark, table, min_files_per_bucket=1)
+    assert compact_sid is not None and compact_sid != torn_sid
     assert table.current_snapshot()["summary"].get("maintenance") == "compact"
     run_increment(spark, str(tmp_path / "ledger"), table_root, ck, salts=None)
     dead = spark.read.parquet(f"{ck}/quarantine/epoch=1")
@@ -492,6 +604,7 @@ def test_fence_repair_walks_past_maintenance_snapshots(spark, tmp_path):
     recs = read_lineage(ck)
     assert [r["epoch"] for r in recs] == [1]
     assert recs[0]["repaired"] is True
+    assert {r["snapshot_id"] for r in recs} == {torn_sid}
 
 
 def test_legacy_torn_snapshot_emits_placeholder_lineage(spark, tmp_path):

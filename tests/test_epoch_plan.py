@@ -8,9 +8,10 @@ projected to the stored layout in one select, on the driver-side and
 the Spark data path alike, (2) lineage and dead
 letters of a MoR epoch with invalid, NULL-envelope and delete rows over
 two source partitions equal a direct groupBy over the same rows, also
-when the epoch crashes after its snapshot and the fence repair
-re-derives them, (3) a warm MoR epoch on the Spark data path stays
-within its py4j round-trip budget, (4) a folding MoR epoch on the
+when the epoch crashes after its snapshot (its dead letters landed
+before the commit) and the fence repair re-emits the lineage, (3) a
+warm MoR epoch on the Spark data path stays within its py4j round-trip
+budget, (4) a folding MoR epoch on the
 driver path parses the table's metadata at most three times."""
 
 from __future__ import annotations
@@ -225,13 +226,14 @@ def test_mor_epoch_lineage_and_dead_letters_match_direct_groupby(spark, tmp_path
     if crash:
         with pytest.raises(Boom):
             run_increment(spark, ledger, root, ck, crash_hook=hook, **one)
-        assert not os.path.exists(os.path.join(ck, "quarantine"))
+        # the dead letters landed before the snapshot committed
+        assert _dead_letters(spark, ck, 2) == _expected_epoch2(spark)[2]
     else:
         run_increment(spark, ledger, root, ck, **one)
     assert t.current_snapshot()["operation"] == "delta"  # the MoR path
     assert t.current_snapshot()["summary"]["epoch"] == 2
-    # the crashed run resumes here: the fence repair re-derives the
-    # quarantine and lineage from the ledger and the snapshot summary
+    # the crashed run resumes here: the fence repair re-emits the
+    # lineage from the snapshot summary
     run_increment(spark, ledger, root, ck, max_segments_per_part=1)
 
     stats, quarantined, dead = _expected_epoch2(spark)

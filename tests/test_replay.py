@@ -533,9 +533,7 @@ def test_salt_hint_survives_fence_repair(spark, ledger, tmp_path):
     ck["salt_hint"] = 32
     # rewind the epoch so the fence sees a torn commit
     ck["epoch"] -= 1
-    repaired = _fence_and_repair(
-        spark, ledger["dir"], IceboxTable(table_root), ck_dir, ck
-    )
+    repaired = _fence_and_repair(IceboxTable(table_root), ck_dir, ck)
     assert repaired["epoch"] == ck["epoch"] + 1  # fence really fired
     assert repaired["salt_hint"] == 32
     assert ckpt.load(ck_dir)["salt_hint"] == 32  # persisted, not just returned

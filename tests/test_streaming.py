@@ -4,7 +4,6 @@ through foreachBatch must land the same final state as the batch loop."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 
@@ -231,11 +230,11 @@ def test_streaming_inloop_retention_bounds_metadata(spark, tmp_path):
     assert len(t.snapshots()) == before
 
 
-def test_streaming_replay_rewrites_lost_quarantine(spark, tmp_path):
+def test_streaming_dead_letters_land_before_the_commit(spark, tmp_path, monkeypatch):
+    """A micro-batch whose commit fails has already written its dead
+    letters; the replayed batch commits one snapshot and overwrites them."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from stellar_ingest.streaming.pipeline import run_streaming
 
     from .helpers import ts as _ts
 
@@ -256,20 +255,21 @@ def test_streaming_replay_rewrites_lost_quarantine(spark, tmp_path):
         ),
         seg / "s.parquet",
     )
-    ck = str(tmp_path / "ck")
-    run_streaming(spark, str(tmp_path / "ledger"), str(tmp_path / "t"), ck, num_buckets=4)
-    qdir = tmp_path / "ck" / "quarantine" / "ss_batch=0"
-    assert qdir.exists()
-    # simulate a crash BETWEEN snapshot commit and quarantine write:
-    # quarantine lost, SS checkpoint lost → the batch replays
-    shutil.rmtree(qdir)
-    shutil.rmtree(tmp_path / "ck" / "ss")
-    t = IceboxTable(str(tmp_path / "t"))
-    snaps_before = len(t.snapshots())
-    run_streaming(spark, str(tmp_path / "ledger"), str(tmp_path / "t"), ck, num_buckets=4)
-    assert len(t.snapshots()) == snaps_before  # fence: no double apply
-    dead = spark.read.parquet(str(qdir))  # re-derived, not lost
-    assert {r["lsn"] for r in dead.collect()} == {2}
+    ledger, root, ck = str(tmp_path / "ledger"), str(tmp_path / "t"), str(tmp_path / "ck")
+    qdir = str(tmp_path / "ck" / "quarantine" / "ss_batch=0")
+
+    def failing_commit(*args, **kwargs):
+        raise RuntimeError("commit failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(IceboxTable, "commit", failing_commit)
+        with pytest.raises(Exception, match="commit failed"):
+            run_streaming(spark, ledger, root, ck, num_buckets=4)
+    assert IceboxTable(root).snapshots() == []
+    assert {r["lsn"] for r in spark.read.parquet(qdir).collect()} == {2}
+    run_streaming(spark, ledger, root, ck, num_buckets=4)
+    assert len(IceboxTable(root).snapshots()) == 1
+    assert sorted(r["lsn"] for r in spark.read.parquet(qdir).collect()) == [2]
 
 
 def test_prune_quarantine_namespaces_independent(tmp_path):
